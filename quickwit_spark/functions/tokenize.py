@@ -153,12 +153,11 @@ def tokenize_sql(expr: str, max_token_len: int = MAX_TOKEN_LEN) -> str:
     )
 
 
-# tokenizers the Arrow-native kernel implements — used by the build to
-# decide whether to ship raw text (tokenize in-kernel, C++ RE2) or
-# pre-tokenized lists (JVM expression) to the postings encoder. en_stem
-# rides the default tokenizer + a VOCABULARY-level stem (one python stem
-# call per distinct token per batch, not per occurrence).
-ARROW_TOKENIZERS = ("default", "chinese_compatible", "en_stem")
+# tokenizers the Arrow-native kernel implements — every registered one: the
+# build tokenizes in its split-writer kernel only. en_stem rides the default
+# tokenizer + a VOCABULARY-level stem (one python stem call per distinct
+# token per batch, not per occurrence).
+ARROW_TOKENIZERS = ("default", "chinese_compatible", "en_stem", "raw")
 
 # RE2 class mirroring _CJK_CLASS_JAVA (RE2 shares Java's \x{...} syntax)
 _CJK_CLASS_RE2 = (
@@ -171,13 +170,13 @@ _CJK_CLASS_RE2 = (
 def arrow_tokenize(
     arr, tokenizer: str = "default", max_token_len: int = MAX_TOKEN_LEN
 ):
-    """``default``/``chinese_compatible`` tokenizer over a pyarrow string
-    Array -> ListArray<string>, entirely in Arrow C++ (utf8_lower + RE2
-    split) plus one numpy pass to drop empty/over-long tokens. Token-for-
-    token identical to :func:`tokenize_expr` / :func:`tokenize_py` (pinned
-    by tests/test_tokenize.py); exists so the postings build can ship TEXT
-    to the encode kernel and tokenize there — no JVM re-tokenize, no
-    token-list Arrow transfer."""
+    """Tokenizer over a pyarrow string Array -> ListArray<string>, entirely
+    in Arrow C++ (utf8_lower + RE2 split; ``raw`` keeps each value whole)
+    plus one numpy pass to drop empty/over-long tokens. Token-for-token
+    identical to the ``*_py`` references and, on the BMP, to
+    :func:`analyzer_expr` (pinned by tests/test_tokenize.py); the build
+    ships TEXT to its split-writer kernel and tokenizes there — no JVM
+    tokenize, no token-list Arrow transfer."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -187,6 +186,20 @@ def arrow_tokenize(
         raise ValueError(f"no arrow tokenizer for {tokenizer!r}")
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
+    if tokenizer == "raw":
+        # the whole value is one token, case kept; null, empty and values
+        # over RAW_MAX_LEN chars (not bytes) index nothing
+        n_chars = pc.utf8_length(arr)
+        keep = pc.fill_null(
+            pc.and_(pc.greater(n_chars, 0), pc.less_equal(n_chars, RAW_MAX_LEN)),
+            False,
+        )
+        keep_np = keep.to_numpy(zero_copy_only=False).astype(bool)
+        offs = np.concatenate([[0], np.cumsum(keep_np)])
+        return pa.ListArray.from_arrays(
+            pa.array(offs.astype(np.int32), type=pa.int32()),
+            arr.filter(keep).cast(pa.string()),
+        )
     if tokenizer == "en_stem":
         base = arrow_tokenize(arr, "default", max_token_len)
         flat = base.flatten()

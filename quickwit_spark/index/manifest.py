@@ -467,8 +467,8 @@ class Manifest:
 
     def published_fingerprints(self, generation: int = 0) -> dict[int, str]:
         """partition_id -> source_fingerprint for one build generation (a
-        batch build is generation 0; each streaming micro-batch is its own
-        generation). Resume skips matching partitions.
+        batch build is generation >= 0, default 0; streaming micro-batch b is
+        generation -1 - b). Resume skips matching partitions.
 
         Read from the durable lineage sidecar first — a batch whose splits
         were since merged/retired must still be recognized as done on replay —

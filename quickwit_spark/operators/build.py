@@ -5,20 +5,19 @@ The whole reference indexing actor chain (Source -> DocProcessor -> Indexer ->
 Serializer -> Packager -> Uploader -> Publisher, quickwit-indexing/src/actors/
 indexing_pipeline.rs:246-380) collapses into ONE DataFrame lineage here:
 
-1. doc processing: html->text check, tokenize (whole-stage codegen expression),
-   doc_len + quantized norm columns; only index-relevant columns survive
-   (html never crosses a shuffle);
+1. doc processing: only index-relevant columns survive (html never crosses
+   a shuffle);
 2. partition routing: ``partition_id = pmod(xxhash64(url), num_splits)``
    (the reference hashes a routing key into at most max_num_partitions=200
    partitions, routing_expression/mod.rs:34-80);
-3. stable docids: ``row_number() over (partition by split order by url) - 1``
-   — insertion order in tantivy is replaced by a deterministic sort so that
-   rebuilds and resumes reproduce identical splits (SURVEY §7.4);
-4. split build (default = ONE-PASS, the reference's indexer architecture):
-   a single Spark job — the routing shuffle feeds a per-split **Arrow
-   kernel** (mapInArrow) that tokenizes once (C++ RE2), computes doc_len /
-   quantized norms, writes the split's docstore parquet AND its term-sorted
-   postings parquet itself (tmp + atomic rename; visibility is governed by
+3. stable docids: rows of a split are sorted by url and numbered densely
+   from 0 — insertion order in tantivy is replaced by a deterministic sort so
+   that rebuilds and resumes reproduce identical splits (SURVEY §7.4);
+4. split build (the reference's indexer architecture): a single Spark job —
+   the routing shuffle feeds a per-split **Arrow kernel** (mapInArrow) that
+   tokenizes once (C++ RE2), computes doc_len / quantized norms, writes the
+   split's docstore parquet AND its term-sorted postings parquet itself
+   through the storage seam (index/storage.py; visibility is governed by
    the manifest stage->publish protocol, so task retries are idempotent),
    and returns only a stats row per split. No cache materialization, no
    second scan, no postings shuffle — exactly one pass over the corpus,
@@ -28,21 +27,15 @@ indexing_pipeline.rs:246-380) collapses into ONE DataFrame lineage here:
    (term, doc, tf) runs sorted exactly as posting lists need; blocks are
    delta+bitpack encoded with a block-max sidecar. Memory bound = one
    split's docs per task (the 2 GB-heap commit trigger analog —
-   split_num_docs_target caps it);
-5. legacy two-job path (non-Arrow tokenizers, or one_pass=False): docstore
-   written by Spark from the cached window output, then a postings kernel +
-   repartition(split_id) write. Content-identical to the one-pass path
-   (pinned by tests/test_build_onepass.py);
-6. postings (salt_range path): shuffled two-stage encode for splits beyond
-   one task's RAM — per-(doc,term) tf rows salted by docid range, encoded
-   per (split, term, salt), concatenated per (split, term). Hot terms
-   (stopwords) spread across tasks; decoded content is identical;
-7. manifest rows staged then atomically published, with a source fingerprint
+   split_num_docs_target / split_memory_budget_bytes cap it);
+5. manifest rows staged then atomically published, with a source fingerprint
    per (generation, partition) for checkpoint-resume.
 
-Scale notes (100 TB story): the only full-data shuffle is the docid window,
-keyed by partition_id with num_splits >> cores; the salted path's shuffle is
-keyed by (partition, term, salt) and bounded by salt_range rows per group.
+Scale notes (100 TB story): the only full-data shuffle is the routing
+shuffle, keyed by partition_id with num_splits >> cores. The build is
+document-partitioned — no term-keyed shuffle exists, so a hot term (a
+stopword) costs its split's task no more than any other term; split-size
+targets, not salting, bound per-task memory (the reference does the same).
 Searches and merges touch only (query-term x split) / (<=12 splits) slices.
 """
 
@@ -50,26 +43,18 @@ from __future__ import annotations
 
 import hashlib
 import json
-import os
 import time
 from dataclasses import dataclass, field, replace
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from quickwit_spark import BLOCK_SIZE
-from quickwit_spark.functions.fieldnorm import quantize_len_expr
 from quickwit_spark.functions.spark_hash import perfect_partition_keys
-from quickwit_spark.functions.tokenize import (
-    ARROW_TOKENIZERS,
-    analyzer_expr,
-    tokenize_expr,
-)
 from quickwit_spark.index.codec import _pack_blocks_flat
 from quickwit_spark.index.manifest import Manifest, SplitMetadata
 from quickwit_spark.index.storage import get_storage
@@ -119,10 +104,6 @@ POSTINGS_SCHEMA = T.StructType(
 FIELD_SEP = "\x00"
 
 
-def namespaced_term(field_name: str, token_col):
-    return F.concat(F.lit(field_name + FIELD_SEP), token_col)
-
-
 @dataclass
 class IndexConfig:
     index_id: str = "pages"
@@ -160,17 +141,11 @@ class IndexConfig:
     # sortable, aggregatable and — for JSON string columns — path-queryable
     # (`field.a.b:v`)
     store_fields: tuple[str, ...] = ()
-    # generation tag for split ids — batch builds use 0; the streaming
-    # indexer stamps each micro-batch with its batch_id so split ids and
-    # checkpoint lineage stay disjoint across batches
+    # generation tag for split ids and checkpoint lineage — batch builds use
+    # generations >= 0 (default 0); the streaming indexer builds micro-batch
+    # b as generation -1 - b, so stream and batch splits never retire each
+    # other and stay disjoint across batches
     generation: int = 0
-    # hot-term skew handling (north_rule): when set, posting encoding runs in
-    # two stages — encode per (split, term, docid-range salt) then concatenate
-    # per (split, term) — so no single task ever materializes a stopword's
-    # full posting list as rows. Value = docids per salt bucket; decoded
-    # postings are identical to the unsalted path (block boundaries may
-    # differ, content cannot).
-    salt_range: int | None = None
     # size-driven split sizing (index_config/mod.rs:151-192 +
     # indexer.rs:468-478 commit-on-num-docs): when either target is set,
     # num_splits is COMPUTED per build as max(ceil(docs / docs_target),
@@ -195,17 +170,6 @@ class IndexConfig:
     # expression are rejected and counted (BuildMetrics.transform_errors),
     # the analog of the doc processor's transform-error counter.
     transform: str | None = None
-    # one-pass split builder: ONE Spark job — routing shuffle, then a per-
-    # split Arrow kernel that tokenizes, writes the split's docstore AND
-    # postings parquet files directly (tmp + atomic rename) and emits only a
-    # stats row. This is the reference's indexer architecture (indexer.rs
-    # workbench: each indexer builds its whole immutable split in one pass);
-    # the two-job path pays a full-width cache materialization plus a second
-    # postings shuffle that the reference never does. None = auto (on for
-    # Arrow-implementable tokenizers on unsalted builds); False forces the
-    # legacy two-job path (decoded index content is identical — pinned by
-    # tests/test_build_onepass.py).
-    one_pass: bool | None = None
 
 
 @dataclass
@@ -218,25 +182,12 @@ class BuildMetrics:
     uncompressed_bytes: int = 0
     # total on-storage size of the written split artifacts (docstore +
     # postings parquet after zstd) — the north-star's "bytes compressed"
-    # indexing metric; 0 on the legacy two-job path (Spark writes there,
-    # sizes not surfaced)
+    # indexing metric
     compressed_bytes: int = 0
     postings_bytes: int = 0
     transform_errors: int = 0  # docs rejected by the VRL ingest transform
     splits: list[str] = field(default_factory=list)
 
-
-# hot-path rows key on partition_id (int) — the split_id string is attached
-# only to the ~1-row-per-term encoded output (cheap) and the docstore write
-TF_SCHEMA = T.StructType(
-    [
-        T.StructField("partition_id", T.IntegerType()),
-        T.StructField("docid", T.IntegerType()),
-        T.StructField("term", T.StringType()),
-        T.StructField("tf", T.IntegerType()),
-        T.StructField("positions", T.ArrayType(T.IntegerType()), True),
-    ]
-)
 
 ENC_SCHEMA = T.StructType(
     [
@@ -248,234 +199,6 @@ ENC_SCHEMA = T.StructType(
         T.StructField("pos_blocks", T.ArrayType(POS_BLOCK_STRUCT), True),
     ]
 )
-
-ENC_SALTED_SCHEMA = T.StructType(
-    list(ENC_SCHEMA.fields) + [T.StructField("salt", T.IntegerType())]
-)
-
-
-def _make_doc_tf_kernel(with_positions: bool):
-    """mapInPandas: (partition_id, docid, tokens) -> one row per distinct
-    (doc, term) with its term frequency (and, when recording positions, the
-    ascending token-position list).
-
-    Term frequencies are counted LOCALLY per document (vectorized per Arrow
-    batch) — the per-token explode never hits a shuffle; only the ~40%-smaller
-    distinct (doc, term) pairs do. This is the map-side combine of the
-    indexing pipeline."""
-
-    def kernel(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            lens = np.fromiter(
-                (0 if t is None else len(t) for t in pdf["tokens"]),
-                dtype=np.int64,
-                count=len(pdf),
-            )
-            total = int(lens.sum())
-            if total == 0:
-                continue
-            pid_rep = np.repeat(pdf["partition_id"].to_numpy(), lens)
-            docid_rep = np.repeat(pdf["docid"].to_numpy(), lens)
-            # None tokens (null text) become 0-d arrays under np.asarray and
-            # break concatenate; lens already counts them as 0, so skip them.
-            term_flat = np.concatenate(
-                [
-                    np.asarray(t, dtype=object)
-                    for t in pdf["tokens"]
-                    if t is not None and len(t)
-                ]
-            )
-            codes, uniques = pd.factorize(term_flat, sort=False)
-            cum = np.concatenate([[0], np.cumsum(lens)])
-            pos_flat = np.arange(total, dtype=np.int64) - np.repeat(cum[:-1], lens)
-            # stable lexsort: equal (pid, docid, term) runs keep original
-            # order = ascending positions
-            order = np.lexsort((codes, docid_rep, pid_rep))
-            pid_s, docid_s = pid_rep[order], docid_rep[order]
-            code_s, pos_s = codes[order], pos_flat[order]
-            new = np.ones(total, dtype=bool)
-            new[1:] = (
-                (pid_s[1:] != pid_s[:-1])
-                | (docid_s[1:] != docid_s[:-1])
-                | (code_s[1:] != code_s[:-1])
-            )
-            starts = np.flatnonzero(new)
-            tf = np.diff(np.append(starts, total))
-            out = pd.DataFrame(
-                {
-                    "partition_id": pid_s[starts].astype("int32"),
-                    "docid": docid_s[starts].astype("int32"),
-                    "term": uniques[code_s[starts]],
-                    "tf": tf.astype("int32"),
-                }
-            )
-            if with_positions:
-                out["positions"] = [
-                    p.astype("int32") for p in np.split(pos_s, starts[1:])
-                ]
-            else:
-                out["positions"] = None
-            yield out
-
-    return kernel
-
-
-PA_TF_SCHEMA = pa.schema(
-    [
-        ("partition_id", pa.int32()),
-        ("docid", pa.int32()),
-        ("term", pa.string()),
-        ("tf", pa.int32()),
-        ("positions", pa.list_(pa.int32())),
-    ]
-)
-
-
-def _make_doc_tf_arrow_kernel(with_positions: bool, tokenizer: str):
-    """Arrow twin of :func:`_make_doc_tf_kernel` for in-kernel tokenizers:
-    (partition_id, docid, text) -> one row per distinct (doc, term) with tf
-    (and ascending positions). Tokenizes via :func:`arrow_tokenize` (C++
-    RE2), factorizes with ``pc.dictionary_encode`` and sorts dictionary
-    codes with the 16-bit radix trick — token strings never become Python
-    objects, unlike the pandas kernel's object-list concatenate."""
-
-    def kernel(batches):
-        try:
-            pa.set_cpu_count(1)
-            pa.set_io_thread_count(1)
-        except Exception:  # noqa: BLE001
-            pass
-        from quickwit_spark.functions.tokenize import arrow_tokenize
-
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            names = rb.schema.names
-            toks = arrow_tokenize(
-                rb.column(names.index("text")), tokenizer
-            )
-            offs = toks.offsets.to_numpy().astype(np.int64)
-            lens = np.diff(offs - offs[0])
-            total = int(lens.sum())
-            if total == 0:
-                continue
-            pid_np = rb.column(names.index("partition_id")).to_numpy().astype(np.int64)
-            docid_np = rb.column(names.index("docid")).to_numpy().astype(np.int64)
-            pid_rep = np.repeat(pid_np, lens)
-            docid_rep = np.repeat(docid_np, lens)
-            enc = pc.dictionary_encode(toks.flatten())
-            codes = enc.indices.to_numpy().astype(np.int64)
-            cum = np.concatenate([[0], np.cumsum(lens)])
-            pos_flat = np.arange(total, dtype=np.int64) - np.repeat(cum[:-1], lens)
-            # rows arrive clustered by partition and docid-sorted (the docid
-            # window), so (pid, docid) is nondecreasing and a stable sort by
-            # CODE alone equals the full lexsort — done 16 radix bits at a
-            # time (numpy stable argsort is radix only <=16-bit dtypes)
-            key_pd = (pid_rep << np.int64(32)) | docid_rep
-            if np.all(key_pd[1:] >= key_pd[:-1]):
-                order = np.argsort(
-                    (codes & 0xFFFF).astype(np.uint16), kind="stable"
-                )
-                if len(enc.dictionary) > 0xFFFF + 1:
-                    hi = (codes >> np.int64(16)).astype(np.uint16)
-                    order = order[np.argsort(hi[order], kind="stable")]
-            else:
-                order = np.lexsort((codes, docid_rep, pid_rep))
-            pid_s, docid_s = pid_rep[order], docid_rep[order]
-            code_s, pos_s = codes[order], pos_flat[order]
-            new = np.ones(total, dtype=bool)
-            new[1:] = (
-                (pid_s[1:] != pid_s[:-1])
-                | (docid_s[1:] != docid_s[:-1])
-                | (code_s[1:] != code_s[:-1])
-            )
-            starts = np.flatnonzero(new)
-            tf = np.diff(np.append(starts, total))
-            if with_positions:
-                pos_arr = pa.ListArray.from_arrays(
-                    pa.array(
-                        np.append(starts, total).astype(np.int32),
-                        type=pa.int32(),
-                    ),
-                    pa.array(pos_s.astype(np.int32), type=pa.int32()),
-                )
-            else:
-                pos_arr = pa.array(
-                    [None] * len(starts), type=pa.list_(pa.int32())
-                )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(pid_s[starts].astype(np.int32), type=pa.int32()),
-                    pa.array(docid_s[starts].astype(np.int32), type=pa.int32()),
-                    pc.take(
-                        enc.dictionary,
-                        pa.array(code_s[starts], type=pa.int64()),
-                    ).cast(pa.string()),
-                    pa.array(tf.astype(np.int32), type=pa.int32()),
-                    pos_arr,
-                ],
-                schema=PA_TF_SCHEMA,
-            )
-
-    return kernel
-
-
-def _encode_sorted_arrow(tbl: "pa.Table", with_positions: bool) -> "pa.RecordBatch":
-    """Arrow rows already sorted by (partition, term, salt, docid) -> one
-    encoded row per (partition, term, salt) group, via the shared
-    `_assemble_blocks` batch encoder (the old per-group encode_postings loop
-    cost ~100 µs of python per group; a salted build has a group per
-    (term, salt) — millions on a realistic vocabulary)."""
-    batch = tbl.combine_chunks().to_batches()[0]
-    names = batch.schema.names
-    pid = batch.column(names.index("partition_id")).to_numpy().astype(np.int64)
-    salt = batch.column(names.index("salt")).to_numpy().astype(np.int64)
-    docid = batch.column(names.index("docid")).to_numpy().astype(np.int64)
-    tf = batch.column(names.index("tf")).to_numpy().astype(np.int64)
-    enc_t = pc.dictionary_encode(batch.column(names.index("term")))
-    codes = enc_t.indices.to_numpy().astype(np.int64)
-    n = len(pid)
-    change = (
-        (pid[1:] != pid[:-1])
-        | (codes[1:] != codes[:-1])
-        | (salt[1:] != salt[:-1])
-    )
-    bounds = np.concatenate([[0], np.flatnonzero(change) + 1, [n]])
-    g_all = None
-    if with_positions:
-        # rows ARE postings: the list column's offsets give per-posting
-        # position runs directly (no per-row python flattening)
-        ls = batch.column(names.index("positions"))
-        flat = ls.flatten().to_numpy().astype(np.int64)
-        offs = ls.offsets.to_numpy().astype(np.int64)
-        starts = offs[:-1] - offs[0]
-        total = len(flat)
-        g_all = np.empty(total, dtype=np.int64)
-        if total:
-            g_all[0] = 0
-            np.subtract(flat[1:], flat[:-1], out=g_all[1:])
-            g_all[starts] = flat[starts] + 1
-    dfs, sums, blocks_arr, pos_arr = _assemble_blocks(docid, tf, bounds, g_all)
-    n_groups = len(bounds) - 1
-    if pos_arr is None:
-        pos_arr = pa.array([None] * n_groups, type=pa.list_(PA_POS_BLOCK))
-    terms_arr = pc.take(
-        enc_t.dictionary, pa.array(codes[bounds[:-1]], type=pa.int64())
-    ).cast(pa.string())
-    return pa.RecordBatch.from_arrays(
-        [
-            pa.array(pid[bounds[:-1]].astype(np.int32), type=pa.int32()),
-            terms_arr,
-            pa.array(dfs, type=pa.int64()),
-            pa.array(sums, type=pa.int64()),
-            blocks_arr,
-            pos_arr,
-            pa.array(salt[bounds[:-1]].astype(np.int32), type=pa.int32()),
-        ],
-        schema=PA_ENC_SALTED_SCHEMA,
-    )
 
 
 PA_BLOCK = pa.struct(
@@ -508,10 +231,6 @@ PA_ENC_SCHEMA = pa.schema(
         ("blocks", pa.list_(PA_BLOCK)),
         ("pos_blocks", pa.list_(PA_POS_BLOCK)),
     ]
-)
-
-PA_ENC_SALTED_SCHEMA = pa.schema(
-    list(PA_ENC_SCHEMA) + [pa.field("salt", pa.int32())]
 )
 
 
@@ -548,8 +267,8 @@ def _encode_arrow_split(batches: list, with_positions: bool = False) -> "pa.Reco
         cum = np.concatenate([[0], np.cumsum(lens)])
         pos_flat = np.arange(total, dtype=np.int64) - np.repeat(cum[:-1], lens)
         if np.all(docid[1:] >= docid[:-1]):
-            # docids are nondecreasing in arrival order (the docid-assignment
-            # window sorted them), so a stable sort by CODE alone already
+            # docids are nondecreasing in arrival order (the split writer
+            # numbers them in url order), so a stable sort by CODE alone
             # yields (term, docid, position) order — and numpy's stable
             # argsort is radix (fast) only for <=16-bit dtypes, so sort the
             # codes 16 bits at a time: ~6x faster than the int64-key argsort
@@ -727,62 +446,46 @@ def _assemble_blocks(
     return dfs, sums, blocks_arr, pos_arr
 
 
-def _make_arrow_stream_kernel(with_positions: bool, tokenizer: str | None = None):
-    """mapInArrow wrapper over _encode_arrow_split: buffer record batches per
-    split (splits are contiguous within a partition), emit on boundary.
+def _batches_per_split(batches):
+    """Regroup a mapInArrow task's input into one list of record-batch
+    slices per split: rows arrive clustered by partition_id, and a split may
+    straddle Arrow batch boundaries."""
+    # one Arrow compute thread per worker: N workers x default pool (= all
+    # cores each) oversubscribes the box N-fold and *inverts* core scaling
+    try:
+        pa.set_cpu_count(1)
+        pa.set_io_thread_count(1)
+    except Exception:  # noqa: BLE001 - best effort, harmless if unavailable
+        pass
+    buf: list = []
+    cur: int | None = None
+    for rb in batches:
+        if rb.num_rows == 0:
+            continue
+        pids = rb.column(rb.schema.get_field_index("partition_id")).to_numpy()
+        bounds = np.concatenate(
+            [[0], np.flatnonzero(pids[1:] != pids[:-1]) + 1, [rb.num_rows]]
+        )
+        for a, b in zip(bounds[:-1], bounds[1:]):
+            pid = int(pids[a])
+            if cur is not None and pid != cur:
+                yield buf
+                buf = []
+            cur = pid
+            buf.append(rb.slice(a, b - a))
+    if buf:
+        yield buf
 
-    With ``tokenizer`` set, input batches carry (partition_id, docid, text)
-    and tokenization runs HERE via :func:`arrow_tokenize` (C++ RE2) — the
-    plan then ships raw text once instead of paying a second JVM tokenize
-    pass plus the token-list Arrow transfer (the docstore leg already
-    tokenized once for doc_len)."""
+
+def _make_arrow_stream_kernel(with_positions: bool):
+    """mapInArrow: pre-tokenized (partition_id, docid, tokens) rows -> one
+    encoded postings batch per split (janitor's delete-rewrite)."""
 
     def kernel(batches):
-        # one Arrow compute thread per worker: N workers x default pool (= all
-        # cores each) oversubscribes the box N-fold and *inverts* core scaling
-        try:
-            pa.set_cpu_count(1)
-            pa.set_io_thread_count(1)
-        except Exception:  # noqa: BLE001 - best effort, harmless if unavailable
-            pass
-        buf: list = []
-        cur: int | None = None
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            if tokenizer is not None:
-                from quickwit_spark.functions.tokenize import arrow_tokenize
-
-                rb = pa.RecordBatch.from_arrays(
-                    [
-                        rb.column(rb.schema.get_field_index("partition_id")),
-                        rb.column(rb.schema.get_field_index("docid")),
-                        arrow_tokenize(
-                            rb.column(rb.schema.get_field_index("text")),
-                            tokenizer,
-                        ),
-                    ],
-                    names=["partition_id", "docid", "tokens"],
-                )
-            pids = rb.column(rb.schema.get_field_index("partition_id")).to_numpy()
-            bounds = np.concatenate(
-                [[0], np.flatnonzero(pids[1:] != pids[:-1]) + 1, [rb.num_rows]]
-            )
-            for a, b in zip(bounds[:-1], bounds[1:]):
-                pid = int(pids[a])
-                if cur is not None and pid != cur:
-                    yield _encode_arrow_split(buf, with_positions)
-                    buf = []
-                cur = pid
-                buf.append(rb.slice(a, b - a))
-        if buf:
+        for buf in _batches_per_split(batches):
             yield _encode_arrow_split(buf, with_positions)
 
     return kernel
-
-
-# backward-compatible alias (positions off)
-_arrow_stream_kernel = _make_arrow_stream_kernel(False)
 
 
 # one-pass split writer: one stats row per split comes back to the driver;
@@ -821,10 +524,7 @@ _PA_STATS_SCHEMA = pa.schema(
 
 
 def _make_split_writer_kernel(
-    cfg: "IndexConfig",
-    index_dir: str,
-    passthrough: tuple[str, ...],
-    storage=None,
+    cfg: "IndexConfig", passthrough: tuple[str, ...], storage
 ):
     """mapInArrow: routed+sorted docs -> ONE stats row per split, writing the
     split's docstore and postings parquet files from inside the task.
@@ -838,21 +538,16 @@ def _make_split_writer_kernel(
     extra text fields, then ``passthrough`` store columns; rows arrive
     clustered by partition_id and sorted by url (the build's
     perfect-placement repartition + sortWithinPartitions), and docids are
-    assigned densely in arrival order — identical to the legacy docid
-    window's row_number ordered by doc_key.
+    assigned densely in arrival order (row_number()-1 ordered by doc_key).
 
     ``storage`` is the artifact-write seam (index/storage.py): the POSIX
-    backend writes tmp+replace exactly as before; the object-store backend
+    backend writes tmp+replace; the object-store backend
     serializes the artifact and uploads it as one PUT (uploader.rs:322
     analog) — no rename in the engine's write path. The handle is captured
     by the closure and pickled to executors (both backends are plain
     picklable state)."""
     import json as _json
 
-    from quickwit_spark.index.storage import LocalStorage
-
-    if storage is None:
-        storage = LocalStorage(index_dir)
     with_positions = cfg.record == "position"
     tokenizer = cfg.tokenizer
     extra_fields = tuple(cfg.extra_text_fields)
@@ -867,24 +562,18 @@ def _make_split_writer_kernel(
         pid = int(tbl.column("partition_id").chunk(0)[0].as_py())
         sid = split_id_for(cfg.index_id, pid, cfg.generation)
         n = tbl.num_rows
-        if "docid" in tbl.column_names:
-            docid = tbl.column("docid").combine_chunks()
-        else:
-            # rows arrive sorted by (partition_id, url) — the build's
-            # sortWithinPartitions — so dense ascending docids here equal
-            # the legacy window's row_number()-1 ordered by doc_key
-            docid = pa.array(np.arange(n, dtype=np.int32), type=pa.int32())
+        # rows arrive sorted by (partition_id, url) — the build's
+        # sortWithinPartitions — so docids are dense in arrival order
+        docid = pa.array(np.arange(n, dtype=np.int32), type=pa.int32())
         text = tbl.column("text").combine_chunks()
 
-        # tokenize ONCE; doc_len and postings both come from this array.
-        # (en_stem maps tokens 1:1, so its doc_len equals the default
-        # tokenizer's — same invariant the two-job path relies on.)
+        # tokenize ONCE; doc_len and postings both come from this array
         tokens = arrow_tokenize(text, tokenizer)
         dl = pc.fill_null(pc.list_value_length(tokens), 0)
         dl_np = dl.to_numpy(zero_copy_only=False).astype(np.int64)
         norm = quantize_len(dl_np).astype(np.int32)
 
-        # --- docstore (legacy column order: docid, url, text, doc_len,
+        # --- docstore (column order: docid, url, text, doc_len,
         # norm_len, [tag], [ts], per-extra triples, store passthrough)
         ds_cols = [
             docid,
@@ -923,7 +612,7 @@ def _make_split_writer_kernel(
             pa.Table.from_arrays(ds_cols, names=ds_names),
         )
 
-        # --- postings (same encoder as the two-job path)
+        # --- postings (same encoder as janitor's delete-rewrite)
         pid_arr = pa.array(np.full(n, pid, dtype=np.int32), type=pa.int32())
         parts = [
             _encode_arrow_split(
@@ -956,8 +645,7 @@ def _make_split_writer_kernel(
                 )
             parts.append(e)
         post = pa.Table.from_batches(parts, schema=PA_ENC_SCHEMA)
-        # term-sorted file = the hotcache/row-group-pruning analog the
-        # legacy sortWithinPartitions("term") provided
+        # term-sorted file = the hotcache/row-group-pruning analog
         post = post.sort_by("term").drop_columns(["partition_id"])
         post_bytes = storage.write_parquet(f"postings/split_id={sid}", post)
 
@@ -1024,148 +712,17 @@ def _make_split_writer_kernel(
         )
 
     def kernel(batches):
-        try:
-            pa.set_cpu_count(1)
-            pa.set_io_thread_count(1)
-        except Exception:  # noqa: BLE001 - best effort
-            pass
-        buf: list = []
-        cur: int | None = None
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            pids = rb.column(rb.schema.get_field_index("partition_id")).to_numpy()
-            bounds = np.concatenate(
-                [[0], np.flatnonzero(pids[1:] != pids[:-1]) + 1, [rb.num_rows]]
-            )
-            for a, b in zip(bounds[:-1], bounds[1:]):
-                pid = int(pids[a])
-                if cur is not None and pid != cur:
-                    yield _flush(buf)
-                    buf = []
-                cur = pid
-                buf.append(rb.slice(a, b - a))
-        if buf:
+        for buf in _batches_per_split(batches):
             yield _flush(buf)
 
     return kernel
 
 
-def _trailing_group_cut(cols: list[np.ndarray]) -> int:
-    """Index where the trailing key-group starts (rows sorted by the keys)."""
-    n = len(cols[0])
-    mask = np.ones(n, dtype=bool)
-    for col in cols:
-        mask &= col == col[-1]
-    # rows equal to the last key are exactly its trailing contiguous run
-    return int(n - mask.sum())
-
-
-def _make_salted_encode_kernel(with_positions: bool):
-    """mapInArrow kernel over a partition hash-clustered by (partition, term,
-    salt) and sorted by (key, docid). A group may straddle Arrow batch
-    boundaries; the trailing group of each batch is carried into the next."""
-
-    def kernel(batches):
-        held: "pa.Table | None" = None
-        for rb in batches:
-            tbl = pa.Table.from_batches([rb])
-            if held is not None and held.num_rows:
-                tbl = pa.concat_tables([held, tbl]).combine_chunks()
-            if not tbl.num_rows:
-                continue
-            keys = [
-                tbl.column(c).to_numpy(zero_copy_only=False)
-                for c in ("partition_id", "term", "salt")
-            ]
-            cut = _trailing_group_cut(keys)
-            held = tbl.slice(cut)
-            if cut:
-                yield _encode_sorted_arrow(tbl.slice(0, cut), with_positions)
-        if held is not None and held.num_rows:
-            yield _encode_sorted_arrow(held, with_positions)
-
-    return kernel
-
-
-def _concat_salted_rows(tbl: "pa.Table") -> "pa.RecordBatch":
-    """Stage 2: concatenate each term's partial rows in salt (= docid-range)
-    order. Blocks are already encoded (~2 bytes/posting), so the whole merge
-    is LIST-OFFSET SURGERY: the concatenated block list of a group is the
-    flattened child array sliced by the group-boundary offsets — no block is
-    touched, copied or re-encoded (the old per-term pandas apply paid ~100 µs
-    of groupby overhead per term)."""
-    batch = tbl.combine_chunks().to_batches()[0]
-    names = batch.schema.names
-    pid = batch.column(names.index("partition_id")).to_numpy().astype(np.int64)
-    enc_t = pc.dictionary_encode(batch.column(names.index("term")))
-    codes = enc_t.indices.to_numpy().astype(np.int64)
-    dfreq = batch.column(names.index("doc_freq")).to_numpy().astype(np.int64)
-    sumtf = batch.column(names.index("sum_tf")).to_numpy().astype(np.int64)
-    n = len(pid)
-    change = (pid[1:] != pid[:-1]) | (codes[1:] != codes[:-1])
-    bounds = np.concatenate([[0], np.flatnonzero(change) + 1, [n]])
-    starts = bounds[:-1]
-
-    def regroup(col_name: str) -> "pa.ListArray":
-        ls = batch.column(names.index(col_name))
-        offs = ls.offsets.to_numpy().astype(np.int64)
-        group_offs = offs[bounds] - offs[0]
-        return pa.ListArray.from_arrays(
-            pa.array(group_offs.astype(np.int32), type=pa.int32()),
-            ls.flatten(),
-        )
-
-    blocks_arr = regroup("blocks")
-    pos_col = batch.column(names.index("pos_blocks"))
-    if pos_col.null_count == n:
-        pos_arr = pa.array([None] * (len(bounds) - 1), type=pa.list_(PA_POS_BLOCK))
-    else:
-        pos_arr = regroup("pos_blocks")
-    return pa.RecordBatch.from_arrays(
-        [
-            pa.array(pid[starts].astype(np.int32), type=pa.int32()),
-            pc.take(
-                enc_t.dictionary, pa.array(codes[starts], type=pa.int64())
-            ).cast(pa.string()),
-            pa.array(np.add.reduceat(dfreq, starts), type=pa.int64()),
-            pa.array(np.add.reduceat(sumtf, starts), type=pa.int64()),
-            blocks_arr,
-            pos_arr,
-        ],
-        schema=PA_ENC_SCHEMA,
-    )
-
-
-def _make_salted_concat_kernel():
-    """mapInArrow kernel for stage 2, over rows hash-clustered by
-    (partition, term) and sorted by (partition, term, salt); buffers the
-    trailing term group across Arrow batch boundaries."""
-
-    def kernel(batches):
-        held: "pa.Table | None" = None
-        for rb in batches:
-            tbl = pa.Table.from_batches([rb])
-            if held is not None and held.num_rows:
-                tbl = pa.concat_tables([held, tbl]).combine_chunks()
-            if not tbl.num_rows:
-                continue
-            keys = [
-                tbl.column(c).to_numpy(zero_copy_only=False)
-                for c in ("partition_id", "term")
-            ]
-            cut = _trailing_group_cut(keys)
-            held = tbl.slice(cut)
-            if cut:
-                yield _concat_salted_rows(tbl.slice(0, cut))
-        if held is not None and held.num_rows:
-            yield _concat_salted_rows(held)
-
-    return kernel
-
-
 def split_id_for(index_id: str, partition_id: int, generation: int = 0) -> str:
-    return f"{index_id}-{generation:02d}-p{partition_id:05d}"
+    # negative generations are streaming micro-batches (generation -1 - b
+    # for batch b): rendered ``s<b>`` so they never equal a batch build's id
+    gen = f"{generation:02d}" if generation >= 0 else f"s{-1 - generation:02d}"
+    return f"{index_id}-{gen}-p{partition_id:05d}"
 
 
 def source_fingerprint(pages: DataFrame, partition_id: int) -> str:
@@ -1176,28 +733,13 @@ def source_fingerprint(pages: DataFrame, partition_id: int) -> str:
     return h
 
 
-def prepare_docs(
-    pages: DataFrame,
-    cfg: IndexConfig,
-    with_doc_len: bool = True,
-    assign_docid: bool = True,
-) -> DataFrame:
-    """Doc-processing + routing + stable docid assignment (steps 1-3).
+def prepare_docs(pages: DataFrame, cfg: IndexConfig) -> DataFrame:
+    """Doc processing + routing (steps 1-2): the index's columns plus
+    ``partition_id``.
 
     Only the columns the index needs survive past this point — the routing
     shuffle must not carry dead weight (html is the bulk of a web page and
-    appears in no index structure).
-
-    ``with_doc_len=False`` skips the JVM tokenize pass used for doc_len —
-    the one-pass split writer computes doc_len inside its Arrow kernel from
-    the same tokenization that builds the postings, so paying it here would
-    tokenize every document twice."""
-    # tokens here feed ONLY doc_len (the arrays are dropped before the
-    # cache). Stemming maps each token 1:1, so en_stem's doc_len equals the
-    # default tokenizer's — use the pure-codegen default expression instead
-    # of the row-at-a-time stem UDF
-    doclen_tok = "default" if cfg.tokenizer == "en_stem" else cfg.tokenizer
-    toks = analyzer_expr(F.col(cfg.text_field), doclen_tok)
+    appears in no index structure)."""
     if cfg.routing_col:
         r = F.col(cfg.routing_col).cast("int")
         # out-of-range routing would write orphan split data and then crash
@@ -1226,28 +768,7 @@ def prepare_docs(
         keep.add(cfg.routing_col)
     keep.update(cfg.store_fields)
     keep.update(cfg.extra_text_fields)
-    df = pages.select(*sorted(keep)).withColumn("partition_id", route)
-    if with_doc_len:
-        df = df.withColumn("tokens", toks).withColumn(
-            # size(NULL) is NULL — null text must index as an empty doc, not
-            # poison doc_len/norms/stats with nulls
-            "doc_len",
-            F.coalesce(F.size("tokens"), F.lit(0)),
-        )
-        for f_ in cfg.extra_text_fields:
-            df = df.withColumn(
-                f"doc_len__{f_}",
-                F.coalesce(
-                    F.size(analyzer_expr(F.col(f_), doclen_tok)), F.lit(0)
-                ),
-            )
-    if not assign_docid:
-        # the one-pass split writer derives docids in-kernel from its
-        # per-task (partition_id, doc_key) sort — same values, no
-        # window shuffle + row_number pass here
-        return df
-    w = Window.partitionBy("partition_id").orderBy(cfg.doc_key)
-    return df.withColumn("docid", F.row_number().over(w) - F.lit(1))
+    return pages.select(*sorted(keep)).withColumn("partition_id", route)
 
 
 def build_index(
@@ -1395,359 +916,90 @@ def build_index(
         metrics.elapsed_sec = time.time() - t0
         return metrics
 
-    if cfg.one_pass and cfg.salt_range:
-        raise ValueError(
-            "one_pass=True is incompatible with salt_range: the salted "
-            "(beyond-task-RAM) build needs its two-stage shuffle"
-        )
-    if cfg.one_pass and cfg.tokenizer not in ARROW_TOKENIZERS:
-        raise ValueError(
-            f"one_pass=True needs an Arrow-implementable tokenizer, "
-            f"got {cfg.tokenizer!r}"
-        )
-    one_pass = (
-        cfg.one_pass
-        if cfg.one_pass is not None
-        else (cfg.tokenizer in ARROW_TOKENIZERS and not cfg.salt_range)
-    )
-    if one_pass:
-        # ONE job: routing shuffle -> per-split Arrow kernel that tokenizes,
-        # writes the split's docstore + postings parquet itself, and returns
-        # only a stats row (the reference's per-indexer split build). The
-        # two-job path below pays a full-width cache materialization plus a
-        # postings shuffle this path never runs.
-        docs = prepare_docs(
-            pages, cfg, with_doc_len=False, assign_docid=False
-        )
-        if len(todo) < cfg.num_splits:
-            docs = docs.filter(F.col("partition_id").isin(todo))
-        proj = [
-            F.col("partition_id"),
-            F.col(cfg.doc_key).alias("url"),
-            F.col(cfg.text_field).cast("string").alias("text"),
-        ]
-        if cfg.tag_field:
-            proj.append(F.col(cfg.tag_field).alias("tag"))
-        if cfg.timestamp_field:
-            proj.append(F.col(cfg.timestamp_field).alias("ts"))
-        reserved = {
-            cfg.doc_key,
-            cfg.text_field,
-            cfg.tag_field,
-            cfg.timestamp_field,
-            *cfg.extra_text_fields,
-        }
-        passthrough = tuple(
-            c for c in cfg.store_fields if c not in reserved
-        )
-        for f_ in cfg.extra_text_fields:
-            proj.append(F.col(f_).cast("string").alias(f_))
-        for c in passthrough:
-            proj.append(F.col(c))
-        # perfect task<->split placement: hash-partitioning len(todo) pids
-        # into len(todo) buckets stacks 2-3 splits on some tasks and leaves
-        # ~1/e of them empty (birthday collisions) — one task then builds
-        # multiple whole splits serially, a ~2x tail locally and a
-        # guaranteed straggler on a cluster. Remap each pid to a key whose
-        # murmur3 bucket is unique (driver-side, functions/spark_hash.py)
-        # and repartition on that: exactly one split per task. docids are
-        # assigned inside the kernel from the per-task (pid, url) sort —
-        # same values the docid window produced, without its extra
-        # JVM row_number pass.
-        remap = perfect_partition_keys(todo)
-        map_df = local_rows_df(
-            docs.sparkSession, list(remap.items()), "partition_id int, _rk int"
-        )
-        routed = (
-            docs.select(*proj)
-            .join(F.broadcast(map_df), "partition_id")
-            .repartition(len(todo), "_rk")
-            .drop("_rk")
-            .sortWithinPartitions("partition_id", "url")
-        )
-        stats_rows = (
-            routed.mapInArrow(
-                _make_split_writer_kernel(
-                    cfg, index_dir, passthrough, storage=storage
-                ),
-                ONE_PASS_STATS_SCHEMA,
-            )
-            .collect()
-        )
-        norm_stats = [
-            {
-                "partition_id": r["partition_id"],
-                "split_id": split_id_for(
-                    cfg.index_id, r["partition_id"], cfg.generation
-                ),
-                "num_docs": r["num_docs"],
-                "total_tokens": r["total_tokens"],
-                "bytes": r["bytes"],
-                "ts_min": r["ts_min"],
-                "ts_max": r["ts_max"],
-                "tags": list(r["tags"] or []),
-                "ftt": (
-                    json.loads(r["field_total_tokens"])
-                    if r["field_total_tokens"]
-                    else None
-                ),
-                "franges": (
-                    json.loads(r["field_ranges"])
-                    if r["field_ranges"]
-                    else None
-                ),
-                "cbytes": r["compressed_bytes"],
-            }
-            for r in stats_rows
-        ]
-        new_metas = _stage_and_publish(
-            manifest, cfg, norm_stats, fingerprints, todo, metrics
-        )
-        metrics.num_splits = len(new_metas)
-        metrics.splits = [m.split_id for m in new_metas]
-        metrics.elapsed_sec = time.time() - t0
-        metrics.docs_per_sec = metrics.num_docs / max(metrics.elapsed_sec, 1e-9)
-        return metrics
-
+    # ONE job: routing shuffle -> per-split Arrow kernel that tokenizes,
+    # writes the split's docstore + postings parquet itself, and returns
+    # only a stats row (the reference's per-indexer split build)
     docs = prepare_docs(pages, cfg)
     if len(todo) < cfg.num_splits:
         docs = docs.filter(F.col("partition_id").isin(todo))
-    sid = F.concat(
-        F.lit(f"{cfg.index_id}-{cfg.generation:02d}-p"),
-        F.lpad(F.col("partition_id").cast("string"), 5, "0"),
-    )
-    docs = docs.withColumn("split_id", sid).drop("tokens")
-    # cache WITHOUT the tokens column (it would double the cache footprint);
-    # the postings path re-derives tokens from the cached text JVM-side
-    docs.cache()  # reused by docstore write + postings build + stats
-
-    # --- docstore (row store + fast fields + norms)
-    store_cols = [
-        "split_id",
-        "docid",
-        F.col(cfg.doc_key).alias("url") if cfg.doc_key != "url" else F.col("url"),
-        F.col(cfg.text_field).alias("text") if cfg.text_field != "text" else F.col("text"),
-        "doc_len",
-        # tantivy-fidelity: |d| used by BM25 is the SmallFloat-dequantized
-        # length (SURVEY §7.4) — precomputed at build like a fieldnorm
-        # column, as a pure codegen expression (no Python in this job)
-        quantize_len_expr(F.col("doc_len")).alias("norm_len"),
+    proj = [
+        F.col("partition_id"),
+        F.col(cfg.doc_key).alias("url"),
+        F.col(cfg.text_field).cast("string").alias("text"),
     ]
     if cfg.tag_field:
-        store_cols.append(F.col(cfg.tag_field).alias("tag"))
+        proj.append(F.col(cfg.tag_field).alias("tag"))
     if cfg.timestamp_field:
-        store_cols.append(F.col(cfg.timestamp_field).alias("ts"))
-    for f_ in cfg.extra_text_fields:
-        store_cols += [
-            F.col(f_),
-            F.col(f"doc_len__{f_}"),
-            quantize_len_expr(F.col(f"doc_len__{f_}")).alias(f"norm_len__{f_}"),
-        ]
-    for extra in cfg.store_fields:
-        if extra not in {
-            cfg.doc_key,
-            cfg.text_field,
-            cfg.tag_field,
-            cfg.timestamp_field,
-            *cfg.extra_text_fields,
-        }:
-            store_cols.append(F.col(extra))
-    docstore = docs.select(*store_cols)
-    (
-        # no repartition: the docid-assignment window already clustered rows
-        # by partition_id and sorted them by doc_key (= docid order), so each
-        # task streams straight into its split's directory with sorted docids
-        docstore.write.mode("overwrite")
-        # only replace the split partitions being (re)built — a resume must
-        # not truncate sibling splits' data
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("split_id")
-        .parquet(os.path.join(index_dir, "docstore"))
-    )
-
-    # --- postings
-    with_pos = cfg.record == "position"
-    if cfg.salt_range:
-        # shuffled path: per-(doc,term) tf rows, salted by docid range so hot
-        # terms spread across tasks — for splits too big for one task's RAM.
-        # Arrow-implementable tokenizers tokenize IN the tf kernel (same
-        # rationale as the default path: one tokenize, no object lists)
-        if cfg.tokenizer in ARROW_TOKENIZERS:
-            tf = docs.select(
-                "partition_id",
-                "docid",
-                F.col(cfg.text_field).cast("string").alias("text"),
-            ).mapInArrow(
-                _make_doc_tf_arrow_kernel(with_pos, cfg.tokenizer), TF_SCHEMA
-            )
-        else:
-            tf = docs.withColumn(
-                "tokens", analyzer_expr(F.col(cfg.text_field), cfg.tokenizer)
-            ).select("partition_id", "docid", "tokens").mapInPandas(
-                _make_doc_tf_kernel(with_pos), TF_SCHEMA
-            )
-        salted = tf.withColumn(
-            "salt", (F.col("docid") / F.lit(cfg.salt_range)).cast("int")
-        )
-        partial = salted.repartition(
-            "partition_id", "term", "salt"
-        ).sortWithinPartitions(
-            "partition_id", "term", "salt", "docid"
-        ).mapInArrow(_make_salted_encode_kernel(with_pos), ENC_SALTED_SCHEMA)
-        encoded = (
-            partial.repartition("partition_id", "term")
-            .sortWithinPartitions("partition_id", "term", "salt")
-            .mapInArrow(_make_salted_concat_kernel(), ENC_SCHEMA)
-        )
-    else:
-        # default: per-split single-pass build, zero intermediate shuffle
-        # (docs are clustered by partition_id from the docid window). For
-        # Arrow-implementable tokenizers the kernel receives RAW TEXT and
-        # tokenizes in C++ (no second JVM tokenize, no token-list transfer);
-        # others (en_stem, raw) pre-tokenize JVM/UDF-side as before
-        in_kernel = cfg.tokenizer in ARROW_TOKENIZERS
-
-        def _postings_leg(src_col: str) -> DataFrame:
-            if in_kernel:
-                ex_ = docs.select(
-                    "partition_id",
-                    "docid",
-                    F.col(src_col).cast("string").alias("text"),
-                )
-                return ex_.mapInArrow(
-                    _make_arrow_stream_kernel(with_pos, cfg.tokenizer),
-                    ENC_SCHEMA,
-                )
-            ex_ = docs.select(
-                "partition_id",
-                "docid",
-                analyzer_expr(F.col(src_col), cfg.tokenizer).alias("tokens"),
-            )
-            return ex_.mapInArrow(_make_arrow_stream_kernel(with_pos), ENC_SCHEMA)
-
-        encoded = _postings_leg(cfg.text_field)
-        # extra text fields: one kernel pass per field; terms namespaced so
-        # every downstream consumer (merge, WAND, pruning) stays field-blind
-        for f_ in cfg.extra_text_fields:
-            encf = _postings_leg(f_).withColumn(
-                "term", namespaced_term(f_, F.col("term"))
-            )
-            encoded = encoded.unionByName(encf)
-    postings = encoded.withColumn(
-        "split_id",
-        F.concat(
-            F.lit(f"{cfg.index_id}-{cfg.generation:02d}-p"),
-            F.lpad(F.col("partition_id").cast("string"), 5, "0"),
-        ),
-    ).drop("partition_id")
-    (
-        postings.repartition("split_id")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("split_id")
-        .parquet(os.path.join(index_dir, "postings"))
-    )
-
-    # --- per-split stats -> manifest (stage then publish)
-    agg_exprs = [
-        F.count(F.lit(1)).alias("num_docs"),
-        F.sum("doc_len").alias("total_tokens"),
-        F.sum(F.length(cfg.text_field)).alias("bytes"),
-    ]
-    agg_exprs += [
-        F.sum(f"doc_len__{f_}").alias(f"_ftt__{f_}")
-        for f_ in cfg.extra_text_fields
-    ]
-    if cfg.timestamp_field:
-        agg_exprs += [
-            F.min(cfg.timestamp_field).alias("ts_min"),
-            F.max(cfg.timestamp_field).alias("ts_max"),
-        ]
-    if cfg.tag_field:
-        agg_exprs.append(
-            F.collect_set(cfg.tag_field).alias("tags")
-        )
-    # per-numeric-field min/max over non-null values — must mirror the
-    # one-pass kernel's field_ranges exactly (test_build_onepass compares
-    # manifests): doc_len + numeric store passthrough; NaN-bearing float
-    # columns omitted (no sound total-order bound across engines)
-    reserved_rng = {
+        proj.append(F.col(cfg.timestamp_field).alias("ts"))
+    reserved = {
         cfg.doc_key,
         cfg.text_field,
         cfg.tag_field,
         cfg.timestamp_field,
         *cfg.extra_text_fields,
     }
-    dtypes = dict(docs.dtypes)
-    rng_int, rng_flt = [], []
-    for c in ("doc_len",) + tuple(
-        f_ for f_ in cfg.store_fields if f_ not in reserved_rng
-    ):
-        t = dtypes.get(c)
-        if t in ("tinyint", "smallint", "int", "bigint"):
-            rng_int.append(c)
-        elif t in ("float", "double"):
-            rng_flt.append(c)
-    for c in rng_int:
-        agg_exprs += [
-            F.min(c).alias(f"_rlo__{c}"),
-            F.max(c).alias(f"_rhi__{c}"),
-        ]
-    for c in rng_flt:
-        nn = F.when(~F.isnan(F.col(c)), F.col(c))
-        agg_exprs += [
-            F.min(nn).alias(f"_rlo__{c}"),
-            F.max(nn).alias(f"_rhi__{c}"),
-            F.max(
-                F.when(F.isnan(F.col(c)), F.lit(1)).otherwise(F.lit(0))
-            ).alias(f"_rnan__{c}"),
-        ]
-    stats = (
-        docs.groupBy("partition_id", "split_id").agg(*agg_exprs).collect()
+    passthrough = tuple(
+        c for c in cfg.store_fields if c not in reserved
     )
-
-    def _row_franges(row) -> "dict | None":
-        out = {}
-        for c in rng_int:
-            if row[f"_rlo__{c}"] is not None:
-                out[c] = [row[f"_rlo__{c}"], row[f"_rhi__{c}"]]
-        for c in rng_flt:
-            if row[f"_rlo__{c}"] is not None and not row[f"_rnan__{c}"]:
-                out[c] = [row[f"_rlo__{c}"], row[f"_rhi__{c}"]]
-        return out or None
+    for f_ in cfg.extra_text_fields:
+        proj.append(F.col(f_).cast("string").alias(f_))
+    for c in passthrough:
+        proj.append(F.col(c))
+    # perfect task<->split placement: hash-partitioning len(todo) pids
+    # into len(todo) buckets stacks 2-3 splits on some tasks and leaves
+    # ~1/e of them empty (birthday collisions) — one task then builds
+    # multiple whole splits serially, a ~2x tail locally and a
+    # guaranteed straggler on a cluster. Remap each pid to a key whose
+    # murmur3 bucket is unique (driver-side, functions/spark_hash.py)
+    # and repartition on that: exactly one split per task. docids are
+    # assigned inside the kernel from the per-task (pid, url) sort.
+    remap = perfect_partition_keys(todo)
+    map_df = local_rows_df(
+        docs.sparkSession, list(remap.items()), "partition_id int, _rk int"
+    )
+    routed = (
+        docs.select(*proj)
+        .join(F.broadcast(map_df), "partition_id")
+        .repartition(len(todo), "_rk")
+        .drop("_rk")
+        .sortWithinPartitions("partition_id", "url")
+    )
+    stats_rows = (
+        routed.mapInArrow(
+            _make_split_writer_kernel(cfg, passthrough, storage),
+            ONE_PASS_STATS_SCHEMA,
+        )
+        .collect()
+    )
     norm_stats = [
         {
-            "partition_id": row["partition_id"],
-            "split_id": row["split_id"],
-            "num_docs": row["num_docs"],
-            "total_tokens": row["total_tokens"],
-            "bytes": row["bytes"],
-            "ts_min": (
-                row["ts_min"].isoformat()
-                if cfg.timestamp_field and row["ts_min"] is not None
-                else None
+            "partition_id": r["partition_id"],
+            "split_id": split_id_for(
+                cfg.index_id, r["partition_id"], cfg.generation
             ),
-            "ts_max": (
-                row["ts_max"].isoformat()
-                if cfg.timestamp_field and row["ts_max"] is not None
-                else None
-            ),
-            "tags": sorted(row["tags"]) if cfg.tag_field else [],
+            "num_docs": r["num_docs"],
+            "total_tokens": r["total_tokens"],
+            "bytes": r["bytes"],
+            "ts_min": r["ts_min"],
+            "ts_max": r["ts_max"],
+            "tags": list(r["tags"] or []),
             "ftt": (
-                {f_: row[f"_ftt__{f_}"] for f_ in cfg.extra_text_fields}
-                if cfg.extra_text_fields
+                json.loads(r["field_total_tokens"])
+                if r["field_total_tokens"]
                 else None
             ),
-            "franges": _row_franges(row),
+            "franges": (
+                json.loads(r["field_ranges"])
+                if r["field_ranges"]
+                else None
+            ),
+            "cbytes": r["compressed_bytes"],
         }
-        for row in stats
+        for r in stats_rows
     ]
     new_metas = _stage_and_publish(
         manifest, cfg, norm_stats, fingerprints, todo, metrics
     )
-    docs.unpersist()
-
     metrics.num_splits = len(new_metas)
     metrics.splits = [m.split_id for m in new_metas]
     metrics.elapsed_sec = time.time() - t0
@@ -1763,10 +1015,9 @@ def _stage_and_publish(
     todo: list[int],
     metrics: BuildMetrics,
 ) -> list[SplitMetadata]:
-    """Shared manifest tail of both build paths: stage the new split metas,
-    retire superseded splits, publish atomically, and settle zero-row
-    partitions. ``norm_stats`` rows are plain dicts with ISO-string time
-    ranges (both build paths normalize into this shape)."""
+    """Manifest tail of the build: stage the new split metas, retire
+    superseded splits, publish atomically, and settle zero-row partitions.
+    ``norm_stats`` rows are plain dicts with ISO-string time ranges."""
     new_metas = []
     # stamp each new split with the config generation it was built under
     # (per-split DocMapper versioning; searchers plan leaves against it)
@@ -1789,7 +1040,7 @@ def _stage_and_publish(
             tags=tags,
             source_fingerprint=fingerprints[row["partition_id"]],
             generation=cfg.generation,
-            # docids are dense row_number()-1 per split at build time
+            # docids are dense 0..num_docs-1 per split at build time
             max_docid=row["num_docs"] - 1,
             record=cfg.record,
             field_total_tokens=row["ftt"],

@@ -11,10 +11,11 @@ Reference semantics:
 
 A rewrite keeps the surviving docs' docids (sorted, possibly with gaps — the
 codec needs ascending ids, and SplitMetadata.max_docid records the ceiling so
-merges re-base correctly). Postings are rebuilt with the same per-split Arrow
-kernel as the batch build, using the TOKENIZER AND RECORD OPTION persisted in
-the index config — a chinese_compatible or en_stem index must not be
-re-tokenized with the default analyzer.
+merges re-base correctly). Postings are rebuilt with the batch build's
+per-split postings encoder (``_encode_arrow_split``, fed pre-tokenized lists
+by ``_make_arrow_stream_kernel``), using the TOKENIZER AND RECORD OPTION
+persisted in the index config — a chinese_compatible or en_stem index must
+not be re-tokenized with the default analyzer.
 
 Scale shape: ALL affected splits are rewritten by THREE cluster jobs total
 (docstore rewrite, postings rebuild, stats), regardless of how many splits

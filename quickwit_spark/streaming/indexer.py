@@ -7,8 +7,10 @@ deltas, quickwit-metastore/src/checkpoint.rs + indexer.rs:237-240).
 
 Spark formulation: ``readStream -> foreachBatch(build_index)``:
 
-- each micro-batch is one build **generation** (generation = batch_id), so
-  split ids and lineage rows are disjoint across batches;
+- each micro-batch is one build **generation** (generation = -1 - batch_id),
+  so split ids and lineage rows are disjoint across batches AND from every
+  batch build (generations >= 0): a stream into an index with a batch-built
+  base never retires the base's splits, nor the reverse;
 - exactly-once: Spark's streaming checkpoint gives at-least-once foreachBatch
   delivery; the manifest makes the publish idempotent — a replayed batch sees
   its (generation, partition) lineage rows already Published and skips them,
@@ -39,7 +41,7 @@ class StreamingIndexer:
         self.batch_metrics: list[tuple[int, BuildMetrics]] = []
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        cfg = replace(self.cfg, generation=int(batch_id))
+        cfg = replace(self.cfg, generation=-1 - int(batch_id))
         metrics = build_index(
             batch_df.sparkSession,
             batch_df,

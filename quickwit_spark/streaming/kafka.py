@@ -143,7 +143,7 @@ def index_kafka_stream(
 ):
     """End-to-end: Kafka topic -> published splits via the foreachBatch
     indexer. Offsets live in the Spark checkpoint; publishes are idempotent
-    per (generation=batch_id, partition)."""
+    per (micro-batch generation, partition)."""
     stream = kafka_pages_stream(spark, bootstrap_servers, topic, schema)
     sink = StreamingIndexer(index_dir, cfg)
     return sink.start(

@@ -156,19 +156,15 @@ def test_null_text_docs_index_cleanly(spark, pages_small, tmp_path):
     )
     n_null = pages.filter("text is null").count()
     assert n_null > 0
-    for name, cfg in (
-        ("null_a", IndexConfig(index_id="pages", num_splits=2)),
-        ("null_s", IndexConfig(index_id="pages", num_splits=2, salt_range=64)),
-    ):
-        d = str(tmp_path / name)
-        m = build_index(spark, pages, d, cfg)
-        assert m.num_docs == 600
-        reader = IndexReader(spark, d)
-        assert (
-            search(reader, SearchRequest(query="*", max_hits=10000), fetch_fields=()).count()
-            == 600
-        )
-        assert search(reader, SearchRequest(query="w0", max_hits=10), fetch_fields=()).count() > 0
+    d = str(tmp_path / "null_a")
+    m = build_index(spark, pages, d, IndexConfig(index_id="pages", num_splits=2))
+    assert m.num_docs == 600
+    reader = IndexReader(spark, d)
+    assert (
+        search(reader, SearchRequest(query="*", max_hits=10000), fetch_fields=()).count()
+        == 600
+    )
+    assert search(reader, SearchRequest(query="w0", max_hits=10), fetch_fields=()).count() > 0
 
 
 def test_rebuild_retires_delete_rewritten_split(spark, pages_small, tmp_path):

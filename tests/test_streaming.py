@@ -237,3 +237,52 @@ def test_dedup_stream_across_micro_batches(spark, tmp_path):
     # batch-1 docs) are dropped by cross-batch state
     assert len(out) == 25
     assert not any(u.startswith("https://b/") for u in out)
+
+
+def test_stream_and_batch_generations_are_disjoint(spark, tmp_path):
+    """A default-generation batch build and a queue drain into the same index
+    must not retire each other's splits, in either order: stream split ids
+    and checkpoint lineage live outside every batch build's generation."""
+    from quickwit_spark.operators.build import build_index
+    from quickwit_spark.operators.search import count_hits
+    from quickwit_spark.sources.ingest_queue import drain_queue, enqueue
+
+    cfg = IndexConfig(
+        index_id="mix", num_splits=2, tag_field=None, timestamp_field=None
+    )
+    base = spark.createDataFrame(
+        [(f"base/{i}", f"basecorpus w{i % 4}") for i in range(40)],
+        "url string, text string",
+    )
+    batches = [
+        [{"url": f"s{b}/{i}", "text": f"streamed w{i % 4}"} for i in range(10)]
+        for b in range(2)
+    ]
+
+    def check(idx):
+        reader = IndexReader(spark, idx)
+        total = count_hits(reader, SearchRequest(query="*")).collect()[0][0]
+        assert total == 40 + 20
+        assert _count_hits(reader, "basecorpus") == 40
+        assert _count_hits(reader, "streamed") == 20
+
+    def drain_all(idx, tag):
+        for docs in batches:
+            qdir = str(tmp_path / f"queue_{tag}")
+            enqueue(qdir, docs)
+            drain_queue(
+                spark, qdir, idx, str(tmp_path / f"ckpt_{tag}"),
+                "url string, text string", cfg,
+            )
+
+    # base first, then two micro-batches
+    idx = str(tmp_path / "base_then_stream")
+    build_index(spark, base, idx, cfg)
+    drain_all(idx, "a")
+    check(idx)
+
+    # two micro-batches first, then the base build
+    idx = str(tmp_path / "stream_then_base")
+    drain_all(idx, "b")
+    build_index(spark, base, idx, cfg)
+    check(idx)

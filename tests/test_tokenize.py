@@ -81,9 +81,9 @@ def test_spark_python_parity(spark, pages_small):
 
 
 def test_arrow_tokenize_matches_reference(spark):
-    """arrow_tokenize (C++ RE2, used by the in-kernel build path) must be
-    token-for-token identical to the python/JVM tokenizers — doc_len computed
-    JVM-side and postings built kernel-side share one term universe."""
+    """arrow_tokenize (C++ RE2, used by the build's split-writer kernel) must
+    be token-for-token identical to the python tokenizers the query side
+    uses, and (on the BMP) to the JVM expressions."""
     import numpy as np
     import pyarrow as pa
     from pyspark.sql import functions as F
@@ -92,6 +92,7 @@ def test_arrow_tokenize_matches_reference(spark):
         arrow_tokenize,
         analyzer_expr,
         chinese_compatible_tokenize_py,
+        raw_tokenize_py,
         tokenize_py,
     )
 
@@ -100,11 +101,14 @@ def test_arrow_tokenize_matches_reference(spark):
         "中文测试 English words", "𠀀𪛟 ext-B astral", "naïve café ÆØÅ",
         "123 4.5 ratio", " nbsp em", "🎉 emoji party 🎊",
         "x" * 39 + "é", "под вопросом", "日本語のテスト", "tail",
+        # raw's 100-char limit counts chars, not bytes; case is kept
+        "r" * 100, "r" * 101, "é" * 100, "é" * 101, "MiXeD Case Value",
     ]
     arr = pa.array(edge, type=pa.string())
     for tok, ref in (
         ("default", tokenize_py),
         ("chinese_compatible", chinese_compatible_tokenize_py),
+        ("raw", raw_tokenize_py),
     ):
         got = arrow_tokenize(arr, tok).to_pylist()
         want = [ref(t) for t in edge]

@@ -47,7 +47,6 @@ def main() -> None:
     b.add_argument("--index", required=True, help="index output dir")
     b.add_argument("--splits", type=int, default=200)
     b.add_argument("--tokenizer", default="default")
-    b.add_argument("--salt-range", type=int, default=None)
     b.add_argument("--no-resume", action="store_true")
 
     m = sub.add_parser("merge", help="run StableLog merges to fixpoint")
@@ -88,11 +87,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("WARN")
 
     if args.cmd == "build":
-        cfg = IndexConfig(
-            num_splits=args.splits,
-            tokenizer=args.tokenizer,
-            salt_range=args.salt_range,
-        )
+        cfg = IndexConfig(num_splits=args.splits, tokenizer=args.tokenizer)
         pages = spark.read.parquet(args.input)
         metrics = build_index(
             spark, pages, args.index, cfg, resume=not args.no_resume
