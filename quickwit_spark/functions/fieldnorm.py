@@ -49,25 +49,3 @@ def fieldnorm_to_id(fieldnorms: np.ndarray | int) -> np.ndarray | int:
 def quantize_len(doc_len: np.ndarray | int) -> np.ndarray | int:
     """doc length -> the dequantized length the scorer must use."""
     return id_to_fieldnorm(fieldnorm_to_id(doc_len))
-
-
-def quantize_len_expr(col):
-    """``quantize_len`` as a pure Spark expression (whole-stage codegen — no
-    Python in the docstore write path).
-
-    SmallFloat floor-quantization keeps the top 5 bits of the length: for
-    dl >= 16, id = 16*(e+1) + mantissa with e = floor(log2(dl)) - 4 and
-    mantissa = (dl >> e) - 16, so the dequantized value is simply
-    ``(dl >> e) << e``; lengths < 16 are exact. Verified element-for-element
-    against the table-based numpy kernel in tests/test_fieldnorm.py."""
-    from pyspark.sql import functions as F
-
-    dl = col.cast("long")
-    max_norm = int(FIELD_NORMS_TABLE[-1])
-    clamped = F.least(dl, F.lit(max_norm))
-    # shiftleft/shiftright take literal shift amounts only — use exact
-    # power-of-two arithmetic instead (doubles are exact for dl < 2^52)
-    e = F.floor(F.log2(clamped.cast("double"))) - F.lit(4)
-    p = F.pow(F.lit(2.0), e.cast("double")).cast("long")
-    quant = F.floor(clamped / p).cast("long") * p
-    return F.when(dl < 16, dl).otherwise(quant).cast("int")

@@ -221,9 +221,9 @@ class ObjectStorage:
 
     def exists(self, key: str) -> bool:
         try:
-            self.client.get_object(key)
+            self.size(key)  # HEAD when the client has it, not a full GET
             return True
-        except KeyError:
+        except FileNotFoundError:
             return False
 
     def list(self, prefix: str) -> list[str]:

@@ -184,7 +184,6 @@ class BuildMetrics:
     # postings parquet after zstd) — the north-star's "bytes compressed"
     # indexing metric
     compressed_bytes: int = 0
-    postings_bytes: int = 0
     transform_errors: int = 0  # docs rejected by the VRL ingest transform
     splits: list[str] = field(default_factory=list)
 

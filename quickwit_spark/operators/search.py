@@ -58,21 +58,8 @@ from quickwit_spark.plans.query import (
     parse_query,
 )
 
-# corpus size (docs in the pruned splits) above which the WAND pruning plan
-# beats exhaustive decode. Measured on this sandbox at 1M docs: WAND's 4-6
-# jobs cost 12-17 s vs a 4 s single-pass exhaustive decode — the optimized
-# decode kernel (~10M postings/s/core) makes per-query compute tiny, so the
-# crossover is where decode time reaches seconds per job: ~100M+ postings
-# touched per query. On a cluster reading splits from object storage the
-# block-level IO pruning moves the crossover earlier; this constant is the
-# conservative local-mode setting and callers can force use_wand=True.
-WAND_MIN_DOCS = 20_000_000
-# WAND phase-4 candidate sets above this bound use a shuffle join instead of
-# a broadcast (a hot-term disjunction with a weak theta can leave candidate
-# sets far beyond driver/executor broadcast limits at scale)
-WAND_BROADCAST_MAX_CANDIDATES = 200_000
-# fetch phase: winners' docids are pushed into the docstore parquet filters
-# as an In(...) when at most this many (a 10k-element In is slow to
+# point-lookup fetch: winners' docids are pushed into the docstore parquet
+# filters as an In(...) when at most this many (a 10k-element In is slow to
 # translate; beyond it a [min,max] range still prunes row groups)
 FETCH_ISIN_MAX = 4_096
 # warm(): target in-cache partition size. The scan layer over-partitions a
@@ -81,16 +68,6 @@ FETCH_ISIN_MAX = 4_096
 # hold <1 MB. ceil(bytes/target) with a floor of 4 restores byte-sized
 # partitions; at per-split file sizes beyond the target it is a no-op.
 QUERY_PARTITION_TARGET_BYTES = 32 << 20
-# In(...) filter size cap for the point-lookup fetch: beyond this many
-# winner docids the pushed filter degrades to a [min,max] range (still a
-# row-group pruner) instead of a 10k-element In translation.
-# History: auto fetch mode briefly keyed on per-split doc count
-# (point-lookup only past 500k docs/split, dpp below — calibrated on a
-# RARE-term A/B). That switch mispriced common terms: the dpp join plans
-# the scored+top-k subtree twice (build side + DPP subquery), so its cost
-# scales with match count, not split size — a common-term query paid the
-# whole scoring plan twice (14 s vs 2.4 s on 1M docs/64 splits). Auto mode
-# is now always collect-then-fetch, the reference root's own shape.
 
 DECODED_SCHEMA = T.StructType(
     [
@@ -589,14 +566,12 @@ class IndexReader:
         self._docstore: DataFrame | None = None
         self._term_dict: DataFrame | None = None
         self._warmed: list[DataFrame] = []
-        self._scratch: list[DataFrame] = []
         self._split_stats: DataFrame | None = None
         self._stats_map: dict | None = None
 
     def refresh(self) -> None:
         # unpersist before dropping the references — executor storage memory
         # would otherwise leak across rebuild/refresh cycles
-        self.release_scratch()
         for df in self._warmed:
             df.unpersist()
         self._warmed = []
@@ -607,17 +582,6 @@ class IndexReader:
         self._stats_map = None
         if self._pinned:
             self.manifest.pin()  # advance the snapshot to the current tip
-
-    def hold_scratch(self, df: DataFrame) -> DataFrame:
-        """Register a per-query cached DataFrame (e.g. WAND block metadata)
-        so the NEXT query (or refresh) releases it after its actions ran."""
-        self._scratch.append(df)
-        return df
-
-    def release_scratch(self) -> None:
-        for df in self._scratch:
-            df.unpersist()
-        self._scratch = []
 
     def _query_coalesce(self, df: DataFrame, subdir: str) -> DataFrame:
         """Right-size the warmed relation's partition count by BYTES.
@@ -656,7 +620,7 @@ class IndexReader:
         doc_freq, sum_tf — no compressed blocks) + the manifest stats map:
         the 10^12-doc setting, where postings/docstore stay on storage behind
         the parquet reader and the OS page cache, but term-existence checks,
-        doc-freq lookups for WAND bounds, and split pruning never re-scan.
+        doc-freq lookups, and split pruning never re-scan.
         The term dict is a ~1% slice of postings bytes (blocks dominate).
 
         Both modes right-size the cached partitioning by bytes (see
@@ -746,18 +710,6 @@ class IndexReader:
             )
         return self._split_stats
 
-
-BLOCK_ROW_SCHEMA = T.StructType(
-    [
-        T.StructField("split_id", T.StringType()),
-        T.StructField("term", T.StringType()),
-        T.StructField("doc_freq", T.LongType()),
-        T.StructField("docid", T.LongType()),
-        T.StructField("tf", T.LongType()),
-        T.StructField("dl", T.DoubleType()),
-        T.StructField("avgdl", T.DoubleType()),
-    ]
-)
 
 LEAF_TOPK_SCHEMA = T.StructType(
     [
@@ -1199,7 +1151,7 @@ def _make_leaf_topk_kernel(
     emit k rows. Compared to the general `_eval_bool` plan this removes the
     per-matching-doc groupBy exchange: rows leaving python drop from
     |matches| to |splits|·k, which is the shape that survives a 10^12-doc
-    corpus for sub-WAND-threshold queries.
+    corpus.
 
     ``spec``: a tree of ``{"op": "term"|"termset"|"phrase"|"range"|
     "boost"|"bool"|"empty"}`` nodes compiled by ``Searcher.leaf_plan``
@@ -2505,72 +2457,6 @@ def _make_phrase_fb_kernel(
     return kernel
 
 
-def _make_decode_block_rows(
-    index_dir: str, quantize: bool, avgdl_map: dict
-):
-    """mapInArrow kernel factory over (split_id, term, doc_freq, block)
-    rows — each row is ONE compressed block (the WAND path decodes selected
-    blocks only, unlike the whole-posting-list kernel). Batched bit-unpack
-    like the whole-list kernel; |d| and the per-(split, field) avgdl
-    attached from executor-side caches."""
-
-    def kernel(batches):
-        try:
-            pa.set_cpu_count(1)
-            pa.set_io_thread_count(1)
-        except Exception:  # noqa: BLE001
-            pass
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            names = rb.schema.names
-            bl = rb.column(names.index("block"))
-            docids, tfs, cnt = _decode_struct_blocks(bl, need_tf=True)
-            row_post_off = np.concatenate([[0], np.cumsum(cnt)])
-            post_row = np.repeat(
-                np.arange(rb.num_rows, dtype=np.int64), cnt
-            )
-            sid_col = rb.column(names.index("split_id"))
-            term_col = rb.column(names.index("term"))
-            total = len(docids)
-            dl = np.empty(total, dtype=np.float64)
-            avg = np.empty(total, dtype=np.float64)
-            sids = sid_col.to_pylist()
-            terms = term_col.to_pylist()
-            for i in range(rb.num_rows):
-                a, b = int(row_post_off[i]), int(row_post_off[i + 1])
-                if a == b:
-                    continue
-                fld = _term_field(terms[i])
-                dl[a:b] = _norms_for(
-                    index_dir, sids[i], quantize, docids[a:b], fld
-                )
-                try:
-                    avg[a:b] = avgdl_map[(sids[i], fld)]
-                except KeyError:
-                    raise KeyError(
-                        f"no avgdl for split={sids[i]!r} field={fld!r}: "
-                        "manifest field_total_tokens out of sync with postings"
-                    ) from None
-            take_idx = pa.array(post_row, type=pa.int64())
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pc.take(sid_col, take_idx),
-                    pc.take(term_col, take_idx),
-                    pc.take(rb.column(names.index("doc_freq")), take_idx),
-                    pa.array(docids, type=pa.int64()),
-                    pa.array(tfs, type=pa.int64()),
-                    pa.array(dl, type=pa.float64()),
-                    pa.array(avg, type=pa.float64()),
-                ],
-                names=[
-                    "split_id", "term", "doc_freq", "docid", "tf", "dl", "avgdl"
-                ],
-            )
-
-    return kernel
-
-
 class Searcher:
     """Compiles a query AST into a DataFrame plan over one index."""
 
@@ -2761,10 +2647,6 @@ class Searcher:
     def _tok(self, text: str) -> list[str]:
         return analyzer_py(getattr(self, "tokenizer", "default"))(text)
 
-    def _is_text(self, fieldname: str | None) -> bool:
-        """True only for the DEFAULT search field (WAND eligibility etc.)."""
-        return fieldname is None or fieldname == self.default_field
-
     def _ns_prefix(self, fieldname: str | None) -> str | None:
         """Storage-term prefix for a text field: '' for the default field,
         '<field>\\x00' for extra text fields, None for non-text fields."""
@@ -2789,16 +2671,12 @@ class Searcher:
         return out
 
     # ---- scored term table ----------------------------------------------
-    def _score_decoded(
-        self, decoded: DataFrame, split_ids: list[str] | None = None
-    ) -> DataFrame:
+    def _score_decoded(self, decoded: DataFrame) -> DataFrame:
         """(split_id, term, doc_freq, docid, tf, dl, avgdl) rows ->
         per-posting BM25 contributions: the decode kernel already attached
         |d| and the per-(split, field) avgdl from executor-side caches, so
         this is ONE broadcast stats join (n_docs for idf) plus pure column
-        arithmetic (whole-stage codegen) — no docstore scan, no shuffle.
-        (``split_ids`` is retained for signature stability; pruning happens
-        in the callers' postings filters.)"""
+        arithmetic (whole-stage codegen) — no docstore scan, no shuffle."""
         stats = F.broadcast(self.reader.split_stats().select("split_id", "n_docs"))
         j = decoded.join(stats, "split_id")
         idf = F.log(
@@ -2838,7 +2716,7 @@ class Searcher:
             F.col("term").isin(terms) & F.col("split_id").isin(split_ids)
         ).select("split_id", "term", "doc_freq", "blocks")
         # ^ explicit projection: the positions column must stay pruned out of
-        # the parquet scan on the term/WAND hot path
+        # the parquet scan on the general plan's term path
         decoded = post.mapInArrow(
             _make_decode_postings_rows_arrow(
                 self.reader.index_dir,
@@ -2847,7 +2725,7 @@ class Searcher:
             ),
             DECODED_SCHEMA,
         )
-        return self._score_decoded(decoded, split_ids)
+        return self._score_decoded(decoded)
 
     def matched_zero_terms(
         self, terms: list[str], split_ids: list[str]
@@ -2898,39 +2776,6 @@ class Searcher:
                         return None
                     acc |= t
                 return acc
-        return None
-
-    # ---- block-max WAND (top-k pruning for scored disjunctions) ----------
-    def disjunctive_tokens(self, node: Node) -> list[str] | None:
-        """Return the flat token list iff the query is a pure disjunction of
-        single-token text terms (the classic WAND domain: term / OR / IN).
-        None disables pruning and falls back to the exhaustive path."""
-        if isinstance(node, Term) and self._is_text(node.field):
-            toks = [node.value] if node.pre_analyzed else self._tok(node.value)
-            return toks if len(toks) == 1 else None
-        if isinstance(node, TermSet) and self._is_text(node.field):
-            toks: list[str] = []
-            for v in node.values:
-                t = self._tok(v)
-                if len(t) != 1:
-                    return None
-                toks += t
-            return sorted(set(toks))
-        if (
-            isinstance(node, Bool)
-            and node.should
-            and not node.must
-            and not node.must_not
-        ):
-            out: list[str] = []
-            for c in node.should:
-                sub = self.disjunctive_tokens(c)
-                if sub is None:
-                    return None
-                out += sub
-            # duplicated tokens would double-count in the exhaustive union
-            # path; keep both paths identical by bailing out
-            return sorted(out) if len(set(out)) == len(out) else None
         return None
 
     # ---- leaf-local top-k (boolean trees of text terms) ------------------
@@ -3406,139 +3251,6 @@ class Searcher:
                 bucket_spec=bucket_spec,
             ),
             schema,
-        )
-
-    def scored_topk_wand(
-        self, tokens: list[str], split_ids: list[str], k: int
-    ) -> DataFrame:
-        """Block-max WAND as a relational two-phase plan (SURVEY §7.4).
-
-        The reference activates tantivy's block-max WAND whenever a query
-        sorts by ``_score`` (collector.rs:413-421). Document-at-a-time WAND
-        is iterative; the sound Spark formulation is:
-
-        1. **Block metadata pass** (no payload decode): per (split, term,
-           block) compute a score upper bound ``ub = idf * max_tf*(k1+1) /
-           (max_tf + k1*(1-b))`` — the dl→0 bound of the tf-norm, using the
-           block-max sidecar written at build time.
-        2. **Threshold seed**: decode only the globally best few blocks by
-           ub, score them exactly; the k-th best partial score is a lower
-           bound θ of the true k-th best total score (contributions are
-           non-negative).
-        3. **Prune**: a block survives iff ``ub + Σ_{other terms} max_ub >=
-           θ``. Any doc all of whose blocks are pruned scores < θ — sound,
-           never lossy.
-        4. **Exact re-score**: candidate docs = docs of surviving blocks;
-           decode every block whose [first_docid, last_docid] range contains
-           a candidate (each candidate hits <= 1 block per term), restrict to
-           candidates, sum exact BM25 — identical scores to the exhaustive
-           path, then global top-k.
-
-        Driver involvement: one scalar collect (θ), like the reference's
-        per-leaf threshold exchange.
-        """
-        spark = self.reader.spark
-        post = self.reader.postings().filter(
-            F.col("term").isin(tokens) & F.col("split_id").isin(split_ids)
-        )
-        exploded = post.select(
-            "split_id",
-            "term",
-            "doc_freq",
-            F.posexplode("blocks").alias("bi", "block"),
-        )
-        stats = F.broadcast(self.reader.split_stats())
-        idf = F.log(
-            F.lit(1.0)
-            + (F.col("n_docs") - F.col("doc_freq") + F.lit(0.5))
-            / (F.col("doc_freq") + F.lit(0.5))
-        )
-        mtf = F.col("block.max_tf").cast("double")
-        ub_tf = mtf * F.lit(BM25_K1 + 1.0) / (mtf + F.lit(BM25_K1 * (1.0 - BM25_B)))
-        meta = (
-            exploded.join(stats, "split_id")
-            .select(
-                "split_id",
-                "term",
-                "doc_freq",
-                "bi",
-                F.col("block.first_docid").alias("first_docid"),
-                F.col("block.last_docid").alias("last_docid"),
-                F.col("block.count").alias("n_postings"),
-                (idf * ub_tf).alias("ub"),
-            )
-            .cache()
-        )
-        # released by the next query / refresh (the final action on the
-        # returned plan happens outside this function, so it cannot
-        # unpersist eagerly)
-        self.reader.hold_scratch(meta)
-
-        block_kernel = _make_decode_block_rows(
-            self.reader.index_dir, self.quantize_norms, self._avgdl_map(split_ids)
-        )
-
-        def decode_sel(sel_keys: DataFrame) -> DataFrame:
-            rows = exploded.join(
-                F.broadcast(sel_keys.select("split_id", "term", "bi")),
-                ["split_id", "term", "bi"],
-                "left_semi",
-            ).select("split_id", "term", "doc_freq", "block")
-            return rows.mapInArrow(block_kernel, BLOCK_ROW_SCHEMA)
-
-        # -- phase 2: threshold from the best seed blocks
-        seed_n = max(8, 2 * ((k + 127) // 128 + 1))
-        seed = meta.orderBy(F.desc("ub")).limit(seed_n)
-        seed_scores = (
-            self._score_decoded(decode_sel(seed), split_ids)
-            .groupBy("split_id", "docid")
-            .agg(F.sum("score").alias("score"))
-            .orderBy(F.desc("score"))
-            .limit(k)
-            .collect()
-        )
-        theta = seed_scores[-1]["score"] if len(seed_scores) >= k else 0.0
-
-        # -- phase 3: slack = per-split sum of each term's best block ub
-        term_max = meta.groupBy("split_id", "term").agg(F.max("ub").alias("tmax"))
-        slack = term_max.groupBy("split_id").agg(F.sum("tmax").alias("slack"))
-        surv = (
-            meta.join(term_max, ["split_id", "term"])
-            .join(slack, "split_id")
-            .filter(F.col("ub") + F.col("slack") - F.col("tmax") >= F.lit(theta))
-        )
-
-        # -- phase 4: exact scores for candidate docs. The candidate set is
-        # bounded above by the surviving blocks' posting counts (block
-        # metadata only — no decode): broadcast it only when that bound is
-        # small; a hot-term disjunction with a weak theta falls back to a
-        # shuffle join (SMJ on split_id + range condition) instead of
-        # shipping an unbounded set through the driver.
-        cand_bound = (
-            surv.agg(F.sum("n_postings").alias("n")).collect()[0]["n"] or 0
-        )
-        cand = (
-            decode_sel(surv)
-            .select("split_id", "docid")
-            .distinct()
-        )
-        hint = (
-            F.broadcast
-            if cand_bound <= WAND_BROADCAST_MAX_CANDIDATES
-            else (lambda df: df)
-        )
-        needed = meta.alias("m").join(
-            hint(cand).alias("c"),
-            (F.col("m.split_id") == F.col("c.split_id"))
-            & (F.col("c.docid") >= F.col("m.first_docid"))
-            & (F.col("c.docid") <= F.col("m.last_docid")),
-            "left_semi",
-        )
-        exact = self._score_decoded(decode_sel(needed), split_ids).join(
-            hint(cand), ["split_id", "docid"], "left_semi"
-        )
-        return exact.groupBy("split_id", "docid").agg(
-            F.sum("score").alias("score")
         )
 
     # ---- boolean plan ----------------------------------------------------
@@ -4186,58 +3898,46 @@ def search(
     request: SearchRequest,
     quantize_norms: bool = True,
     fetch_fields: tuple[str, ...] = ("url",),
-    use_wand: bool | None = None,
     snippet_fields: tuple[str, ...] = (),
     exclude_split_ids: tuple[str, ...] = (),
-    fetch_mode: str | None = None,
     leaf_topk: bool | None = None,
     with_count: bool = False,
     lazy: bool = False,
 ) -> DataFrame:
     """Full search: prune -> match/score -> global top-k -> fetch.
 
-    **Eager by default**: the auto fetch mode materializes the winner rows
-    with a driver collect while CONSTRUCTING the result (the reference
-    root's collect-then-fetch, measured faster at every scale) — so the
-    returned DataFrame is a snapshot, and the scoring job runs even if the
-    caller never consumes it. Pass ``lazy=True`` (sugar for
-    ``fetch_mode="dpp"``) to get a fully-deferred plan instead: nothing
-    executes until an action, at the cost of planning the scored+top-k
-    subtree twice when it does (see ``fetch_mode`` below).
+    **Eager by default**: the winner rows are materialized with a driver
+    collect while CONSTRUCTING the result (the reference root's
+    collect-then-fetch, measured faster at every scale) — so the returned
+    DataFrame is a snapshot, and the scoring job runs even if the caller
+    never consumes it. When the query compiles onto the leaf kernel, the
+    kernel attaches the fetch columns itself; otherwise the collected
+    winners are point-looked-up in the docstore (``_fetch_winners``), a
+    cost independent of the query's match count. Pass ``lazy=True`` to get
+    a fully-deferred plan instead: nothing executes until an action, and
+    the fetch is a broadcast join with dynamic partition pruning — at the
+    cost of planning the scored+top-k subtree twice when it does run.
 
     ``with_count=True`` returns ``(DataFrame, num_hits | None)``: when the
     leaf-local plan applies, the kernel's per-split match counts ride the
     top-k rows (the reference LeafSearchResponse shape, collector.rs:226)
     and num_hits comes from the SAME pass; ``None`` means the plan could
-    not count inline (WAND, general plan, dpp fetch) and the caller should
+    not count inline (general plan, lazy fetch) and the caller should
     run ``count_hits`` separately.
 
     Returns (split_id, docid, score, *fetch_fields) with exactly the
     reference ordering (score desc | fast-field, split_id asc, docid ascending),
-    offset dropped at the 'root' like root.rs:487-502. Scored disjunctions go
-    through the block-max WAND pruning plan (rank-identical by construction —
-    the pruning is sound); everything else uses the exhaustive plan.
+    offset dropped at the 'root' like root.rs:487-502. Queries that compile
+    (``_leaf_gate``) are evaluated whole per split by the leaf kernel, which
+    prunes scored disjunctions with in-kernel MaxScore (rank-identical:
+    the pruning is sound); everything else uses the general relational plan.
+    ``leaf_topk=False`` forces the general plan (tests use it as the
+    reference).
 
     ``exclude_split_ids`` restricts the search away from known-bad splits —
     the plumbing behind search_with_failures (root.rs:203-217 analog).
-
-    ``fetch_mode``: None = ``"pointlookup"`` (materialize the winners with a
-    driver collect, then a pruned pushdown scan — the reference root's
-    collect-then-fetch, fetch_docs.rs analog; its cost is independent of the
-    query's match count). ``"dpp"`` keeps the whole plan lazy (broadcast
-    join + dynamic partition pruning) for callers composing further
-    transformations — but plans the scored+top-k subtree twice, so a
-    common-term query pays the scoring plan twice over.
     """
-    if lazy:
-        if fetch_mode not in (None, "dpp"):
-            raise ValueError(
-                "lazy=True means fetch_mode='dpp'; don't combine it with "
-                f"fetch_mode={fetch_mode!r}"
-            )
-        fetch_mode = "dpp"
     ast = parse_query(request.query)
-    reader.release_scratch()  # previous query's WAND block-metadata cache
     # fast-field sort discards BM25 entirely — take the scoring opt-out
     # (no tf decode, no fieldnorms, no stats join), like the reference
     # collector skipping scoring unless sorted by _score
@@ -4261,116 +3961,37 @@ def search(
         # validate BEFORE the empty-prune early return: an invalid request
         # must fail identically whether or not any split survives pruning
         raise ValueError("snippet fields require text terms in the query")
+    fetch_all = tuple(fetch_fields) + tuple(
+        f for f in snippet_fields if f not in fetch_fields
+    )
     if not split_ids:
         # schema must match the non-empty-prune path exactly — including
         # the requested fetch/snippet columns — or callers selecting a
         # fetch field over an all-pruned time range get an AnalysisException
         base = T.StructType(
-            [
-                T.StructField("split_id", T.StringType()),
-                T.StructField("docid", T.LongType()),
-                T.StructField("score", T.DoubleType()),
-            ]
+            list(LEAF_TOPK_SCHEMA.fields) + _store_fields(reader, fetch_all)
         )
-        extra = tuple(fetch_fields) + tuple(
-            f for f in snippet_fields if f not in fetch_fields
-        )
-        if extra:
-            try:
-                store_schema = reader.docstore().schema
-            except Exception:  # noqa: BLE001 — no docstore files yet
-                # an index with ZERO published splits (fresh streaming index,
-                # all-settled builds) has no docstore directory to copy the
-                # fetch-field types from: string placeholders keep the empty
-                # result constructible
-                store_schema = T.StructType(
-                    [T.StructField(f_, T.StringType()) for f_ in extra]
-                )
-            for f_ in extra:
-                base = base.add(store_schema[f_])
         for f_ in snippet_fields:
             base = base.add(T.StructField(f"snippet_{f_}", T.StringType()))
         empty = reader.spark.createDataFrame([], base)
         return (empty, 0) if with_count else empty
     k_total = request.max_hits + request.start_offset
-    if use_wand is None:
-        # cost switch: WAND spends ~3 extra tiny jobs (seed θ collect +
-        # candidate joins) to avoid decoding whole posting lists — a win only
-        # once the pruned splits hold enough docs that decode dominates.
-        # Below the threshold the exhaustive single-pass plan is faster.
-        use_wand = sum(m.num_docs for m in splits) >= WAND_MIN_DOCS
-    # WAND analyzes tokens under ONE config — only sound when every pruned
-    # split was built under the latest config generation (schema-evolved
-    # splits route through matching()'s per-generation planner instead)
-    smap = reader.stats_map()
-    latest_gen = max(reader.manifest.config_generations() or [0])
-    single_latest_gen = {
-        int(smap.get(sid, {}).get("config_generation") or 0)
-        for sid in split_ids
-    } <= {latest_gen}
-    wand_tokens = (
-        searcher.disjunctive_tokens(ast)
-        if use_wand
-        and single_latest_gen
-        and request.sort_by_field in (None, "_score")
-        and request.sort_order == "desc"  # WAND prunes for BEST-score top-k
-        and request.start_timestamp is None
-        and request.end_timestamp is None
-        else None
-    )
-    # leaf-local top-k: flat boolean trees of single-token terms evaluate
-    # whole-query inside one kernel task per split (the reference leaf's
-    # shape) when the result is score-ranked desc with no per-doc time
-    # filter — the same soundness conditions as WAND, minus the size gate
-    # (it replaces the general plan's per-matching-doc groupBy exchange at
-    # ANY corpus size; WAND still wins above its threshold by not decoding
-    # whole posting lists).
-    leaf_spec = None
-    leaf_sort = None  # (docstore col, order) when the kernel does the sort
-    leaf_ts = None  # (start_us|None, end_us|None) when it does the window
-    if leaf_topk is not False and not wand_tokens and single_latest_gen:
-        leaf_ok = True
-        if request.sort_by_field not in (None, "_score"):
-            # field sorts ride the kernel only for fast non-text columns
-            # (Spark cast-to-double semantics); everything else keeps the
-            # general plan's docstore join — including the text-sort error
-            scol = searcher.fast_fields.get(
-                request.sort_by_field, request.sort_by_field
-            )
-            try:
-                sdt = dict(reader.docstore().dtypes).get(scol)
-            except Exception:  # noqa: BLE001 — no docstore files yet
-                sdt = None
-            if sdt in _LEAF_SORTABLE_DTYPES:
-                leaf_sort = (scol, request.sort_order)
-            else:
-                leaf_ok = False
-        if leaf_ok and (
-            request.start_timestamp is not None
-            or request.end_timestamp is not None
-        ):
-            leaf_ts = (
-                _ts_micros(reader.spark, request.start_timestamp, is_start=True),
-                _ts_micros(reader.spark, request.end_timestamp, is_start=False),
-            )
-        if leaf_ok:
-            # phrase nodes are leaf-evaluable only when EVERY pruned split
-            # stores positions (mixed-record indexes route per split in the
-            # general plan's _eval_phrase instead)
-            allow_phrase = searcher.record == "position" and all(
-                smap.get(sid, {}).get("record", "freq") == "position"
-                for sid in split_ids
-            )
-            leaf_spec = searcher.leaf_plan(ast, allow_phrase=allow_phrase)
+    leaf_spec = leaf_ts = leaf_sort = None
+    if leaf_topk is not False:
+        leaf_spec, leaf_ts, leaf_sort = _leaf_gate(
+            reader, searcher, ast, split_ids, request
+        )
+        if leaf_sort is None and not needs_scores:
+            leaf_spec = None  # a field sort the kernel can't replicate
     # one-pass num_hits: the reference LeafSearchResponse carries the
     # split's total match count alongside its partial top-k hits
     # (collector.rs:226); with the leaf kernel, the pre-trim rows are
     # bounded by |splits|·k, so the root merge can run over a collected
-    # local set and recover num_hits for free. Gated off for lazy dpp
-    # plans and oversized |splits|·k products.
+    # local set and recover num_hits for free. Gated off for lazy plans
+    # and oversized |splits|·k products.
     count_inline = (
         with_count
-        and fetch_mode != "dpp"
+        and not lazy
         # k_total == 0 would trim away every per-split row WITH its
         # split_hits payload — the caller must count explicitly instead
         and 0 < len(split_ids) * k_total <= 1_000_000
@@ -4379,13 +4000,10 @@ def search(
     # per-split top-k rows (the split's docstore is already open there), so
     # a fetched search costs ONE job — the root merge runs over the
     # collected |splits|·k partials exactly like the reference root
-    fetch_all = tuple(fetch_fields) + tuple(
-        f for f in snippet_fields if f not in fetch_fields
-    )
     inline_fetch = bool(
         leaf_spec is not None
         and fetch_all
-        and fetch_mode is None  # auto; explicit pointlookup/dpp keep joins
+        and not lazy
         and len(split_ids) * k_total <= 200_000
         and searcher.leaf_fields_plan(list(fetch_all))
     )
@@ -4421,7 +4039,6 @@ def search(
             )
         elif (
             leaf_spec is None
-            and not wand_tokens
             and isinstance(ast, MatchAll)
             and request.sort_by_field not in (None, "_score")
             and searcher.fast_fields.get(
@@ -4450,9 +4067,7 @@ def search(
             )
 
     num_hits: "int | None" = None
-    if wand_tokens:
-        m = searcher.scored_topk_wand(wand_tokens, split_ids, k_total)
-    elif leaf_spec:
+    if leaf_spec:
         m = searcher.scored_topk_leaf(
             leaf_spec,
             split_ids,
@@ -4490,15 +4105,9 @@ def search(
     if (
         request.sort_by_field
         and request.sort_by_field != "_score"
-        and not (leaf_spec and leaf_sort)
+        and not leaf_spec
     ):
-        ff = searcher.fast_fields.get(request.sort_by_field, request.sort_by_field)
-        docs = reader.docstore().select(
-            "split_id", "docid", F.col(ff).alias("_sort")
-        )
-        m = m.join(docs, ["split_id", "docid"]).withColumn(
-            "score", F.col("_sort").cast("double")
-        ).drop("_sort")
+        m = _join_sort_field(reader, searcher, m, request.sort_by_field)
 
     key = F.asc("score") if request.sort_order == "asc" else F.desc("score")
     order = [key, F.asc("split_id"), F.asc("docid")]
@@ -4510,67 +4119,23 @@ def search(
             .filter(F.col("_rn") > request.start_offset)
             .drop("_rn")
         )
-    fetch = fetch_all
-    if fetch and not inline_fetch:
-        if fetch_mode is None:
-            # collect-then-fetch is the reference root's own shape
-            # (root.rs:487-502 then fetch_docs.rs) and the only one whose
-            # cost is independent of the query's MATCH COUNT: under the
-            # lazy dpp join the scored+top-k subtree is planned twice
-            # (join build side AND the partition-pruning subquery — two
-            # TakeOrderedAndProject runs of the whole python decode), so a
-            # common-term query pays the scoring plan twice over. Measured
-            # on a 1M-doc/64-split index: common term 14.0 s dpp vs 2.4 s
-            # point-lookup, rare term ~equal (the ~0.2 s driver round trip
-            # is the whole difference). dpp stays available explicitly for
-            # callers composing a fully-lazy plan.
-            fetch_mode = "pointlookup"
-        store = reader.docstore().select("split_id", "docid", *fetch)
-        if fetch_mode == "dpp":
+    if fetch_all and not inline_fetch:
+        if lazy:
             # lazy fetch: broadcast the k winners into the docstore scan.
             # Inner join on purpose: every hit exists in the docstore by
             # construction, and a left-outer would force a SortMergeJoin (the
             # broadcast-left hint is unsupported for left joins). Dynamic
             # partition pruning restricts the scan to the winner splits at
             # runtime, but their fetch columns are read in full — fine while
-            # splits are small, the wrong plan at 10M-doc splits.
+            # splits are small, the wrong plan at 10M-doc splits. The
+            # scored+top-k subtree is planned twice (join build side AND the
+            # partition-pruning subquery), so a common-term query pays the
+            # scoring plan twice over (14.0 s vs 2.4 s point-lookup on a
+            # 1M-doc/64-split index).
+            store = reader.docstore().select("split_id", "docid", *fetch_all)
             top = F.broadcast(top).join(store, ["split_id", "docid"], "inner")
         else:
-            # fetch phase = the reference root's fetch-docs step
-            # (root.rs:487-502 then fetch_docs.rs point lookups): the winners
-            # — bounded ≤10k by the SearchRequest cap, exactly the set the
-            # reference root holds in memory — are materialized and re-joined
-            # against a docstore scan pruned STATICALLY to the winner splits
-            # with the docids pushed into the parquet filters. The docstore
-            # is docid-sorted per split, so row-group min/max stats skip
-            # everything but the pages holding winners — the Spark analog of
-            # a point lookup: at 10^5 splits the fetch reads ~k row groups
-            # instead of the winners' whole splits.
-            rows = top.collect()
-            if not rows:
-                top = reader.spark.createDataFrame(
-                    [],
-                    T.StructType(
-                        list(top.schema.fields) + [store.schema[f] for f in fetch]
-                    ),
-                )
-            else:
-                w_splits = sorted({r["split_id"] for r in rows})
-                docids = sorted({int(r["docid"]) for r in rows})
-                store = store.filter(F.col("split_id").isin(w_splits))
-                if len(docids) <= FETCH_ISIN_MAX:
-                    store = store.filter(F.col("docid").isin(docids))
-                else:
-                    # very wide pages: fall back to a [min,max] range — still
-                    # a row-group pruner, without a 10k-element In translation
-                    store = store.filter(
-                        (F.col("docid") >= docids[0])
-                        & (F.col("docid") <= docids[-1])
-                    )
-                winners = local_rows_df(reader.spark, rows, top.schema)
-                top = F.broadcast(winners).join(
-                    store, ["split_id", "docid"], "inner"
-                )
+            top = _fetch_winners(reader, top.collect(), top.schema, fetch_all)
     if snippet_fields:
         # snippet fields must be stored text reachable from the query's
         # terms (query_builder.rs:212-253 validation); namespaced storage
@@ -4585,6 +4150,63 @@ def search(
             top = top.withColumn(f"snippet_{f_}", snip(F.col(f_)))
     out = top.orderBy(*order)
     return (out, num_hits) if with_count else out
+
+
+def _store_fields(reader: IndexReader, fields: tuple) -> list:
+    """Docstore StructFields of ``fields`` for an empty result's schema;
+    string placeholders when the index has no docstore files yet (zero
+    published splits: a fresh streaming index, all-settled builds)."""
+    try:
+        schema = reader.docstore().schema
+    except Exception:  # noqa: BLE001 — no docstore files yet
+        return [T.StructField(f_, T.StringType()) for f_ in fields]
+    return [schema[f_] for f_ in fields]
+
+
+def _fetch_winners(
+    reader: IndexReader, rows: list, schema: T.StructType, fields: tuple
+) -> DataFrame:
+    """Point-lookup fetch of ``fields`` for collected winner ``rows``
+    (``schema``: their columns, split_id and docid among them) — the
+    reference root's fetch-docs step (root.rs:487-502 then fetch_docs.rs
+    point lookups). The winners — bounded ≤10k by the SearchRequest cap,
+    exactly the set the reference root holds in memory — are re-joined
+    against a docstore scan pruned STATICALLY to the winner splits with the
+    docids pushed into the parquet filters. The docstore is docid-sorted
+    per split, so row-group min/max stats skip everything but the pages
+    holding winners: at 10^5 splits the fetch reads ~k row groups instead
+    of the winners' whole splits. Columns: split_id, docid, the rest of
+    ``schema``, then ``fields``."""
+    if not rows:
+        return reader.spark.createDataFrame(
+            [], T.StructType(list(schema.fields) + _store_fields(reader, fields))
+        )
+    store = reader.docstore().select("split_id", "docid", *fields)
+    w_splits = sorted({r["split_id"] for r in rows})
+    docids = sorted({int(r["docid"]) for r in rows})
+    store = store.filter(F.col("split_id").isin(w_splits))
+    if len(docids) <= FETCH_ISIN_MAX:
+        store = store.filter(F.col("docid").isin(docids))
+    else:
+        # very wide pages: fall back to a [min,max] range — still a
+        # row-group pruner, without a 10k-element In translation
+        store = store.filter(
+            (F.col("docid") >= docids[0]) & (F.col("docid") <= docids[-1])
+        )
+    winners = local_rows_df(reader.spark, rows, schema)
+    return F.broadcast(winners).join(store, ["split_id", "docid"], "inner")
+
+
+def _join_sort_field(
+    reader: IndexReader, searcher: "Searcher", m: DataFrame, field: str
+) -> DataFrame:
+    """The general plan's fast-field sort: replace ``m``'s score with the
+    docstore column behind ``field``, cast to double."""
+    ff = searcher.fast_fields.get(field, field)
+    docs = reader.docstore().select("split_id", "docid", F.col(ff).alias("_sort"))
+    return m.join(docs, ["split_id", "docid"]).withColumn(
+        "score", F.col("_sort").cast("double")
+    ).drop("_sort")
 
 
 def search_many(
@@ -4608,14 +4230,11 @@ def search_many(
     the vectorized answer is one plan, not one plan per request).
 
     Per-request semantics match ``search()`` exactly — same AST, pruning,
-    per-query sort field/order, offset, and (score, split_id, docid)
-    tie-break — with two restrictions: snippets are unsupported (use
-    ``search()``), and plans are always exhaustive. Block-max WAND is a
-    per-query adaptive plan with driver-side seeding, so a request large
-    enough to want it (≥20M pruned docs) belongs in ``search()``; likewise
-    the window's per-query rank sorts ALL of that query's matches, where
-    ``search()`` uses a TakeOrderedAndProject heap — batch interactive
-    top-k lookups, not corpus-sized scans.
+    leaf gate, per-query sort field/order, offset, and (score, split_id,
+    docid) tie-break — with two restrictions: snippets are unsupported (use
+    ``search()``), and a general-plan lane's window rank sorts ALL of that
+    query's matches, where ``search()`` uses a TakeOrderedAndProject heap —
+    batch interactive top-k lookups, not corpus-sized scans.
 
     Returns (query_id, split_id, docid, score, *fetch_fields), ordered by
     (query_id, rank). Requests whose time/tag pruning leaves no splits
@@ -4640,9 +4259,9 @@ def search_many(
         split_ids = [m.split_id for m in splits]
         if not split_ids:
             continue
-        spec, lts, lsort = _leaf_topk_gate(
-            reader, searcher, ast, split_ids, req
-        )
+        spec, lts, lsort = _leaf_gate(reader, searcher, ast, split_ids, req)
+        if lsort is None and not needs_scores:
+            spec = None  # a field sort the kernel can't replicate
         lanes.append((qid, req, ast, searcher, split_ids, spec, lts, lsort))
     # in-kernel batch fetch: when EVERY lane leaf-compiles (and the fetch
     # columns are kernel-attachable within the row bound), the kernels
@@ -4679,15 +4298,7 @@ def search_many(
                 ast, split_ids, req.start_timestamp, req.end_timestamp
             )
             if req.sort_by_field and req.sort_by_field != "_score":
-                ff = searcher.fast_fields.get(
-                    req.sort_by_field, req.sort_by_field
-                )
-                docs = reader.docstore().select(
-                    "split_id", "docid", F.col(ff).alias("_sort")
-                )
-                m = m.join(docs, ["split_id", "docid"]).withColumn(
-                    "score", F.col("_sort").cast("double")
-                ).drop("_sort")
+                m = _join_sort_field(reader, searcher, m, req.sort_by_field)
         # one ascending window order serves both sort orders: rank by the
         # sign-flipped score for desc, the raw score for asc. Null/NaN
         # placement must replicate Spark's orderBy per DIRECTION (asc =
@@ -4731,7 +4342,7 @@ def search_many(
     if inline:
         win_schema = T.StructType(
             list(win_schema.fields[:4])
-            + [reader.docstore().schema[f_] for f_ in fetch_fields]
+            + _store_fields(reader, fetch_fields)
             + [win_schema.fields[4]]
         )
     if parts:
@@ -4761,37 +4372,8 @@ def search_many(
     if inline or not fetch_fields:
         out = local_rows_df(reader.spark, rows, win_schema)
         return out.orderBy("query_id", "_rn").drop("_rn")
-    try:
-        store = reader.docstore().select(
-            "split_id", "docid", *fetch_fields
-        )
-    except Exception:  # noqa: BLE001 — zero published splits, no docstore
-        store = None
-    if not rows or store is None:
-        base = list(win_schema.fields)
-        if store is not None:
-            base += [store.schema[f_] for f_ in fetch_fields]
-        else:
-            base += [
-                T.StructField(f_, T.StringType()) for f_ in fetch_fields
-            ]
-        return (
-            reader.spark.createDataFrame([], T.StructType(base))
-            .drop("_rn")
-        )
-    # one point-lookup fetch for every request's winners (search()'s fetch
-    # shape: static split prune + docid pushdown, winners broadcast)
-    w_splits = sorted({r["split_id"] for r in rows})
-    docids = sorted({int(r["docid"]) for r in rows})
-    store = store.filter(F.col("split_id").isin(w_splits))
-    if len(docids) <= FETCH_ISIN_MAX:
-        store = store.filter(F.col("docid").isin(docids))
-    else:
-        store = store.filter(
-            (F.col("docid") >= docids[0]) & (F.col("docid") <= docids[-1])
-        )
-    winners = local_rows_df(reader.spark, rows, win_schema)
-    out = F.broadcast(winners).join(store, ["split_id", "docid"], "inner")
+    # one point-lookup fetch for every request's winners
+    out = _fetch_winners(reader, rows, win_schema, fetch_fields)
     # column order must not depend on plan routing: match the inline-fetch
     # and empty-result paths (query_id leads, join keys follow)
     return out.select(
@@ -4799,33 +4381,39 @@ def search_many(
     ).orderBy("query_id", "_rn").drop("_rn")
 
 
-def _leaf_match_plan(
+def _leaf_gate(
     reader: IndexReader,
     searcher: "Searcher",
     ast: Node,
     split_ids: list[str],
     request: SearchRequest,
-) -> tuple[dict | None, tuple | None]:
-    """Gate + compile a request onto the leaf-local MATCHING kernel for the
-    scoring-opt-out consumers (count / aggs / export): same soundness
-    conditions as search()'s leaf-local top-k — every pruned split on the
-    latest config generation, text-only boolean tree, phrases only when
-    every split stores positions. Returns (spec, ts_bounds) or (None, None)
-    when the request needs the general plan."""
+) -> tuple:
+    """The one soundness gate for the leaf kernel: compile a request onto
+    it as (spec, ts_bounds, sort_spec), or (None, None, None) when the
+    request needs the general plan. Every pruned split must be on the
+    latest config generation (the kernel analyzes tokens under ONE config;
+    schema-evolved splits route through matching()'s per-generation
+    planner), and the query must compile (``leaf_plan``; phrases only when
+    every split stores positions). ``ts_bounds`` is the request's time
+    window in epoch micros. ``sort_spec`` is (docstore col, order) when the
+    request sorts by a fast field the kernel can sort on (Spark
+    cast-to-double semantics), else None — the top-k callers (search,
+    search_many) send any other field sort to the general plan; the
+    matching callers (count, aggs, export) ignore the sort."""
     smap = reader.stats_map()
     latest_gen = max(reader.manifest.config_generations() or [0])
     if {
         int(smap.get(sid, {}).get("config_generation") or 0)
         for sid in split_ids
     } - {latest_gen}:
-        return None, None
+        return None, None, None
     allow_phrase = searcher.record == "position" and all(
         smap.get(sid, {}).get("record", "freq") == "position"
         for sid in split_ids
     )
     spec = searcher.leaf_plan(ast, allow_phrase=allow_phrase)
     if spec is None:
-        return None, None
+        return None, None, None
     ts = None
     if (
         request.start_timestamp is not None
@@ -4835,7 +4423,18 @@ def _leaf_match_plan(
             _ts_micros(reader.spark, request.start_timestamp, is_start=True),
             _ts_micros(reader.spark, request.end_timestamp, is_start=False),
         )
-    return spec, ts
+    sort = None
+    if request.sort_by_field not in (None, "_score"):
+        scol = searcher.fast_fields.get(
+            request.sort_by_field, request.sort_by_field
+        )
+        try:
+            sdt = dict(reader.docstore().dtypes).get(scol)
+        except Exception:  # noqa: BLE001 — no docstore files yet
+            sdt = None
+        if sdt in _LEAF_SORTABLE_DTYPES:
+            sort = (scol, request.sort_order)
+    return spec, ts, sort
 
 
 def _required_range_atoms(
@@ -5028,58 +4627,6 @@ def _ts_desc_prune_splits(
     return split_ids
 
 
-def _leaf_topk_gate(
-    reader: IndexReader,
-    searcher: "Searcher",
-    ast: Node,
-    split_ids: list[str],
-    request: SearchRequest,
-) -> tuple:
-    """(spec, ts_bounds, sort_spec) for the leaf-local TOP-K kernel, or
-    (None, None, None) when the request needs the general plan — the same
-    soundness conditions search() applies inline: every pruned split on the
-    latest config generation, fast non-text sort columns only (Spark
-    cast-to-double semantics), phrases only when every split stores
-    positions. Used by the batched search_many so each lane rides the same
-    kernel as a single search()."""
-    smap = reader.stats_map()
-    latest_gen = max(reader.manifest.config_generations() or [0])
-    if {
-        int(smap.get(sid, {}).get("config_generation") or 0)
-        for sid in split_ids
-    } - {latest_gen}:
-        return None, None, None
-    leaf_sort = None
-    if request.sort_by_field not in (None, "_score"):
-        scol = searcher.fast_fields.get(
-            request.sort_by_field, request.sort_by_field
-        )
-        try:
-            sdt = dict(reader.docstore().dtypes).get(scol)
-        except Exception:  # noqa: BLE001 — no docstore files yet
-            sdt = None
-        if sdt not in _LEAF_SORTABLE_DTYPES:
-            return None, None, None
-        leaf_sort = (scol, request.sort_order)
-    leaf_ts = None
-    if (
-        request.start_timestamp is not None
-        or request.end_timestamp is not None
-    ):
-        leaf_ts = (
-            _ts_micros(reader.spark, request.start_timestamp, is_start=True),
-            _ts_micros(reader.spark, request.end_timestamp, is_start=False),
-        )
-    allow_phrase = searcher.record == "position" and all(
-        smap.get(sid, {}).get("record", "freq") == "position"
-        for sid in split_ids
-    )
-    spec = searcher.leaf_plan(ast, allow_phrase=allow_phrase)
-    if spec is None:
-        return None, None, None
-    return spec, leaf_ts, leaf_sort
-
-
 def _matching_or_leaf(
     reader: IndexReader,
     searcher: "Searcher",
@@ -5093,7 +4640,7 @@ def _matching_or_leaf(
     general matching() plan otherwise. ``leaf_match=False`` forces the
     general plan (differential tests pin both paths against each other)."""
     if leaf_match is not False:
-        spec, ts = _leaf_match_plan(reader, searcher, ast, split_ids, request)
+        spec, ts, _ = _leaf_gate(reader, searcher, ast, split_ids, request)
         if spec is not None:
             return searcher.leaf_matching(spec, split_ids, ts)
     return searcher.matching(
@@ -5163,7 +4710,7 @@ def export_fast_field(
         # of the matching kernel itself (the reference's search_stream leaf
         # reads fast-field readers in the leaf, leaf.rs:106-311) — no
         # docstore join, no per-matching-doc exchange before the sink
-        spec, ts = _leaf_match_plan(reader, searcher, ast, split_ids, request)
+        spec, ts, _ = _leaf_gate(reader, searcher, ast, split_ids, request)
         if spec is not None and searcher.leaf_fields_plan(cols):
             return searcher.leaf_matching_fields(
                 spec, split_ids, ts, list(cols)
@@ -5388,7 +4935,7 @@ def search_aggs(
     )
     if not (isinstance(ast, MatchAll) and not bounded):
         if leaf_match is not False:
-            spec, ts = _leaf_match_plan(
+            spec, ts, _ = _leaf_gate(
                 reader, searcher, ast, split_ids, request
             )
             if spec is not None and isinstance(aggs, dict) and aggs:
@@ -5531,7 +5078,7 @@ def count_hits(
             return _matchall_docs(reader, split_ids, request).agg(
                 F.count(F.lit(1)).alias("num_hits")
             )
-        spec, ts = _leaf_match_plan(reader, searcher, ast, split_ids, request)
+        spec, ts, _ = _leaf_gate(reader, searcher, ast, split_ids, request)
         if spec is not None:
             if ts is None and spec.get("op") == "term":
                 # single-term count = Σ per-split doc_freq: a columnar

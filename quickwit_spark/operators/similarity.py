@@ -302,6 +302,9 @@ def lsh_planted_recall(
         .select(id_col, vec_col)
         .collect()
     }
+    missing = [q for q in ids if q not in vec_rows]
+    if missing:
+        raise ValueError(f"pairs name query ids not in the corpus: {missing}")
     queries = [(q, vec_rows[q]) for q in ids]
     topk = lsh_nn_batch(
         df, queries, k, n_tables, n_planes, seed, multiprobe, vec_col, id_col
@@ -381,9 +384,10 @@ def ivf_assign(
     ``when()`` branches, which Catalyst codegen cannot survive at the
     4k-65k cells a 10^12-vector table needs — r4 VERDICT "what's wrong"
     #2; this is the prescribed pandas-UDF matrix-multiply form.)
-    Semantics preserved from the expression form: ties go to the lowest
-    cell index; an all-zero vector (undefined cosine) lands in cell 0 so
-    it stays reachable by probes."""
+    Ties go to the lowest cell index, as in the expression form. An
+    all-zero vector (undefined cosine) lands in cell 0 so it stays
+    reachable by probes: a deliberate fix, since the expression form left
+    its null cosines unmatched in cell -1, which no probe reaches."""
     from pyspark.sql.functions import pandas_udf
 
     seeds = (

@@ -34,27 +34,3 @@ def test_quantization_is_floor(n):
         assert int(FIELD_NORMS_TABLE[i + 1]) > min(n, int(FIELD_NORMS_TABLE[-1]))
     # idempotent
     assert int(quantize_len(q)) == q
-
-
-def test_quantize_len_expr_matches_table(spark):
-    """The codegen quantization must agree with the table-based kernel on
-    every length 0..100_000 (and the table maximum)."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from quickwit_spark.functions.fieldnorm import (
-        FIELD_NORMS_TABLE,
-        quantize_len,
-        quantize_len_expr,
-    )
-
-    vals = list(range(0, 100_000)) + [int(FIELD_NORMS_TABLE[-1]) + 5]
-    df = spark.createDataFrame([(v,) for v in vals], "dl long")
-    got = [
-        r["q"]
-        for r in df.select(quantize_len_expr(F.col("dl")).alias("q"))
-        .orderBy("dl")
-        .collect()
-    ]
-    exp = quantize_len(np.array(vals, dtype=np.int64))
-    assert got == exp.tolist()

@@ -5,8 +5,6 @@ snapshot semantics stay unchanged and rank-identical."""
 
 from __future__ import annotations
 
-import pytest
-
 from quickwit_spark.operators.search import SearchRequest, search
 
 
@@ -55,13 +53,3 @@ def test_eager_default_is_snapshot(spark, small_index):
     finally:
         sc.setJobGroup("eager-probe-done", "")
     assert _jobs_in_group(spark, "eager-probe") != []
-
-
-def test_lazy_conflicts_with_explicit_fetch_mode(spark, small_index):
-    with pytest.raises(ValueError, match="lazy=True"):
-        search(
-            small_index,
-            SearchRequest(query="w0"),
-            lazy=True,
-            fetch_mode="pointlookup",
-        )

@@ -14,7 +14,7 @@ import pytest
 from quickwit_spark.operators.search import (
     SearchRequest,
     Searcher,
-    _leaf_match_plan,
+    _leaf_gate,
     count_hits,
     export_fast_field,
     search_aggs,
@@ -58,11 +58,11 @@ def test_count_leaf_matches_general(small_index, q):
 def test_count_gate_actually_compiles(small_index):
     s = Searcher(small_index, scoring=False)
     req = SearchRequest(query="w1 OR w4")
-    spec, ts = _leaf_match_plan(
+    spec, ts, sort = _leaf_gate(
         small_index, s, parse_query(req.query),
         [m.split_id for m in small_index.manifest.list_published()], req,
     )
-    assert spec is not None and ts is None
+    assert spec is not None and ts is None and sort is None
 
 
 def test_count_ts_window_matches_general(small_index):

@@ -36,6 +36,11 @@ DISJUNCTIONS = [
     "(w1 OR w2)^1.5",
     "w1 OR w1",          # duplicate token => summed boost
     "needleone OR w1",   # very rare + very common
+    "w0",                # hottest term (Zipf head)
+    "w1 OR w9",
+    "w0 OR w1 OR w2",    # all-hot disjunction
+    "w47 OR needletwo",  # mixed hot/rare
+    "text:IN [needleone needletwo needlethree]",
 ]
 
 INELIGIBLE = [
@@ -107,6 +112,21 @@ def test_pruned_with_offset_and_inline_fetch(small_index, monkeypatch):
         (r["split_id"], r["docid"], r["url"]) for r in ex
     ]
     assert pr
+
+
+def test_fewer_matches_than_k_equals_general_plan(small_index):
+    """k=100 over a rare needle: every split's top-k is all of its matches,
+    and the default leaf path equals the general relational plan end to
+    end (fetched url included)."""
+    req = SearchRequest(query="needleone", max_hits=100)
+    leaf = search(small_index, req).collect()
+    general = search(small_index, req, leaf_topk=False).collect()
+    assert 0 < len(leaf) < 100
+    assert [(r["split_id"], r["docid"], r["url"]) for r in leaf] == [
+        (r["split_id"], r["docid"], r["url"]) for r in general
+    ]
+    for a, b in zip(leaf, general):
+        assert a["score"] == pytest.approx(b["score"], rel=1e-9)
 
 
 def test_ts_window_keeps_exhaustive_path(small_index, monkeypatch):

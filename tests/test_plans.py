@@ -36,7 +36,7 @@ def test_term_query_plan_shape(small_index):
 
 
 def test_fetch_plan_is_point_lookup(small_index):
-    """FORCED-GENERAL fetch phase (root.rs:487-502 + fetch_docs.rs analog):
+    """General-plan fetch phase (root.rs:487-502 + fetch_docs.rs analog):
     the docstore read is a point lookup — winner docids pushed into the
     parquet DataFilters, scan pruned to the winner splits' partitions —
     not a full docstore scan joined against the scoring subtree. (The
@@ -47,7 +47,7 @@ def test_fetch_plan_is_point_lookup(small_index):
             small_index,
             SearchRequest(query="w0 w3", max_hits=10),
             fetch_fields=("url",),
-            fetch_mode="pointlookup",
+            leaf_topk=False,
         )
     )
     assert "docid" in p.split("PushedFilters", 1)[1][:400] or " IN " in p
@@ -60,14 +60,14 @@ def test_fetch_auto_is_in_kernel(small_index):
     """Default fetched search on a leaf-compiling query: the kernel
     attaches the fetch columns to its per-split top-k rows, so the final
     plan is a LOCAL relation — no docstore scan, no join, the whole query
-    was ONE kernel job. dpp remains an explicit opt-in for callers
+    was ONE kernel job. lazy=True remains the opt-in for callers
     composing a fully-lazy plan (and re-plans the scoring subtree)."""
     req = SearchRequest(query="w0 w3", max_hits=10)
     p = _plan(search(small_index, req, fetch_fields=("url",)))
     assert "postings" not in p
     assert "docstore" not in p and "Join" not in p
-    p = _plan(search(small_index, req, fetch_fields=("url",), fetch_mode="dpp"))
-    assert "postings" in p  # explicit dpp keeps the lazy scoring subtree
+    p = _plan(search(small_index, req, fetch_fields=("url",), lazy=True))
+    assert "postings" in p  # lazy keeps the scoring subtree under the join
 
 
 def test_phrase_query_plan_shape(small_index):

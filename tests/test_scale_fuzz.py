@@ -182,9 +182,9 @@ ORDER BY score DESC, split_id ASC, url ASC LIMIT 200
     )
 
 
-def test_wand_disjunction_equals_exhaustive(big):
-    """Force the block-max WAND plan on the two most common tokens at 64
-    splits and compare against the exhaustive oracle — block skipping must
+def test_hot_disjunction_equals_exhaustive(big):
+    """The default leaf path (in-kernel MaxScore) on the two most common
+    tokens at 64 splits against the exhaustive oracle — block skipping must
     be sound across thousands of block boundaries."""
     reader, con = big
     res = search(
@@ -192,7 +192,6 @@ def test_wand_disjunction_equals_exhaustive(big):
         SearchRequest(query="w0 OR w1", max_hits=100),
         quantize_norms=False,
         fetch_fields=("url",),
-        use_wand=True,
     )
     got = [
         (r["url"], round(r["score"] + 1e-9, 4)) for r in res.collect()

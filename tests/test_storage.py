@@ -318,6 +318,34 @@ def test_dir_client_list_absent_prefix_cheap(tmp_path):
     assert c.list_keys("docstore/") == ["docstore/split_id=X2/part-0.parquet"]
 
 
+def test_object_storage_exists_uses_head_not_get(tmp_path):
+    """exists() asks for the object's size (HEAD), never downloads it; a
+    minimal client without size_object still works through GET."""
+
+    class Counting(DirObjectStoreClient):
+        gets = 0
+
+        def get_object(self, key):
+            Counting.gets += 1
+            return super().get_object(key)
+
+    c = Counting(str(tmp_path / "os"))
+    c.put_object("a/obj", b"x" * 1024)
+    st = ObjectStorage(c, str(tmp_path / "os"))
+    assert st.exists("a/obj") is True
+    assert st.exists("a/missing") is False
+    assert Counting.gets == 0
+
+    class Minimal:
+        def __init__(self, inner):
+            self.get_object = inner.get_object
+
+    st_min = ObjectStorage(Minimal(c), str(tmp_path / "os"))
+    assert st_min.exists("a/obj") is True
+    assert st_min.exists("a/missing") is False
+    assert Counting.gets == 2
+
+
 def test_lsh_planted_recall_empty_pairs(spark):
     from quickwit_spark.operators.similarity import lsh_planted_recall
 
@@ -327,6 +355,16 @@ def test_lsh_planted_recall_empty_pairs(spark):
     rep = lsh_planted_recall(df, [])
     assert rep.columns == ["query_id", "neighbor_id", "found"]
     assert rep.count() == 0
+
+
+def test_lsh_planted_recall_unknown_query_id(spark):
+    from quickwit_spark.operators.similarity import lsh_planted_recall
+
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "vec_id long, embedding array<float>"
+    )
+    with pytest.raises(ValueError, match=r"not in the corpus: \[5, 9\]"):
+        lsh_planted_recall(df, [(0, 1), (9, 0), (5, 1)])
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2])

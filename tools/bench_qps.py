@@ -13,10 +13,8 @@ tmpfs), one SparkSession in FAIR scheduling mode (each client thread in its
 own fair pool, as a multi-tenant search head would run), N closed-loop
 threads each running bench.py's 10-query set round-robin from staggered
 offsets for a fixed number of passes. Reported per level: aggregate QPS,
-mean and p95 latency. WAND is auto-gated off at this corpus size, so the
-concurrent queries share only read-mostly reader state (fieldnorm cache,
-stats map) — the scratch-cache hand-off that makes concurrent WAND queries
-unsafe on ONE reader is never exercised (documented in search.py).
+mean and p95 latency. The concurrent queries share only read-mostly
+reader state (fieldnorm cache, stats map).
 
 Usage: PYTHONPATH=. python tools/bench_qps.py [--threads 1,4,8] [--passes 2]
 """

@@ -71,7 +71,8 @@ def main() -> None:
     sections.append(("AND term query (leaf-local top-k kernel, no fetch)", p, checks))
 
     # forced general plan (leaf_topk=False): per-term scored join tree —
-    # still the path for WAND, ranges and mixed-generation indexes
+    # the path for match-all, non-text term fields, ranges the kernel
+    # can't compare exactly, and mixed-generation indexes
     term_g = search(
         reader,
         SearchRequest(query="w0 w3", max_hits=10),
@@ -90,7 +91,7 @@ def main() -> None:
         reader,
         SearchRequest(query="w0 w3", max_hits=10),
         fetch_fields=("url",),
-        fetch_mode="pointlookup",  # forced: auto now fetches in-kernel
+        leaf_topk=False,  # the general plan fetches by point lookup
     )
     pf = plan_of(fetched)
     checks_f = [
