@@ -37,6 +37,7 @@ DISJUNCTIONS = [
     "w1 OR w1",          # duplicate token => summed boost
     "needleone OR w1",   # very rare + very common
     "w0",                # hottest term (Zipf head)
+    "needleone",         # rare needle
     "w1 OR w9",
     "w0 OR w1 OR w2",    # all-hot disjunction
     "w47 OR needletwo",  # mixed hot/rare
