@@ -129,12 +129,20 @@ def cmd_ingest(args) -> int:
         # text formats (NDJSON/CSV) land ISO timestamps as strings; the
         # index needs a real timestamp column for time-range metadata
         # (full multi-format parsing lives in the DocMapping datetime
-        # fields — this is the CLI lane's ISO fast path)
+        # fields — this is the CLI lane's ISO fast path). Values it cannot
+        # parse are indexed as null, and the operator is told how many.
         from pyspark.sql import functions as F
 
-        pages = pages.withColumn(
-            cfg.timestamp_field, F.to_timestamp(cfg.timestamp_field)
-        )
+        raw = F.col(cfg.timestamp_field)
+        ts = F.try_to_timestamp(raw)
+        n_bad = pages.filter(raw.isNotNull() & ts.isNull()).count()
+        if n_bad:
+            print(
+                f"warning: {n_bad} non-null {cfg.timestamp_field!r} value(s)"
+                " are not ISO timestamps and were indexed as null",
+                file=sys.stderr,
+            )
+        pages = pages.withColumn(cfg.timestamp_field, ts)
     m = build_index(spark, pages, args.index_dir, cfg, resume=True)
     _emit(
         {

@@ -540,12 +540,19 @@ class Manifest:
         self.to_dataframe(spark).write.mode("overwrite").parquet(path)
 
     def stats(self) -> dict[str, dict]:
-        """split_id -> {num_docs, avgdl} for Published splits (broadcast to
-        the scorer: per-split BM25 stats, see SURVEY §7.4)."""
+        """split_id -> {num_docs, avgdl, ...} for Published splits (broadcast
+        to the scorer: per-split BM25 stats, see SURVEY §7.4).
+        ``create_timestamp`` versions a split id for the executor caches (a
+        rebuild can reuse the id); ``uncompressed_docs_size_in_bytes`` sizes
+        the leaf kernel's tasks."""
         return {
             m.split_id: {
                 "num_docs": m.num_docs,
                 "avgdl": m.avgdl,
+                "create_timestamp": m.create_timestamp,
+                "uncompressed_docs_size_in_bytes": (
+                    m.uncompressed_docs_size_in_bytes
+                ),
                 "num_merge_ops": m.num_merge_ops,
                 "field_total_tokens": m.field_total_tokens,
                 "record": m.record,

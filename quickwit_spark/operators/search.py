@@ -2,18 +2,23 @@
 reference's root/leaf search tree (quickwit-search/src/root.rs, leaf.rs).
 
 Lifecycle mapping (SURVEY §3.1):
-- root validate+prune   -> driver: parse query, manifest time/tag pruning;
-- leaf warmup           -> Parquet scan of ONLY the needed (split, term) rows
-  (postings are written sorted by term, so row-group stats prune the scan —
-  the analog of warming exact term-dict/posting byte ranges, leaf.rs:141-227);
-- leaf search+collect   -> decode blocks (Arrow kernel), score with pure
-  column arithmetic (JVM codegen; per-split N/avgdl broadcast), partial top-k
-  per partition;
-- root merge            -> global ``ORDER BY score DESC, split_id, docid
-  LIMIT k+offset`` = Catalyst TakeOrderedAndProject (partial+final top-k,
-  exactly collector.rs:423-538's re-top-k);
-- fetch phase           -> broadcast-join the k winners back to the docstore
-  (fetch_docs.rs:132-245).
+- root validate+prune   -> driver: parse query, manifest time/tag/field-range
+  pruning; the pruned splits are grouped into tasks by manifest size;
+- leaf warmup           -> each kernel task reads ONLY its splits' query-term
+  postings rows with pyarrow (postings are written sorted by term, so
+  row-group stats prune the read — the analog of warming exact
+  term-dict/posting byte ranges, leaf.rs:141-227); the input relation is a
+  pure-JVM ``spark.range`` of task ids, so there is no postings scan and no
+  shuffle: one Spark job, one stage;
+- leaf search+collect   -> decode blocks, attach fieldnorms from the executor
+  cache, score BM25 and evaluate the whole boolean tree in numpy, emit each
+  split's top-k (or its count / matching docids / partial buckets);
+- root merge            -> driver: collect the |splits|·k partial hits and
+  sort them by ``(score, split_id, docid)`` in Python, keeping rows
+  ``[offset:k+offset]`` (collector.rs:423-538's re-top-k); lazy plans and the
+  general relational plan keep Catalyst's TakeOrderedAndProject;
+- fetch phase           -> in-kernel for the winners' stored fields, else a
+  point lookup of the k winners in the docstore (fetch_docs.rs:132-245).
 
 BM25 is per-split (each split is its own index in the reference; scores merge
 by value, never with global stats — SURVEY §7.4): idf = ln(1 + (N-df+0.5)/
@@ -25,6 +30,7 @@ documented PartialHit contract (search_api.proto:207-218).
 from __future__ import annotations
 
 import bisect
+import functools
 from collections.abc import Iterator
 from dataclasses import dataclass, replace
 
@@ -62,11 +68,12 @@ from quickwit_spark.plans.query import (
 # filters as an In(...) when at most this many (a 10k-element In is slow to
 # translate; beyond it a [min,max] range still prunes row groups)
 FETCH_ISIN_MAX = 4_096
-# warm(): target in-cache partition size. The scan layer over-partitions a
-# small index to fill defaultParallelism; query jobs then pay a fixed
-# executor↔python-worker hand-off per task, which dominates when partitions
-# hold <1 MB. ceil(bytes/target) with a floor of 4 restores byte-sized
-# partitions; at per-split file sizes beyond the target it is a no-op.
+# target bytes per query task. Every task pays a fixed executor↔python-
+# worker hand-off, which dominates when a task holds <1 MB. The leaf kernel
+# packs consecutive splits into one task up to this many manifest bytes
+# (_leaf_split_tasks), and warm() coalesces the cached docstore to
+# ceil(bytes/target) partitions with a floor of 4; at per-split sizes beyond
+# the target both are one task/partition per split.
 QUERY_PARTITION_TARGET_BYTES = 32 << 20
 
 DECODED_SCHEMA = T.StructType(
@@ -221,12 +228,48 @@ def _make_decode_postings_rows_arrow(
 # ---------------------------------------------------------------------------
 # executor-side fieldnorm cache: the analog of tantivy's per-segment
 # fieldnorm file + the searcher's fast-field cache (leaf.rs:330-346 warmup,
-# 1 GB cache default). Splits are immutable, so (index_dir, split_id) is a
-# sound cache key; entries are the docid->doc-length arrays read from the
-# split's docstore parquet with column pruning (2 int columns — never the
-# text). Scoring then needs NO per-query norms join: the decode kernels
-# attach |d| map-side, and no docstore shuffle happens at all.
+# 1 GB cache default). A split's files are immutable once published, but a
+# rebuild at the same index_dir can publish NEW files under the SAME split
+# id, so every key carries the split's manifest ``create_timestamp``
+# (``_split_version``) next to (index_dir, split_id); entries are the
+# docid->doc-length arrays read from the split's docstore parquet with
+# column pruning (2 int columns — never the text). Scoring then needs NO
+# per-query norms join: the decode kernels attach |d| map-side, and no
+# docstore shuffle happens at all.
 # ---------------------------------------------------------------------------
+
+# index_dir -> {split_id: create_timestamp} of the splits the running task
+# reads, installed by ``_versioned`` at kernel start (a python worker runs
+# one task at a time) and read by every executor cache key below
+_SPLIT_VERSIONS: dict = {}
+
+
+def _split_version(index_dir: str, split_id: str) -> float:
+    return _SPLIT_VERSIONS.get(index_dir, {}).get(split_id, 0.0)
+
+
+def _versioned(reader: "IndexReader", split_ids: list[str], kernel):
+    """Wrap a python-worker kernel so the executor caches it reads through
+    key their entries by the manifest version of each split it touches: a
+    rebuild that reuses split ids then misses instead of serving the old
+    build's fieldnorms / fast fields. The versions ride the closure, like
+    the kernels' per-split doc counts; no storage call is made."""
+    stats = reader.stats_map()
+    versions = {
+        sid: float(stats[sid].get("create_timestamp") or 0.0)
+        for sid in split_ids
+        if sid in stats
+    }
+    # a partial over a module-level function: it unpickles by reference,
+    # so the install below writes the worker's real module registry (a
+    # closure would carry its own copy of the module globals)
+    return functools.partial(_run_versioned, reader.index_dir, versions, kernel)
+
+
+def _run_versioned(index_dir: str, versions: dict, kernel, batches):
+    _SPLIT_VERSIONS[index_dir] = versions
+    return kernel(batches)
+
 
 _NORMS_CACHE: dict = {}
 _NORMS_CACHE_MAX_BYTES = 512 * 1024 * 1024  # per python worker (tantivy: 1 GB)
@@ -238,7 +281,9 @@ def _load_norms(index_dir: str, split_id: str, quantize: bool, field: str = ""):
     mean the split is docid-dense (docid == row index, the build layout);
     delete-rewritten splits with gaps keep the explicit docid array.
     ``field`` selects an extra text field's fieldnorm column ('' = default)."""
-    key = (index_dir, split_id, quantize, field)
+    key = (
+        index_dir, split_id, _split_version(index_dir, split_id), quantize, field
+    )
     hit = _NORMS_CACHE.get(key)
     if hit is not None:
         return hit
@@ -288,8 +333,9 @@ def _norms_for(
 
 # executor-side fast-field cache: same shape as the fieldnorm cache above
 # (tantivy's fast-field files live in the same 1 GB searcher cache). One
-# entry per (index_dir, split_id, column) — the docid->value array of a
-# sortable/filterable docstore column, read once with column pruning.
+# entry per (index_dir, split_id, split version, column) — the docid->value
+# array of a sortable/filterable docstore column, read once with column
+# pruning.
 _FAST_CACHE: dict = {}
 _FAST_CACHE_MAX_BYTES = 512 * 1024 * 1024
 _FAST_CACHE_BYTES = 0
@@ -302,7 +348,7 @@ def _load_fast(index_dir: str, split_id: str, col: str):
     comparisons) and float64 with Spark ``cast(double)`` semantics for
     numeric/bool columns; ``valid`` marks non-null rows. ``None`` docids
     mean docid-dense (docid == row index), as in the fieldnorm cache."""
-    key = (index_dir, split_id, col)
+    key = (index_dir, split_id, _split_version(index_dir, split_id), col)
     hit = _FAST_CACHE.get(key)
     if hit is not None:
         return hit
@@ -365,7 +411,9 @@ _EMPTY_U8 = np.empty(0, dtype=np.uint8)
 
 def _load_col(index_dir: str, split_id: str, col: str):
     """-> (sorted docid array | None, pyarrow Array in docid order)."""
-    key = (index_dir, split_id, "\x00typed", col)
+    key = (
+        index_dir, split_id, _split_version(index_dir, split_id), "\x00typed", col
+    )
     hit = _FAST_CACHE.get(key)
     if hit is not None:
         return hit[0], hit[1]
@@ -408,7 +456,9 @@ def _universe_for(index_dir: str, split_id: str) -> np.ndarray:
     which survives delete-rewrites sparsely) — the all-docs base a
     pure-negative boolean subtree subtracts from, exactly the general
     plan's ``_zero(docs)``. Cached with the fast-field entries."""
-    key = (index_dir, split_id, "\x00univ", "")
+    key = (
+        index_dir, split_id, _split_version(index_dir, split_id), "\x00univ", ""
+    )
     hit = _FAST_CACHE.get(key)
     if hit is not None:
         return hit[1]
@@ -564,7 +614,6 @@ class IndexReader:
             self.manifest.pin()
         self._postings: DataFrame | None = None
         self._docstore: DataFrame | None = None
-        self._term_dict: DataFrame | None = None
         self._warmed: list[DataFrame] = []
         self._split_stats: DataFrame | None = None
         self._stats_map: dict | None = None
@@ -577,7 +626,6 @@ class IndexReader:
         self._warmed = []
         self._postings = None
         self._docstore = None
-        self._term_dict = None
         self._split_stats = None
         self._stats_map = None
         if self._pinned:
@@ -610,58 +658,36 @@ class IndexReader:
         return df.coalesce(want) if want < cur else df
 
     def warm(self, materialize: bool = True, mode: str = "full") -> None:
-        """Pin hot state in executor memory — the analog of the reference
-        searcher's fast-field/footer caches (1 GB + 500 MB,
+        """Pin hot state — the analog of the reference searcher's
+        fast-field/footer caches (1 GB + 500 MB,
         quickwit_config/mod.rs:99-126).
 
-        ``mode="full"`` caches postings + docstore — right for an index that
-        fits cluster memory (this sandbox, or a hot tenant's recent splits).
-        ``mode="metadata"`` caches only the term dictionary (split_id, term,
-        doc_freq, sum_tf — no compressed blocks) + the manifest stats map:
-        the 10^12-doc setting, where postings/docstore stay on storage behind
-        the parquet reader and the OS page cache, but term-existence checks,
-        doc-freq lookups, and split pruning never re-scan.
-        The term dict is a ~1% slice of postings bytes (blocks dominate).
+        ``mode="metadata"`` takes the driver-side manifest stats snapshot
+        only (split pruning, BM25 stats and the leaf kernel's task sizing
+        never re-read the manifest): the 10^12-doc setting, where postings
+        and docstore stay on storage behind the parquet reader and the OS
+        page cache. ``mode="full"`` also caches the docstore relation, read
+        by match-all requests, the general plan and its point-lookup fetch
+        — right for an index that fits cluster memory. Postings are never
+        cached: leaf queries read their splits' term rows with pyarrow
+        inside the kernel task, so a cached postings relation would serve
+        only the general plan.
 
-        Both modes right-size the cached partitioning by bytes (see
-        ``_query_coalesce``) — a no-op at cluster scale, a ~1.1-1.6x query
+        The cached docstore is right-sized by bytes (see
+        ``_query_coalesce``) — a no-op at cluster scale, a ~1.1-1.6x
         latency win on corpora small enough to be over-partitioned."""
+        self.stats_map()  # driver-side manifest snapshot, one read
         if mode == "metadata":
-            td = self._query_coalesce(
-                self.postings().select(
-                    "split_id", "term", "doc_freq", "sum_tf"
-                ),
-                "postings",
-            ).cache()
-            self._warmed = [td]
-            self._term_dict = td
-            self.stats_map()  # driver-side manifest snapshot, one read
-            if materialize:
-                td.count()
             return
-        p = self._query_coalesce(self.postings(), "postings").cache()
         d = self._query_coalesce(self.docstore(), "docstore").cache()
-        self._warmed = [p, d]
-        self._postings = p
+        self._warmed = [d]
         self._docstore = d
         if materialize:
-            # concurrent materialization: the byte-coalesced cache scans
-            # have few tasks each, so running the two count jobs serially
-            # leaves most executor threads idle — submit both at once
-            # (Spark's scheduler interleaves the jobs' tasks)
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as ex:
-                for f in [ex.submit(p.count), ex.submit(d.count)]:
-                    f.result()
+            d.count()
 
     def term_dict(self) -> DataFrame:
-        """(split_id, term, doc_freq, sum_tf) — cached when warmed with
-        mode="metadata", else a pruned projection of the postings scan
-        (column pruning keeps the blocks out of the read)."""
-        td = getattr(self, "_term_dict", None)
-        if td is not None:
-            return td
+        """(split_id, term, doc_freq, sum_tf): a pruned projection of the
+        postings scan (column pruning keeps the blocks out of the read)."""
         return self.postings().select(
             "split_id", "term", "doc_freq", "sum_tf"
         )
@@ -764,30 +790,6 @@ def _leaf_spec_tokens(spec: dict) -> list[str]:
             for t in _leaf_spec_tokens(c)
         ]
     return []
-
-
-def _leaf_spec_matches_without_terms(spec: dict) -> bool:
-    """True when the tree can match docs in a split that holds NONE of the
-    query's postings tokens — pure-negative subtrees (NOT x over the
-    universe). Such specs need one anchor input row per split, or the
-    kernel never visits splits where the negated terms don't occur."""
-    op = spec["op"]
-    if op in ("term", "termset", "phrase", "empty"):
-        return False
-    if op == "range":
-        return True  # fast-field compare needs no postings tokens
-    if op == "boost":
-        return _leaf_spec_matches_without_terms(spec["child"])
-    # bool
-    if spec["must"]:
-        return all(
-            _leaf_spec_matches_without_terms(c) for c in spec["must"]
-        )
-    if spec["should"]:
-        return any(
-            _leaf_spec_matches_without_terms(c) for c in spec["should"]
-        )
-    return bool(spec["must_not"])  # pure-negative node
 
 
 def _leaf_spec_phrase_tokens(spec: dict) -> set[str]:
@@ -986,15 +988,18 @@ LEAF_PHRASE_PRUNE_ENABLED = True
 # ≤ ~60, float64 rounding is ≤ 1e-13 there, so 1e-9 is conservatively safe
 _MS_SLACK = 1e-9
 
-# split-global minimum fieldnorm per (index_dir, split_id, quantize, field)
-# — one float per entry, derived from the (already cached) fieldnorm array
+# split-global minimum fieldnorm per (index_dir, split_id, split version,
+# quantize, field) — one float per entry, derived from the (already cached)
+# fieldnorm array
 _MINNORM_CACHE: dict = {}
 
 
 def _split_min_norm(
     index_dir: str, split_id: str, quantize: bool, field: str
 ) -> float:
-    key = (index_dir, split_id, quantize, field)
+    key = (
+        index_dir, split_id, _split_version(index_dir, split_id), quantize, field
+    )
     hit = _MINNORM_CACHE.get(key)
     if hit is None:
         _idx, dls = _load_norms(index_dir, split_id, quantize, field)
@@ -1139,16 +1144,17 @@ def _make_leaf_topk_kernel(
     (leaf.rs: every leaf evaluates the full query against its own splits and
     returns k PartialHits; the root merges).
 
-    Input: postings rows (split_id, term, doc_freq, blocks) repartitioned by
-    split_id so one task holds every query term of its splits (a handful of
-    still-compressed rows per split — the same bytes a phrase query
-    shuffles). Per split: decode each term, attach |d| from the executor
-    fieldnorm cache, score BM25 with the exact `_score_decoded` arithmetic,
-    then evaluate the compiled tree recursively in numpy — every node yields
-    (sorted-unique docids, scores): must = sorted-array intersection with
-    score sums, should/term-set = score-summing union, must_not = set
-    difference, boost = scalar multiply — rank by (score desc, docid asc),
-    emit k rows. Compared to the general `_eval_bool` plan this removes the
+    Input: postings rows (split_id, term, doc_freq, blocks[, pos_blocks])
+    of the query terms for every split of ONE task, read by
+    ``_make_split_postings_reader`` (a handful of still-compressed rows per
+    split), plus one null-term anchor row per split. Per split: decode each
+    term, attach |d| from the executor fieldnorm cache, score BM25 with the
+    exact `_score_decoded` arithmetic, then evaluate the compiled tree
+    recursively in numpy — every node yields (sorted-unique docids,
+    scores): must = sorted-array intersection with score sums,
+    should/term-set = score-summing union, must_not = set difference,
+    boost = scalar multiply — rank by (score desc, docid asc), emit k rows.
+    Compared to the general `_eval_bool` plan this removes the
     per-matching-doc groupBy exchange: rows leaving python drop from
     |matches| to |splits|·k, which is the shape that survives a 10^12-doc
     corpus.
@@ -1253,8 +1259,9 @@ def _make_leaf_topk_kernel(
             seen.update(rb.column(names0.index("split_id")).to_pylist())
             tcol = rb.column(names0.index("term"))
             if tcol.null_count:
-                # null-term anchor rows (pure-negative-reachable specs):
-                # they only mark the split as present — drop before decode
+                # null-term anchor rows only mark the split as present (a
+                # pure-negative subtree matches in splits holding none of
+                # the query's tokens) — drop before decode
                 rb = rb.filter(pc.is_valid(tcol))
                 if rb.num_rows == 0:
                     continue
@@ -1322,6 +1329,15 @@ def _make_leaf_topk_kernel(
                     "sync with postings"
                 ) from None
             per_raw = raw.get(sid, {})
+            if emit == "count" and spec["op"] == "term" and ts_bounds is None:
+                # single-term count = the split's doc_freq: no block decode
+                # (tantivy answers TermQuery counts from the term
+                # dictionary; delete rewrites recompute doc_freq exactly)
+                hit = per_raw.get(spec["tok"])
+                if hit is not None:
+                    out_sid.append(sid)
+                    out_doc.append(hit[1])
+                continue
             ms_topk = None
             if ms_terms is not None:
                 if not per_raw:
@@ -2457,6 +2473,79 @@ def _make_phrase_fb_kernel(
     return kernel
 
 
+def _leaf_split_tasks(split_ids: list[str], stats: dict) -> list[list[str]]:
+    """Group the pruned splits into leaf-kernel tasks by the manifest's
+    ``uncompressed_docs_size_in_bytes``: consecutive splits share a task
+    until it would exceed ``QUERY_PARTITION_TARGET_BYTES``. A small index
+    is one task (every task costs a fixed executor↔python-worker hand-off);
+    at production split sizes every split is its own task. Driver metadata
+    only — no storage call."""
+    tasks: list[list[str]] = []
+    cur: list[str] = []
+    cur_bytes = 0
+    for sid in split_ids:
+        nbytes = int(
+            stats.get(sid, {}).get("uncompressed_docs_size_in_bytes") or 0
+        )
+        if cur and cur_bytes + nbytes > QUERY_PARTITION_TARGET_BYTES:
+            tasks.append(cur)
+            cur, cur_bytes = [], 0
+        cur.append(sid)
+        cur_bytes += nbytes
+    if cur:
+        tasks.append(cur)
+    return tasks
+
+
+def _make_split_postings_reader(
+    index_dir: str, tasks: list[list[str]], spec: dict
+):
+    """Leaf-kernel input stage: ``spark.range`` batches of task ids -> the
+    postings rows (split_id, term, doc_freq, blocks[, pos_blocks]) of the
+    spec's tokens for every split of each task, read from
+    ``{index_dir}/postings/split_id=<id>`` with pyarrow. Columns are pruned
+    (``pos_blocks`` is read only when the spec has a phrase) and the term
+    filter prunes row groups of the term-sorted file. Every split also gets
+    one (split_id, null term) anchor row, so the kernel visits splits that
+    hold none of the tokens (pure-negative subtrees and ranges match there);
+    a spec without tokens (range-only) reads no postings at all."""
+    uniq = sorted(set(_leaf_spec_tokens(spec)))
+    cols = ["term", "doc_freq", "blocks"]
+    if _leaf_spec_phrase_tokens(spec):
+        cols.append("pos_blocks")
+
+    def read(batches):
+        import pyarrow.parquet as pq
+
+        for rb in batches:
+            for task in rb.column(0).to_pylist():
+                for sid in tasks[task]:
+                    if uniq:
+                        tbl = pq.read_table(
+                            f"{index_dir}/postings/split_id={sid}",
+                            columns=cols,
+                            filters=[("term", "in", uniq)],
+                        )
+                        if tbl.num_rows:
+                            tbl = tbl.add_column(
+                                0,
+                                "split_id",
+                                pa.array(
+                                    [sid] * tbl.num_rows, type=pa.string()
+                                ),
+                            )
+                            yield from tbl.to_batches()
+                    yield pa.RecordBatch.from_arrays(
+                        [
+                            pa.array([sid], type=pa.string()),
+                            pa.nulls(1, type=pa.string()),
+                        ],
+                        names=["split_id", "term"],
+                    )
+
+    return read
+
+
 class Searcher:
     """Compiles a query AST into a DataFrame plan over one index."""
 
@@ -2718,10 +2807,14 @@ class Searcher:
         # ^ explicit projection: the positions column must stay pruned out of
         # the parquet scan on the general plan's term path
         decoded = post.mapInArrow(
-            _make_decode_postings_rows_arrow(
-                self.reader.index_dir,
-                self.quantize_norms,
-                self._avgdl_map(split_ids),
+            _versioned(
+                self.reader,
+                split_ids,
+                _make_decode_postings_rows_arrow(
+                    self.reader.index_dir,
+                    self.quantize_norms,
+                    self._avgdl_map(split_ids),
+                ),
             ),
             DECODED_SCHEMA,
         )
@@ -2871,15 +2964,17 @@ class Searcher:
         with_hits: bool = False,
         fetch_cols: "list[str] | None" = None,
     ) -> DataFrame:
-        """Leaf-local evaluation of a ``leaf_plan`` spec: shuffle ONLY the
-        query terms' still-compressed postings rows to one task per split,
-        evaluate the whole boolean + BM25 inside the kernel, emit per-split
-        top-k. No per-matching-doc exchange — the rows that cross
-        python→JVM are |splits|·k, not |matches| (see the kernel
-        docstring). ``with_hits`` adds a ``split_hits`` column carrying
-        each split's PRE-trim match count on its rows — the reference
-        LeafSearchResponse's num_hits riding alongside the partial hits,
-        so one kernel pass serves both top-k and the total count.
+        """Leaf-local evaluation of a ``leaf_plan`` spec: each kernel task
+        reads ONLY the query terms' still-compressed postings rows of its
+        splits, evaluates the whole boolean + BM25, and emits per-split
+        top-k — one Spark job, no exchange; the rows that cross python→JVM
+        are |splits|·k, not |matches| (see the kernel docstring). The
+        caller merges them (``search``'s driver-side root merge, or a
+        TakeOrderedAndProject on lazy plans). ``with_hits`` adds a
+        ``split_hits`` column carrying each split's PRE-trim match count on
+        its rows — the reference LeafSearchResponse's num_hits riding
+        alongside the partial hits, so one kernel pass serves both top-k
+        and the total count.
         ``fetch_cols`` attaches docstore columns to the per-split top-k
         rows INSIDE the kernel (the split's docstore is already open
         there), so a fetched search needs no second job at all; caller
@@ -2932,7 +3027,7 @@ class Searcher:
         """Every matching (split_id, docid) from ONE kernel pass per split —
         the unscored feeder for aggregations and search-stream exports.
         Replaces the general plan's per-term join tree + per-matching-doc
-        groupBy exchange with a single postings shuffle of the query terms;
+        groupBy exchange with one kernel pass over the query terms' postings;
         fieldnorm reads and BM25 arithmetic are skipped (aggs/export buckets
         never consume scores — the reference collector's scoring opt-out)."""
         return self._leaf_kernel_df(
@@ -2973,11 +3068,11 @@ class Searcher:
         split, the requested docstore columns gathered split-locally — the
         aggregation / search-stream feeder with NO docstore join: the only
         full-data pass is the split-local postings decode + fast-field
-        gather, and the first shuffle downstream is Catalyst's partial-agg
-        merge at |splits|·|buckets| rows (the reference's leaf collector
-        reads fast-field readers inside the leaf, collector.rs:364-399,
-        search_stream/leaf.rs:106-311). Caller must have checked
-        ``leaf_fields_plan(cols)`` is not None."""
+        gather; downstream, Catalyst merges partial aggregates, with no
+        exchange when the kernel runs as one task. The reference's leaf
+        collector reads fast-field readers inside the leaf too
+        (collector.rs:364-399, search_stream/leaf.rs:106-311). Caller must
+        have checked ``leaf_fields_plan(cols)`` is not None."""
         plan = self.leaf_fields_plan(cols)
         if plan is None:
             raise ValueError(f"columns {cols!r} not kernel-attachable")
@@ -3201,54 +3296,43 @@ class Searcher:
         field_types: tuple = (),
         bucket_spec: dict | None = None,
     ) -> DataFrame:
-        """Shared leaf-kernel runner: query-term postings scan, repartition
-        by split so one task owns each split's terms, whole-tree kernel."""
-        uniq = sorted(set(_leaf_spec_tokens(spec)))
-        sset = set(split_ids)
-        n_docs_by_split = {
-            sid: s["num_docs"]
-            for sid, s in self.reader.stats_map().items()
-            if sid in sset
-        }
-        cols = ["split_id", "term", "doc_freq", "blocks"]
-        if _leaf_spec_phrase_tokens(spec):
-            # position payloads ride along ONLY when the tree has a phrase
-            # (pos_blocks stays pruned from pure term/bool scans)
-            cols.append("pos_blocks")
-        post = self.reader.postings().filter(
-            F.col("term").isin(uniq) & F.col("split_id").isin(split_ids)
-        ).select(*cols)
-        if _leaf_spec_matches_without_terms(spec):
-            # pure-negative-reachable trees match docs in splits holding
-            # NONE of the query's tokens: anchor one null-term row per
-            # pruned split so every split reaches a kernel task (the
-            # kernel skips null terms at decode and walks seen splits)
-            anchors = local_rows_df(
-                self.reader.spark,
-                [(sid,) for sid in split_ids],
-                T.StructType([T.StructField("split_id", T.StringType())]),
-            )
-            for f_ in post.schema.fields:
-                if f_.name != "split_id":
-                    anchors = anchors.withColumn(
-                        f_.name, F.lit(None).cast(f_.dataType)
-                    )
-            post = post.unionByName(anchors.select(*cols))
-        return post.repartition("split_id").mapInArrow(
-            _make_leaf_topk_kernel(
-                spec,
-                n_docs_by_split,
-                self.reader.index_dir,
-                self.quantize_norms,
-                self._avgdl_map(split_ids),
-                k,
-                ts_bounds=ts_bounds,
-                sort_spec=sort_spec,
-                order=order,
-                emit=emit,
-                fields=fields,
-                field_types=field_types,
-                bucket_spec=bucket_spec,
+        """Shared leaf-kernel runner: ONE Spark job, no shuffle. The input
+        relation is pure JVM — one ``spark.range`` row per task, the pruned
+        splits grouped into tasks by their manifest size
+        (``_leaf_split_tasks``) — and each task reads its own splits'
+        query-term postings rows with pyarrow (``_make_split_postings_reader``:
+        term-filtered, row-group pruned, ``pos_blocks`` only for phrase
+        specs) straight into the whole-tree kernel. This is the reference
+        leaf opening its splits' term-dictionary and posting byte ranges
+        itself (leaf.rs:141-227, :500-517)."""
+        stats = self.reader.stats_map()
+        # the reader's manifest snapshot bounds the split set, as the
+        # general plan's stats join does: a split published after it is
+        # searched once the reader is refreshed
+        split_ids = [sid for sid in split_ids if sid in stats]
+        n_docs_by_split = {sid: stats[sid]["num_docs"] for sid in split_ids}
+        tasks = _leaf_split_tasks(split_ids, stats)
+        read = _make_split_postings_reader(self.reader.index_dir, tasks, spec)
+        kernel = _make_leaf_topk_kernel(
+            spec,
+            n_docs_by_split,
+            self.reader.index_dir,
+            self.quantize_norms,
+            self._avgdl_map(split_ids),
+            k,
+            ts_bounds=ts_bounds,
+            sort_spec=sort_spec,
+            order=order,
+            emit=emit,
+            fields=fields,
+            field_types=field_types,
+            bucket_spec=bucket_spec,
+        )
+        return self.reader.spark.range(
+            len(tasks), numPartitions=max(1, len(tasks))
+        ).mapInArrow(
+            _versioned(
+                self.reader, split_ids, lambda batches: kernel(read(batches))
             ),
             schema,
         )
@@ -3537,14 +3621,18 @@ class Searcher:
             F.col("term").isin(uniq) & F.col("split_id").isin(split_ids)
         ).select("split_id", "term", "doc_freq", "blocks", "pos_blocks")
         pf_df = post.repartition("split_id").mapInArrow(
-            _make_phrase_kernel(
-                ns_toks,
-                uniq,
-                node.slop,
-                n_docs_by_split,
-                self.reader.index_dir,
-                self.quantize_norms,
-                self.scoring,
+            _versioned(
+                self.reader,
+                split_ids,
+                _make_phrase_kernel(
+                    ns_toks,
+                    uniq,
+                    node.slop,
+                    n_docs_by_split,
+                    self.reader.index_dir,
+                    self.quantize_norms,
+                    self.scoring,
+                ),
             ),
             PHRASE_PF_SCHEMA,
         )
@@ -3633,15 +3721,19 @@ class Searcher:
             cand, ["split_id", "docid"], "left_semi"
         ).select("split_id", "docid", text_col)
         pf_df = cand_docs.mapInPandas(
-            _make_phrase_fb_kernel(
-                toks,
-                node.slop,
-                self.tokenizer,
-                self.reader.index_dir,
-                self.quantize_norms,
-                fld,
-                self.scoring,
-                text_col,
+            _versioned(
+                self.reader,
+                eff_sids,
+                _make_phrase_fb_kernel(
+                    toks,
+                    node.slop,
+                    self.tokenizer,
+                    self.reader.index_dir,
+                    self.quantize_norms,
+                    fld,
+                    self.scoring,
+                    text_col,
+                ),
             ),
             "split_id string, docid long, pf long, dl double",
         )
@@ -3911,9 +4003,12 @@ def search(
     collect-then-fetch, measured faster at every scale) — so the returned
     DataFrame is a snapshot, and the scoring job runs even if the caller
     never consumes it. When the query compiles onto the leaf kernel, the
-    kernel attaches the fetch columns itself; otherwise the collected
-    winners are point-looked-up in the docstore (``_fetch_winners``), a
-    cost independent of the query's match count. Pass ``lazy=True`` to get
+    whole query is ONE Spark job: the kernel's per-split partials are
+    collected and merged driver-side (``_root_merge``), the kernel attaches
+    the fetch columns itself, and the result is a local relation already in
+    rank order; otherwise the collected winners are point-looked-up in the
+    docstore (``_fetch_winners``), a cost independent of the query's match
+    count. Pass ``lazy=True`` to get
     a fully-deferred plan instead: nothing executes until an action, and
     the fetch is a broadcast join with dynamic partition pruning — at the
     cost of planning the scored+top-k subtree twice when it does run.
@@ -3983,30 +4078,32 @@ def search(
         )
         if leaf_sort is None and not needs_scores:
             leaf_spec = None  # a field sort the kernel can't replicate
+    # root merge: a non-lazy leaf search collects the |splits|·k per-split
+    # partials (ONE kernel job, no shuffle) and merges them in Python — the
+    # reference root's re-top-k over its leaves' partial hits
+    # (collector.rs:423-538). Gated off for lazy plans and oversized
+    # |splits|·k products, which keep Spark's TakeOrderedAndProject.
+    root_merge = (
+        leaf_spec is not None
+        and not lazy
+        and len(split_ids) * k_total <= 1_000_000
+    )
     # one-pass num_hits: the reference LeafSearchResponse carries the
     # split's total match count alongside its partial top-k hits
-    # (collector.rs:226); with the leaf kernel, the pre-trim rows are
-    # bounded by |splits|·k, so the root merge can run over a collected
-    # local set and recover num_hits for free. Gated off for lazy plans
-    # and oversized |splits|·k products.
-    count_inline = (
-        with_count
-        and not lazy
-        # k_total == 0 would trim away every per-split row WITH its
-        # split_hits payload — the caller must count explicitly instead
-        and 0 < len(split_ids) * k_total <= 1_000_000
-    )
+    # (collector.rs:226), so the root merge recovers num_hits for free.
+    # k_total == 0 would trim away every per-split row WITH its split_hits
+    # payload — the caller must count explicitly instead.
+    count_inline = with_count and root_merge and k_total > 0
     # in-kernel fetch: the kernel attaches the fetch/snippet columns to its
     # per-split top-k rows (the split's docstore is already open there), so
-    # a fetched search costs ONE job — the root merge runs over the
-    # collected |splits|·k partials exactly like the reference root
+    # a fetched search costs ONE job
     inline_fetch = bool(
-        leaf_spec is not None
+        root_merge
         and fetch_all
-        and not lazy
         and len(split_ids) * k_total <= 200_000
         and searcher.leaf_fields_plan(list(fetch_all))
     )
+    fetch_join = bool(fetch_all) and not inline_fetch
     # "latest N" early-stop: a ts-DESC-sorted request executes over only
     # the newest splits that can still reach the provisional k-th sort
     # value (_ts_desc_prune_splits). count_inline keeps the full set —
@@ -4066,6 +4163,9 @@ def search(
                 reader.spark, splits, split_ids, k_total, _ma_probe
             )
 
+    if request.sort_by_field == searcher.default_field:
+        # sort fields must be fast, non-text (query_builder.rs:255-300)
+        raise ValueError("sort by a text field is not supported")
     num_hits: "int | None" = None
     if leaf_spec:
         m = searcher.scored_topk_leaf(
@@ -4078,63 +4178,62 @@ def search(
             with_hits=count_inline,
             fetch_cols=list(fetch_all) if inline_fetch else None,
         )
-        if count_inline or inline_fetch:
-            # root merge over the collected per-split partials — the same
-            # ordering expressions run below on a local (pure-JVM) relation
-            m_schema = m.schema
-            rows_all = m.collect()
-            if count_inline:
-                per_split: dict = {}
-                for r0 in rows_all:
-                    per_split[r0["split_id"]] = r0["split_hits"]
-                num_hits = int(sum(per_split.values()))
-            if rows_all:
-                m = local_rows_df(reader.spark, rows_all, m_schema)
-            else:
-                m = reader.spark.createDataFrame([], m_schema)
-            if count_inline:
-                m = m.drop("split_hits")
     else:
         m = searcher.matching(
             ast, split_ids, request.start_timestamp, request.end_timestamp
         )
-
-    if request.sort_by_field == searcher.default_field:
-        # sort fields must be fast, non-text (query_builder.rs:255-300)
-        raise ValueError("sort by a text field is not supported")
-    if (
-        request.sort_by_field
-        and request.sort_by_field != "_score"
-        and not leaf_spec
-    ):
-        m = _join_sort_field(reader, searcher, m, request.sort_by_field)
+        if request.sort_by_field and request.sort_by_field != "_score":
+            m = _join_sort_field(reader, searcher, m, request.sort_by_field)
 
     key = F.asc("score") if request.sort_order == "asc" else F.desc("score")
     order = [key, F.asc("split_id"), F.asc("docid")]
-    top = m.orderBy(*order).limit(k_total)
-    if request.start_offset:
-        w = Window.orderBy(*order)
-        top = (
-            top.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") > request.start_offset)
-            .drop("_rn")
-        )
-    if fetch_all and not inline_fetch:
-        if lazy:
+    if root_merge:
+        rows = m.collect()
+        names = m.schema.names
+        if count_inline:
+            # every split with matches emits ≥1 row carrying its count
+            hits_at = names.index("split_hits")
+            num_hits = int(
+                sum({r["split_id"]: r[hits_at] for r in rows}.values())
+            )
+        keep = [i for i, n in enumerate(names) if n != "split_hits"]
+        schema = T.StructType([m.schema.fields[i] for i in keep])
+        rows = [
+            tuple(r[i] for i in keep)
+            for r in _root_merge(
+                rows,
+                request.sort_order == "asc",
+                request.start_offset,
+                k_total,
+            )
+        ]
+        top = local_rows_df(reader.spark, rows, schema)
+        if fetch_join:
+            top = _fetch_winners(reader, rows, schema, fetch_all)
+    else:
+        top = m.orderBy(*order).limit(k_total)
+        if request.start_offset:
+            w = Window.orderBy(*order)
+            top = (
+                top.withColumn("_rn", F.row_number().over(w))
+                .filter(F.col("_rn") > request.start_offset)
+                .drop("_rn")
+            )
+        if fetch_join and lazy:
             # lazy fetch: broadcast the k winners into the docstore scan.
             # Inner join on purpose: every hit exists in the docstore by
-            # construction, and a left-outer would force a SortMergeJoin (the
-            # broadcast-left hint is unsupported for left joins). Dynamic
-            # partition pruning restricts the scan to the winner splits at
-            # runtime, but their fetch columns are read in full — fine while
-            # splits are small, the wrong plan at 10M-doc splits. The
-            # scored+top-k subtree is planned twice (join build side AND the
-            # partition-pruning subquery), so a common-term query pays the
-            # scoring plan twice over (14.0 s vs 2.4 s point-lookup on a
-            # 1M-doc/64-split index).
+            # construction, and a left-outer would force a SortMergeJoin
+            # (the broadcast-left hint is unsupported for left joins).
+            # Dynamic partition pruning restricts the scan to the winner
+            # splits at runtime, but their fetch columns are read in full —
+            # fine while splits are small, the wrong plan at 10M-doc
+            # splits. The scored+top-k subtree is planned twice (join build
+            # side AND the partition-pruning subquery), so a common-term
+            # query pays the scoring plan twice over (14.0 s vs 2.4 s
+            # point-lookup on a 1M-doc/64-split index).
             store = reader.docstore().select("split_id", "docid", *fetch_all)
             top = F.broadcast(top).join(store, ["split_id", "docid"], "inner")
-        else:
+        elif fetch_join:
             top = _fetch_winners(reader, top.collect(), top.schema, fetch_all)
     if snippet_fields:
         # snippet fields must be stored text reachable from the query's
@@ -4148,7 +4247,9 @@ def search(
         snip = make_snippet_udf(terms, tokenizer=searcher.tokenizer)
         for f_ in snippet_fields:
             top = top.withColumn(f"snippet_{f_}", snip(F.col(f_)))
-    out = top.orderBy(*order)
+    # the merged local rows are already in rank order; a fetch join
+    # loses it
+    out = top if root_merge and not fetch_join else top.orderBy(*order)
     return (out, num_hits) if with_count else out
 
 
@@ -4182,8 +4283,9 @@ def _fetch_winners(
             [], T.StructType(list(schema.fields) + _store_fields(reader, fields))
         )
     store = reader.docstore().select("split_id", "docid", *fields)
-    w_splits = sorted({r["split_id"] for r in rows})
-    docids = sorted({int(r["docid"]) for r in rows})
+    si, di = schema.names.index("split_id"), schema.names.index("docid")
+    w_splits = sorted({r[si] for r in rows})
+    docids = sorted({int(r[di]) for r in rows})
     store = store.filter(F.col("split_id").isin(w_splits))
     if len(docids) <= FETCH_ISIN_MAX:
         store = store.filter(F.col("docid").isin(docids))
@@ -4209,6 +4311,25 @@ def _join_sort_field(
     ).drop("_sort")
 
 
+def _root_merge(rows: list, asc: bool, start: int, stop: int) -> list:
+    """Driver-side root merge of collected per-split partial hits:
+    ``rows[start:stop]`` of Spark's ``ORDER BY score <asc|desc>, split_id,
+    docid`` (the PartialHit tie-break, search_api.proto:207-218). Null and
+    NaN scores sit where Spark's orderBy puts them: asc = nulls first, NaN
+    last; desc = NaN first, nulls last (NaN is greater than every value,
+    null less)."""
+
+    def key(r):
+        sc = r["score"]
+        if sc is None:
+            return (0 if asc else 2, 0.0, r["split_id"], r["docid"])
+        if sc != sc:  # NaN
+            return (2 if asc else 0, 0.0, r["split_id"], r["docid"])
+        return (1, sc if asc else -sc, r["split_id"], r["docid"])
+
+    return sorted(rows, key=key)[start:stop]
+
+
 def search_many(
     reader: IndexReader,
     requests: "dict[str, SearchRequest]",
@@ -4219,15 +4340,19 @@ def search_many(
     fields in-kernel; a batch with any general-plan lane adds one shared
     point-lookup fetch job).
 
-    A single search pays a fixed ~2-job floor (scoring top-k collect +
-    point-lookup fetch), and a search head serving concurrent clients pays
-    it per request while serializing on driver-side plan construction.
-    Batching amortizes both: each request's matching plan is unioned under a
-    ``query_id`` lane, per-query top-k is one window pass, and all winners
-    share one point-lookup fetch — 2 jobs TOTAL for the whole batch. This is
-    the Spark-idiomatic analog of the reference root's concurrent fan-out
-    (root.rs drives a search's leaf requests concurrently; across REQUESTS
-    the vectorized answer is one plan, not one plan per request).
+    A single search pays at least one job (scoring, plus a point-lookup
+    fetch on the general plan), and a search head serving concurrent
+    clients pays it per request while serializing on driver-side plan
+    construction. Batching amortizes both: every request's plan is unioned
+    under a ``query_id`` lane and the batch is collected ONCE. Leaf lanes
+    contribute their per-split partials (no shuffle when every lane is a
+    leaf lane); general-plan lanes are trimmed per query by one window
+    pass first. The per-query root merge then runs driver-side
+    (``_root_merge``), and all winners share one point-lookup fetch when
+    the fetch is not in-kernel. This is the Spark-idiomatic analog of the
+    reference root's concurrent fan-out (root.rs drives a search's leaf
+    requests concurrently; across REQUESTS the vectorized answer is one
+    plan, not one plan per request).
 
     Per-request semantics match ``search()`` exactly — same AST, pruning,
     leaf gate, per-query sort field/order, offset, and (score, split_id,
@@ -4279,32 +4404,46 @@ def search_many(
             and lanes[0][3].leaf_fields_plan(list(fetch_fields)) is not None
         )
     parts = []
+    gen_parts = []
     for qid, req, ast, searcher, split_ids, spec, lts, lsort in lanes:
+        cols = [
+            F.lit(qid).alias("query_id"),
+            "split_id",
+            "docid",
+            "score",
+            *(fetch_fields if inline else ()),
+        ]
+        k = req.max_hits + req.start_offset
         if spec is not None:
             # this lane rides the leaf-local top-k kernel: per-split trim
             # at max_hits+offset means the lane contributes |splits|·k
-            # rows to the batch window instead of |matches|
+            # rows, merged driver-side like search()'s root merge
             m = searcher.scored_topk_leaf(
                 spec,
                 split_ids,
-                req.max_hits + req.start_offset,
+                k,
                 ts_bounds=lts,
                 sort_spec=lsort,
                 order=req.sort_order,
                 fetch_cols=list(fetch_fields) if inline else None,
             )
+            if len(split_ids) * k <= 1_000_000:
+                parts.append(m.select(*cols))
+                continue
         else:
             m = searcher.matching(
                 ast, split_ids, req.start_timestamp, req.end_timestamp
             )
             if req.sort_by_field and req.sort_by_field != "_score":
                 m = _join_sort_field(reader, searcher, m, req.sort_by_field)
-        # one ascending window order serves both sort orders: rank by the
-        # sign-flipped score for desc, the raw score for asc. Null/NaN
-        # placement must replicate Spark's orderBy per DIRECTION (asc =
-        # nulls first then values then NaN; desc = NaN first then values
-        # then nulls — the reference's u64 sort encoding does the same),
-        # which a bare sign flip inverts: encode the group explicitly.
+        # a general-plan lane (or an oversized leaf lane) is trimmed to its
+        # top max_hits+offset by a window before the collect. One ascending
+        # window order serves both sort orders: rank by the sign-flipped
+        # score for desc, the raw score for asc. Null/NaN placement must replicate Spark's
+        # orderBy per DIRECTION (asc = nulls first then values then NaN;
+        # desc = NaN first then values then nulls — the reference's u64
+        # sort encoding does the same), which a bare sign flip inverts:
+        # encode the group explicitly.
         asc = req.sort_order == "asc"
         sign = 1.0 if asc else -1.0
         is_null = F.col("score").isNull()
@@ -4317,62 +4456,61 @@ def search_many(
         ordv = F.when(is_null | is_nan, F.lit(0.0)).otherwise(
             F.col("score") * F.lit(sign)
         )
-        parts.append(
+        gen_parts.append(
             m.select(
-                F.lit(qid).alias("query_id"),
-                "split_id",
-                "docid",
-                "score",
+                *cols,
                 grp.alias("_grp"),
                 ordv.alias("_ord"),
-                F.lit(req.max_hits + req.start_offset).alias("_k"),
-                F.lit(req.start_offset).alias("_off"),
-                *(fetch_fields if inline else ()),
+                F.lit(k).alias("_k"),
             )
         )
+    if gen_parts:
+        allg = gen_parts[0]
+        for p in gen_parts[1:]:
+            allg = allg.unionByName(p)
+        w = Window.partitionBy("query_id").orderBy(
+            F.asc("_grp"), F.asc("_ord"), F.asc("split_id"), F.asc("docid")
+        )
+        parts.append(
+            allg.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") <= F.col("_k"))
+            .drop("_grp", "_ord", "_k", "_rn")
+        )
+    rows = []
+    if parts:
+        allm = parts[0]
+        for p in parts[1:]:
+            allm = allm.unionByName(p)
+        # the batch's ONE scoring job (no shuffle when every lane is a
+        # leaf lane); ≤ Σ |splits|·k rows
+        by_qid: dict = {}
+        for r in allm.collect():
+            by_qid.setdefault(r["query_id"], []).append(r)
+        for qid in sorted(by_qid):
+            req = requests[qid]
+            merged = _root_merge(
+                by_qid[qid],
+                req.sort_order == "asc",
+                req.start_offset,
+                req.max_hits + req.start_offset,
+            )
+            rows.extend((*r, rn) for rn, r in enumerate(merged, start=1))
     win_schema = T.StructType(
         [
             T.StructField("query_id", T.StringType()),
             T.StructField("split_id", T.StringType()),
             T.StructField("docid", T.LongType()),
             T.StructField("score", T.DoubleType()),
-            T.StructField("_rn", T.IntegerType()),
         ]
     )
-    if inline:
-        win_schema = T.StructType(
-            list(win_schema.fields[:4])
-            + _store_fields(reader, fetch_fields)
-            + [win_schema.fields[4]]
-        )
-    if parts:
-        allm = parts[0]
-        for p in parts[1:]:
-            allm = allm.unionByName(p)
-        w = Window.partitionBy("query_id").orderBy(
-            F.asc("_grp"), F.asc("_ord"), F.asc("split_id"), F.asc("docid")
-        )
-        rows = (
-            allm.withColumn("_rn", F.row_number().over(w))
-            .filter(
-                (F.col("_rn") <= F.col("_k")) & (F.col("_rn") > F.col("_off"))
-            )
-            .select(
-                "query_id",
-                "split_id",
-                "docid",
-                "score",
-                *(fetch_fields if inline else ()),
-                (F.col("_rn") - F.col("_off")).cast("int").alias("_rn"),
-            )
-            .collect()  # the batch's ONE scoring job; ≤ Σ max_hits rows
-        )
-    else:
-        rows = []
     if inline or not fetch_fields:
-        out = local_rows_df(reader.spark, rows, win_schema)
-        return out.orderBy("query_id", "_rn").drop("_rn")
+        if inline:
+            win_schema = T.StructType(
+                list(win_schema.fields) + _store_fields(reader, fetch_fields)
+            )
+        return local_rows_df(reader.spark, [r[:-1] for r in rows], win_schema)
     # one point-lookup fetch for every request's winners
+    win_schema = win_schema.add(T.StructField("_rn", T.IntegerType()))
     out = _fetch_winners(reader, rows, win_schema, fetch_fields)
     # column order must not depend on plan routing: match the inline-fetch
     # and empty-result paths (query_id leads, join keys follow)
@@ -5080,27 +5218,6 @@ def count_hits(
             )
         spec, ts, _ = _leaf_gate(reader, searcher, ast, split_ids, request)
         if spec is not None:
-            if ts is None and spec.get("op") == "term":
-                # single-term count = Σ per-split doc_freq: a columnar
-                # aggregate over the postings' doc_freq column — no block
-                # decode, no python kernel, parquet reads only the filter
-                # columns + one int (tantivy answers TermQuery counts from
-                # the term dictionary's doc_freq without touching postings
-                # bytes). Sound because doc_freq is per-(split, term) exact
-                # and delete rewrites recompute it.
-                return (
-                    reader.postings()
-                    .filter(
-                        (F.col("term") == spec["tok"])
-                        & F.col("split_id").isin(split_ids)
-                    )
-                    .agg(
-                        F.coalesce(
-                            F.sum("doc_freq").cast("long"),
-                            F.lit(0).cast("long"),
-                        ).alias("num_hits")
-                    )
-                )
             return searcher.leaf_count(spec, split_ids, ts).agg(
                 F.coalesce(F.sum("n"), F.lit(0).cast("long")).alias(
                     "num_hits"

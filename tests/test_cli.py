@@ -400,3 +400,37 @@ def test_cli_ingest_ndjson_and_csv(spark, tmp_path, run):
     hit_j = run("search", "--index-dir", idx_j, "--query", "alpha", "--max-hits", "50")
     hit_c = run("search", "--index-dir", idx_c, "--query", "alpha", "--max-hits", "50")
     assert len(hit_j) == len(hit_c) == 40
+
+
+def test_cli_ingest_warns_on_non_iso_timestamps(spark, tmp_path, capsys):
+    """String timestamps the ISO coercion cannot parse are indexed as null
+    and counted on stderr; parseable values keep their time metadata."""
+    idx = str(tmp_path / "idx_ts")
+    nd = str(tmp_path / "docs.ndjson")
+    stamps = ["2023-01-01T00:01:00", "1700000000", None, "yesterday",
+              "2023-01-02T00:00:00"]
+    with open(nd, "w") as f:
+        for i, ts in enumerate(stamps):
+            f.write(json.dumps({"url": f"https://x.example/{i}",
+                                "text": f"alpha w{i}", "lang": "en",
+                                "warc_ts": ts}) + "\n")
+    assert cli.main(["ingest", "--index-dir", idx, "--input", nd]) == 0
+    out, err = capsys.readouterr()
+    assert json.loads(out.splitlines()[0])["num_docs"] == 5
+    assert "warning: 2 non-null 'warc_ts' value(s)" in err
+    from quickwit_spark.index.manifest import Manifest
+
+    splits = Manifest(idx).list_published()
+    starts = [s.time_range_start for s in splits if s.time_range_start]
+    ends = [s.time_range_end for s in splits if s.time_range_end]
+    assert min(starts).startswith("2023-01-01")
+    assert max(ends).startswith("2023-01-02")
+
+    # all-ISO input: no warning
+    nd2 = str(tmp_path / "ok.ndjson")
+    with open(nd2, "w") as f:
+        f.write(json.dumps({"url": "u", "text": "beta", "lang": "en",
+                            "warc_ts": "2023-01-03T00:00:00"}) + "\n")
+    idx2 = str(tmp_path / "idx_ok")
+    assert cli.main(["ingest", "--index-dir", idx2, "--input", nd2]) == 0
+    assert "warning" not in capsys.readouterr().err

@@ -11,7 +11,12 @@ import pyspark.sql.functions as F
 import pytest
 
 from quickwit_spark.operators.build import IndexConfig, build_index
-from quickwit_spark.operators.search import IndexReader, SearchRequest, search
+from quickwit_spark.operators.search import (
+    IndexReader,
+    SearchRequest,
+    count_hits,
+    search,
+)
 from quickwit_spark.sources.pages import synth_pages
 
 
@@ -99,16 +104,17 @@ def test_sorted_leaf_plan_has_no_join(nullable_sort_index):
             start_timestamp="2013-01-01T00:00:00",
         ),
         fetch_fields=(),
+        lazy=True,
     )
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
     p = buf.getvalue()
     # the whole query — boolean eval, ts window, field sort — is ONE
-    # kernel pass per split: no docstore join, no second shuffle
+    # kernel pass per split: no docstore join, no shuffle at all
     assert "MapInArrow" in p
     assert "Join" not in p
-    assert p.count("Exchange") <= 2
+    assert "Exchange" not in p
 
 
 @pytest.mark.parametrize("order", ["asc", "desc"])
@@ -131,3 +137,61 @@ def test_search_many_null_sort_matches_search(nullable_sort_index, order):
     assert single == many
     if order == "desc":
         assert all(s is not None for _, _, s in many)  # nulls ranked last
+
+
+@pytest.mark.parametrize("order", ["asc", "desc"])
+def test_root_merge_nullable_sort_paged_fetched(nullable_sort_index, order):
+    """A leaf search with nullable sort values, an offset, fetch fields and
+    an inline count goes through the driver-side root merge (the result is
+    a local relation) and equals the general plan row for row."""
+    import io
+    from contextlib import redirect_stdout
+
+    req = SearchRequest(
+        query="w1 OR w4",
+        max_hits=30,
+        start_offset=25,
+        sort_by_field="rank",
+        sort_order=order,
+    )
+    leaf, n = search(
+        nullable_sort_index, req, fetch_fields=("url",), with_count=True
+    )
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        leaf.explain()
+    assert "LocalTableScan" in buf.getvalue()
+    general = search(
+        nullable_sort_index, req, fetch_fields=("url",), leaf_topk=False
+    )
+    got = [tuple(r) for r in leaf.collect()]
+    assert got == [tuple(r) for r in general.collect()]
+    assert any(r[2] is None for r in got) or order == "desc"
+    assert n == count_hits(
+        nullable_sort_index, SearchRequest(query="w1 OR w4")
+    ).collect()[0][0]
+
+
+@pytest.mark.parametrize("order", ["asc", "desc"])
+@pytest.mark.parametrize("start,stop", [(0, 40), (3, 11), (0, 0)])
+def test_root_merge_order_equals_spark_order_by(spark, order, start, stop):
+    """_root_merge sorts exactly like Spark's ORDER BY score, split_id,
+    docid — nulls first / NaN last ascending, NaN first / nulls last
+    descending — including ties, infinities and duplicate scores."""
+    from quickwit_spark.operators.search import _root_merge
+
+    vals = [None, float("nan"), 1.5, -2.0, float("inf"), float("-inf"), 0.0]
+    rows = [
+        (f"s{i % 3}", i % 5, vals[i % len(vals)]) for i in range(40)
+    ]
+    df = spark.createDataFrame(rows, "split_id string, docid long, score double")
+    key = F.asc("score") if order == "asc" else F.desc("score")
+    want = [
+        tuple(r)
+        for r in df.orderBy(key, F.asc("split_id"), F.asc("docid")).collect()
+    ][start:stop]
+    got = [
+        tuple(r)
+        for r in _root_merge(df.collect(), order == "asc", start, stop)
+    ]
+    assert repr(got) == repr(want)

@@ -374,16 +374,21 @@ def test_real_media_pipeline(spark):
 
 
 def test_metadata_warm_mode(spark, small_index):
-    """warm(mode="metadata") caches the term dictionary only (no blocks)
+    """warm(mode="metadata") pins no relation (leaf queries read their
+    splits' postings inside the kernel task), only the manifest stats
+    snapshot; the term dictionary stays available as a pruned projection,
     and searches still work — the 10^12-doc cache profile."""
     from pyspark import StorageLevel
     from quickwit_spark.operators.search import SearchRequest, search
 
     small_index.refresh()
     small_index.warm(mode="metadata")
+    assert small_index._warmed == []
+    assert small_index._stats_map is not None
     td = small_index.term_dict()
     assert set(td.columns) == {"split_id", "term", "doc_freq", "sum_tf"}
-    assert td.storageLevel != StorageLevel.NONE, "term dict is cached"
+    assert td.storageLevel == StorageLevel.NONE
+    assert td.filter("term = 'w0'").count() > 0
     # postings themselves are NOT pinned in this mode
     assert small_index.postings().storageLevel == StorageLevel.NONE
     # queries still run (postings stream from storage)

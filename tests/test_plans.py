@@ -17,22 +17,20 @@ def _plan(df) -> str:
 
 
 def test_term_query_plan_shape(small_index):
-    # fetch_fields=() so the returned plan IS the scoring plan (with fetch
-    # fields the winners are materialized and only the fetch join returns)
-    p = _plan(
-        search(small_index, SearchRequest(query="w0 w3", max_hits=10), fetch_fields=())
-    )
-    # term filter reaches the parquet scan (row-group pruning)
-    assert "PushedFilters" in p and "term" in p.split("PushedFilters", 1)[1][:400]
-    # positions never read on the term path
-    assert "pos_blocks" not in p
-    # leaf-local top-k: ONE exchange (split co-location), the per-split
-    # Arrow kernel, and the partial-top-k root merge — no broadcast stats
-    # join and no per-matching-doc groupBy exchange (stats ride in the
-    # kernel closure; see _make_leaf_topk_kernel)
-    assert "MapInArrow" in p
-    assert "TakeOrderedAndProject" in p
-    assert p.count("Exchange") <= 2  # split repartition (+AQE read), no 2nd shuffle
+    # the eager default ran the one kernel job and merged the per-split
+    # partials driver-side: the result is a local relation with no sort
+    req = SearchRequest(query="w0 w3", max_hits=10)
+    p = _plan(search(small_index, req, fetch_fields=()))
+    assert "LocalTableScan" in p
+    assert "MapInArrow" not in p and "Sort" not in p and "postings" not in p
+    # the lazy plan shows the leaf kernel itself: a pure-JVM task relation
+    # (Range) feeding the per-split Arrow kernel, which reads its splits'
+    # postings — no postings scan, no split repartition exchange, no stats
+    # join (stats ride in the kernel closure; see _make_leaf_topk_kernel)
+    p = _plan(search(small_index, req, fetch_fields=(), lazy=True))
+    assert "Range" in p and "MapInArrow" in p
+    assert "Exchange" not in p and "Join" not in p
+    assert "postings" not in p and "docstore" not in p
 
 
 def test_fetch_plan_is_point_lookup(small_index):
@@ -67,15 +65,18 @@ def test_fetch_auto_is_in_kernel(small_index):
     assert "postings" not in p
     assert "docstore" not in p and "Join" not in p
     p = _plan(search(small_index, req, fetch_fields=("url",), lazy=True))
-    assert "postings" in p  # lazy keeps the scoring subtree under the join
+    # lazy keeps the scoring subtree (the leaf kernel) under the fetch join
+    assert "MapInArrow" in p and "Join" in p and "docstore" in p
 
 
 def test_phrase_query_plan_shape(small_index):
-    p = _plan(
-        search(small_index, SearchRequest(query='"w0 w1"', max_hits=10), fetch_fields=())
-    )
-    assert "pos_blocks" in p          # positions ARE read here
-    assert "text" not in p            # ... but the docstore text never is
+    # positions are read inside the kernel (see
+    # test_leaf_jobs.test_split_reader_reads_positions_only_for_phrases);
+    # the plan itself never touches the docstore text
+    req = SearchRequest(query='"w0 w1"', max_hits=10)
+    p = _plan(search(small_index, req, fetch_fields=(), lazy=True))
+    assert "MapInArrow" in p and "Exchange" not in p
+    assert "text" not in p and "docstore" not in p
 
 
 def test_count_plan_skips_scoring(small_index):

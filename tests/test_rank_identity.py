@@ -116,11 +116,13 @@ def test_warm_coalesces_to_byte_sized_partitions(spark, small_index):
     # over-partitioning dominates small-corpus latency), and the results
     # must be identical to an unwarmed reader on the same index.
     cold = IndexReader(spark, small_index.index_dir)
-    orig_parts = cold.postings().rdd.getNumPartitions()
+    orig_parts = cold.docstore().rdd.getNumPartitions()
     warmed = IndexReader(spark, small_index.index_dir)
     warmed.warm()
-    got = warmed.postings().rdd.getNumPartitions()
+    got = warmed.docstore().rdd.getNumPartitions()
     assert got == min(orig_parts, 4)  # bytes << 32 MB target -> floor of 4
+    # only the docstore is cached; leaf queries read postings in-kernel
+    assert len(warmed._warmed) == 1
     for q in ("needleone", '"w0 w1"', "w11 OR w13"):
         a = [tuple(r) for r in search(
             cold, SearchRequest(query=q, max_hits=10), fetch_fields=("url",)
