@@ -667,7 +667,8 @@ class IndexReader:
         never re-read the manifest): the 10^12-doc setting, where postings
         and docstore stay on storage behind the parquet reader and the OS
         page cache. ``mode="full"`` also caches the docstore relation, read
-        by match-all requests, the general plan and its point-lookup fetch
+        by match-all counts, aggregations and exports, the general plan and
+        its point-lookup fetch
         — right for an index that fits cluster memory. Postings are never
         cached: leaf queries read their splits' term rows with pyarrow
         inside the kernel task, so a cached postings relation would serve
@@ -1160,9 +1161,9 @@ def _make_leaf_topk_kernel(
     corpus.
 
     ``spec``: a tree of ``{"op": "term"|"termset"|"phrase"|"range"|
-    "boost"|"bool"|"empty"}`` nodes compiled by ``Searcher.leaf_plan``
-    (match-all stays on its direct docstore path; pure-negative subtrees
-    subtract from the split docid universe; range nodes compare fast
+    "boost"|"bool"|"all"|"empty"}`` nodes compiled by ``Searcher.leaf_plan``
+    (match-all is the split docid universe at score 0, and pure-negative
+    subtrees subtract from that same universe; range nodes compare fast
     fields in their compile-lowered domain; phrase nodes require every
     pruned split to store positions). Phrase
     nodes run the same vectorized global-coordinate matcher as the
@@ -1449,6 +1450,11 @@ def _make_leaf_topk_kernel(
                 op = n["op"]
                 if op == "empty":
                     return _empty
+                if op == "all":
+                    # match-all: the general plan's _zero(docs), read
+                    # split-locally from the docstore docid column
+                    univ = _universe_for(index_dir, _sid)
+                    return univ, np.zeros(len(univ), dtype=np.float64)
                 if op == "term":
                     hit = _scored(n["tok"])
                     return _empty if hit is None else hit
@@ -2874,10 +2880,10 @@ class Searcher:
     # ---- leaf-local top-k (boolean trees of text terms) ------------------
     def leaf_plan(self, node: Node, allow_phrase: bool = False) -> dict | None:
         """Compile a boolean tree of text terms / term-sets / phrases /
-        fast-field ranges (with boosts, arbitrary nesting, multi-token
-        terms, pure-negative subtrees) into the leaf-local top-k spec
-        tree, or None when the query needs the general plan (match-all,
-        non-text term fields, ranges whose comparison domain can't be
+        fast-field ranges / match-all (with boosts, arbitrary nesting,
+        multi-token terms, pure-negative subtrees) into the leaf-local
+        top-k spec tree, or None when the query needs the general plan
+        (non-text term fields, ranges whose comparison domain can't be
         replicated exactly, and phrases unless ``allow_phrase`` — i.e.
         unless every pruned split stores positions)."""
 
@@ -2946,7 +2952,10 @@ class Searcher:
                 }
             if isinstance(n, Range):
                 return self._leaf_range_spec(n)
-            raise _LeafBail  # Phrase / MatchAll: general plan
+            if isinstance(n, MatchAll):
+                # tantivy's AllQuery: the split's docid universe, score 0
+                return {"op": "all"}
+            raise _LeafBail
 
         try:
             return comp(node)
@@ -3925,11 +3934,14 @@ class Searcher:
         return base
 
 
-def make_snippet_udf(terms: list[str], window: int = 80, tokenizer: str = "default"):
+def make_snippet_fn(
+    terms: list[str], window: int = 80, tokenizer: str = "default"
+):
     """Fetch-phase highlighter: first window around a query-term hit, all
     term occurrences wrapped in <b></b> (reference SnippetGenerator,
-    fetch_docs.rs:286-330). Runs over only the k fetched rows — per-row
-    Python is fine here, this is not a hot path."""
+    fetch_docs.rs:286-330). A plain per-value function: the root-merged
+    search applies it to its k local rows on the driver; lazy and
+    fetch-join plans wrap it in ``make_snippet_udf``."""
     import re
 
     body = "|".join(sorted(map(re.escape, terms), key=len, reverse=True))
@@ -3945,19 +3957,29 @@ def make_snippet_udf(terms: list[str], window: int = 80, tokenizer: str = "defau
             rf"(?<![^\W_])({body})(?![^\W_])", re.IGNORECASE | re.UNICODE
         )
 
+    def one(t: str | None) -> str | None:
+        if t is None:
+            return None
+        m = pat.search(t)
+        if not m:
+            return ""
+        start = max(0, m.start() - window // 2)
+        end = min(len(t), m.end() + window)
+        frag = t[start:end]
+        return pat.sub(lambda mo: f"<b>{mo.group(0)}</b>", frag)
+
+    return one
+
+
+def make_snippet_udf(terms: list[str], window: int = 80, tokenizer: str = "default"):
+    """``make_snippet_fn`` as a pandas UDF, for snippet columns over a
+    Spark plan (the lazy and fetch-join search paths). Runs over only the
+    k fetched rows — per-row Python is fine here, this is not a hot
+    path."""
+    one = make_snippet_fn(terms, window, tokenizer)
+
     @F.pandas_udf("string")
     def snip(texts: pd.Series) -> pd.Series:
-        def one(t: str | None) -> str | None:
-            if t is None:
-                return None
-            m = pat.search(t)
-            if not m:
-                return ""
-            start = max(0, m.start() - window // 2)
-            end = min(len(t), m.end() + window)
-            frag = t[start:end]
-            return pat.sub(lambda mo: f"<b>{mo.group(0)}</b>", frag)
-
         return texts.map(one)
 
     return snip
@@ -4025,7 +4047,10 @@ def search(
     offset dropped at the 'root' like root.rs:487-502. Queries that compile
     (``_leaf_gate``) are evaluated whole per split by the leaf kernel, which
     prunes scored disjunctions with in-kernel MaxScore (rank-identical:
-    the pruning is sound); everything else uses the general relational plan.
+    the pruning is sound); match-all (``*``) compiles too, as the split's
+    docid universe at score 0 (tantivy's AllQuery under the same top-k
+    collector). Everything else — a mixed-generation index, non-text term
+    fields, phrases without positions — uses the general relational plan.
     ``leaf_topk=False`` forces the general plan (tests use it as the
     reference).
 
@@ -4109,59 +4134,28 @@ def search(
     # value (_ts_desc_prune_splits). count_inline keeps the full set —
     # exact num_hits needs every split's match count.
     if (
-        leaf_topk is not False
+        leaf_spec is not None
+        and leaf_sort is not None
+        and leaf_sort[0] == "ts"
         and request.sort_order == "desc"
         and k_total > 0
         and len(split_ids) >= 8
+        and not count_inline
     ):
-        if (
-            leaf_spec is not None
-            and leaf_sort is not None
-            and leaf_sort[0] == "ts"
-            and not count_inline
-        ):
-            split_ids = _ts_desc_prune_splits(
-                reader.spark,
-                splits,
-                split_ids,
+        split_ids = _ts_desc_prune_splits(
+            reader.spark,
+            splits,
+            split_ids,
+            k_total,
+            lambda ids: searcher.scored_topk_leaf(
+                leaf_spec,
+                ids,
                 k_total,
-                lambda ids: searcher.scored_topk_leaf(
-                    leaf_spec,
-                    ids,
-                    k_total,
-                    ts_bounds=leaf_ts,
-                    sort_spec=leaf_sort,
-                    order="desc",
-                ).collect(),
-            )
-        elif (
-            leaf_spec is None
-            and isinstance(ast, MatchAll)
-            and request.sort_by_field not in (None, "_score")
-            and searcher.fast_fields.get(
-                request.sort_by_field, request.sort_by_field
-            )
-            == "ts"
-        ):
-
-            def _ma_probe(ids: list[str]) -> list:
-                return (
-                    _matchall_docs(reader, ids, request)
-                    .select(
-                        "split_id",
-                        "docid",
-                        F.col("ts").cast("double").alias("score"),
-                    )
-                    .orderBy(
-                        F.desc("score"), F.asc("split_id"), F.asc("docid")
-                    )
-                    .limit(k_total)
-                    .collect()
-                )
-
-            split_ids = _ts_desc_prune_splits(
-                reader.spark, splits, split_ids, k_total, _ma_probe
-            )
+                ts_bounds=leaf_ts,
+                sort_spec=leaf_sort,
+                order="desc",
+            ).collect(),
+        )
 
     if request.sort_by_field == searcher.default_field:
         # sort fields must be fast, non-text (query_builder.rs:255-300)
@@ -4187,6 +4181,13 @@ def search(
 
     key = F.asc("score") if request.sort_order == "asc" else F.desc("score")
     order = [key, F.asc("split_id"), F.asc("docid")]
+    # snippet terms (validated non-empty above, query_builder.rs:212-253);
+    # namespaced storage terms highlight by their bare token
+    snip_terms = sorted(
+        {t.split(FIELD_SEP)[-1] for t in searcher._collect_text_terms(ast)}
+        if snippet_fields
+        else ()
+    )
     if root_merge:
         rows = m.collect()
         names = m.schema.names
@@ -4207,9 +4208,22 @@ def search(
                 k_total,
             )
         ]
-        top = local_rows_df(reader.spark, rows, schema)
         if fetch_join:
             top = _fetch_winners(reader, rows, schema, fetch_all)
+        else:
+            if snip_terms:
+                # highlight the ≤k merged rows on the driver: no UDF job
+                snip = make_snippet_fn(snip_terms, tokenizer=searcher.tokenizer)
+                at = [schema.names.index(f_) for f_ in snippet_fields]
+                rows = [(*r, *(snip(r[i]) for i in at)) for r in rows]
+                schema = T.StructType(
+                    list(schema.fields)
+                    + [
+                        T.StructField(f"snippet_{f_}", T.StringType())
+                        for f_ in snippet_fields
+                    ]
+                )
+            top = local_rows_df(reader.spark, rows, schema)
     else:
         top = m.orderBy(*order).limit(k_total)
         if request.start_offset:
@@ -4235,21 +4249,14 @@ def search(
             top = F.broadcast(top).join(store, ["split_id", "docid"], "inner")
         elif fetch_join:
             top = _fetch_winners(reader, top.collect(), top.schema, fetch_all)
-    if snippet_fields:
-        # snippet fields must be stored text reachable from the query's
-        # terms (query_builder.rs:212-253 validation); namespaced storage
-        # terms highlight by their bare token
-        terms = sorted(
-            {t.split(FIELD_SEP)[-1] for t in searcher._collect_text_terms(ast)}
-        )
-        if not terms:
-            raise ValueError("snippet fields require text terms in the query")
-        snip = make_snippet_udf(terms, tokenizer=searcher.tokenizer)
+    # the merged local rows are already in rank order (snippets included);
+    # a fetch join loses it
+    local = root_merge and not fetch_join
+    if snip_terms and not local:
+        snip = make_snippet_udf(snip_terms, tokenizer=searcher.tokenizer)
         for f_ in snippet_fields:
             top = top.withColumn(f"snippet_{f_}", snip(F.col(f_)))
-    # the merged local rows are already in rank order; a fetch join
-    # loses it
-    out = top if root_merge and not fetch_join else top.orderBy(*order)
+    out = top if local else top.orderBy(*order)
     return (out, num_hits) if with_count else out
 
 

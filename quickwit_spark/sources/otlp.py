@@ -418,26 +418,38 @@ def parse_otlp_logs(
     """Flatten OTLP/JSON log export bodies into log docs with the
     reference's otel-logs-v0 column names (logs.rs field_mappings +
     parse loop)."""
+    return _log_records(payloads, json_col).drop("_rec_ord")
+
+
+def _log_records(payloads: DataFrame, json_col: str) -> DataFrame:
+    """``parse_otlp_logs`` plus ``_rec_ord``: the record's ordinal path in
+    its payload (resourceLogs.scopeLogs.logRecords positions), which tells
+    apart identical records of one payload."""
     req = F.from_json(F.col(json_col), OTLP_LOGS_SCHEMA)
-    rl = payloads.select(F.explode(req["resourceLogs"]).alias("_rl"))
+    rl = payloads.select(
+        F.posexplode(req["resourceLogs"]).alias("_rl_pos", "_rl")
+    )
     svc = F.element_at(
         _attr_map(F.col("_rl.resource.attributes")), "service.name"
     )
     sl = rl.select(
+        "_rl_pos",
         F.coalesce(svc, F.lit("unknown")).alias("service_name"),
         _attr_map(F.col("_rl.resource.attributes")).alias(
             "resource_attributes"
         ),
-        F.explode(F.col("_rl.scopeLogs")).alias("_sl"),
+        F.posexplode(F.col("_rl.scopeLogs")).alias("_sl_pos", "_sl"),
     )
     lr = sl.select(
+        "_rl_pos",
+        "_sl_pos",
         "service_name",
         "resource_attributes",
         F.coalesce(F.col("_sl.scope.name"), F.lit("")).alias("scope_name"),
         F.coalesce(F.col("_sl.scope.version"), F.lit("")).alias(
             "scope_version"
         ),
-        F.explode(F.col("_sl.logRecords")).alias("_lr"),
+        F.posexplode(F.col("_sl.logRecords")).alias("_lr_pos", "_lr"),
     )
     # timeUnixNano is optional in practice (the Collector's filelog
     # receiver often sets only observedTimeUnixNano); an epoch-0 timestamp
@@ -495,6 +507,7 @@ def parse_otlp_logs(
         F.coalesce(F.col("_lr.traceId"), F.lit("")).alias("trace_id"),
         F.coalesce(F.col("_lr.spanId"), F.lit("")).alias("span_id"),
         F.coalesce(F.col("_lr.flags"), F.lit(0)).alias("trace_flags"),
+        F.concat_ws(".", "_rl_pos", "_sl_pos", "_lr_pos").alias("_rec_ord"),
     )
 
 
@@ -502,8 +515,9 @@ def otel_logs_index_config(num_partitions: int = 8):
     """otel-logs-v0 analog: body is the searchable text field,
     service_name the tag + routing, timestamp_secs the pruning field;
     severity/trace linkage stored as fast fields. The doc key is a
-    deterministic per-record identity (service, nanos, body hash) since
-    OTLP log records carry no id of their own."""
+    deterministic per-record identity (service, nanos, body hash, span,
+    ordinal in the payload) since OTLP log records carry no id of their
+    own."""
     from quickwit_spark.operators.build import IndexConfig
 
     return IndexConfig(
@@ -536,7 +550,7 @@ def ingest_otlp_logs(
     from quickwit_spark.operators.build import build_index
 
     logs = (
-        parse_otlp_logs(payloads, json_col)
+        _log_records(payloads, json_col)
         .withColumn(
             "_log_key",
             F.concat_ws(
@@ -545,8 +559,12 @@ def ingest_otlp_logs(
                 F.col("timestamp_nanos").cast("string"),
                 F.sha2(F.col("body"), 256),
                 F.col("span_id"),
+                # identical records (same nanosecond, body and span) stay
+                # distinct docs; a replayed payload keeps its keys
+                "_rec_ord",
             ),
         )
+        .drop("_rec_ord")
         .withColumn(
             "_svc_part",
             F.pmod(F.xxhash64("service_name"), F.lit(num_partitions)).cast(

@@ -86,6 +86,19 @@ def test_snippets(spark, small_index):
         )
 
 
+def test_snippets_driver_side_equal_udf(small_index):
+    """The root-merged search highlights its rows on the driver; the lazy
+    plan runs the snippet UDF. Both give the same rows."""
+    req = SearchRequest(query="needleone OR w3", max_hits=8, start_offset=2)
+    kw = dict(fetch_fields=("url",), snippet_fields=("text",))
+    eager = search(small_index, req, **kw)
+    lazy = search(small_index, req, lazy=True, **kw)
+    assert eager.columns == lazy.columns
+    rows = [tuple(r) for r in eager.collect()]
+    assert rows == [tuple(r) for r in lazy.collect()]
+    assert any("<b>" in r["snippet_text"] for r in eager.collect())
+
+
 def test_retention(spark, pages_small, tmp_path):
     d = str(tmp_path / "ret")
     build_index(spark, pages_small, d, IndexConfig(index_id="pages", num_splits=3))

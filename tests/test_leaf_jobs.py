@@ -59,6 +59,20 @@ SHAPES = {
     "search_phrase": lambda r: search(
         r, SearchRequest(query='"w0 w1"', max_hits=10)
     ).collect(),
+    "search_matchall_sorted": lambda r: search(
+        r,
+        SearchRequest(query="*", max_hits=10, sort_by_field="warc_ts"),
+        fetch_fields=("url",),
+    ).collect(),
+    "search_matchall_scored": lambda r: search(
+        r, SearchRequest(query="*", max_hits=10), fetch_fields=()
+    ).collect(),
+    "search_snippets": lambda r: search(
+        r,
+        SearchRequest(query="w3 w7", max_hits=10),
+        fetch_fields=("url",),
+        snippet_fields=("text",),
+    ).collect(),
     "count_hits": lambda r: count_hits(
         r, SearchRequest(query="w0 w1")
     ).collect(),

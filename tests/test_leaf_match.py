@@ -76,8 +76,8 @@ def test_count_ts_window_matches_general(small_index):
 
 
 def test_count_match_all_bails_to_general(small_index):
-    # '*' can't leaf-compile; default path takes the direct pruned-scan
-    # count (_matchall_docs), the forced-general path the matching plan
+    # '*' count: the default path sums the manifest's num_docs, the
+    # forced-general path runs the matching plan
     leaf, gen = _count(small_index, "*")
     assert leaf == gen == 600
 
@@ -608,10 +608,17 @@ def test_search_with_count_none_on_non_leaf(small_index):
     from quickwit_spark.operators.search import search
 
     df, n = search(
-        small_index, SearchRequest(query="*", max_hits=5),
+        small_index, SearchRequest(query="lang:en", max_hits=5),
         with_count=True,
     )
-    assert n is None  # match-all: general plan, caller counts separately
+    assert n is None  # non-text term: general plan, caller counts separately
+    assert df.count() == 5
+    # match-all rides the leaf kernel: num_hits comes inline
+    _, n_all = search(
+        small_index, SearchRequest(query="*", max_hits=5), with_count=True
+    )
+    want = count_hits(small_index, SearchRequest(query="*")).collect()[0][0]
+    assert n_all == want == 600
     df2, n2 = search(
         small_index, SearchRequest(query="zzznothing", max_hits=5),
         with_count=True,
@@ -763,7 +770,9 @@ def test_agg_range_string_bounds(small_index, fields_spy):
 
 def test_search_many_column_order_stable(small_index):
     """Column order must not depend on plan routing: all-leaf batches
-    (inline fetch) and mixed batches (join fetch) return the same shape."""
+    (inline fetch) and mixed batches (join fetch) return the same shape.
+    The ``lang:en`` lane (a term on a non-text field) needs the general
+    plan, so the mixed batch fetches through the join."""
     from quickwit_spark.operators.search import search_many
 
     all_leaf = search_many(
@@ -773,9 +782,11 @@ def test_search_many_column_order_stable(small_index):
     mixed = search_many(
         small_index,
         {"a": SearchRequest(query="w1", max_hits=3),
-         "m": SearchRequest(query="*", max_hits=3)},
+         "m": SearchRequest(query="lang:en", max_hits=3)},
         fetch_fields=("url", "tag"),
     )
+    plan = mixed._jdf.queryExecution().executedPlan().toString()
+    assert "Join" in plan  # the general-plan lane's point-lookup fetch
     assert all_leaf.columns == mixed.columns == [
         "query_id", "split_id", "docid", "score", "url", "tag"
     ]

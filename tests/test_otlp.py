@@ -302,6 +302,34 @@ def test_logs_ingest_and_severity_search(spark, tmp_path):
     assert all(r["severity_text"] == "ERROR" for r in hits)
 
 
+def test_identical_log_records_stay_distinct_docs(spark, tmp_path):
+    """Two identical records (same service, nanosecond and body, no span)
+    in one payload are two docs with distinct keys; replaying the payload
+    adds nothing."""
+    from quickwit_spark.operators.search import count_hits
+    from quickwit_spark.sources.otlp import ingest_otlp_logs
+
+    t0 = 1_700_000_000
+    payloads = spark.createDataFrame(
+        [(_log_payload("frontend", [_log(t0, "disk full")] * 2),)],
+        "payload string",
+    )
+    d = str(tmp_path / "otel-logs-dup")
+    assert ingest_otlp_logs(spark, payloads, d, num_partitions=2).num_docs == 2
+    req = SearchRequest(query="*", max_hits=10)
+
+    def keys():
+        hits = search(IndexReader(spark, d), req, fetch_fields=("url",))
+        return sorted(r["url"] for r in hits.collect())
+
+    first = keys()
+    assert len(first) == 2 and len(set(first)) == 2
+    ingest_otlp_logs(spark, payloads, d, num_partitions=2)
+    assert keys() == first
+    n = count_hits(IndexReader(spark, d), SearchRequest(query="disk"))
+    assert n.collect()[0][0] == 2
+
+
 def test_jaeger_services_and_operations(spark, trace_index):
     """GetServices from manifest tags only (no scan); GetOperations
     decoded from the stored span fingerprints, tag-pruned to the

@@ -12,7 +12,9 @@ Checks (each printed with PASS/FAIL):
 3. fetch phase: winners broadcast into the docstore scan, text column read
    ONLY in the fetch subtree;
 4. count / aggregation / export: scoring-free, join-free, shuffle-free
-   leaf plans.
+   leaf plans;
+5. match-all sorted by a fast field: the leaf kernel's universe top-k, a
+   local relation when eager, no exchange or join when lazy.
 
 Usage: PYTHONPATH=. python tools/explain_audit.py [out_md]
 """
@@ -89,8 +91,8 @@ def main() -> None:
     sections.append(("AND term query (eager default: driver-side root merge)", pe, checks_e))
 
     # forced general plan (leaf_topk=False): per-term scored join tree —
-    # the path for match-all, non-text term fields, ranges the kernel
-    # can't compare exactly, and mixed-generation indexes
+    # the path for non-text term fields, ranges the kernel can't compare
+    # exactly, and mixed-generation indexes
     term_g = search(
         reader,
         SearchRequest(query="w0 w3", max_hits=10),
@@ -138,6 +140,25 @@ def main() -> None:
          "docstore" not in pfa and "Join" not in pfa and "postings" not in pfa),
     ]
     sections.append(("fetch phase (auto mode: in-kernel fetch)", pfa, checks_fa))
+
+    # match-all sorted by a fast field ("latest N"): '*' compiles onto the
+    # leaf kernel as the split docid universe — the kernel sorts by the ts
+    # fast field and attaches the fetch columns, the root merges driver-side
+    ma_req = SearchRequest(query="*", max_hits=10, sort_by_field="warc_ts")
+    pma = plan_of(search(reader, ma_req, fetch_fields=("url",)))
+    pma_lazy = plan_of(search(reader, ma_req, fetch_fields=(), lazy=True))
+    checks_ma = [
+        ("eager match-all sorted search is a local relation, no sort job",
+         "LocalTableScan" in pma and "Sort" not in pma),
+        ("lazy match-all kernel input is a task relation (Range)",
+         "Range" in pma_lazy and "MapInArrow" in pma_lazy),
+        ("lazy match-all plan has no exchange and no join",
+         "Exchange" not in pma_lazy and "Join" not in pma_lazy),
+        ("match-all plan never scans the docstore", "docstore" not in pma_lazy),
+    ]
+    sections.append(
+        ("match-all sorted by warc_ts (leaf kernel)", pma + "\n-- lazy --\n" + pma_lazy, checks_ma)
+    )
 
     phrase = search(
         reader, SearchRequest(query='"w0 w1"', max_hits=10), fetch_fields=(), lazy=True
