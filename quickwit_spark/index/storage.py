@@ -11,7 +11,8 @@ race-tested) — but the split artifact writer itself still assumed a POSIX
 filesystem (tmp file + ``os.replace``). This module closes that gap:
 
 - ``Storage`` is the one seam every ENGINE write goes through: split
-  docstore/postings parquet objects, sidecar bytes, prefix deletes (GC),
+  docstore/postings parquet objects (build, merge and delete-rewrite
+  alike, each written whole by one task), sidecar bytes, prefix deletes (GC),
   and the transaction-log claim backend. The engine's write path contains
   **no rename**: the contract is PUT / conditional-PUT / GET / LIST / DELETE,
   exactly the S3 surface.
@@ -26,8 +27,7 @@ filesystem (tmp file + ``os.replace``). This module closes that gap:
   where its multipart upload would slot in (same call site, chunked body).
 - ``DirObjectStoreClient`` is the sandbox's stand-in for an S3 service:
   objects live as files under a root directory so Spark's parquet reader
-  (and, for Spark-MANAGED rewrites, its committer) can address them as
-  ``file:`` URIs — the same key->URI mapping s3a provides in production.
+  can address them as ``file:`` URIs — the same key->URI mapping s3a provides in production.
   Its *internals* use O_EXCL creates and hard links to give the API the
   atomicity a real object store implements server-side; the engine never
   sees or issues those ops, it only speaks the client contract.
@@ -37,14 +37,6 @@ root, written at ``init_storage`` time, so every opener (Manifest, searcher,
 merge, janitor, CLI) resolves the same backend without threading a handle
 through every call site. No marker = local POSIX, which keeps every existing
 index readable unchanged.
-
-What is deliberately delegated to Spark: the distributed parquet REWRITES
-(merge executor, delete-rewrite, the legacy two-job build) go through
-Spark's own writer. On a real deployment those paths run under Spark's
-cloud-committer (s3a magic committer — task attempts upload multipart parts,
-job commit completes them; no rename), which is precisely the engine/driver
-split the VERDICT called out: the engine's OWN writes are rename-free here,
-the Spark-managed ones are rename-free by the committer's design.
 """
 
 from __future__ import annotations

@@ -60,43 +60,6 @@ from quickwit_spark.index.manifest import Manifest, SplitMetadata
 from quickwit_spark.index.storage import get_storage
 from quickwit_spark.session import local_rows_df
 
-BLOCK_STRUCT = T.StructType(
-    [
-        T.StructField("first_docid", T.LongType()),
-        T.StructField("last_docid", T.LongType()),
-        T.StructField("count", T.IntegerType()),
-        T.StructField("max_tf", T.IntegerType()),
-        T.StructField("gap_bits", T.IntegerType()),
-        T.StructField("tf_bits", T.IntegerType()),
-        T.StructField("docid_gaps", T.BinaryType()),
-        T.StructField("tfs", T.BinaryType()),
-    ]
-)
-
-# positions payload, parallel to BLOCK_STRUCT one-to-one, in its OWN parquet
-# column: term/WAND scans select only `blocks` and never pay for positions
-# (tantivy likewise keeps positions in a separate .pos file read only by
-# phrase queries — SURVEY §2.5)
-POS_BLOCK_STRUCT = T.StructType(
-    [
-        T.StructField("pos_bits", T.IntegerType()),
-        T.StructField("n_pos", T.IntegerType()),
-        T.StructField("positions", T.BinaryType()),
-    ]
-)
-
-POSTINGS_SCHEMA = T.StructType(
-    [
-        T.StructField("split_id", T.StringType()),
-        T.StructField("term", T.StringType()),
-        T.StructField("doc_freq", T.LongType()),
-        T.StructField("sum_tf", T.LongType()),
-        T.StructField("blocks", T.ArrayType(BLOCK_STRUCT)),
-        T.StructField("pos_blocks", T.ArrayType(POS_BLOCK_STRUCT), True),
-    ]
-)
-
-
 # terms of non-default text fields are namespaced ``<field>\x00<token>`` in
 # the shared term dictionary — exactly how tantivy's Term encodes the field
 # (and how quickwit encodes json paths into terms), so postings layout,
@@ -188,18 +151,6 @@ class BuildMetrics:
     splits: list[str] = field(default_factory=list)
 
 
-ENC_SCHEMA = T.StructType(
-    [
-        T.StructField("partition_id", T.IntegerType()),
-        T.StructField("term", T.StringType()),
-        T.StructField("doc_freq", T.LongType()),
-        T.StructField("sum_tf", T.LongType()),
-        T.StructField("blocks", T.ArrayType(BLOCK_STRUCT)),
-        T.StructField("pos_blocks", T.ArrayType(POS_BLOCK_STRUCT), True),
-    ]
-)
-
-
 PA_BLOCK = pa.struct(
     [
         ("first_docid", pa.int64()),
@@ -213,6 +164,10 @@ PA_BLOCK = pa.struct(
     ]
 )
 
+# positions payload, parallel to PA_BLOCK one-to-one, in its OWN parquet
+# column: term scans select only `blocks` and never pay for positions
+# (tantivy likewise keeps positions in a separate .pos file read only by
+# phrase queries — SURVEY §2.5)
 PA_POS_BLOCK = pa.struct(
     [
         ("pos_bits", pa.int32()),
@@ -221,15 +176,20 @@ PA_POS_BLOCK = pa.struct(
     ]
 )
 
-PA_ENC_SCHEMA = pa.schema(
+# a split's postings artifact: one row per term, sorted by term (build,
+# merge and delete-rewrite all write this layout)
+PA_POSTINGS_SCHEMA = pa.schema(
     [
-        ("partition_id", pa.int32()),
         ("term", pa.string()),
         ("doc_freq", pa.int64()),
         ("sum_tf", pa.int64()),
         ("blocks", pa.list_(PA_BLOCK)),
         ("pos_blocks", pa.list_(PA_POS_BLOCK)),
     ]
+)
+
+PA_ENC_SCHEMA = pa.schema(
+    [pa.field("partition_id", pa.int32()), *PA_POSTINGS_SCHEMA]
 )
 
 
@@ -476,17 +436,6 @@ def _batches_per_split(batches):
         yield buf
 
 
-def _make_arrow_stream_kernel(with_positions: bool):
-    """mapInArrow: pre-tokenized (partition_id, docid, tokens) rows -> one
-    encoded postings batch per split (janitor's delete-rewrite)."""
-
-    def kernel(batches):
-        for buf in _batches_per_split(batches):
-            yield _encode_arrow_split(buf, with_positions)
-
-    return kernel
-
-
 # one-pass split writer: one stats row per split comes back to the driver;
 # the split's actual artifacts (docstore + postings parquet) are written by
 # the kernel itself. ts_min/ts_max are pre-rendered ISO strings so the stats
@@ -503,6 +452,7 @@ ONE_PASS_STATS_SCHEMA = T.StructType(
         T.StructField("field_total_tokens", T.StringType()),  # JSON map
         T.StructField("field_ranges", T.StringType()),  # JSON {col: [lo, hi]}
         T.StructField("compressed_bytes", T.LongType()),
+        T.StructField("max_docid", T.LongType()),
     ]
 )
 
@@ -518,12 +468,16 @@ _PA_STATS_SCHEMA = pa.schema(
         ("field_total_tokens", pa.string()),
         ("field_ranges", pa.string()),
         ("compressed_bytes", pa.int64()),
+        ("max_docid", pa.int64()),
     ]
 )
 
 
 def _make_split_writer_kernel(
-    cfg: "IndexConfig", passthrough: tuple[str, ...], storage
+    cfg: "IndexConfig",
+    passthrough: tuple[str, ...],
+    storage,
+    split_ids: dict[int, str],
 ):
     """mapInArrow: routed+sorted docs -> ONE stats row per split, writing the
     split's docstore and postings parquet files from inside the task.
@@ -534,10 +488,12 @@ def _make_split_writer_kernel(
     stay Spark's, but the split artifacts are written by the split's own
     task — no full-width cache materialization, no second scan, no postings
     shuffle. Input columns: partition_id, url, text, [tag], [ts],
-    extra text fields, then ``passthrough`` store columns; rows arrive
-    clustered by partition_id and sorted by url (the build's
-    perfect-placement repartition + sortWithinPartitions), and docids are
+    extra text fields, then ``passthrough`` store columns, and an optional
+    docid; rows arrive clustered by partition_id (``_write_splits``). A
+    build's rows carry no docid and arrive sorted by url: docids are
     assigned densely in arrival order (row_number()-1 ordered by doc_key).
+    A delete-rewrite's rows keep their docids (sorted, with gaps).
+    ``split_ids`` maps each partition_id to the split id to write.
 
     ``storage`` is the artifact-write seam (index/storage.py): the POSIX
     backend writes tmp+replace; the object-store backend
@@ -559,11 +515,12 @@ def _make_split_writer_kernel(
 
         tbl = pa.Table.from_batches(buf)
         pid = int(tbl.column("partition_id").chunk(0)[0].as_py())
-        sid = split_id_for(cfg.index_id, pid, cfg.generation)
+        sid = split_ids[pid]
         n = tbl.num_rows
-        # rows arrive sorted by (partition_id, url) — the build's
-        # sortWithinPartitions — so docids are dense in arrival order
-        docid = pa.array(np.arange(n, dtype=np.int32), type=pa.int32())
+        if "docid" in tbl.column_names:
+            docid = tbl.column("docid").combine_chunks().cast(pa.int32())
+        else:
+            docid = pa.array(np.arange(n, dtype=np.int32), type=pa.int32())
         text = tbl.column("text").combine_chunks()
 
         # tokenize ONCE; doc_len and postings both come from this array
@@ -611,7 +568,7 @@ def _make_split_writer_kernel(
             pa.Table.from_arrays(ds_cols, names=ds_names),
         )
 
-        # --- postings (same encoder as janitor's delete-rewrite)
+        # --- postings
         pid_arr = pa.array(np.full(n, pid, dtype=np.int32), type=pa.int32())
         parts = [
             _encode_arrow_split(
@@ -705,6 +662,7 @@ def _make_split_writer_kernel(
                     "field_total_tokens": _json.dumps(ftt) if ftt else None,
                     "field_ranges": _json.dumps(franges) if franges else None,
                     "compressed_bytes": int(ds_bytes + post_bytes),
+                    "max_docid": pc.max(docid).as_py(),
                 }
             ],
             schema=_PA_STATS_SCHEMA,
@@ -715,6 +673,44 @@ def _make_split_writer_kernel(
             yield _flush(buf)
 
     return kernel
+
+
+def _write_splits(
+    docs: DataFrame,
+    cfg: "IndexConfig",
+    passthrough: tuple[str, ...],
+    storage,
+    split_ids: dict[int, str],
+) -> list:
+    """ONE job: route ``docs`` (the writer kernel's input columns) so each
+    split is one task, then write every split through the kernel. Returns
+    its stats rows.
+
+    Perfect task<->split placement: hash-partitioning N pids into N
+    buckets stacks 2-3 splits on some tasks and leaves ~1/e of them empty
+    (birthday collisions) — one task then builds multiple whole splits
+    serially, a ~2x tail locally and a guaranteed straggler on a cluster.
+    Each pid is remapped to a key whose murmur3 bucket is unique
+    (driver-side, functions/spark_hash.py) and the repartition runs on
+    that: exactly one split per task. Rows are sorted by docid when they
+    carry one, else by url (the build's docid order)."""
+    remap = perfect_partition_keys(sorted(split_ids))
+    map_df = local_rows_df(
+        docs.sparkSession, list(remap.items()), "partition_id int, _rk int"
+    )
+    return (
+        docs.join(F.broadcast(map_df), "partition_id")
+        .repartition(len(split_ids), "_rk")
+        .drop("_rk")
+        .sortWithinPartitions(
+            "partition_id", "docid" if "docid" in docs.columns else "url"
+        )
+        .mapInArrow(
+            _make_split_writer_kernel(cfg, passthrough, storage, split_ids),
+            ONE_PASS_STATS_SCHEMA,
+        )
+        .collect()
+    )
 
 
 def split_id_for(index_id: str, partition_id: int, generation: int = 0) -> str:
@@ -944,38 +940,16 @@ def build_index(
         proj.append(F.col(f_).cast("string").alias(f_))
     for c in passthrough:
         proj.append(F.col(c))
-    # perfect task<->split placement: hash-partitioning len(todo) pids
-    # into len(todo) buckets stacks 2-3 splits on some tasks and leaves
-    # ~1/e of them empty (birthday collisions) — one task then builds
-    # multiple whole splits serially, a ~2x tail locally and a
-    # guaranteed straggler on a cluster. Remap each pid to a key whose
-    # murmur3 bucket is unique (driver-side, functions/spark_hash.py)
-    # and repartition on that: exactly one split per task. docids are
-    # assigned inside the kernel from the per-task (pid, url) sort.
-    remap = perfect_partition_keys(todo)
-    map_df = local_rows_df(
-        docs.sparkSession, list(remap.items()), "partition_id int, _rk int"
-    )
-    routed = (
-        docs.select(*proj)
-        .join(F.broadcast(map_df), "partition_id")
-        .repartition(len(todo), "_rk")
-        .drop("_rk")
-        .sortWithinPartitions("partition_id", "url")
-    )
-    stats_rows = (
-        routed.mapInArrow(
-            _make_split_writer_kernel(cfg, passthrough, storage),
-            ONE_PASS_STATS_SCHEMA,
-        )
-        .collect()
+    split_ids = {
+        p: split_id_for(cfg.index_id, p, cfg.generation) for p in todo
+    }
+    stats_rows = _write_splits(
+        docs.select(*proj), cfg, passthrough, storage, split_ids
     )
     norm_stats = [
         {
             "partition_id": r["partition_id"],
-            "split_id": split_id_for(
-                cfg.index_id, r["partition_id"], cfg.generation
-            ),
+            "split_id": split_ids[r["partition_id"]],
             "num_docs": r["num_docs"],
             "total_tokens": r["total_tokens"],
             "bytes": r["bytes"],
@@ -993,6 +967,7 @@ def build_index(
                 else None
             ),
             "cbytes": r["compressed_bytes"],
+            "max_docid": r["max_docid"],
         }
         for r in stats_rows
     ]
@@ -1039,8 +1014,7 @@ def _stage_and_publish(
             tags=tags,
             source_fingerprint=fingerprints[row["partition_id"]],
             generation=cfg.generation,
-            # docids are dense 0..num_docs-1 per split at build time
-            max_docid=row["num_docs"] - 1,
+            max_docid=row["max_docid"],
             record=cfg.record,
             field_total_tokens=row["ftt"],
             config_generation=cgen,

@@ -11,34 +11,33 @@ Reference semantics:
 
 A rewrite keeps the surviving docs' docids (sorted, possibly with gaps — the
 codec needs ascending ids, and SplitMetadata.max_docid records the ceiling so
-merges re-base correctly). Postings are rebuilt with the batch build's
-per-split postings encoder (``_encode_arrow_split``, fed pre-tokenized lists
-by ``_make_arrow_stream_kernel``), using the TOKENIZER AND RECORD OPTION
-persisted in the index config — a chinese_compatible or en_stem index must
-not be re-tokenized with the default analyzer.
+merges re-base correctly). The survivors go through the build's split writer
+(``operators/build.py`` ``_write_splits``), which re-tokenizes them with the
+TOKENIZER AND RECORD OPTION persisted in the index config — a
+chinese_compatible or en_stem index must not be re-tokenized with the default
+analyzer — and writes each rewritten split's docstore and postings through
+the storage seam, one object each.
 
-Scale shape: ALL affected splits are rewritten by THREE cluster jobs total
-(docstore rewrite, postings rebuild, stats), regardless of how many splits
-matched — not a driver loop of per-split jobs. Each rewrite task is bounded
-by one split's docs, the same memory bound as the build.
+Scale shape: a delete is TWO cluster actions regardless of how many splits
+matched — the per-split match count, then ONE rewrite action whose tasks
+each write one whole split (the build's memory bound) — not a driver loop of
+per-split jobs. Adaptive execution splits each action into a few jobs at its
+shuffles (11 jobs for a delete that rewrites 3 splits).
 """
 
 from __future__ import annotations
 
 import hashlib
+import json
 import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from quickwit_spark.functions.tokenize import analyzer_expr
 from quickwit_spark.index.manifest import Manifest, SplitMetadata
-from quickwit_spark.operators.build import (
-    ENC_SCHEMA,
-    FIELD_SEP,
-    _make_arrow_stream_kernel,
-)
+from quickwit_spark.index.storage import get_storage
+from quickwit_spark.operators.build import IndexConfig, _write_splits
 from quickwit_spark.operators.search import IndexReader, Searcher
 from quickwit_spark.session import local_rows_df
 from quickwit_spark.plans.query import parse_query
@@ -89,8 +88,6 @@ def delete_by_query(
     # membership-only matching: take the scoring opt-out (no tf/norms)
     searcher = Searcher(reader, scoring=False)
     icfg = manifest.load_index_config()
-    tokenizer = icfg.get("tokenizer", "default")
-    with_pos = icfg.get("record", "freq") == "position"
     extra_text_fields = tuple(icfg.get("extra_text_fields", []) or [])
     ast = parse_query(query)
     if search_fields:
@@ -139,134 +136,79 @@ def delete_by_query(
         metrics.elapsed_sec = time.time() - t0
         return metrics
 
-    # (old split_id, new split_id, dense task key) mapping — broadcastable
-    map_df = F.broadcast(
-        local_rows_df(
-            spark,
-            [(sid, nid, i) for i, (sid, nid) in enumerate(sorted(rewrite.items()))],
-            "split_id string, new_split_id string, tmp_pid int",
-        )
-    )
+    # ONE action: each rewritten split's survivors, sorted by docid, are one
+    # task of the build's split writer; task key i -> source split id
+    sources = dict(enumerate(sorted(rewrite)))
     store_base = f"{index_dir}/docstore"
-    post_base = f"{index_dir}/postings"
-    remaining = (
-        spark.read.option("basePath", store_base)
-        .parquet(*[f"{store_base}/split_id={sid}" for sid in rewrite])
-        .join(matches, ["split_id", "docid"], "left_anti")
-        .join(map_df, "split_id")
-        .cache()
+    store = spark.read.option("basePath", store_base).parquet(
+        *[f"{store_base}/split_id={sid}" for sid in sources.values()]
     )
-
-    # --- job 1: all rewritten docstores in one dynamic-partition overwrite
-    (
-        remaining.drop("split_id", "tmp_pid")
-        .withColumnRenamed("new_split_id", "split_id")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("split_id")
-        .parquet(store_base)
+    keys = local_rows_df(
+        spark,
+        [(sid, i) for i, sid in sources.items()],
+        "split_id string, partition_id int",
     )
-
-    # --- job 2: all rewritten postings in one pass of the build kernel
-    # (one task holds >= one split's survivors — the build's memory bound)
-    def _field_enc(source_col: str, ns_prefix: str | None):
-        ex = (
-            remaining.select(
-                F.col("tmp_pid").alias("partition_id"),
-                "docid",
-                analyzer_expr(F.col(source_col), tokenizer).alias("tokens"),
-            )
-            .repartition(len(rewrite), "partition_id")
-            .sortWithinPartitions("partition_id", "docid")
-        )
-        e = ex.mapInArrow(_make_arrow_stream_kernel(with_pos), ENC_SCHEMA)
-        if ns_prefix:
-            e = e.withColumn("term", F.concat(F.lit(ns_prefix), F.col("term")))
-        return e
-
-    enc = _field_enc("text", None)
+    cfg = IndexConfig(
+        index_id=icfg.get("index_id", "pages"),
+        extra_text_fields=extra_text_fields,
+        tag_field="tag" if "tag" in store.columns else None,
+        timestamp_field="ts" if "ts" in store.columns else None,
+        tokenizer=icfg.get("tokenizer", "default"),
+        record=icfg.get("record", "freq"),
+    )
+    written = {"split_id", "docid", "url", "text", "doc_len", "norm_len"}
+    written |= {"tag", "ts", *extra_text_fields}
     for f_ in extra_text_fields:
-        enc = enc.unionByName(_field_enc(f_, f_ + FIELD_SEP))
-    (
-        enc.join(map_df, enc["partition_id"] == map_df["tmp_pid"])
-        .select(
-            F.col("new_split_id").alias("split_id"),
-            "term",
-            "doc_freq",
-            "sum_tf",
-            "blocks",
-            "pos_blocks",
-        )
-        .repartition("split_id")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("split_id")
-        .parquet(post_base)
-    )
-
-    # --- job 3: per-split stats for the new manifest rows
-    has_ts = "ts" in remaining.columns
-    has_tag = "tag" in remaining.columns
-    aggs = [
-        F.count(F.lit(1)).alias("num_docs"),
-        F.sum("doc_len").alias("total_tokens"),
-        F.sum(F.length("text")).alias("bytes"),
-        F.max("docid").alias("max_docid"),
-    ]
-    aggs += [
-        F.sum(f"doc_len__{f_}").alias(f"_ftt__{f_}") for f_ in extra_text_fields
-    ]
-    if has_ts:
-        aggs += [F.min("ts").alias("ts_min"), F.max("ts").alias("ts_max")]
-    if has_tag:
-        aggs.append(F.collect_set("tag").alias("tags"))
+        written |= {f"doc_len__{f_}", f"norm_len__{f_}"}
+    passthrough = tuple(c for c in store.columns if c not in written)
+    cols = ["partition_id", "docid", "url", "text"]
+    cols += [c for c in ("tag", "ts") if c in store.columns]
+    cols += [*extra_text_fields, *passthrough]
     stats = {
-        r["new_split_id"]: r
-        for r in remaining.groupBy("new_split_id").agg(*aggs).collect()
+        r["partition_id"]: r
+        for r in _write_splits(
+            store.join(matches, ["split_id", "docid"], "left_anti")
+            .join(F.broadcast(keys), "split_id")
+            .select(*cols),
+            cfg,
+            passthrough,
+            get_storage(index_dir),
+            {i: rewrite[sid] for i, sid in sources.items()},
+        )
     }
-
-    for split_id, new_id in sorted(rewrite.items()):
+    for i, split_id in sources.items():
+        row = stats[i]
         meta = published[split_id]
-        row = stats[new_id]
         new_meta = SplitMetadata(
-            split_id=new_id,
+            split_id=rewrite[split_id],
             index_id=meta.index_id,
             partition_id=meta.partition_id,
             num_docs=row["num_docs"],
             uncompressed_docs_size_in_bytes=row["bytes"],
             total_tokens=row["total_tokens"],
-            time_range_start=(
-                row["ts_min"].isoformat()
-                if has_ts and row["ts_min"] is not None
-                else None
-            ),
-            time_range_end=(
-                row["ts_max"].isoformat()
-                if has_ts and row["ts_max"] is not None
-                else None
-            ),
-            tags=sorted(row["tags"]) if has_tag else [],
+            time_range_start=row["ts_min"],
+            time_range_end=row["ts_max"],
+            tags=list(row["tags"] or []),
             num_merge_ops=meta.num_merge_ops,
             generation=meta.generation,
             source_fingerprint=meta.source_fingerprint,
             max_docid=row["max_docid"],
             field_total_tokens=(
-                {f_: row[f"_ftt__{f_}"] for f_ in extra_text_fields}
-                if extra_text_fields
+                json.loads(row["field_total_tokens"])
+                if row["field_total_tokens"]
                 else None
             ),
-            record="position" if with_pos else "freq",
+            record=cfg.record,
             config_generation=meta.config_generation,
-            # deletion only removes rows: the source split's column stats
-            # stay a sound (if no longer tight) over-approximation
-            field_ranges=meta.field_ranges,
+            # the writer's exact column stats over the survivors
+            field_ranges=(
+                json.loads(row["field_ranges"]) if row["field_ranges"] else None
+            ),
         )
         manifest.stage(new_meta)
         manifest.publish([new_meta], replaced=[split_id])
-        metrics.rewritten_splits.append(new_id)
+        metrics.rewritten_splits.append(new_meta.split_id)
 
-    remaining.unpersist()
     matches.unpersist()
     metrics.elapsed_sec = time.time() - t0
     return metrics

@@ -1,27 +1,30 @@
 """Merge executor: turn N published splits into one, on the cluster.
 
 The reference downloads split files and lets tantivy merge segments
-(quickwit-indexing/src/actors/merge_executor.rs:283-318, attrs :195-258). Our
-splits are Parquet DataFrames, so a merge is a small, fully relational job:
+(quickwit-indexing/src/actors/merge_executor.rs:283-318, attrs :195-258),
+then hands the one merged split to the packager and uploader. Here a merge
+is ONE Spark job with ONE task, the same shape as a build task writing its
+split (operators/build.py):
 
 - docids are **re-based**: splits are ordered by split_id (deterministic), and
-  split *i*'s docids shift by the cumulative num_docs of splits 0..i — the
-  exact analog of tantivy's segment concatenation docid mapping;
-- docstore: read the N split partitions, shift docid, rewrite under the new
-  split_id (one partition-local pass, no wide shuffle);
-- postings: per term, decode each source split's blocks, apply the docid
-  offset, concatenate in split order (already docid-sorted within each split,
-  and offsets make ranges disjoint), re-encode. The shuffle is keyed by term
-  but only over the <= max_merge_factor(12) splits being merged — bounded by
-  12 x split_num_docs_target regardless of index size;
+  split *i*'s docids shift by the cumulative docid ceiling of splits 0..i —
+  the exact analog of tantivy's segment concatenation docid mapping;
+- the task reads every source's docstore and postings with pyarrow,
+  concatenates the docstores with shifted docids, and merges the whole
+  ``(term, _off)``-sorted postings table in one vectorized pass
+  (``_merge_table``: per term, decode each source's blocks, apply the docid
+  offset, concatenate in split order, re-encode);
+- both artifacts are written through the storage seam (index/storage.py):
+  one object each, no Spark writer, no shuffle;
 - merged metadata: num_docs/bytes/tokens summed, time-range unioned, tags
   unioned, ``num_merge_ops = max + 1``, partition_id = Boost-hash-combine of
   the sources (merge_executor.rs:210-226), then an atomic publish that
   replaces the sources (publisher.rs:129-140 semantics).
 
 At 100 TB scale, merge work per operation is bounded (<= 12 splits, <= 10M
-docs each), merges for different operations are independent Spark jobs, and
-the planner only reads manifest rows — the same scaling story as the
+docs each, one task — the reference's one merge executor per operation),
+merges for different operations are independent Spark jobs, and the
+planner only reads manifest rows — the same scaling story as the
 reference's merge pipeline.
 """
 
@@ -32,8 +35,9 @@ import time
 from dataclasses import dataclass, field
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from quickwit_spark.index.codec import (
     binary_np,
@@ -41,36 +45,16 @@ from quickwit_spark.index.codec import (
     decode_struct_blocks,
 )
 from quickwit_spark.index.manifest import Manifest, SplitMetadata
-from quickwit_spark.session import local_rows_df
 from quickwit_spark.index.merge_policy import (
     MergeOperation,
     StableLogMergePolicy,
     combine_partition_ids,
 )
+from quickwit_spark.index.storage import get_storage
 from quickwit_spark.operators.build import (
-    PA_BLOCK,
     PA_POS_BLOCK,
-    POSTINGS_SCHEMA,
+    PA_POSTINGS_SCHEMA,
     _assemble_blocks,
-)
-
-import pyarrow as pa
-import pyarrow.compute as pc
-from pyspark.sql import types as T
-
-# merged postings rows carry no split_id column — the writer targets the
-# merged split's own hive partition directory directly
-MERGED_POSTINGS_SCHEMA = T.StructType(
-    [f_ for f_ in POSTINGS_SCHEMA.fields if f_.name != "split_id"]
-)
-PA_MERGED_SCHEMA = pa.schema(
-    [
-        ("term", pa.string()),
-        ("doc_freq", pa.int64()),
-        ("sum_tf", pa.int64()),
-        ("blocks", pa.list_(PA_BLOCK)),
-        ("pos_blocks", pa.list_(PA_POS_BLOCK)),
-    ]
 )
 
 
@@ -186,38 +170,85 @@ def _merge_table(tbl: "pa.Table"):
                 blocks_arr,
                 pos_arr,
             ],
-            schema=PA_MERGED_SCHEMA,
+            schema=PA_POSTINGS_SCHEMA,
         )
 
 
-def _make_merge_postings_kernel():
-    """mapInArrow kernel: term-sorted (term, _off, blocks, pos_blocks) rows
-    -> merged per-term postings. Buffers the trailing term run across Arrow
-    batch boundaries (a term's <=merge_factor rows must merge together) as
-    a zero-copy table slice — rows never become python dicts."""
+def _ts_type(t: "pa.DataType") -> "pa.DataType":
+    """The split writer's timestamp type for a source column's type.
+    Spark's parquet writer stored TimestampType as INT96, which pyarrow
+    reads back as naive nanoseconds of UTC instants; the build writes
+    microseconds with a zone. Naive microseconds (TimestampNTZ) stay
+    naive."""
+    if t.tz is None and t.unit != "ns":
+        return pa.timestamp("us")
+    return pa.timestamp("us", tz="UTC")
 
-    def kernel(batches):
-        try:
-            pa.set_cpu_count(1)
-            pa.set_io_thread_count(1)
-        except Exception:  # noqa: BLE001
-            pass
-        held: "pa.Table | None" = None
-        for rb in batches:
-            tbl = pa.Table.from_batches([rb])
-            if held is not None and held.num_rows:
-                tbl = pa.concat_tables([held, tbl]).combine_chunks()
-            if not tbl.num_rows:
-                continue
-            terms = tbl.column("term").to_numpy(zero_copy_only=False)
-            cut = int(tbl.num_rows - (terms == terms[-1]).sum())
-            held = tbl.slice(cut)
-            if cut:
-                yield from _merge_table(tbl.slice(0, cut))
-        if held is not None and held.num_rows:
-            yield from _merge_table(held)
 
-    return kernel
+def _concat_sources(tables: list) -> "pa.Table":
+    """Concatenate the sources' tables under the first source's column
+    order, with every timestamp column cast to the writer's type — sources
+    written by Spark and by the split writer differ in physical schema."""
+    schema = pa.schema(
+        [
+            pa.field(f.name, _ts_type(f.type)) if pa.types.is_timestamp(f.type)
+            else f
+            for f in tables[0].schema
+        ]
+    )
+    return pa.concat_tables(
+        [t.select(schema.names).cast(schema) for t in tables]
+    )
+
+
+def _write_merged_split(
+    index_dir: str, storage, new_id: str, offsets: dict[str, int]
+) -> None:
+    """The merge task: read every source split with pyarrow, re-base its
+    docids by ``offsets``, and write the merged docstore and postings
+    through ``storage`` (one object each)."""
+    import pyarrow.parquet as pq
+
+    try:
+        pa.set_cpu_count(1)
+        pa.set_io_thread_count(1)
+    except Exception:  # noqa: BLE001
+        pass
+    stores, posts = [], []
+    for sid, off in offsets.items():
+        ds = pq.read_table(f"{index_dir}/docstore/split_id={sid}")
+        i = ds.schema.get_field_index("docid")
+        # int32 like the build-time docid; a merged split holds <=
+        # max_merge_factor * split_num_docs_target = 120M docs
+        docid = pc.add(ds.column(i).cast(pa.int64()), off).cast(pa.int32())
+        stores.append(ds.set_column(i, "docid", docid))
+        p = pq.read_table(f"{index_dir}/postings/split_id={sid}")
+        if "pos_blocks" not in p.column_names:
+            # built before positions existed: the merged term degrades to
+            # positions-less
+            p = p.append_column(
+                "pos_blocks", pa.nulls(p.num_rows, pa.list_(PA_POS_BLOCK))
+            )
+        posts.append(
+            p.select(PA_POSTINGS_SCHEMA.names).append_column(
+                "_off", pa.array(np.full(p.num_rows, off, dtype=np.int64))
+            )
+        )
+    post = _concat_sources(posts)
+    merged = PA_POSTINGS_SCHEMA.empty_table()
+    if post.num_rows:
+        # a term's <= 12 source rows sort contiguous and in split order, so
+        # concatenating them keeps docids ascending; the final term sort
+        # keeps the file's min/max term stats tight (a mixed-record merge
+        # emits positions-bearing terms before degraded ones)
+        merged = pa.Table.from_batches(
+            _merge_table(
+                post.sort_by([("term", "ascending"), ("_off", "ascending")])
+            ),
+            schema=PA_POSTINGS_SCHEMA,
+        ).sort_by("term")
+    storage.write_parquet(f"docstore/split_id={new_id}", _concat_sources(stores))
+    storage.write_parquet(f"postings/split_id={new_id}", merged)
 
 
 @dataclass
@@ -263,66 +294,11 @@ def execute_merge(
     index_id = index_id or metas[0].index_id
     new_id = merged_split_id(index_id, op.split_ids)
     offsets = _docid_offsets(metas)
-    src_ids = list(offsets)  # sorted
-
-    off_df = F.broadcast(
-        local_rows_df(
-            spark,
-            [(sid, off) for sid, off in offsets.items()],
-            "split_id string, _off long",
-        )
-    )
-
-    # The merged split is written straight into its own hive-style partition
-    # directory (…/split_id=<new_id>) — source partitions are inputs of the
-    # same job and must not be overwritten (Spark forbids read+overwrite of
-    # one path; the reference likewise never mutates source splits — they are
-    # immutable and replaced only in the metastore).
-    store_base = f"{index_dir}/docstore"
-    post_base = f"{index_dir}/postings"
-
-    # --- docstore: shift docids, rewrite under the merged split_id.
-    # Partition-local: each source file maps to a monotone docid shift, so
-    # per-file docid order (and disjoint cross-file ranges) is preserved.
-    store = (
-        spark.read.option("basePath", store_base)
-        .parquet(*[f"{store_base}/split_id={sid}" for sid in src_ids])
-        .join(off_df, "split_id")
-        # int32 like the build-time docid (row_number); a merged split holds
-        # <= max_merge_factor * split_num_docs_target = 120M docs, well in range
-        .withColumn("docid", (F.col("docid") + F.col("_off")).cast("int"))
-        .drop("_off", "split_id")
-    )
-    store.write.mode("overwrite").parquet(f"{store_base}/split_id={new_id}")
-
-    # --- postings: per-term k-way concat in split order (docid ranges are
-    # disjoint after re-basing, so concat in offset order stays sorted)
-    post = (
-        # mergeSchema: sources built before positions existed lack the
-        # pos_blocks column; the merged term then degrades to positions-less
-        spark.read.option("basePath", post_base)
-        .option("mergeSchema", "true")
-        .parquet(*[f"{post_base}/split_id={sid}" for sid in src_ids])
-        .join(off_df, "split_id")
-    )
-    merged = (
-        # range-partition + sort by (term, _off): a term's <=12 source rows
-        # arrive contiguous and in split order, so the kernel is a single
-        # partition-local pass; the term sort ALSO gives the written parquet
-        # tight min/max stats for term pruning (same property the per-split
-        # sorted write gives fresh splits)
-        post.repartitionByRange(max(2, len(src_ids) // 2), "term")
-        .sortWithinPartitions("term", "_off")
-        .mapInArrow(_make_merge_postings_kernel(), MERGED_POSTINGS_SCHEMA)
-    )
-    (
-        # re-sort the (one-row-per-term, cheap) encoded output: a
-        # mixed-record merge emits positions-bearing terms before degraded
-        # ones per batch, which would otherwise widen the parquet min/max
-        # term stats the searcher's row-group pruning depends on
-        merged.sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .parquet(f"{post_base}/split_id={new_id}")
+    # ONE job, ONE task: the operation's sources are read, merged and
+    # written by one task, like a build task writing its split
+    storage = get_storage(index_dir)
+    spark.sparkContext.parallelize([0], 1).foreach(
+        lambda _: _write_merged_split(index_dir, storage, new_id, offsets)
     )
 
     # --- merged metadata + atomic publish-and-replace

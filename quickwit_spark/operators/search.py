@@ -657,7 +657,7 @@ class IndexReader:
         want = min(cur, max(want, min(4, cur)))
         return df.coalesce(want) if want < cur else df
 
-    def warm(self, materialize: bool = True, mode: str = "full") -> None:
+    def warm(self, mode: str = "full") -> None:
         """Pin hot state — the analog of the reference searcher's
         fast-field/footer caches (1 GB + 500 MB,
         quickwit_config/mod.rs:99-126).
@@ -683,8 +683,7 @@ class IndexReader:
         d = self._query_coalesce(self.docstore(), "docstore").cache()
         self._warmed = [d]
         self._docstore = d
-        if materialize:
-            d.count()
+        d.count()
 
     def term_dict(self) -> DataFrame:
         """(split_id, term, doc_freq, sum_tf): a pruned projection of the
@@ -2558,9 +2557,6 @@ class Searcher:
     def __init__(
         self,
         reader: IndexReader,
-        default_field: str | None = None,
-        tag_field: str | None = None,
-        ts_field: str | None = None,
         quantize_norms: bool = True,
         scoring: bool = True,
         icfg: dict | None = None,
@@ -2581,10 +2577,10 @@ class Searcher:
         # terms on them match nothing in this generation's splits (the
         # postings simply predate the field) instead of erroring
         self._lenient_fields: frozenset[str] = frozenset()
-        self.default_field = default_field or icfg.get("text_field") or "text"
+        self.default_field = icfg.get("text_field") or "text"
         self.extra_text_fields = tuple(icfg.get("extra_text_fields", []) or [])
-        self.tag_field = tag_field or icfg.get("tag_field") or "lang"
-        self.ts_field = ts_field or icfg.get("timestamp_field") or "warc_ts"
+        self.tag_field = icfg.get("tag_field") or "lang"
+        self.ts_field = icfg.get("timestamp_field") or "warc_ts"
         self.tokenizer = icfg.get("tokenizer", "default")
         # indexes built before positions existed have no pos_blocks column:
         # phrase queries then fall back to the AND+verify approximation
@@ -4077,10 +4073,13 @@ def search(
     if leaf_topk is not False:
         splits = _prune_splits_by_field_ranges(searcher, ast, splits)
     split_ids = [m.split_id for m in splits]
+    # validate BEFORE the empty-prune early return: an invalid request must
+    # fail identically whether or not any split survives pruning
     if snippet_fields and not searcher._collect_text_terms(ast):
-        # validate BEFORE the empty-prune early return: an invalid request
-        # must fail identically whether or not any split survives pruning
         raise ValueError("snippet fields require text terms in the query")
+    if request.sort_by_field == searcher.default_field:
+        # sort fields must be fast, non-text (query_builder.rs:255-300)
+        raise ValueError("sort by a text field is not supported")
     fetch_all = tuple(fetch_fields) + tuple(
         f for f in snippet_fields if f not in fetch_fields
     )
@@ -4157,9 +4156,6 @@ def search(
             ).collect(),
         )
 
-    if request.sort_by_field == searcher.default_field:
-        # sort fields must be fast, non-text (query_builder.rs:255-300)
-        raise ValueError("sort by a text field is not supported")
     num_hits: "int | None" = None
     if leaf_spec:
         m = searcher.scored_topk_leaf(
@@ -4907,27 +4903,6 @@ def format_export_chunks(
                 yield pd.DataFrame({"chunk": [vals.astype("<i8").tobytes()]})
 
     return src.mapInPandas(to_rowbinary, "chunk binary")
-
-
-def probe_split_failures(reader: IndexReader) -> list[str]:
-    """Published splits whose postings or docstore files are unreadable.
-
-    The reference surfaces per-split failures in the search response and
-    retries them (root.rs:203-217, quickwit-search/src/retry/); under Spark
-    a corrupt file normally fails the whole job after task retries. This
-    probe is the opt-in alternative: TWO bounded jobs total (not O(splits))
-    — each store is scanned once with ignoreCorruptFiles so unreadable
-    files are skipped, and a split is failed iff it vanishes from either
-    store's surviving split_id set. Collected sets are split-id-sized (tiny
-    even at 10^5 splits)."""
-    published = [m.split_id for m in reader.manifest.list_published()]
-    ok: set[str] | None = None
-    for store in ("postings", "docstore"):
-        df, present = _tolerant_store_read(reader, store, published)
-        if df is None:
-            return sorted(published)  # every split unreadable
-        ok = present if ok is None else (ok & present)
-    return sorted(s for s in published if s not in (ok or set()))
 
 
 def _tolerant_store_read(

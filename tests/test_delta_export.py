@@ -115,7 +115,7 @@ def test_merge_then_export_appends_diff_commit(spark, tmp_path):
     out = export_delta_log(spark, d)
     assert out["version"] == 1
     # the 3 original single-object splits are removed; the merged split's
-    # file set is added (Spark's merge writer emits one file per task)
+    # file set is added
     assert out["removed"] == 3 and out["added"] >= 1
     actions = _log_lines(d, 1)
     kinds = [next(iter(a)) for a in actions]

@@ -427,6 +427,23 @@ def test_snippet_validation_is_prune_independent(spark, pages_small, tmp_path):
         )
 
 
+def test_text_sort_validation_is_prune_independent(small_index):
+    """Sorting by a text field raises whether or not any split survives
+    time pruning, in search() as in search_many()."""
+    import pytest
+
+    from quickwit_spark.operators.search import search_many
+
+    for start in (None, "2099-01-01T00:00:00"):
+        req = SearchRequest(
+            query="w1", sort_by_field="text", start_timestamp=start
+        )
+        with pytest.raises(ValueError, match="sort by a text field"):
+            search(small_index, req)
+        with pytest.raises(ValueError, match="sort by a text field"):
+            search_many(small_index, {"q": req})
+
+
 def test_gc_deletion_grace_protects_inflight_readers(
     spark, pages_small, tmp_path
 ):

@@ -9,8 +9,11 @@ docs (tantivy segment-merge equivalence)."""
 from __future__ import annotations
 
 import os
+import shutil
 import time
 
+import pyarrow as pa
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from quickwit_spark.index.manifest import Manifest, SplitMetadata
@@ -205,3 +208,114 @@ def test_run_merge_pipeline_to_fixpoint(spark, pages_small, tmp_path):
     # with fewer splits than we started with
     assert len(pub) < 8
     assert _result_set(reader, "needleone")
+
+
+# ---------------------------------------------------------------------------
+# executor: one task writes the merged split through the storage seam
+# ---------------------------------------------------------------------------
+
+def _work(spark, fn):
+    """(result, jobs, stages, tasks) of the Spark work ``fn()`` ran."""
+    sc = spark.sparkContext
+    g = f"merge-jobs-{time.time_ns()}"
+    sc.setJobGroup(g, g)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(g)
+    stage_ids = [sid for j in jobs for sid in st.getJobInfo(j).stageIds]
+    tasks = sum(st.getStageInfo(sid).numTasks for sid in stage_ids)
+    return out, len(jobs), len(stage_ids), tasks
+
+
+def test_merge_is_one_job_one_stage_one_task(spark, pages_small, tmp_path):
+    d = str(tmp_path / "idx")
+    build_index(spark, pages_small, d, IndexConfig(index_id="pages", num_splits=3))
+    op = MergeOperation(splits=Manifest(d).list_published())
+    meta, jobs, stages, tasks = _work(spark, lambda: execute_merge(spark, d, op))
+    assert meta.num_docs == 600
+    assert (jobs, stages, tasks) == (1, 1, 1)
+
+
+@pytest.mark.parametrize("backend", ["local", "dir_object_store"])
+def test_merged_and_rewritten_splits_are_one_object_each(
+    spark, pages_small, tmp_path, backend
+):
+    """Delete-rewrite and merge write each artifact as ONE object through
+    the storage seam, like the build: no Spark task files, no _SUCCESS."""
+    from quickwit_spark.index.storage import init_storage
+    from quickwit_spark.operators.janitor import delete_by_query
+
+    d = str(tmp_path / "idx")
+    init_storage(d, backend)
+    build_index(spark, pages_small, d, IndexConfig(index_id="pages", num_splits=3))
+    dm = delete_by_query(spark, d, "needleone")
+    assert dm.rewritten_splits
+    meta = execute_merge(
+        spark, d, MergeOperation(splits=Manifest(d).list_published())
+    )
+    for sid in dm.rewritten_splits + [meta.split_id]:
+        for sub in ("docstore", "postings"):
+            assert os.listdir(os.path.join(d, sub, f"split_id={sid}")) == [
+                "part-00000.zstd.parquet"
+            ], (sid, sub)
+    reader = IndexReader(spark, d)
+    assert [m.split_id for m in reader.manifest.list_published()] == [
+        meta.split_id
+    ]
+    assert not _result_set(reader, "needleone")
+    assert len(_result_set(reader, "*")) == 600 - dm.matched_docs
+
+
+def test_merge_reads_a_spark_written_source(spark, pages_small, tmp_path):
+    """Splits merged or rewritten by Spark's parquet writer store ``ts`` as
+    INT96 (naive nanoseconds in pyarrow) and carry task files plus
+    _SUCCESS; the merge must still read and combine them."""
+    d_multi = str(tmp_path / "multi")
+    d_single = str(tmp_path / "single")
+    build_index(spark, pages_small, d_multi, IndexConfig(index_id="pages", num_splits=2))
+    build_index(spark, pages_small, d_single, IndexConfig(index_id="pages", num_splits=1))
+    metas = Manifest(d_multi).list_published()
+    src = os.path.join(d_multi, "docstore", f"split_id={metas[0].split_id}")
+    tmp = str(tmp_path / "spark_written")
+    spark.read.parquet(src).repartition(2).write.parquet(tmp)
+    shutil.rmtree(src)
+    shutil.copytree(tmp, src)
+    assert "_SUCCESS" in os.listdir(src)
+    import pyarrow.parquet as pq
+
+    assert pq.read_table(src).schema.field("ts").type == pa.timestamp("ns")
+
+    meta = execute_merge(spark, d_multi, MergeOperation(splits=metas))
+    merged = pq.read_table(
+        os.path.join(d_multi, "docstore", f"split_id={meta.split_id}")
+    )
+    assert merged.schema.field("ts").type == pa.timestamp("us", tz="UTC")
+    merged_reader = IndexReader(spark, d_multi)
+    fresh = IndexReader(spark, d_single)
+    for q in ["needleone", "w0 w3", "*"]:
+        assert _result_set(merged_reader, q) == _result_set(fresh, q), q
+
+
+def test_merge_of_splits_without_postings(spark, pages_small, tmp_path):
+    """Splits whose docs hold no tokens have zero postings rows; merging
+    them writes an empty postings artifact and keeps every doc."""
+    from pyspark.sql import functions as F
+
+    d = str(tmp_path / "idx")
+    build_index(
+        spark,
+        pages_small.withColumn("text", F.lit("")),
+        d,
+        IndexConfig(index_id="pages", num_splits=2),
+    )
+    meta = execute_merge(
+        spark, d, MergeOperation(splits=Manifest(d).list_published())
+    )
+    assert meta.num_docs == 600
+    reader = IndexReader(spark, d)
+    assert len(_result_set(reader, "*")) == 600
+    assert not _result_set(reader, "w0")
