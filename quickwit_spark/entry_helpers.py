@@ -418,7 +418,7 @@ COSINE_EMB = (
 
 
 def phrase_sql(terms: list[str], k: int, slop: int = 0) -> str:
-    """True phrase-frequency BM25 (mirrors Searcher._eval_phrase_positions):
+    """True phrase-frequency BM25 (mirrors the leaf kernel's phrase node):
     pf = number of start positions matching the greedy ordered-within-slop
     rule (functions/phrase.py contract; 2-term SQL form: toks[i] = t1 and
     some j in (i, i+1+slop] has toks[j] = t2), score = (sum of term idfs) *

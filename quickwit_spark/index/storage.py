@@ -270,7 +270,7 @@ class DirObjectStoreClient:
           unconditional PUT: atomic last-writer-wins replace.
       get_object(key) -> bytes, KeyError when absent
       list_keys(prefix) -> keys under the prefix
-      delete_object(key)
+      delete_object(key) — also removes the parent directories it empties
 
     The hard-link / replace INSIDE this class model what a real object
     store implements server-side (S3's PUT is atomic and its
@@ -288,11 +288,19 @@ class DirObjectStoreClient:
 
     def put_object(self, key: str, body: bytes, if_none_match: bool = False):
         path = self._path(key)
-        os.makedirs(os.path.dirname(path), exist_ok=True)
         tmp = os.path.join(
             os.path.dirname(path), f"_tmp.{uuid.uuid4().hex}"
         )
-        with open(tmp, "wb") as f:
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        try:
+            f = open(tmp, "wb")
+        except FileNotFoundError:
+            # a concurrent delete_object removed the (then empty) directory
+            # between makedirs and the open; once the temp file exists the
+            # directory is non-empty and stays
+            os.makedirs(os.path.dirname(path), exist_ok=True)
+            f = open(tmp, "wb")
+        with f:
             f.write(body)
             f.flush()
             os.fsync(f.fileno())
@@ -353,10 +361,23 @@ class DirObjectStoreClient:
             raise KeyError(key) from None
 
     def delete_object(self, key: str) -> None:
+        path = self._path(key)
         try:
-            os.unlink(self._path(key))
+            os.unlink(path)
         except OSError:
             pass
+        # an object store has no directories: remove the key's parents once
+        # they are empty (up to, not including, the root), or every GC'd
+        # split would leave an empty split_id=<id>/ that directory listings
+        # (Spark's parquet reader over <index>/docstore) keep walking
+        root = os.path.abspath(self.root)
+        d = os.path.dirname(os.path.abspath(path))
+        while d.startswith(root + os.sep):
+            try:
+                os.rmdir(d)
+            except OSError:
+                break  # not empty (or already gone): stop climbing
+            d = os.path.dirname(d)
 
 
 # ---------------------------------------------------------------------------

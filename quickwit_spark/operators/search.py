@@ -76,155 +76,6 @@ FETCH_ISIN_MAX = 4_096
 # the target both are one task/partition per split.
 QUERY_PARTITION_TARGET_BYTES = 32 << 20
 
-DECODED_SCHEMA = T.StructType(
-    [
-        T.StructField("split_id", T.StringType()),
-        T.StructField("term", T.StringType()),
-        T.StructField("doc_freq", T.LongType()),
-        T.StructField("docid", T.LongType()),
-        T.StructField("tf", T.LongType()),
-        T.StructField("dl", T.DoubleType()),
-        T.StructField("avgdl", T.DoubleType()),
-    ]
-)
-
-MATCHED_SCHEMA = T.StructType(
-    [
-        T.StructField("split_id", T.StringType()),
-        T.StructField("term", T.StringType()),
-        T.StructField("docid", T.LongType()),
-    ]
-)
-
-
-def _decode_blocks_batch(rb, need_tf: bool):
-    """One Arrow batch of postings rows (split_id, term[, doc_freq], blocks)
-    -> (docids, tfs | None, per-posting row index, per-row posting offsets).
-
-    Fully batched: the blocks ListArray flattens to per-block metadata
-    arrays, every block's gap/tf payload decodes in ONE width-grouped
-    unpackbits+matmul pass (codec.decode_blocks_arrays), and docids come
-    from a single segmented cumsum — no per-block python, no struct->dict
-    conversion (the mapInPandas path paid both)."""
-    names = rb.schema.names
-    ls = rb.column(names.index("blocks"))
-    loffs = ls.offsets.to_numpy().astype(np.int64)
-    row_off = loffs - loffs[0]
-    bl = ls.flatten()
-    if len(bl) == 0:
-        return None
-    docids, tfs, cnt = _decode_struct_blocks(bl, need_tf)
-    nblocks_per_row = np.diff(row_off)
-    blk_row = np.repeat(
-        np.arange(len(nblocks_per_row), dtype=np.int64), nblocks_per_row
-    )
-    post_row = np.repeat(blk_row, cnt)
-    per_row = np.zeros(len(nblocks_per_row) + 1, dtype=np.int64)
-    np.add.at(per_row, blk_row + 1, cnt)
-    row_post_off = np.cumsum(per_row)
-    return docids, tfs, post_row, row_post_off
-
-
-def _make_decode_postings_docids_rows():
-    """mapInArrow kernel factory for the scoring opt-out: postings rows ->
-    (split_id, term, docid) only. Unpacks docid gaps (batched across ALL
-    blocks of the batch) and never touches the tf payload, the fieldnorm
-    cache, or the avgdl map — the analog of the reference skipping tf
-    decompression + fieldnorms unless the query sorts by ``_score``
-    (collector.rs:413-421). This is the plan counts, exports and
-    fast-field-sorted searches should pay."""
-
-    def kernel(batches):
-        try:
-            pa.set_cpu_count(1)
-            pa.set_io_thread_count(1)
-        except Exception:  # noqa: BLE001
-            pass
-        for rb in batches:
-            dec = _decode_blocks_batch(rb, need_tf=False)
-            if dec is None:
-                continue
-            docids, _, post_row, _ = dec
-            names = rb.schema.names
-            take_idx = pa.array(post_row, type=pa.int64())
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pc.take(rb.column(names.index("split_id")), take_idx),
-                    pc.take(rb.column(names.index("term")), take_idx),
-                    pa.array(docids, type=pa.int64()),
-                ],
-                names=["split_id", "term", "docid"],
-            )
-
-    return kernel
-
-
-def _make_decode_postings_rows_arrow(
-    index_dir: str, quantize: bool, avgdl_map: dict
-):
-    """mapInArrow kernel: postings rows (split_id, term, doc_freq, blocks)
-    -> exploded (split_id, term, doc_freq, docid, tf, dl, avgdl) rows.
-
-    The Arrow/batched twin of the old mapInPandas decode: per-block payloads
-    decode in ONE width-grouped unpackbits+matmul over the whole batch and
-    the parquet binary buffers flow in without ever becoming python dicts
-    (the struct->dict conversion plus per-block decode_block calls used to
-    dominate hot-term queries). |d| attaches map-side from the executor
-    fieldnorm cache; missing avgdl keys fail loudly (stats inconsistency)."""
-
-    def kernel(batches):
-        try:
-            pa.set_cpu_count(1)
-            pa.set_io_thread_count(1)
-        except Exception:  # noqa: BLE001
-            pass
-        for rb in batches:
-            dec = _decode_blocks_batch(rb, need_tf=True)
-            if dec is None:
-                continue
-            docids, tfs, post_row, row_post_off = dec
-            names = rb.schema.names
-            sid_col = rb.column(names.index("split_id"))
-            term_col = rb.column(names.index("term"))
-            total = len(docids)
-            dl = np.empty(total, dtype=np.float64)
-            avg = np.empty(total, dtype=np.float64)
-            sids = sid_col.to_pylist()  # one string per (split, term) row
-            terms = term_col.to_pylist()
-            for i in range(rb.num_rows):
-                a, b = int(row_post_off[i]), int(row_post_off[i + 1])
-                if a == b:
-                    continue
-                fld = _term_field(terms[i])
-                dl[a:b] = _norms_for(
-                    index_dir, sids[i], quantize, docids[a:b], fld
-                )
-                try:
-                    avg[a:b] = avgdl_map[(sids[i], fld)]
-                except KeyError:
-                    raise KeyError(
-                        f"no avgdl for split={sids[i]!r} field={fld!r}: "
-                        "manifest field_total_tokens out of sync with postings"
-                    ) from None
-            take_idx = pa.array(post_row, type=pa.int64())
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pc.take(sid_col, take_idx),
-                    pc.take(term_col, take_idx),
-                    pc.take(rb.column(names.index("doc_freq")), take_idx),
-                    pa.array(docids, type=pa.int64()),
-                    pa.array(tfs, type=pa.int64()),
-                    pa.array(dl, type=pa.float64()),
-                    pa.array(avg, type=pa.float64()),
-                ],
-                names=[
-                    "split_id", "term", "doc_freq", "docid", "tf", "dl", "avgdl"
-                ],
-            )
-
-    return kernel
-
-
 # ---------------------------------------------------------------------------
 # executor-side fieldnorm cache: the analog of tantivy's per-segment
 # fieldnorm file + the searcher's fast-field cache (leaf.rs:330-346 warmup,
@@ -234,7 +85,7 @@ def _make_decode_postings_rows_arrow(
 # (``_split_version``) next to (index_dir, split_id); entries are the
 # docid->doc-length arrays read from the split's docstore parquet with
 # column pruning (2 int columns — never the text). Scoring then needs NO
-# per-query norms join: the decode kernels attach |d| map-side, and no
+# per-query norms join: the leaf kernel attaches |d| map-side, and no
 # docstore shuffle happens at all.
 # ---------------------------------------------------------------------------
 
@@ -532,6 +383,17 @@ def _ts_micros(spark, s: str | None, *, is_start: bool) -> int | None:
     return int(v)
 
 
+def _ts_bounds(spark, start: str | None, end: str | None) -> tuple | None:
+    """A request's semi-open [start, end) window as the leaf kernel's
+    ``ts_bounds`` (epoch micros), or None when unbounded."""
+    if start is None and end is None:
+        return None
+    return (
+        _ts_micros(spark, start, is_start=True),
+        _ts_micros(spark, end, is_start=False),
+    )
+
+
 def _term_field(term: str) -> str:
     """'' for the default field; the field name for namespaced terms."""
     i = term.find(FIELD_SEP)
@@ -667,12 +529,12 @@ class IndexReader:
         never re-read the manifest): the 10^12-doc setting, where postings
         and docstore stay on storage behind the parquet reader and the OS
         page cache. ``mode="full"`` also caches the docstore relation, read
-        by match-all counts, aggregations and exports, the general plan and
-        its point-lookup fetch
+        by match-all counts, aggregations and exports, the general plan's
+        docstore atoms and its point-lookup fetch
         — right for an index that fits cluster memory. Postings are never
-        cached: leaf queries read their splits' term rows with pyarrow
-        inside the kernel task, so a cached postings relation would serve
-        only the general plan.
+        cached: every query reads its splits' term rows with pyarrow inside
+        the leaf kernel task, so a cached postings relation would serve
+        only the positions-less phrase fallback's idf read.
 
         The cached docstore is right-sized by bytes (see
         ``_query_coalesce``) — a no-op at cluster scale, a ~1.1-1.6x
@@ -724,8 +586,9 @@ class IndexReader:
         return self._stats_map
 
     def split_stats(self) -> DataFrame:
-        """Tiny per-split stats DF (broadcast into the scorer); memoized per
-        reader — stats only change with publishes, which require refresh()."""
+        """Tiny per-split stats DF (broadcast into the positions-less phrase
+        fallback's idf); memoized per reader — stats only change with
+        publishes, which require refresh()."""
         if self._split_stats is None:
             rows = [
                 (sid, s["num_docs"], float(s["avgdl"]))
@@ -1148,26 +1011,25 @@ def _make_leaf_topk_kernel(
     of the query terms for every split of ONE task, read by
     ``_make_split_postings_reader`` (a handful of still-compressed rows per
     split), plus one null-term anchor row per split. Per split: decode each
-    term, attach |d| from the executor fieldnorm cache, score BM25 with the
-    exact `_score_decoded` arithmetic, then evaluate the compiled tree
-    recursively in numpy — every node yields (sorted-unique docids,
-    scores): must = sorted-array intersection with score sums,
-    should/term-set = score-summing union, must_not = set difference,
-    boost = scalar multiply — rank by (score desc, docid asc), emit k rows.
-    Compared to the general `_eval_bool` plan this removes the
-    per-matching-doc groupBy exchange: rows leaving python drop from
-    |matches| to |splits|·k, which is the shape that survives a 10^12-doc
-    corpus.
+    term, attach |d| from the executor fieldnorm cache, score BM25, then
+    evaluate the compiled tree recursively in numpy — every node yields
+    (sorted-unique docids, scores): must = sorted-array intersection with
+    score sums, should/term-set = score-summing union, must_not = set
+    difference, boost = scalar multiply — rank by (score desc, docid asc),
+    emit k rows. This is the engine's only postings decode and BM25
+    scorer: the general plan (``Searcher.matching``) composes relations of
+    this kernel. Rows leaving python are |splits|·k, not |matches|, which
+    is the shape that survives a 10^12-doc corpus.
 
     ``spec``: a tree of ``{"op": "term"|"termset"|"phrase"|"range"|
     "boost"|"bool"|"all"|"empty"}`` nodes compiled by ``Searcher.leaf_plan``
     (match-all is the split docid universe at score 0, and pure-negative
     subtrees subtract from that same universe; range nodes compare fast
     fields in their compile-lowered domain; phrase nodes require every
-    pruned split to store positions). Phrase
-    nodes run the same vectorized global-coordinate matcher as the
-    standalone phrase kernel and score with tf = phrase frequency, idf
-    summed over the token sequence (tantivy Bm25Weight::for_terms).
+    pruned split to store positions). Phrase nodes run a vectorized
+    global-coordinate matcher (``_phrase_freqs``) and score with tf =
+    phrase frequency, idf summed over the token sequence (tantivy
+    Bm25Weight::for_terms).
 
     ``ts_bounds``: optional (start_us|None, end_us|None) semi-open epoch-
     micros window applied per matching doc via the split's ts fast field
@@ -1180,9 +1042,12 @@ def _make_leaf_topk_kernel(
     worst-score-first top-k; per-split trim stays rank-identical because
     the global order concatenates independent per-split scores).
 
-    ``emit`` selects the output shape — the three collectors the reference
+    ``emit`` selects the output shape — the collectors the reference
     leaf implements over ONE matching pass (collector.rs):
       * ``"topk"``  — per-split top-k (split_id, docid, score);
+      * ``"scored"`` — EVERY matching (split_id, docid, score), untrimmed
+        and without MaxScore or phrase pruning: one clause relation of the
+        general plan (``Searcher.matching``);
       * ``"docids"``— EVERY matching (split_id, docid), unscored and
         untrimmed: the feeder for aggregations / search-stream exports
         (their buckets never need BM25, so fieldnorm reads and tf
@@ -1210,7 +1075,7 @@ def _make_leaf_topk_kernel(
     import math
 
     phrase_toks = _leaf_spec_phrase_tokens(spec)
-    need_scores = sort_spec is None and emit in ("topk", "topk_hits")
+    need_scores = sort_spec is None and emit in ("topk", "topk_hits", "scored")
     # collector shape under which score-upper-bound pruning is sound:
     # pure score-desc top-k, no per-doc time window, no pre-trim count
     # payload (emit "topk_hits" carries the exact n_match per split).
@@ -1402,8 +1267,7 @@ def _make_leaf_topk_kernel(
                         "manifest field_total_tokens out of sync with "
                         "postings"
                     ) from None
-                # bit-for-bit the `_score_decoded` expression: idf scalar,
-                # then tf*(k1+1) / (tf + k1*((1-b) + (b*dl)/avg))
+                # idf scalar, then tf*(k1+1) / (tf + k1*((1-b) + (b*dl)/avg))
                 idf = math.log(1.0 + ((_n - df) + 0.5) / (df + 0.5))
                 tfd = t.astype(np.float64)
                 tf_norm = (
@@ -1443,9 +1307,7 @@ def _make_leaf_topk_kernel(
                 _pr=per_raw,
                 _n=n_docs,
             ):
-                """Recursive tree eval -> (sorted-unique docids, scores);
-                mirrors `_eval`/`_eval_bool`/`_eval_termset`/
-                `_eval_phrase_positions` exactly."""
+                """Recursive tree eval -> (sorted-unique docids, scores)."""
                 op = n["op"]
                 if op == "empty":
                     return _empty
@@ -1886,7 +1748,7 @@ def _make_leaf_topk_kernel(
                 asc = sorder == "asc"
             else:
                 asc = order == "asc"
-            if len(base_d) > k:
+            if emit != "scored" and len(base_d) > k:
                 # per-split half of the global (key, split_id, docid)
                 # tie-break. Null/NaN placement replicates Spark's orderBy:
                 # asc = nulls FIRST, NaN LAST; desc = NaN FIRST, nulls LAST
@@ -2013,16 +1875,6 @@ def _make_leaf_topk_kernel(
     return kernel
 
 
-PHRASE_PF_SCHEMA = T.StructType(
-    [
-        T.StructField("split_id", T.StringType()),
-        T.StructField("docid", T.LongType()),
-        T.StructField("pf", T.LongType()),
-        T.StructField("idf_sum", T.DoubleType()),
-        T.StructField("dl", T.DoubleType()),
-    ]
-)
-
 # global phrase coordinate: g = docid * SHIFT + position. Positions are
 # doc-local token indices < 2^32; docids < 2^30 (merged ceiling 120M), so g
 # fits int64 and cross-doc gaps always exceed any practical slop.
@@ -2059,84 +1911,6 @@ def _phrase_coords_pruned(blr, plr, sel=None) -> np.ndarray:
     base = cacc[pstarts] - a2[pstarts]
     flat_abs = cacc - np.repeat(base, tfs[tfs > 0])
     return np.repeat(docids, tfs) * _PHRASE_SHIFT + flat_abs
-
-
-def _accumulate_phrase_coords(
-    rb, acc: dict[str, dict], dfs: dict[str, dict]
-) -> None:
-    """Decode one postings batch (blocks + pos_blocks) into per-(split,
-    term) sorted global coordinates ``docid * 2^32 + pos`` in ``acc`` and
-    doc frequencies in ``dfs`` — the shared batch stage of the phrase
-    kernel and the leaf-local kernel's phrase nodes."""
-    from quickwit_spark.index.codec import binary_np, decode_blocks_ragged
-
-    if rb.num_rows == 0:
-        return
-    names = rb.schema.names
-    bls = rb.column(names.index("blocks"))
-    pls = rb.column(names.index("pos_blocks"))
-    valid = np.asarray(pls.is_valid(), dtype=bool)
-    # positions-less rows (mixed-merge split): the driver normally
-    # routes such queries to the fallback; never crash the executor
-    # on a null payload — skip them here
-    loffs = bls.offsets.to_numpy().astype(np.int64)
-    row_off = loffs - loffs[0]
-    bl = bls.flatten()
-    if len(bl) == 0:
-        return
-    docids, tfs, cnt = _decode_struct_blocks(bl, need_tf=True)
-    nblocks_per_row = np.diff(row_off)
-    blk_row = np.repeat(
-        np.arange(rb.num_rows, dtype=np.int64), nblocks_per_row
-    )
-    per_row_posts = np.zeros(rb.num_rows + 1, dtype=np.int64)
-    np.add.at(per_row_posts, blk_row + 1, cnt)
-    post_off = np.cumsum(per_row_posts)
-    # positions: one ragged batched decode of every valid row's
-    # payload, then absolute positions by segmented cumsum with a
-    # reset at each posting start (the stored +1-shift delta form)
-    ploffs = pls.offsets.to_numpy().astype(np.int64)
-    prow_off = ploffs - ploffs[0]
-    pbl = pls.flatten()
-    if len(pbl) == 0:
-        return
-    pws = pbl.field("pos_bits").to_numpy().astype(np.int64)
-    nps = pbl.field("n_pos").to_numpy().astype(np.int64)
-    pdata, poffs = binary_np(pbl.field("positions"))
-    gvals = decode_blocks_ragged(pws, nps, pdata, poffs)
-    # occurrences per row (valid rows only appear in the flatten)
-    npb_per_row = np.diff(prow_off) * valid
-    pblk_row = np.repeat(
-        np.arange(rb.num_rows, dtype=np.int64), npb_per_row
-    )
-    per_row_occ = np.zeros(rb.num_rows + 1, dtype=np.int64)
-    np.add.at(per_row_occ, pblk_row + 1, nps)
-    occ_off = np.cumsum(per_row_occ)
-    # absolute positions: cumsum with reset at posting starts. The
-    # flattened occurrence stream covers VALID rows only, so the
-    # posting tfs must be filtered the same way before cumsum.
-    vrows = np.flatnonzero(valid)
-    tf_valid = np.concatenate(
-        [tfs[post_off[r] : post_off[r + 1]] for r in vrows]
-    ) if len(vrows) else np.zeros(0, np.int64)
-    a2 = gvals.copy()
-    pstarts = np.concatenate([[0], np.cumsum(tf_valid)])[:-1]
-    pstarts = pstarts[tf_valid > 0]
-    a2[pstarts] -= 1  # undo the +1 posting-start shift
-    cacc = np.cumsum(a2)
-    base = cacc[pstarts] - a2[pstarts]
-    flat_abs = cacc - np.repeat(base, tf_valid[tf_valid > 0])
-    sids = rb.column(names.index("split_id")).to_pylist()
-    terms = rb.column(names.index("term")).to_pylist()
-    dfreqs = rb.column(names.index("doc_freq")).to_pylist()
-    for r in vrows:
-        a, b = int(post_off[r]), int(post_off[r + 1])
-        oa, ob = int(occ_off[r]), int(occ_off[r + 1])
-        d = docids[a:b]
-        t = tfs[a:b]
-        g = np.repeat(d, t) * _PHRASE_SHIFT + flat_abs[oa:ob]
-        acc.setdefault(sids[r], {})[terms[r]] = g
-        dfs.setdefault(sids[r], {})[terms[r]] = int(dfreqs[r])
 
 
 def _phrase_freqs(
@@ -2342,81 +2116,6 @@ def _phrase_topk_pruned(
     return ad[o], asc[o]
 
 
-def _make_phrase_kernel(
-    ordered: list[str],
-    uniq: list[str],
-    slop: int,
-    n_docs_by_split: dict[str, int],
-    index_dir: str,
-    quantize: bool,
-    scoring: bool = True,
-):
-    """mapInPandas kernel over a split's phrase-term postings rows ->
-    (split_id, docid, pf, idf_sum) for docs with phrase_freq > 0.
-
-    The whole split's matching is ONE vectorized pass: each term's
-    (docid, position) pairs become sorted global coordinates
-    ``docid * 2^32 + pos``; the greedy ordered-within-slop rule
-    (functions/phrase.py contract) runs simultaneously for every candidate
-    start via searchsorted, and a cross-doc jump can never pass the stretch
-    check because doc boundaries are 2^32 apart. Equivalent to running
-    phrase_freq per doc, without per-doc Python."""
-
-    n_terms = len(ordered)
-    field = _term_field(ordered[0]) if ordered else ""
-
-    def kernel(batches):
-        try:
-            pa.set_cpu_count(1)
-            pa.set_io_thread_count(1)
-        except Exception:  # noqa: BLE001
-            pass
-        acc: dict[str, dict[str, tuple]] = {}
-        dfs: dict[str, dict[str, int]] = {}
-        for rb in batches:
-            _accumulate_phrase_coords(rb, acc, dfs)
-        out = []
-        for sid, by_term in acc.items():
-            if any(u not in by_term for u in uniq):
-                continue
-            n = n_docs_by_split.get(sid)
-            if n is None:
-                continue
-            idf_sum = float(
-                sum(
-                    np.log(1.0 + (n - dfs[sid][t] + 0.5) / (dfs[sid][t] + 0.5))
-                    for t in ordered
-                )
-            )
-            udoc, pf = _phrase_freqs(by_term, ordered, slop)
-            if len(udoc) == 0:
-                continue
-            out.append(
-                pa.RecordBatch.from_arrays(
-                    [
-                        pa.array([sid] * len(udoc), type=pa.string()),
-                        pa.array(udoc, type=pa.int64()),
-                        pa.array(pf.astype(np.int64), type=pa.int64()),
-                        pa.array(
-                            np.full(len(udoc), idf_sum), type=pa.float64()
-                        ),
-                        # scoring opt-out: phrase membership needs positions
-                        # but never the fieldnorms
-                        pa.array(
-                            _norms_for(index_dir, sid, quantize, udoc, field)
-                            if scoring
-                            else np.zeros(len(udoc)),
-                            type=pa.float64(),
-                        ),
-                    ],
-                    names=["split_id", "docid", "pf", "idf_sum", "dl"],
-                )
-            )
-        yield from out
-
-    return kernel
-
-
 def _make_phrase_fb_kernel(
     toks: list[str],
     slop: int,
@@ -2586,7 +2285,6 @@ class Searcher:
         # phrase queries then fall back to the AND+verify approximation
         self.record = icfg.get("record", "freq")
         self.quantize_norms = quantize_norms
-        self._split_ids: list[str] = []  # set by matching(); scopes phrase scans
         # docstore column names are normalized at build time
         self.fast_fields = {
             self.ts_field: "ts",
@@ -2692,19 +2390,10 @@ class Searcher:
         return F.col(col) == value
 
     # ---- term universe --------------------------------------------------
-    def _collect_text_terms(
-        self, node: Node, include_phrases: bool = True,
-        skip_must_not: bool = False,
-    ) -> list[str]:
-        """STORAGE terms (namespaced for extra text fields) feeding the
-        scored-terms table. Multi-token phrases are excluded when the
-        positions path will handle them (their postings would be decoded
-        twice otherwise); single-token phrases degrade to term queries and
-        always stay in. ``skip_must_not`` collects only terms appearing in
-        a POSITIVE context — must_not-only terms are anti-join membership
-        tests whose scores are discarded, so their postings take the
-        docids-only decode (no tf unpack, no fieldnorms — the
-        collector.rs:413-421 opt-out applied per-clause)."""
+    def _collect_text_terms(self, node: Node) -> list[str]:
+        """STORAGE terms (namespaced for extra text fields) of every text
+        term, term set and phrase in the query: the snippet highlighter's
+        terms."""
         out: list[str] = []
 
         def walk(n: Node) -> None:
@@ -2715,9 +2404,7 @@ class Searcher:
             elif isinstance(n, Phrase):
                 pre = self._ns_prefix(n.field)
                 if pre is not None:
-                    toks = self._tok(n.text)
-                    if include_phrases or len(toks) <= 1:
-                        out.extend(pre + t for t in toks)
+                    out.extend(pre + t for t in self._tok(n.text))
             elif isinstance(n, TermSet):
                 pre = self._ns_prefix(n.field)
                 if pre is not None:
@@ -2726,10 +2413,7 @@ class Searcher:
             elif isinstance(n, Boost):
                 walk(n.child)
             elif isinstance(n, Bool):
-                kids = n.must + n.should
-                if not skip_must_not:
-                    kids = kids + n.must_not
-                for c in kids:
+                for c in n.must + n.should + n.must_not:
                     walk(c)
 
         walk(node)
@@ -2748,7 +2432,7 @@ class Searcher:
         return None
 
     def _avgdl_map(self, split_ids: list[str]) -> dict[tuple[str, str], float]:
-        """(split_id, field) -> avgdl for the scorer kernels ('' = default)."""
+        """(split_id, field) -> avgdl for the BM25 scorers ('' = default)."""
         out: dict[tuple[str, str], float] = {}
         sset = set(split_ids)
         for sid, s in self.reader.stats_map().items():
@@ -2760,89 +2444,6 @@ class Searcher:
             for f_, tot in ftt.items():
                 out[(sid, f_)] = tot / n
         return out
-
-    # ---- scored term table ----------------------------------------------
-    def _score_decoded(self, decoded: DataFrame) -> DataFrame:
-        """(split_id, term, doc_freq, docid, tf, dl, avgdl) rows ->
-        per-posting BM25 contributions: the decode kernel already attached
-        |d| and the per-(split, field) avgdl from executor-side caches, so
-        this is ONE broadcast stats join (n_docs for idf) plus pure column
-        arithmetic (whole-stage codegen) — no docstore scan, no shuffle."""
-        stats = F.broadcast(self.reader.split_stats().select("split_id", "n_docs"))
-        j = decoded.join(stats, "split_id")
-        idf = F.log(
-            F.lit(1.0)
-            + (F.col("n_docs") - F.col("doc_freq") + F.lit(0.5))
-            / (F.col("doc_freq") + F.lit(0.5))
-        )
-        tf = F.col("tf").cast("double")
-        tf_norm = tf * F.lit(BM25_K1 + 1.0) / (
-            tf
-            + F.lit(BM25_K1)
-            * (
-                F.lit(1.0 - BM25_B)
-                + F.lit(BM25_B) * F.col("dl") / F.col("avgdl")
-            )
-        )
-        return j.select(
-            "term",
-            "split_id",
-            "docid",
-            (idf * tf_norm).alias("score"),
-        )
-
-    def scored_terms(
-        self, terms: list[str], split_ids: list[str]
-    ) -> DataFrame:
-        """(term, split_id, docid, score) for every query term — ONE postings
-        scan, decode, one norms join, pure-expression BM25."""
-        spark = self.reader.spark
-        if not terms:
-            return spark.createDataFrame(
-                [], "term string, split_id string, docid long, score double"
-            )
-        if not self.scoring:
-            return self.matched_zero_terms(terms, split_ids)
-        post = self.reader.postings().filter(
-            F.col("term").isin(terms) & F.col("split_id").isin(split_ids)
-        ).select("split_id", "term", "doc_freq", "blocks")
-        # ^ explicit projection: the positions column must stay pruned out of
-        # the parquet scan on the general plan's term path
-        decoded = post.mapInArrow(
-            _versioned(
-                self.reader,
-                split_ids,
-                _make_decode_postings_rows_arrow(
-                    self.reader.index_dir,
-                    self.quantize_norms,
-                    self._avgdl_map(split_ids),
-                ),
-            ),
-            DECODED_SCHEMA,
-        )
-        return self._score_decoded(decoded)
-
-    def matched_zero_terms(
-        self, terms: list[str], split_ids: list[str]
-    ) -> DataFrame:
-        """Docids-only term membership: no tf unpack, no fieldnorm cache,
-        no avgdl map, no split-stats broadcast join — matches stay score-0
-        (collector.rs:413-421 scoring opt-out). Used whole-query when
-        ``scoring=False`` and per-clause for must_not-only terms."""
-        spark = self.reader.spark
-        if not terms:
-            return spark.createDataFrame(
-                [], "term string, split_id string, docid long, score double"
-            )
-        post = self.reader.postings().filter(
-            F.col("term").isin(terms) & F.col("split_id").isin(split_ids)
-        ).select("split_id", "term", "blocks")
-        matched = post.mapInArrow(
-            _make_decode_postings_docids_rows(), MATCHED_SCHEMA
-        )
-        return matched.select(
-            "term", "split_id", "docid", F.lit(0.0).alias("score")
-        )
 
     # ---- tag pruning (quickwit-doc-mapper/src/tag_pruning.rs analog) -----
     def extract_tags(self, node: Node) -> set[str] | None:
@@ -3030,11 +2631,10 @@ class Searcher:
         ts_bounds: tuple | None = None,
     ) -> DataFrame:
         """Every matching (split_id, docid) from ONE kernel pass per split —
-        the unscored feeder for aggregations and search-stream exports.
-        Replaces the general plan's per-term join tree + per-matching-doc
-        groupBy exchange with one kernel pass over the query terms' postings;
-        fieldnorm reads and BM25 arithmetic are skipped (aggs/export buckets
-        never consume scores — the reference collector's scoring opt-out)."""
+        the unscored relation ``matching()`` builds under the scoring
+        opt-out (aggregation and export joins, deletes) and for must_not
+        clause groups. Fieldnorm reads and BM25 arithmetic are skipped
+        (the reference collector's scoring opt-out)."""
         return self._leaf_kernel_df(
             spec,
             split_ids,
@@ -3350,7 +2950,11 @@ class Searcher:
         start_ts: str | None = None,
         end_ts: str | None = None,
     ) -> DataFrame:
-        """AST -> DataFrame(split_id, docid, score).
+        """AST -> DataFrame(split_id, docid, score) of EVERY match, untrimmed
+        (score 0 under ``scoring=False``). The leaf kernel is the only
+        scorer: a query that compiles is one kernel relation, and any other
+        query composes kernel relations with the docstore atoms the kernel
+        cannot evaluate (``_eval``).
 
         Config-generation routing: splits built under different doc-mapper
         configs (schema evolution via Manifest.update_index_config) are
@@ -3396,102 +3000,106 @@ class Searcher:
         start_ts: str | None = None,
         end_ts: str | None = None,
     ) -> DataFrame:
-        """matching() body for splits sharing ONE config generation."""
-        self._split_ids = split_ids  # phrase path scopes its postings scan
-        # phrase tokens stay OUT of the scored table only when the positions
-        # path will actually handle them — which also requires every pruned
-        # split to store positions (a mixed-source merge degrades)
-        positions_path = self.record == "position" and self._splits_have_positions()
-        terms = self._collect_text_terms(node, include_phrases=not positions_path)
-        self._pos_terms: set = set(terms)
-        self._neg_terms: set = set()
-        self._neg_scored = None
-        if not self.scoring:
-            scored = self.scored_terms(terms, split_ids)  # docids-only, 1 scan
-        else:
-            pos = self._collect_text_terms(
-                node, include_phrases=not positions_path, skip_must_not=True
+        """matching() body for splits sharing ONE config generation. A tree
+        that compiles (``leaf_plan``) is one leaf-kernel relation with the
+        window as ``ts_bounds``; any other tree is evaluated by ``_eval``
+        over the window-filtered docstore, then semi-open [start, end)
+        checked per doc (filters.rs:26-107; manifest pruning already
+        removed fully-outside splits)."""
+        allow_phrase = len(self._position_splits(split_ids)) == len(split_ids)
+        spec = self.leaf_plan(node, allow_phrase=allow_phrase)
+        if spec is not None:
+            return self._leaf_relation(
+                spec, split_ids, _ts_bounds(self.reader.spark, start_ts, end_ts)
             )
-            # must_not-ONLY terms are pure membership tests (their scores
-            # are discarded by the anti-join): decode their postings
-            # docids-only — `NOT <stopword>` must never unpack millions of
-            # tfs + fieldnorms. They live in a SEPARATE relation picked per
-            # must_not clause in _bool_tail (a union here would make every
-            # term filter expand both branches: two extra no-op scans +
-            # python workers per query).
-            neg_only = sorted(set(terms) - set(pos))
-            self._pos_terms = set(pos)
-            self._neg_terms = set(neg_only)
-            scored = self.scored_terms(pos, split_ids)
-            if neg_only:
-                self._neg_scored = self.matched_zero_terms(
-                    neg_only, split_ids
-                )
         docs = self.reader.docstore().filter(F.col("split_id").isin(split_ids))
         if start_ts is not None:
             docs = docs.filter(F.col("ts") >= F.lit(start_ts).cast("timestamp"))
         if end_ts is not None:
             docs = docs.filter(F.col("ts") < F.lit(end_ts).cast("timestamp"))
-        base = self._eval(node, scored, docs)
+        base = self._eval(node, split_ids, allow_phrase, docs)
         if start_ts is not None or end_ts is not None:
-            # semi-open [start, end) per-doc check (filters.rs:26-107);
-            # manifest pruning already removed fully-outside splits.
             base = base.join(
                 docs.select("split_id", "docid"), ["split_id", "docid"], "inner"
             )
         return base
+
+    def _position_splits(self, split_ids: list[str]) -> list[str]:
+        """The splits whose postings store positions under this config: a
+        phrase compiles onto the leaf kernel only over these (a merge of
+        mixed sources writes positions-less terms, merge.py)."""
+        if self.record != "position":
+            return []
+        stats = self.reader.stats_map()
+        return [
+            sid
+            for sid in split_ids
+            if stats.get(sid, {}).get("record", "freq") == "position"
+        ]
+
+    def _leaf_relation(
+        self,
+        spec: dict,
+        split_ids: list[str],
+        ts_bounds: tuple | None = None,
+        scored: bool = True,
+    ) -> DataFrame:
+        """(split_id, docid, score) of EVERY match of a compiled spec: one
+        untrimmed leaf-kernel relation, BM25-scored by the kernel — or
+        docids at score 0 under the scoring opt-out (``scoring=False``, and
+        must_not clauses, whose scores an anti-join discards)."""
+        if self.scoring and scored:
+            return self._leaf_kernel_df(
+                spec, split_ids, 0, ts_bounds=ts_bounds, emit="scored"
+            )
+        return self.leaf_matching(spec, split_ids, ts_bounds).select(
+            "split_id", "docid", F.lit(0.0).alias("score")
+        )
 
     def _zero(self, docs: DataFrame) -> DataFrame:
         return docs.select(
             "split_id", "docid", F.lit(0.0).alias("score")
         )
 
-    def _eval(self, node: Node, scored: DataFrame, docs: DataFrame) -> DataFrame:
-        if isinstance(node, MatchAll):
-            return self._zero(docs)
+    def _eval(
+        self,
+        node: Node,
+        split_ids: list[str],
+        allow_phrase: bool,
+        docs: DataFrame,
+    ) -> DataFrame:
+        """General plan: a node that compiles is one leaf-kernel relation;
+        the rest are the atoms only the docstore answers (tag, fast-field,
+        ip, struct and JSON-path terms; ranges the kernel bails on; fields
+        of a newer config generation), positions-less phrases, and the
+        boolean glue over them."""
+        spec = self.leaf_plan(node, allow_phrase=allow_phrase)
+        if spec is not None:
+            return self._leaf_relation(spec, split_ids)
         if isinstance(node, Boost):
-            child = self._eval(node.child, scored, docs)
+            child = self._eval(node.child, split_ids, allow_phrase, docs)
             return child.withColumn("score", F.col("score") * F.lit(node.factor))
         if isinstance(node, Term):
-            return self._eval_term(node, scored, docs)
+            return self._eval_term(node, docs)
         if isinstance(node, TermSet):
-            return self._eval_termset(node, scored, docs)
+            return self._eval_termset(node, docs)
         if isinstance(node, Phrase):
-            return self._eval_phrase(node, scored, docs)
+            return self._eval_phrase(node, split_ids, docs)
         if isinstance(node, Range):
             return self._eval_range(node, docs)
         if isinstance(node, Bool):
-            return self._eval_bool(node, scored, docs)
+            return self._eval_bool(node, split_ids, allow_phrase, docs)
         raise ValueError(f"unsupported node {node!r}")
 
-    def _eval_term(self, node: Term, scored: DataFrame, docs: DataFrame) -> DataFrame:
-        pre = self._ns_prefix(node.field)
-        if pre is not None:
-            toks = (
-                [node.value] if node.pre_analyzed else self._tok(node.value)
-            )
-            if not toks:
-                return self._zero(docs).limit(0)
-            if len(toks) == 1:
-                return scored.filter(F.col("term") == pre + toks[0]).select(
-                    "split_id", "docid", "score"
-                )
-            # multi-token value => implicit AND of its tokens; mark them
-            # pre_analyzed so the recursion doesn't re-stem analyzer output
-            return self._eval_bool(
-                Bool(must=[Term(node.field, t, pre_analyzed=True) for t in toks]),
-                scored,
-                docs,
-            )
+    def _eval_term(self, node: Term, docs: DataFrame) -> DataFrame:
+        """A term on a non-text field (text terms always compile)."""
         if node.field in self._lenient_fields:
             # text field added by a NEWER config generation: this
             # generation's splits predate it — zero matches, not an error
             return self._zero(docs).limit(0)
         if node.field == self.tag_field:
             # raw-tokenizer keyword column: exact match on the docstore
-            return docs.filter(F.col("tag") == node.value).select(
-                "split_id", "docid", F.lit(0.0).alias("score")
-            )
+            return self._zero(docs.filter(F.col("tag") == node.value))
         if "." in node.field:
             root, path = node.field.split(".", 1)
             col = self.fast_fields.get(root, root)
@@ -3500,33 +3108,29 @@ class Searcher:
                 # mapped `object` field (mapping_tree.rs Object node): the
                 # child is a REAL typed column inside a struct — direct
                 # comparison, canonical string rendering for numerics
-                return docs.filter(
-                    F.col(f"{col}.{path}").cast("string") == F.lit(node.value)
-                ).select("split_id", "docid", F.lit(0.0).alias("score"))
+                return self._zero(
+                    docs.filter(
+                        F.col(f"{col}.{path}").cast("string") == F.lit(node.value)
+                    )
+                )
             if col in docs.columns:
                 # JSON-path term `field.a.b:v` (doc_mapper.rs:262-291): the
                 # root is a stored JSON string column; string comparison on
                 # the extracted scalar also matches numbers by canonical
                 # rendering
-                return docs.filter(
-                    F.get_json_object(F.col(col), f"$.{path}") == F.lit(node.value)
-                ).select("split_id", "docid", F.lit(0.0).alias("score"))
+                return self._zero(
+                    docs.filter(
+                        F.get_json_object(F.col(col), f"$.{path}")
+                        == F.lit(node.value)
+                    )
+                )
             raise ValueError(f"unknown json field {root!r}")
-        return docs.filter(
-            self._ff_predicate(docs, node.field, node.value)
-        ).select("split_id", "docid", F.lit(0.0).alias("score"))
+        return self._zero(
+            docs.filter(self._ff_predicate(docs, node.field, node.value))
+        )
 
-    def _eval_termset(
-        self, node: TermSet, scored: DataFrame, docs: DataFrame
-    ) -> DataFrame:
-        pre = self._ns_prefix(node.field)
-        if pre is not None:
-            toks = sorted({pre + t for v in node.values for t in self._tok(v)})
-            return (
-                scored.filter(F.col("term").isin(toks))
-                .groupBy("split_id", "docid")
-                .agg(F.sum("score").alias("score"))
-            )
+    def _eval_termset(self, node: TermSet, docs: DataFrame) -> DataFrame:
+        """A term set on a non-text field (text term sets always compile)."""
         if node.field in self._lenient_fields:
             return self._zero(docs).limit(0)
         if node.field == self.tag_field:
@@ -3538,197 +3142,83 @@ class Searcher:
                 cond = p if cond is None else (cond | p)
             if cond is None:
                 return self._zero(docs).limit(0)
-        return docs.filter(cond).select(
-            "split_id", "docid", F.lit(0.0).alias("score")
-        )
+        return self._zero(docs.filter(cond))
 
     def _eval_phrase(
-        self, node: Phrase, scored: DataFrame, docs: DataFrame
+        self, node: Phrase, split_ids: list[str], docs: DataFrame
     ) -> DataFrame:
+        """A phrase the kernel cannot evaluate over every split. Per-split
+        routing (the reference builds each LEAF query against that split's
+        own schema, doc_mapper.rs:85-93): splits that store positions take
+        the kernel's phrase node, positions-less splits (record=freq, or a
+        merge of mixed sources) the docstore re-analysis fallback, and the
+        two partial results union. Both score true phrase BM25 per split,
+        so rank identity holds across the union."""
         pre = self._ns_prefix(node.field)
         if pre is None:
             if node.field in self._lenient_fields:
                 return self._zero(docs).limit(0)
             raise ValueError(f"phrase queries require a text field, got {node.field!r}")
         toks = self._tok(node.text)
-        if not toks:
-            return self._zero(docs).limit(0)
-        if len(toks) == 1:
-            return self._eval_term(Term(node.field, toks[0]), scored, docs)
-        # per-split routing (the reference builds each LEAF query against
-        # that split's own schema, doc_mapper.rs:85-93): splits that store
-        # positions take the vectorized positions kernel, positions-less
-        # splits (e.g. a merge of mixed sources) take the regex-verify
-        # fallback, and the two partial results union. Scoring is per-split
-        # in both paths, so rank-identity within each split is preserved —
-        # the old whole-query fallback paid a docstore text scan on splits
-        # with perfectly good positions.
-        if self.record == "position":
-            stats = self.reader.stats_map()
-            pos_sids = [
-                sid
-                for sid in self._split_ids
-                if stats.get(sid, {}).get("record", "freq") == "position"
-            ]
-            fb_sids = [
-                sid for sid in self._split_ids if sid not in set(pos_sids)
-            ]
-            if pos_sids and not fb_sids:
-                return self._eval_phrase_positions(node, toks, pre)
-            if pos_sids and fb_sids:
-                return self._eval_phrase_positions(
-                    node, toks, pre, split_ids=pos_sids
-                ).unionByName(
-                    self._eval_phrase_fallback(
-                        node, toks, scored, docs, split_ids=fb_sids
-                    )
-                )
-        return self._eval_phrase_fallback(node, toks, scored, docs)
-
-    def _splits_have_positions(self) -> bool:
-        """True iff EVERY pruned split stores positions — a merge of mixed
-        sources writes positions-less terms (merge.py), and the whole query
-        must then take the fallback rather than decode null payloads."""
-        stats = self.reader.stats_map()
-        return all(
-            stats.get(sid, {}).get("record", "freq") == "position"
-            for sid in self._split_ids
-        )
-
-    def _eval_phrase_positions(
-        self,
-        node: Phrase,
-        toks: list[str],
-        pre: str = "",
-        split_ids: list[str] | None = None,
-    ) -> DataFrame:
-        """True phrase scoring from stored positions (``record: position``).
-
-        tantivy scores a phrase like a single term whose tf is the phrase
-        frequency, with idf summed over the phrase's terms
-        (tantivy Bm25Weight::for_terms; PhraseQuery's fieldnorm-normalized
-        phrase_count). Plan: shuffle ONLY the phrase terms' still-compressed
-        postings rows to one task per split (a handful of rows, ~2 bytes per
-        posting), run the vectorized split-local matcher, then one norms
-        join + broadcast stats join for the BM25 arithmetic. Work per task
-        is bounded by one split's phrase-term postings — the same slice a
-        term query touches — so the plan survives scale (unlike the old
-        full-docstore regex verify)."""
-        if split_ids is None:
-            split_ids = self._split_ids
-        ns_toks = [pre + t for t in toks]
-        uniq = sorted(set(ns_toks))
-        stats_map = self.reader.stats_map()
-        n_docs_by_split = {
-            sid: s["num_docs"] for sid, s in stats_map.items() if sid in set(split_ids)
-        }
-        post = self.reader.postings().filter(
-            F.col("term").isin(uniq) & F.col("split_id").isin(split_ids)
-        ).select("split_id", "term", "doc_freq", "blocks", "pos_blocks")
-        pf_df = post.repartition("split_id").mapInArrow(
-            _versioned(
-                self.reader,
-                split_ids,
-                _make_phrase_kernel(
-                    ns_toks,
-                    uniq,
-                    node.slop,
-                    n_docs_by_split,
-                    self.reader.index_dir,
-                    self.quantize_norms,
-                    self.scoring,
-                ),
-            ),
-            PHRASE_PF_SCHEMA,
-        )
-        if not self.scoring:
-            return pf_df.select(
-                "split_id", "docid", F.lit(0.0).alias("score")
-            )
-
-        # per-(split, field) avgdl as a tiny broadcast relation. A split
-        # with no docs carrying this field has no avgdl entry — legal, and
-        # it can't produce matches; if it somehow DOES (stats/manifest
-        # inconsistency), fail loudly instead of scoring with a default
-        # (the kernels at :390/:562 raise KeyError for the same condition).
-        amap = self._avgdl_map(split_ids)
-        fld = pre[:-1] if pre else ""
-        avg_rows = [
-            (sid, amap[(sid, fld)]) for sid in split_ids if (sid, fld) in amap
-        ]
-        avg_df = F.broadcast(
-            local_rows_df(
-                self.reader.spark, avg_rows, "split_id string, avgdl double"
-            )
-        )
-        pf = F.col("pf").cast("double")
-        tf_norm = pf * F.lit(BM25_K1 + 1.0) / (
-            pf
-            + F.lit(BM25_K1)
-            * (F.lit(1.0 - BM25_B) + F.lit(BM25_B) * F.col("dl") / F.col("avgdl"))
-        )
-        return (
-            pf_df.join(avg_df, "split_id", "left")
-            .withColumn(
-                "avgdl",
-                F.when(F.col("avgdl").isNotNull(), F.col("avgdl")).otherwise(
-                    F.raise_error(
-                        F.concat(
-                            F.lit("missing avgdl for split "),
-                            F.col("split_id"),
-                            F.lit(f" field {fld!r} — stats inconsistency"),
-                        )
-                    )
-                ),
-            )
-        ).select(
-            "split_id",
-            "docid",
-            (F.col("idf_sum") * tf_norm).alias("score"),
-        )
+        spec = self.leaf_plan(node, allow_phrase=True)
+        if len(toks) < 2:
+            # empty, or a single-token phrase == term: no positions needed
+            return self._leaf_relation(spec, split_ids)
+        pos = set(self._position_splits(split_ids))
+        fb_sids = [sid for sid in split_ids if sid not in pos]
+        out = self._eval_phrase_fallback(node, toks, fb_sids, docs)
+        if pos:
+            out = self._leaf_relation(
+                spec, [sid for sid in split_ids if sid in pos]
+            ).unionByName(out)
+        return out
 
     def _eval_phrase_fallback(
         self,
         node: Phrase,
         toks: list[str],
-        scored: DataFrame,
+        split_ids: list[str],
         docs: DataFrame,
-        split_ids: list[str] | None = None,
     ) -> DataFrame:
         """No positions stored (record=freq): candidates = AND of the
-        phrase's tokens (postings intersection — bounded like a term
-        query), then the TRUE phrase frequency is recomputed executor-side
-        over ONLY the candidate rows' stored text (Arrow-batched kernel
-        running the same greedy matcher as the positions path) and BM25
-        scored with tf = pf, idf summed over the token sequence — so
-        positions-less splits are RANK-IDENTICAL to positions-bearing ones
-        and mixed-record routing (_eval_phrase) composes soundly. tantivy
-        would reject a phrase query on a positions-less field
-        (phrase_query.rs record check); reproducing the exact scores from
-        the docstore is strictly more useful. ``split_ids`` scopes the
-        fallback to the positions-less splits of a mixed index."""
-        eff_sids = split_ids if split_ids is not None else self._split_ids
-        if split_ids is not None:
-            flt = F.col("split_id").isin(split_ids)
-            scored = scored.filter(flt)
-            docs = docs.filter(flt)
-        cand = self._eval_bool(
-            Bool(must=[Term(node.field, t) for t in toks]), scored, docs
+        phrase's tokens (one docids-only kernel relation — bounded like a
+        term query), then the TRUE phrase frequency is recomputed
+        executor-side over ONLY the candidate rows' stored text
+        (Arrow-batched kernel running the same greedy matcher as the
+        positions path) and BM25 scored with tf = pf, idf summed over the
+        token sequence — so positions-less splits are RANK-IDENTICAL to
+        positions-bearing ones and mixed-record routing (_eval_phrase)
+        composes soundly. tantivy would reject a phrase query on a
+        positions-less field (phrase_query.rs record check); reproducing
+        the exact scores from the docstore is strictly more useful.
+        ``split_ids``: the positions-less splits."""
+        pre = self._ns_prefix(node.field) or ""
+        fld = pre[:-1] if pre else ""
+        ns_toks = [pre + t for t in toks]
+        cand = self._leaf_relation(
+            {
+                "op": "bool",
+                "must": [{"op": "term", "tok": t} for t in ns_toks],
+                "should": [],
+                "must_not": [],
+            },
+            split_ids,
+            scored=False,
         ).select("split_id", "docid")
         text_col = (
             node.field
             if node.field and node.field in self.extra_text_fields
             else "text"
         )
-        pre = self._ns_prefix(node.field) or ""
-        fld = pre[:-1] if pre else ""
-        cand_docs = docs.join(
-            cand, ["split_id", "docid"], "left_semi"
-        ).select("split_id", "docid", text_col)
+        cand_docs = (
+            docs.filter(F.col("split_id").isin(split_ids))
+            .join(cand, ["split_id", "docid"], "left_semi")
+            .select("split_id", "docid", text_col)
+        )
         pf_df = cand_docs.mapInPandas(
             _versioned(
                 self.reader,
-                eff_sids,
+                split_ids,
                 _make_phrase_fb_kernel(
                     toks,
                     node.slop,
@@ -3752,10 +3242,9 @@ class Searcher:
         # all lazy column arithmetic, no driver collect.
         from collections import Counter
 
-        ns_toks = [pre + t for t in toks]
         mult = Counter(ns_toks)
         meta = self.reader.postings().filter(
-            F.col("term").isin(sorted(mult)) & F.col("split_id").isin(eff_sids)
+            F.col("term").isin(sorted(mult)) & F.col("split_id").isin(split_ids)
         ).select("split_id", "term", "doc_freq")
         stats = F.broadcast(
             self.reader.split_stats().select("split_id", "n_docs")
@@ -3775,9 +3264,9 @@ class Searcher:
             .groupBy("split_id")
             .agg(F.sum(idf * mult_expr).alias("idf_sum"))
         )
-        amap = self._avgdl_map(eff_sids)
+        amap = self._avgdl_map(split_ids)
         avg_rows = [
-            (sid, amap[(sid, fld)]) for sid in eff_sids if (sid, fld) in amap
+            (sid, amap[(sid, fld)]) for sid in split_ids if (sid, fld) in amap
         ]
         avg_df = F.broadcast(
             local_rows_df(
@@ -3818,85 +3307,65 @@ class Searcher:
             cond = cond & ((c >= lo) if node.lo_inc else (c > lo))
         if hi is not None:
             cond = cond & ((c <= hi) if node.hi_inc else (c < hi))
-        return docs.filter(cond).select(
-            "split_id", "docid", F.lit(0.0).alias("score")
-        )
+        return self._zero(docs.filter(cond))
 
-    def _simple_token(self, node: Node) -> str | None:
-        """Single-token text Term (any text field, namespaced) — eligible
-        for the collapsed AND pass."""
-        if isinstance(node, Term):
-            pre = self._ns_prefix(node.field)
-            if pre is not None:
-                toks = (
-                    [node.value] if node.pre_analyzed else self._tok(node.value)
+    def _eval_bool(
+        self,
+        node: Bool,
+        split_ids: list[str],
+        allow_phrase: bool,
+        docs: DataFrame,
+    ) -> DataFrame:
+        """A Bool that does not compile as a whole. Its compilable children
+        evaluate together, per clause, as ONE kernel relation each: must as
+        a must bool, should as a should bool, must_not as a docids-only
+        should bool. The other children stay relational, and the clause
+        relations combine as boolean glue: must by a per-doc clause count,
+        should optional and score-additive, must_not by anti-join."""
+
+        def clause(children: list, group: str, scored: bool = True) -> list:
+            specs, rels = [], []
+            for c in children:
+                spec = self.leaf_plan(c, allow_phrase=allow_phrase)
+                if spec is None:
+                    rels.append(self._eval(c, split_ids, allow_phrase, docs))
+                else:
+                    specs.append(spec)
+            if specs:
+                grouped = {"op": "bool", "must": [], "should": [], "must_not": []}
+                grouped[group] = specs
+                rels.insert(
+                    0, self._leaf_relation(grouped, split_ids, scored=scored)
                 )
-                if len(toks) == 1:
-                    return pre + toks[0]
-        return None
+            return rels
 
-    def _eval_bool(self, node: Bool, scored: DataFrame, docs: DataFrame) -> DataFrame:
-        # fast path: AND of simple text terms collapses to ONE pass over the
-        # scored-terms table (filter isin + groupBy) instead of a self-union
-        # per term, which would re-decode the postings once per clause
-        simple = [self._simple_token(c) for c in node.must]
-        if (
-            node.must
-            and all(t is not None for t in simple)
-            and len(set(simple)) == len(simple)
-        ):
+        def union(rels: list) -> DataFrame:
+            out = rels[0]
+            for r in rels[1:]:
+                out = out.unionByName(r)
+            return out
+
+        must = clause(node.must, "must")
+        if must:
             base = (
-                scored.filter(F.col("term").isin(list(simple)))
+                union([r.withColumn("cl", F.lit(i)) for i, r in enumerate(must)])
                 .groupBy("split_id", "docid")
-                .agg(
-                    F.sum("score").alias("score"),
-                    F.count_distinct("term").alias("n_cl"),
-                )
-                .filter(F.col("n_cl") == len(simple))
-                .drop("n_cl")
-            )
-            return self._bool_tail(node, base, scored, docs)
-        parts = []
-        for i, child in enumerate(node.must):
-            parts.append(
-                self._eval(child, scored, docs).withColumn("cl", F.lit(i))
-            )
-        n_must = len(node.must)
-        if parts:
-            u = parts[0]
-            for p in parts[1:]:
-                u = u.unionByName(p)
-            base = (
-                u.groupBy("split_id", "docid")
                 .agg(
                     F.sum("score").alias("score"),
                     F.count_distinct("cl").alias("n_cl"),
                 )
-                .filter(F.col("n_cl") == n_must)
+                .filter(F.col("n_cl") == len(must))
                 .drop("n_cl")
             )
         elif node.should:
             base = None
         else:
             base = self._zero(docs)  # pure-negative query: NOT x over all docs
-        return self._bool_tail(node, base, scored, docs)
-
-    def _bool_tail(
-        self,
-        node: Bool,
-        base: DataFrame | None,
-        scored: DataFrame,
-        docs: DataFrame,
-    ) -> DataFrame:
-        """Apply should (optional, score-additive) and must_not (anti-join)
-        clauses to the must result."""
         if node.should:
-            sparts = [self._eval(c, scored, docs) for c in node.should]
-            su = sparts[0]
-            for p in sparts[1:]:
-                su = su.unionByName(p)
-            sdf = su.groupBy("split_id", "docid").agg(
-                F.sum("score").alias("s_score")
+            sdf = (
+                union(clause(node.should, "should"))
+                .groupBy("split_id", "docid")
+                .agg(F.sum("score").alias("s_score"))
             )
             if base is None:
                 base = sdf.select(
@@ -3912,21 +3381,10 @@ class Searcher:
                     )
                     .drop("s_score")
                 )
-        for child in node.must_not:
-            rel = scored
-            neg_scored = getattr(self, "_neg_scored", None)
-            if neg_scored is not None:
-                # route this clause to the relation(s) actually carrying its
-                # terms: neg-only clauses (the common `-term`) touch ONLY the
-                # docids-only relation; a clause mixing positive-context and
-                # neg-only terms needs both
-                ct = set(self._collect_text_terms(child))
-                if ct and ct <= self._neg_terms:
-                    rel = neg_scored
-                elif not (ct <= self._pos_terms):
-                    rel = scored.unionByName(neg_scored)
-            neg = self._eval(child, rel, docs).select("split_id", "docid")
-            base = base.join(neg, ["split_id", "docid"], "left_anti")
+        for neg in clause(node.must_not, "should", scored=False):
+            base = base.join(
+                neg.select("split_id", "docid"), ["split_id", "docid"], "left_anti"
+            )
         return base
 
 
@@ -4046,9 +3504,10 @@ def search(
     the pruning is sound); match-all (``*``) compiles too, as the split's
     docid universe at score 0 (tantivy's AllQuery under the same top-k
     collector). Everything else — a mixed-generation index, non-text term
-    fields, phrases without positions — uses the general relational plan.
-    ``leaf_topk=False`` forces the general plan (tests use it as the
-    reference).
+    fields, phrases without positions — uses the general plan
+    (``Searcher.matching``: untrimmed leaf-kernel relations glued to the
+    docstore atoms). ``leaf_topk=False`` forces the general plan (tests
+    use it as the reference).
 
     ``exclude_split_ids`` restricts the search away from known-bad splits —
     the plumbing behind search_with_failures (root.rs:203-217 analog).
@@ -4548,22 +4007,11 @@ def _leaf_gate(
         for sid in split_ids
     } - {latest_gen}:
         return None, None, None
-    allow_phrase = searcher.record == "position" and all(
-        smap.get(sid, {}).get("record", "freq") == "position"
-        for sid in split_ids
-    )
+    allow_phrase = len(searcher._position_splits(split_ids)) == len(split_ids)
     spec = searcher.leaf_plan(ast, allow_phrase=allow_phrase)
     if spec is None:
         return None, None, None
-    ts = None
-    if (
-        request.start_timestamp is not None
-        or request.end_timestamp is not None
-    ):
-        ts = (
-            _ts_micros(reader.spark, request.start_timestamp, is_start=True),
-            _ts_micros(reader.spark, request.end_timestamp, is_start=False),
-        )
+    ts = _ts_bounds(reader.spark, request.start_timestamp, request.end_timestamp)
     sort = None
     if request.sort_by_field not in (None, "_score"):
         scol = searcher.fast_fields.get(
@@ -4585,7 +4033,7 @@ def _required_range_atoms(
     to docstore column names: every match must satisfy each returned
     (col, lo, hi). ``must`` clauses are required regardless of siblings
     (should is optional/score-additive once a must exists — Lucene
-    semantics, `_eval_bool`/`_bool_tail`); a single-should bool is that
+    semantics, `_eval_bool`); a single-should bool is that
     child; must_not and multi-should contribute nothing. Exclusive bounds
     widen to inclusive, non-numeric bounds (timestamps, IPs) drop the
     atom — both directions are sound over-approximations for PRUNING
@@ -4768,30 +4216,6 @@ def _ts_desc_prune_splits(
     return split_ids
 
 
-def _matching_or_leaf(
-    reader: IndexReader,
-    searcher: "Searcher",
-    ast: Node,
-    split_ids: list[str],
-    request: SearchRequest,
-    leaf_match: bool | None = None,
-) -> DataFrame:
-    """(split_id, docid) of every matching doc — through the leaf-local
-    kernel when the query compiles (one pass per split, no join tree), the
-    general matching() plan otherwise. ``leaf_match=False`` forces the
-    general plan (differential tests pin both paths against each other)."""
-    if leaf_match is not False:
-        spec, ts, _ = _leaf_gate(reader, searcher, ast, split_ids, request)
-        if spec is not None:
-            return searcher.leaf_matching(spec, split_ids, ts)
-    return searcher.matching(
-        ast,
-        split_ids,
-        request.start_timestamp,
-        request.end_timestamp,
-    ).select("split_id", "docid")
-
-
 def _agg_universe(reader: IndexReader, split_ids: list[str]) -> DataFrame:
     """The pruned splits' full docstore scan — the split term-dictionary
     analog that ``terms``/``min_doc_count: 0`` fills zero-count buckets
@@ -4856,9 +4280,8 @@ def export_fast_field(
             return searcher.leaf_matching_fields(
                 spec, split_ids, ts, list(cols)
             ).select(*cols)
-    m = _matching_or_leaf(
-        reader, searcher, ast, split_ids, request,
-        leaf_match=leaf_match,
+    m = searcher.matching(
+        ast, split_ids, request.start_timestamp, request.end_timestamp
     )
     docs = reader.docstore().select("split_id", "docid", *cols)
     return m.join(docs, ["split_id", "docid"]).select(*cols)
@@ -5049,97 +4472,68 @@ def search_aggs(
         return run_agg_request(
             docs, aggs, field_map=fmap, universe=_agg_universe(reader, split_ids)
         )
+    results: dict = {}
+    rest = aggs
+    spec = None
+    if leaf_match is not False and isinstance(aggs, dict) and aggs:
+        spec, ts, _ = _leaf_gate(reader, searcher, ast, split_ids, request)
+    if spec is not None:
+        rest = {}
+        for name, aspec in aggs.items():
+            # deepest fast path first: a flat count-only bucket agg is
+            # computed as per-split PARTIAL buckets inside the kernel —
+            # |splits|·|buckets| rows leave Python
+            pb = partial_bucket_spec(name, aspec, field_map=fmap)
+            if (
+                pb is not None
+                and searcher.leaf_bucket_plan(pb[0], pb[1])
+                and (not pb[3] or searcher.leaf_metrics_plan(pb[3]) is not None)
+            ):
+                kind, col, params, metrics = pb
+                pdf = searcher.leaf_bucket_partials(
+                    spec, split_ids, ts, kind, col, params, metrics=metrics
+                )
+                results[name] = compile_one(
+                    name, aspec, fmap, universe=_agg_universe(reader, split_ids)
+                )(pdf)
+            else:
+                rest[name] = aspec
+        if not rest:
+            return results
+        # leaf-fields path for the remainder: the kernel gathers the
+        # request's columns split-locally alongside the match, so the
+        # docstore is never scanned or joined
+        try:
+            cols = collect_agg_fields(rest, field_map=fmap)
+        except ValueError:
+            cols = None  # malformed: the docstore path raises canonically
+        if cols is not None and searcher.leaf_fields_plan(cols):
+            docs = searcher.leaf_matching_fields(spec, split_ids, ts, cols)
+            results.update(
+                run_agg_request(
+                    docs,
+                    rest,
+                    field_map=fmap,
+                    universe=_agg_universe(reader, split_ids),
+                )
+            )
+            return results
+    docs = reader.docstore().filter(F.col("split_id").isin(split_ids))
     bounded = (
         request.start_timestamp is not None
         or request.end_timestamp is not None
     )
     if not (isinstance(ast, MatchAll) and not bounded):
-        if leaf_match is not False:
-            spec, ts, _ = _leaf_gate(
-                reader, searcher, ast, split_ids, request
-            )
-            if spec is not None and isinstance(aggs, dict) and aggs:
-                results: dict = {}
-                rest: dict = {}
-                for name, aspec in aggs.items():
-                    # deepest fast path first: a flat count-only bucket
-                    # agg is computed as per-split PARTIAL buckets inside
-                    # the kernel — |splits|·|buckets| rows leave Python
-                    pb = partial_bucket_spec(name, aspec, field_map=fmap)
-                    if (
-                        pb is not None
-                        and searcher.leaf_bucket_plan(pb[0], pb[1])
-                        and (
-                            not pb[3]
-                            or searcher.leaf_metrics_plan(pb[3]) is not None
-                        )
-                    ):
-                        kind, col, params, metrics = pb
-                        pdf = searcher.leaf_bucket_partials(
-                            spec,
-                            split_ids,
-                            ts,
-                            kind,
-                            col,
-                            params,
-                            metrics=metrics,
-                        )
-                        results[name] = compile_one(
-                            name,
-                            aspec,
-                            fmap,
-                            universe=_agg_universe(reader, split_ids),
-                        )(pdf)
-                    else:
-                        rest[name] = aspec
-                if not rest:
-                    return results
-                # leaf-fields path for the remainder: the kernel gathers
-                # the request's columns split-locally alongside the match,
-                # so the docstore is never scanned or joined
-                try:
-                    cols = collect_agg_fields(rest, field_map=fmap)
-                except ValueError:
-                    cols = None  # malformed: general path raises canonically
-                if cols is not None and searcher.leaf_fields_plan(cols):
-                    docs = searcher.leaf_matching_fields(
-                        spec, split_ids, ts, cols
-                    )
-                    results.update(
-                        run_agg_request(
-                            docs,
-                            rest,
-                            field_map=fmap,
-                            universe=_agg_universe(reader, split_ids),
-                        )
-                    )
-                    return results
-                m = _matching_or_leaf(
-                    reader, searcher, ast, split_ids, request
-                )
-                docs = reader.docstore().filter(
-                    F.col("split_id").isin(split_ids)
-                )
-                docs = docs.join(m, ["split_id", "docid"], "left_semi")
-                results.update(
-                    run_agg_request(
-                        docs,
-                        rest,
-                        field_map=fmap,
-                        universe=_agg_universe(reader, split_ids),
-                    )
-                )
-                return results
-        m = _matching_or_leaf(
-            reader, searcher, ast, split_ids, request, leaf_match=leaf_match
+        m = searcher.matching(
+            ast, split_ids, request.start_timestamp, request.end_timestamp
         )
-        docs = reader.docstore().filter(F.col("split_id").isin(split_ids))
         docs = docs.join(m, ["split_id", "docid"], "left_semi")
-    else:
-        docs = reader.docstore().filter(F.col("split_id").isin(split_ids))
-    return run_agg_request(
-        docs, aggs, field_map=fmap, universe=_agg_universe(reader, split_ids)
+    results.update(
+        run_agg_request(
+            docs, rest, field_map=fmap, universe=_agg_universe(reader, split_ids)
+        )
     )
+    return results
 
 
 def count_hits(

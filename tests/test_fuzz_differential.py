@@ -165,16 +165,34 @@ def canon(hits: list[tuple[str, int, float]]):
     return [sorted(g) for g in groups]
 
 
-def run_differential(reader, oracle, q, leaf_topk=None):
+def run_differential(reader, oracle, q, leaf_topk=None, tag=None):
+    """``tag`` runs ``lang:<tag> AND (q)`` instead: the tag atom only the
+    docstore answers forces the general plan, which evaluates the rest of
+    the tree as leaf-kernel clause relations. The tag atom scores 0, so
+    the expected hits are the oracle's hits for ``q`` on docs carrying
+    that tag, with the same scores."""
     res = search(
         reader,
-        SearchRequest(query=q, max_hits=FETCH_ALL, search_fields=("text",)),
+        SearchRequest(
+            query=q if tag is None else f"lang:{tag} AND ({q})",
+            max_hits=FETCH_ALL,
+            search_fields=("text",),
+        ),
         quantize_norms=True,
         fetch_fields=(),
         leaf_topk=leaf_topk,
     )
     engine = [(r["split_id"], r["docid"], r["score"]) for r in res.collect()]
     expected = oracle.search_query(q, k=FETCH_ALL, default_fields=("text",))
+    if tag is not None:
+        tagged = {
+            (r["split_id"], r["docid"])
+            for r in reader.docstore()
+            .filter(f"tag = '{tag}'")
+            .select("split_id", "docid")
+            .collect()
+        }
+        expected = [h for h in expected if (h[0], h[1]) in tagged]
 
     assert len(engine) == len(expected), (q, len(engine), len(expected))
     e_scores = {(s, d): x for s, d, x in engine}
@@ -192,12 +210,21 @@ def test_random_query_rank_matches_oracle(small_index, oracle, seed):
 
 @pytest.mark.parametrize("seed", range(700, 712))
 def test_random_query_general_plan_matches_oracle(small_index, oracle, seed):
-    """Same differential with leaf_topk=False: boolean trees of text terms
-    default to the leaf-local kernel, so this keeps the general
-    `_eval_bool` relational plan under fuzz for those shapes too."""
+    """Same differential with leaf_topk=False: the query runs through
+    Searcher.matching(), whose untrimmed scored kernel relation is ranked
+    by Spark instead of the per-split top-k and driver-side root merge."""
     run_differential(
         small_index, oracle, gen_query(seed, Vocab(oracle)), leaf_topk=False
     )
+
+
+@pytest.mark.parametrize("seed", range(900, 916))
+def test_random_query_under_tag_atom_matches_oracle(small_index, oracle, seed):
+    """General-plan glue over leaf-kernel relations: every generated query
+    under a `lang:<tag> AND (…)` conjunction, so its compilable clauses
+    run as kernel relations joined with the docstore tag atom."""
+    tag = "en" if seed % 2 == 0 else random.Random(seed).choice(["de", "fr", "es"])
+    run_differential(small_index, oracle, gen_query(seed, Vocab(oracle)), tag=tag)
 
 
 @pytest.fixture(scope="module")
@@ -403,6 +430,20 @@ def mixed_record_index(spark, pages_small, tmp_path_factory):
 def test_random_query_rank_matches_oracle_mixed_record(mixed_record_index, seed):
     oi = build_oracle(mixed_record_index)
     run_differential(mixed_record_index, oi, gen_query(seed, Vocab(oi)))
+
+
+@pytest.mark.parametrize(
+    "q", ['"w0 w1"', '"w0 w2"~1 OR w5', '"w1 w3"~2 -"w0 w1"']
+)
+def test_mixed_record_phrase_under_tag_atom_matches_oracle(
+    mixed_record_index, q
+):
+    """Phrases under a tag atom on the mixed-record index: the general
+    plan sends the positions splits' phrases to the kernel's phrase node
+    and the positions-less splits' phrases to the docstore fallback."""
+    run_differential(
+        mixed_record_index, build_oracle(mixed_record_index), q, tag="en"
+    )
 
 
 @pytest.mark.parametrize("seed", range(800, 815))

@@ -178,6 +178,38 @@ def test_delete_job_count_constant(spark, pages_small, tmp_path):
     assert jobs5 <= jobs2 + 3, (jobs2, jobs5)
 
 
+def test_delete_matches_are_one_kernel_relation(
+    spark, pages_small, tmp_path, monkeypatch
+):
+    """A compilable delete query gets its matches from ONE leaf-kernel
+    relation: the matching plan delete_by_query caches has no postings
+    FileScan (the kernel reads its splits' postings rows itself) and
+    exactly one MapInArrow."""
+    import io
+    import re
+    from contextlib import redirect_stdout
+
+    plans = []
+    orig = Searcher.matching
+
+    def spy(self, *args, **kwargs):
+        df = orig(self, *args, **kwargs)
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            df.explain("formatted")
+        plans.append(buf.getvalue())
+        return df
+
+    monkeypatch.setattr(Searcher, "matching", spy)
+    d = str(tmp_path / "delplan")
+    build_index(spark, pages_small, d, IndexConfig(index_id="pages", num_splits=3))
+    m = delete_by_query(spark, d, "w20")
+    assert len(m.rewritten_splits) == 3
+    assert len(plans) == 1
+    assert "postings" not in plans[0]
+    assert len(set(re.findall(r"\((\d+)\) MapInArrow", plans[0]))) == 1
+
+
 def test_delete_then_merge_docids_stay_sound(spark, pages_small, tmp_path):
     """ADVICE r01 regression: merging delete-rewritten splits (docid gaps)
     must re-base by docid ceiling — results stay correct and the codec

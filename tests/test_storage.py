@@ -112,6 +112,31 @@ def test_object_storage_write_parquet_single_object(tmp_path):
     assert rt.num_rows == 3
 
 
+def _empty_dirs(root: str) -> list[str]:
+    """Empty directories below ``root`` (the root itself excluded)."""
+    return [
+        d for d, dirs, files in os.walk(root)
+        if d != root and not dirs and not files
+    ]
+
+
+def test_dir_client_delete_prefix_leaves_no_empty_dirs(tmp_path):
+    """An object store has no directories: deleting a split's objects
+    removes its emptied split_id=<id>/ tree (up to the client root), and
+    a later PUT under the same prefix recreates it."""
+    st = ObjectStorage(DirObjectStoreClient(str(tmp_path)), str(tmp_path))
+    for sid in ("a", "b"):
+        st.write_parquet(f"docstore/split_id={sid}", pa.table({"docid": [0]}))
+    st.delete_prefix("docstore/split_id=a")
+    assert not os.path.exists(tmp_path / "docstore" / "split_id=a")
+    assert st.list("docstore/") == ["docstore/split_id=b/part-00000.zstd.parquet"]
+    assert _empty_dirs(str(tmp_path)) == []
+    st.delete_prefix("docstore/split_id=b")
+    assert _empty_dirs(str(tmp_path)) == [] and os.path.isdir(tmp_path)
+    st.write_parquet("docstore/split_id=a", pa.table({"docid": [0]}))
+    assert st.list("docstore/") == ["docstore/split_id=a/part-00000.zstd.parquet"]
+
+
 def test_local_storage_parity(tmp_path):
     """LocalStorage implements the same seam contract (put/get/list/
     delete_prefix) so callers are backend-agnostic."""
@@ -221,6 +246,9 @@ def test_merge_and_gc_on_object_store(spark, tmp_path, os_index):
     for sid in removed:
         assert st.list(f"postings/split_id={sid}") == []
         assert st.list(f"docstore/split_id={sid}") == []
+    # ...and no empty split_id=<id>/ directory is left behind for the
+    # docstore/postings listings to walk
+    assert _empty_dirs(os_index) == []
     # merged-to-one means corpus-global BM25 stats: results must equal a
     # clean ONE-split build (the merge-equivalence invariant, not the
     # pre-merge per-split scores — merging legitimately changes IDF)

@@ -7,8 +7,9 @@ Checks (each printed with PASS/FAIL):
    reads its splits' query-term postings itself (positions only for
    phrases), and the eager default merges the per-split partials
    driver-side (a local relation, no sort job);
-2. general plan: postings filters pushed to parquet, split-stats join is
-   a BroadcastHashJoin, no docstore scan;
+2. general plan (a query with a docstore-only atom): no postings scan,
+   one leaf-kernel relation per clause group, the atom a pushed docstore
+   filter;
 3. fetch phase: winners broadcast into the docstore scan, text column read
    ONLY in the fetch subtree;
 4. count / aggregation / export: scoring-free, join-free, shuffle-free
@@ -23,6 +24,7 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import shutil
 import sys
 from contextlib import redirect_stdout
@@ -90,22 +92,22 @@ def main() -> None:
     ]
     sections.append(("AND term query (eager default: driver-side root merge)", pe, checks_e))
 
-    # forced general plan (leaf_topk=False): per-term scored join tree —
-    # the path for non-text term fields, ranges the kernel can't compare
-    # exactly, and mixed-generation indexes
-    term_g = search(
-        reader,
-        SearchRequest(query="w0 w3", max_hits=10),
-        fetch_fields=(),
-        leaf_topk=False,
-    )
-    pg = plan_of(term_g)
+    # general plan: the tag atom only the docstore answers keeps the query
+    # off the leaf top-k path; its compilable clauses run as leaf-kernel
+    # relations, one per clause group (must `w3`, must_not `w7`), glued to
+    # the docstore atom by relational joins
+    gq = "lang:en AND w3 -w7"
+    pg = plan_of(search(reader, SearchRequest(query=gq, max_hits=10), fetch_fields=()))
     checks_g = [
-        ("general plan: split-stats join broadcast", "BroadcastHashJoin" in pg or "BroadcastExchange" in pg),
-        ("general plan: postings filter pushed", "PushedFilters" in pg),
-        ("general plan never reads the docstore", "docstore" not in pg),
+        ("general plan has no postings FileScan", "postings" not in pg),
+        ("one MapInArrow per clause group (must, must_not)",
+         len(set(re.findall(r"\((\d+)\) MapInArrow", pg))) == 2),
+        ("tag atom is a pushed docstore filter",
+         "docstore" in pg
+         and re.search(r"PushedFilters: \[[^\]]*EqualTo\(tag,en\)", pg) is not None),
+        ("must_not clause is an anti-join", "LeftAnti" in pg),
     ]
-    sections.append(("AND term query (forced general plan)", pg, checks_g))
+    sections.append((f"general plan: {gq} (kernel relations per clause group)", pg, checks_g))
 
     fetched = search(
         reader,
@@ -198,8 +200,6 @@ def main() -> None:
     ]
     sections.append(("count query (scoring opt-out)", p3, checks3))
 
-    import re
-
     # default path: the must_not clause is evaluated inside the leaf kernel
     # (numpy set difference) — no anti-join, no extra exchange
     neg = search(
@@ -213,27 +213,6 @@ def main() -> None:
          "pos_blocks" not in p3n and "docstore" not in p3n),
     ]
     sections.append(("NOT query (leaf-local kernel)", p3n, checks3n))
-
-    # forced general plan: per-clause scoring opt-out — the negated term
-    # decodes docids-only and exclusion is an anti-join
-    neg_g = search(
-        reader,
-        SearchRequest(query="w2 -w5", max_hits=10),
-        fetch_fields=(),
-        leaf_topk=False,
-    )
-    p3g = plan_of(neg_g)
-    checks3g = [
-        # must_not-only terms are membership tests: their decode kernel is
-        # the 3-arg docids-only one (split_id, term, blocks -> no doc_freq,
-        # no tf, no dl/avgdl), the per-clause collector.rs:413-421 opt-out
-        ("negated term decodes docids-only (3-arg kernel)",
-         re.search(r"kernel\(split_id#\d+, term#\d+, blocks#\d+\)", p3g)
-         is not None),
-        ("positive term still scored (dl/avgdl kernel)", "avgdl#" in p3g),
-        ("exclusion is an anti-join", "LeftAnti" in p3g),
-    ]
-    sections.append(("NOT query (forced general plan: per-clause opt-out)", p3g, checks3g))
 
     from quickwit_spark.operators.search import export_fast_field, search_aggs
 
