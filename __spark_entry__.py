@@ -383,9 +383,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # --- schema evolution (per-split config generations, r4) ---------------
     def mixed_record_phrase(s: SparkSession, d: str) -> DataFrame:
         # phrase over an honestly MIXED-record index (gen 0 record=freq, no
-        # position payloads on disk; gen 1 record=position): per-split
-        # routing unions the positions kernel with the docstore pf
-        # recompute, both scoring true phrase-BM25 — one oracle covers both
+        # position payloads on disk; gen 1 record=position): one leaf-kernel
+        # relation per config generation, its phrase node matching from
+        # positions on gen 1 and from the re-analysed stored text on gen 0,
+        # both scoring true phrase-BM25 — one oracle covers both
         s.conf.set("spark.sql.session.timeZone", "UTC")
         reader = gate_index_evolved(s, d)
         res = search(

@@ -91,7 +91,7 @@ class IndexConfig:
     # stores token positions (separate pos_blocks column; enables true
     # phrase-frequency scoring and slop), "freq" stores docids+tfs only.
     # The reference default is `basic`; we default to position because phrase
-    # queries without positions degrade to a documented approximation.
+    # queries without positions re-analyse every candidate's stored text.
     record: str = "position"
     # store the whole original document under ``_source`` (default_mapper.rs
     # :214-218 `_source` field): one JSON column in the docstore, fetchable

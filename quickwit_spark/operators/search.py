@@ -46,7 +46,12 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from quickwit_spark import BM25_B, BM25_K1
-from quickwit_spark.functions.tokenize import analyzer_py, tokenize_py, SPLIT_PATTERN_JAVA
+from quickwit_spark.functions.tokenize import (
+    analyzer_py,
+    arrow_tokenize,
+    tokenize_py,
+    SPLIT_PATTERN_JAVA,
+)
 from quickwit_spark.index.codec import decode_struct_blocks as _decode_struct_blocks
 from quickwit_spark.operators.build import FIELD_SEP
 from quickwit_spark.index.manifest import Manifest
@@ -477,7 +482,6 @@ class IndexReader:
         self._postings: DataFrame | None = None
         self._docstore: DataFrame | None = None
         self._warmed: list[DataFrame] = []
-        self._split_stats: DataFrame | None = None
         self._stats_map: dict | None = None
 
     def refresh(self) -> None:
@@ -488,7 +492,6 @@ class IndexReader:
         self._warmed = []
         self._postings = None
         self._docstore = None
-        self._split_stats = None
         self._stats_map = None
         if self._pinned:
             self.manifest.pin()  # advance the snapshot to the current tip
@@ -533,8 +536,7 @@ class IndexReader:
         docstore atoms and its point-lookup fetch
         — right for an index that fits cluster memory. Postings are never
         cached: every query reads its splits' term rows with pyarrow inside
-        the leaf kernel task, so a cached postings relation would serve
-        only the positions-less phrase fallback's idf read.
+        the leaf kernel task, so no query plan scans the postings relation.
 
         The cached docstore is right-sized by bytes (see
         ``_query_coalesce``) — a no-op at cluster scale, a ~1.1-1.6x
@@ -585,20 +587,6 @@ class IndexReader:
             self._stats_map = self.manifest.stats()
         return self._stats_map
 
-    def split_stats(self) -> DataFrame:
-        """Tiny per-split stats DF (broadcast into the positions-less phrase
-        fallback's idf); memoized per reader — stats only change with
-        publishes, which require refresh()."""
-        if self._split_stats is None:
-            rows = [
-                (sid, s["num_docs"], float(s["avgdl"]))
-                for sid, s in self.stats_map().items()
-            ]
-            self._split_stats = local_rows_df(
-                self.spark, rows, "split_id string, n_docs long, avgdl double"
-            )
-        return self._split_stats
-
 
 LEAF_TOPK_SCHEMA = T.StructType(
     [
@@ -614,13 +602,6 @@ LEAF_TOPK_HITS_SCHEMA = T.StructType(
         T.StructField("docid", T.LongType()),
         T.StructField("score", T.DoubleType()),
         T.StructField("split_hits", T.LongType()),
-    ]
-)
-
-LEAF_DOCIDS_SCHEMA = T.StructType(
-    [
-        T.StructField("split_id", T.StringType()),
-        T.StructField("docid", T.LongType()),
     ]
 )
 
@@ -1001,6 +982,7 @@ def _make_leaf_topk_kernel(
     fields: tuple = (),
     field_types: tuple = (),
     bucket_spec: dict | None = None,
+    pos_splits: frozenset = frozenset(),
 ):
     """mapInArrow kernel: a whole boolean query tree evaluated SPLIT-LOCALLY,
     emitting only each split's top-k — the reference leaf's architecture
@@ -1010,7 +992,8 @@ def _make_leaf_topk_kernel(
     Input: postings rows (split_id, term, doc_freq, blocks[, pos_blocks])
     of the query terms for every split of ONE task, read by
     ``_make_split_postings_reader`` (a handful of still-compressed rows per
-    split), plus one null-term anchor row per split. Per split: decode each
+    split; ``pos_blocks`` only for phrase specs on ``pos_splits``), plus
+    one null-term anchor row per split. Per split: decode each
     term, attach |d| from the executor fieldnorm cache, score BM25, then
     evaluate the compiled tree recursively in numpy — every node yields
     (sorted-unique docids, scores): must = sorted-array intersection with
@@ -1025,11 +1008,16 @@ def _make_leaf_topk_kernel(
     "boost"|"bool"|"all"|"empty"}`` nodes compiled by ``Searcher.leaf_plan``
     (match-all is the split docid universe at score 0, and pure-negative
     subtrees subtract from that same universe; range nodes compare fast
-    fields in their compile-lowered domain; phrase nodes require every
-    pruned split to store positions). Phrase nodes run a vectorized
-    global-coordinate matcher (``_phrase_freqs``) and score with tf =
-    phrase frequency, idf summed over the token sequence (tantivy
-    Bm25Weight::for_terms).
+    fields in their compile-lowered domain). A phrase node's candidates are
+    its tokens' docid intersection. On ``pos_splits`` (splits that store
+    positions) it decodes their position blocks; on any other split it
+    re-tokenizes their stored text with the index tokenizer
+    (``arrow_tokenize``, the build's own). Either way the positions feed
+    one vectorized global-coordinate matcher
+    (``_phrase_freqs``, the ordered-within-slop rule of
+    ``functions/phrase.phrase_freq``), scored with tf = phrase frequency,
+    idf summed over the token sequence (tantivy Bm25Weight::for_terms), so
+    a phrase ranks the same on either kind of split.
 
     ``ts_bounds``: optional (start_us|None, end_us|None) semi-open epoch-
     micros window applied per matching doc via the split's ts fast field
@@ -1048,19 +1036,16 @@ def _make_leaf_topk_kernel(
       * ``"scored"`` — EVERY matching (split_id, docid, score), untrimmed
         and without MaxScore or phrase pruning: one clause relation of the
         general plan (``Searcher.matching``);
-      * ``"docids"``— EVERY matching (split_id, docid), unscored and
-        untrimmed: the feeder for aggregations / search-stream exports
-        (their buckets never need BM25, so fieldnorm reads and tf
-        arithmetic are skipped entirely);
       * ``"count"`` — one (split_id, n) row per split: num_hits costs
         |splits| rows across the python→JVM boundary, not |matches|;
       * ``"fields"`` — every matching (split_id, docid, *fields) with the
         requested docstore columns gathered SPLIT-LOCALLY (typed, nulls
         preserved; timestamps lowered to epoch-micros int64 per
-        ``field_types``): aggregations and search-stream exports read
-        their fast fields in the same pass that matched the docs, so no
-        docstore join — the reference leaf's fast-field collector
-        (search_stream/leaf.rs reads fast-field readers inside the leaf);
+        ``field_types``), unscored: aggregations and search-stream exports
+        read their fast fields in the same pass that matched the docs, so
+        no docstore join — the reference leaf's fast-field collector
+        (search_stream/leaf.rs reads fast-field readers inside the leaf).
+        With no fields it is the plain (split_id, docid) match relation;
       * ``"buckets"`` — per-split PARTIAL bucket counts for one flat
         count-only bucket aggregation (``bucket_spec``: kind histogram/
         date_histogram/range/terms + col + params): the kernel buckets
@@ -1148,12 +1133,9 @@ def _make_leaf_topk_kernel(
                     bl_flat.slice(int(row_off0[i]), nb),
                     int(dfs[i]),
                 )
-            if phrase_toks:
-                # position payloads stay COMPRESSED too (the scan carries
-                # pos_blocks only when the spec has a phrase); rows with a
-                # null payload (mixed-record split) are simply absent, so
-                # the phrase node returns empty there — the driver routes
-                # those splits to the fallback plan
+            if phrase_toks and "pos_blocks" in names:
+                # position payloads stay COMPRESSED too (the reader carries
+                # pos_blocks only for phrase specs on positions splits)
                 pls = rb.column(names.index("pos_blocks"))
                 pvalid = np.asarray(pls.is_valid(), dtype=bool)
                 ploffs = pls.offsets.to_numpy().astype(np.int64)
@@ -1378,8 +1360,10 @@ def _make_leaf_topk_kernel(
                     return d, np.zeros(len(d), dtype=np.float64)
                 if op == "phrase":
                     praw_t = praw.get(_sid, {})
+                    has_pos = _sid in pos_splits
                     if any(
-                        u not in praw_t or u not in _pr for u in n["uniq"]
+                        u not in _pr or (has_pos and u not in praw_t)
+                        for u in n["uniq"]
                     ):
                         return _empty
                     # a phrase match needs every token in the doc, so the
@@ -1400,7 +1384,29 @@ def _make_leaf_topk_kernel(
                     )
                     if len(cand) == 0:
                         return _empty
-                    if (
+                    if not has_pos:
+                        # no positions stored: re-tokenize the candidates'
+                        # stored text with the build's own tokenizer into
+                        # the global coordinates (docid * 2^32 + position)
+                        # the position blocks decode to
+                        tl = arrow_tokenize(
+                            _col_for(index_dir, _sid, n["text_col"], cand),
+                            n["tokenizer"],
+                        )
+                        offs = tl.offsets.to_numpy().astype(np.int64)
+                        flat = tl.flatten()
+                        row = np.repeat(np.arange(len(cand)), np.diff(offs))
+                        g = cand[row] * _PHRASE_SHIFT + (
+                            np.arange(len(flat)) - (offs[row] - offs[0])
+                        )
+                        by_term = {}
+                        for b, t in zip(n["bare"], n["toks"]):
+                            by_term[t] = g[
+                                pc.equal(flat, b).to_numpy(zero_copy_only=False)
+                            ]
+                            if len(by_term[t]) == 0:
+                                return _empty
+                    elif (
                         pp_node is not None
                         and n is pp_node
                         and len(cand) >= pp_min
@@ -1421,26 +1427,27 @@ def _make_leaf_topk_kernel(
                             avgdl_map,
                             k,
                         )
-                    by_term = {}
-                    for u in n["uniq"]:
-                        blr = _pr[u][0]
-                        firsts = blr.field("first_docid").to_numpy(
-                            zero_copy_only=False
-                        )
-                        lasts = blr.field("last_docid").to_numpy(
-                            zero_copy_only=False
-                        )
-                        sel = np.flatnonzero(
-                            np.searchsorted(cand, firsts, side="left")
-                            < np.searchsorted(cand, lasts, side="right")
-                        )
-                        if len(sel) == 0:
-                            return _empty
-                        if len(sel) == len(firsts):
-                            sel = None  # nothing prunable: take() not worth it
-                        by_term[u] = _phrase_coords_pruned(
-                            blr, praw_t[u], sel
-                        )
+                    else:
+                        by_term = {}
+                        for u in n["uniq"]:
+                            blr = _pr[u][0]
+                            firsts = blr.field("first_docid").to_numpy(
+                                zero_copy_only=False
+                            )
+                            lasts = blr.field("last_docid").to_numpy(
+                                zero_copy_only=False
+                            )
+                            sel = np.flatnonzero(
+                                np.searchsorted(cand, firsts, side="left")
+                                < np.searchsorted(cand, lasts, side="right")
+                            )
+                            if len(sel) == 0:
+                                return _empty
+                            if len(sel) == len(firsts):
+                                sel = None  # nothing prunable: take() not worth it
+                            by_term[u] = _phrase_coords_pruned(
+                                blr, praw_t[u], sel
+                            )
                     udoc, pf = _phrase_freqs(by_term, n["toks"], n["slop"])
                     if len(udoc) == 0:
                         return _empty
@@ -1574,10 +1581,6 @@ def _make_leaf_topk_kernel(
             if emit == "count":
                 out_sid.append(sid)
                 out_doc.append(len(base_d))
-                continue
-            if emit == "docids":
-                out_sid.extend([sid] * len(base_d))
-                out_doc.append(base_d.astype(np.int64, copy=False))
                 continue
             if emit == "fields":
                 out_sid.extend([sid] * len(base_d))
@@ -1797,16 +1800,6 @@ def _make_leaf_topk_kernel(
                         pa.array(out_doc, type=pa.int64()),
                     ],
                     names=["split_id", "n"],
-                )
-            elif emit == "docids":
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(out_sid, type=pa.string()),
-                        pa.array(
-                            np.concatenate(out_doc), type=pa.int64()
-                        ),
-                    ],
-                    names=["split_id", "docid"],
                 )
             elif emit == "fields":
                 cols = [
@@ -2116,67 +2109,6 @@ def _phrase_topk_pruned(
     return ad[o], asc[o]
 
 
-def _make_phrase_fb_kernel(
-    toks: list[str],
-    slop: int,
-    tokenizer: str,
-    index_dir: str,
-    quantize: bool,
-    field: str,
-    scoring: bool,
-    text_col: str,
-):
-    """mapInPandas kernel over CANDIDATE docstore rows (split_id, docid,
-    text) -> (split_id, docid, pf, dl): re-analyzes each candidate's stored
-    text with the index analyzer and runs the SAME greedy
-    ordered-within-slop matcher as the positions path
-    (functions/phrase.py), so a positions-less split scores phrases
-    rank-identically to a positions-bearing one. Candidates are the
-    postings AND-intersection — the same slice a term query touches — so
-    the per-row python matcher is bounded; it replaces a regex verify of
-    identical asymptotics that could not produce a phrase frequency."""
-
-    def kernel(batches):
-        from quickwit_spark.functions.phrase import phrase_freq, positions_of
-        from quickwit_spark.functions.tokenize import analyzer_py
-
-        analyze = analyzer_py(tokenizer)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pfs = np.fromiter(
-                (
-                    phrase_freq(toks, positions_of(analyze(t or "")), slop)
-                    for t in pdf[text_col]
-                ),
-                dtype=np.int64,
-                count=len(pdf),
-            )
-            keep = pfs > 0
-            if not keep.any():
-                continue
-            out = pd.DataFrame(
-                {
-                    "split_id": pdf["split_id"].to_numpy()[keep],
-                    "docid": pdf["docid"].to_numpy()[keep].astype(np.int64),
-                    "pf": pfs[keep],
-                }
-            )
-            if scoring:
-                dl = np.zeros(len(out), dtype=np.float64)
-                sids = out["split_id"].to_numpy()
-                dids = out["docid"].to_numpy()
-                for sid in pd.unique(out["split_id"]):
-                    m = sids == sid
-                    dl[m] = _norms_for(index_dir, sid, quantize, dids[m], field)
-                out["dl"] = dl
-            else:
-                out["dl"] = 0.0
-            yield out
-
-    return kernel
-
-
 def _leaf_split_tasks(split_ids: list[str], stats: dict) -> list[list[str]]:
     """Group the pruned splits into leaf-kernel tasks by the manifest's
     ``uncompressed_docs_size_in_bytes``: consecutive splits share a task
@@ -2202,21 +2134,21 @@ def _leaf_split_tasks(split_ids: list[str], stats: dict) -> list[list[str]]:
 
 
 def _make_split_postings_reader(
-    index_dir: str, tasks: list[list[str]], spec: dict
+    index_dir: str, tasks: list[list[str]], spec: dict, pos_splits: frozenset
 ):
     """Leaf-kernel input stage: ``spark.range`` batches of task ids -> the
     postings rows (split_id, term, doc_freq, blocks[, pos_blocks]) of the
     spec's tokens for every split of each task, read from
     ``{index_dir}/postings/split_id=<id>`` with pyarrow. Columns are pruned
-    (``pos_blocks`` is read only when the spec has a phrase) and the term
-    filter prunes row groups of the term-sorted file. Every split also gets
-    one (split_id, null term) anchor row, so the kernel visits splits that
-    hold none of the tokens (pure-negative subtrees and ranges match there);
-    a spec without tokens (range-only) reads no postings at all."""
+    (``pos_blocks`` is read only when the spec has a phrase, and only for
+    ``pos_splits``, the splits that store positions) and the term filter
+    prunes row groups of the term-sorted file. Every split also gets one
+    (split_id, null term) anchor row, so the kernel visits splits that hold
+    none of the tokens (pure-negative subtrees and ranges match there); a
+    spec without tokens (range-only) reads no postings at all."""
     uniq = sorted(set(_leaf_spec_tokens(spec)))
     cols = ["term", "doc_freq", "blocks"]
-    if _leaf_spec_phrase_tokens(spec):
-        cols.append("pos_blocks")
+    pos_cols = cols + ["pos_blocks"] if _leaf_spec_phrase_tokens(spec) else cols
 
     def read(batches):
         import pyarrow.parquet as pq
@@ -2227,7 +2159,7 @@ def _make_split_postings_reader(
                     if uniq:
                         tbl = pq.read_table(
                             f"{index_dir}/postings/split_id={sid}",
-                            columns=cols,
+                            columns=pos_cols if sid in pos_splits else cols,
                             filters=[("term", "in", uniq)],
                         )
                         if tbl.num_rows:
@@ -2282,7 +2214,7 @@ class Searcher:
         self.ts_field = icfg.get("timestamp_field") or "warc_ts"
         self.tokenizer = icfg.get("tokenizer", "default")
         # indexes built before positions existed have no pos_blocks column:
-        # phrase queries then fall back to the AND+verify approximation
+        # the kernel then verifies phrases from the stored text
         self.record = icfg.get("record", "freq")
         self.quantize_norms = quantize_norms
         # docstore column names are normalized at build time
@@ -2475,26 +2407,26 @@ class Searcher:
         return None
 
     # ---- leaf-local top-k (boolean trees of text terms) ------------------
-    def leaf_plan(self, node: Node, allow_phrase: bool = False) -> dict | None:
+    def leaf_plan(self, node: Node) -> dict | None:
         """Compile a boolean tree of text terms / term-sets / phrases /
         fast-field ranges / match-all (with boosts, arbitrary nesting,
         multi-token terms, pure-negative subtrees) into the leaf-local
         top-k spec tree, or None when the query needs the general plan
-        (non-text term fields, ranges whose comparison domain can't be
-        replicated exactly, and phrases unless ``allow_phrase`` — i.e.
-        unless every pruned split stores positions)."""
+        (non-text term and phrase fields, ranges whose comparison domain
+        can't be replicated exactly). A phrase spec carries both
+        verifications: namespaced tokens for the positions matcher, and
+        the stored text column, tokenizer and bare tokens for splits
+        without positions."""
 
         def comp(n: Node) -> dict:
             if isinstance(n, Phrase):
-                if not allow_phrase:
-                    raise _LeafBail
                 pre = self._ns_prefix(n.field)
                 if pre is None:
                     raise _LeafBail  # lenient zero-match / field error
                 toks = self._tok(n.text)
                 if not toks:
                     return {"op": "empty"}
-                if len(toks) == 1:  # single-token phrase == term (_eval_phrase)
+                if len(toks) == 1:  # single-token phrase == term
                     return {"op": "term", "tok": pre + toks[0]}
                 return {
                     "op": "phrase",
@@ -2502,6 +2434,9 @@ class Searcher:
                     "uniq": sorted({pre + t for t in toks}),
                     "slop": int(n.slop),
                     "field": pre[:-1] if pre else "",
+                    "bare": toks,
+                    "text_col": n.field if pre else "text",
+                    "tokenizer": self.tokenizer,
                 }
             if isinstance(n, Boost):
                 return {
@@ -2633,22 +2568,16 @@ class Searcher:
         """Every matching (split_id, docid) from ONE kernel pass per split —
         the unscored relation ``matching()`` builds under the scoring
         opt-out (aggregation and export joins, deletes) and for must_not
-        clause groups. Fieldnorm reads and BM25 arithmetic are skipped
-        (the reference collector's scoring opt-out)."""
-        return self._leaf_kernel_df(
-            spec,
-            split_ids,
-            0,
-            ts_bounds=ts_bounds,
-            emit="docids",
-            schema=LEAF_DOCIDS_SCHEMA,
-        )
+        clause groups: the leaf-fields collector with no columns."""
+        return self.leaf_matching_fields(spec, split_ids, ts_bounds, [])
 
     def leaf_fields_plan(self, cols: "list[str] | tuple") -> "list | None":
         """(Spark wire type, Arrow wire type, is_timestamp) per requested
         docstore column, or None when any column is absent or not
         kernel-attachable (arrays/structs/binary and ``a.b`` struct paths
         route to the general docstore-join plan)."""
+        if not cols:
+            return []  # no docstore schema read for the bare match relation
         schema = {f.name: f for f in self.reader.docstore().schema.fields}
         out = []
         for c in cols:
@@ -2909,7 +2838,9 @@ class Searcher:
         term-filtered, row-group pruned, ``pos_blocks`` only for phrase
         specs) straight into the whole-tree kernel. This is the reference
         leaf opening its splits' term-dictionary and posting byte ranges
-        itself (leaf.rs:141-227, :500-517)."""
+        itself (leaf.rs:141-227, :500-517). Phrases read positions only on
+        the splits that store them; the kernel verifies the rest from
+        their stored text."""
         stats = self.reader.stats_map()
         # the reader's manifest snapshot bounds the split set, as the
         # general plan's stats join does: a split published after it is
@@ -2917,7 +2848,10 @@ class Searcher:
         split_ids = [sid for sid in split_ids if sid in stats]
         n_docs_by_split = {sid: stats[sid]["num_docs"] for sid in split_ids}
         tasks = _leaf_split_tasks(split_ids, stats)
-        read = _make_split_postings_reader(self.reader.index_dir, tasks, spec)
+        pos_splits = frozenset(self._position_splits(split_ids))
+        read = _make_split_postings_reader(
+            self.reader.index_dir, tasks, spec, pos_splits
+        )
         kernel = _make_leaf_topk_kernel(
             spec,
             n_docs_by_split,
@@ -2932,6 +2866,7 @@ class Searcher:
             fields=fields,
             field_types=field_types,
             bucket_spec=bucket_spec,
+            pos_splits=pos_splits,
         )
         return self.reader.spark.range(
             len(tasks), numPartitions=max(1, len(tasks))
@@ -3006,8 +2941,7 @@ class Searcher:
         over the window-filtered docstore, then semi-open [start, end)
         checked per doc (filters.rs:26-107; manifest pruning already
         removed fully-outside splits)."""
-        allow_phrase = len(self._position_splits(split_ids)) == len(split_ids)
-        spec = self.leaf_plan(node, allow_phrase=allow_phrase)
+        spec = self.leaf_plan(node)
         if spec is not None:
             return self._leaf_relation(
                 spec, split_ids, _ts_bounds(self.reader.spark, start_ts, end_ts)
@@ -3017,7 +2951,7 @@ class Searcher:
             docs = docs.filter(F.col("ts") >= F.lit(start_ts).cast("timestamp"))
         if end_ts is not None:
             docs = docs.filter(F.col("ts") < F.lit(end_ts).cast("timestamp"))
-        base = self._eval(node, split_ids, allow_phrase, docs)
+        base = self._eval(node, split_ids, docs)
         if start_ts is not None or end_ts is not None:
             base = base.join(
                 docs.select("split_id", "docid"), ["split_id", "docid"], "inner"
@@ -3025,8 +2959,8 @@ class Searcher:
         return base
 
     def _position_splits(self, split_ids: list[str]) -> list[str]:
-        """The splits whose postings store positions under this config: a
-        phrase compiles onto the leaf kernel only over these (a merge of
+        """The splits whose postings store positions under this config: the
+        kernel matches phrases from positions only on these (a merge of
         mixed sources writes positions-less terms, merge.py)."""
         if self.record != "position":
             return []
@@ -3065,30 +2999,33 @@ class Searcher:
         self,
         node: Node,
         split_ids: list[str],
-        allow_phrase: bool,
         docs: DataFrame,
     ) -> DataFrame:
         """General plan: a node that compiles is one leaf-kernel relation;
         the rest are the atoms only the docstore answers (tag, fast-field,
         ip, struct and JSON-path terms; ranges the kernel bails on; fields
-        of a newer config generation), positions-less phrases, and the
-        boolean glue over them."""
-        spec = self.leaf_plan(node, allow_phrase=allow_phrase)
+        of a newer config generation) and the boolean glue over them."""
+        spec = self.leaf_plan(node)
         if spec is not None:
             return self._leaf_relation(spec, split_ids)
         if isinstance(node, Boost):
-            child = self._eval(node.child, split_ids, allow_phrase, docs)
+            child = self._eval(node.child, split_ids, docs)
             return child.withColumn("score", F.col("score") * F.lit(node.factor))
         if isinstance(node, Term):
             return self._eval_term(node, docs)
         if isinstance(node, TermSet):
             return self._eval_termset(node, docs)
         if isinstance(node, Phrase):
-            return self._eval_phrase(node, split_ids, docs)
+            # text phrases always compile: this is a non-text field
+            if node.field in self._lenient_fields:
+                return self._zero(docs).limit(0)
+            raise ValueError(
+                f"phrase queries require a text field, got {node.field!r}"
+            )
         if isinstance(node, Range):
             return self._eval_range(node, docs)
         if isinstance(node, Bool):
-            return self._eval_bool(node, split_ids, allow_phrase, docs)
+            return self._eval_bool(node, split_ids, docs)
         raise ValueError(f"unsupported node {node!r}")
 
     def _eval_term(self, node: Term, docs: DataFrame) -> DataFrame:
@@ -3144,151 +3081,6 @@ class Searcher:
                 return self._zero(docs).limit(0)
         return self._zero(docs.filter(cond))
 
-    def _eval_phrase(
-        self, node: Phrase, split_ids: list[str], docs: DataFrame
-    ) -> DataFrame:
-        """A phrase the kernel cannot evaluate over every split. Per-split
-        routing (the reference builds each LEAF query against that split's
-        own schema, doc_mapper.rs:85-93): splits that store positions take
-        the kernel's phrase node, positions-less splits (record=freq, or a
-        merge of mixed sources) the docstore re-analysis fallback, and the
-        two partial results union. Both score true phrase BM25 per split,
-        so rank identity holds across the union."""
-        pre = self._ns_prefix(node.field)
-        if pre is None:
-            if node.field in self._lenient_fields:
-                return self._zero(docs).limit(0)
-            raise ValueError(f"phrase queries require a text field, got {node.field!r}")
-        toks = self._tok(node.text)
-        spec = self.leaf_plan(node, allow_phrase=True)
-        if len(toks) < 2:
-            # empty, or a single-token phrase == term: no positions needed
-            return self._leaf_relation(spec, split_ids)
-        pos = set(self._position_splits(split_ids))
-        fb_sids = [sid for sid in split_ids if sid not in pos]
-        out = self._eval_phrase_fallback(node, toks, fb_sids, docs)
-        if pos:
-            out = self._leaf_relation(
-                spec, [sid for sid in split_ids if sid in pos]
-            ).unionByName(out)
-        return out
-
-    def _eval_phrase_fallback(
-        self,
-        node: Phrase,
-        toks: list[str],
-        split_ids: list[str],
-        docs: DataFrame,
-    ) -> DataFrame:
-        """No positions stored (record=freq): candidates = AND of the
-        phrase's tokens (one docids-only kernel relation — bounded like a
-        term query), then the TRUE phrase frequency is recomputed
-        executor-side over ONLY the candidate rows' stored text
-        (Arrow-batched kernel running the same greedy matcher as the
-        positions path) and BM25 scored with tf = pf, idf summed over the
-        token sequence — so positions-less splits are RANK-IDENTICAL to
-        positions-bearing ones and mixed-record routing (_eval_phrase)
-        composes soundly. tantivy would reject a phrase query on a
-        positions-less field (phrase_query.rs record check); reproducing
-        the exact scores from the docstore is strictly more useful.
-        ``split_ids``: the positions-less splits."""
-        pre = self._ns_prefix(node.field) or ""
-        fld = pre[:-1] if pre else ""
-        ns_toks = [pre + t for t in toks]
-        cand = self._leaf_relation(
-            {
-                "op": "bool",
-                "must": [{"op": "term", "tok": t} for t in ns_toks],
-                "should": [],
-                "must_not": [],
-            },
-            split_ids,
-            scored=False,
-        ).select("split_id", "docid")
-        text_col = (
-            node.field
-            if node.field and node.field in self.extra_text_fields
-            else "text"
-        )
-        cand_docs = (
-            docs.filter(F.col("split_id").isin(split_ids))
-            .join(cand, ["split_id", "docid"], "left_semi")
-            .select("split_id", "docid", text_col)
-        )
-        pf_df = cand_docs.mapInPandas(
-            _versioned(
-                self.reader,
-                split_ids,
-                _make_phrase_fb_kernel(
-                    toks,
-                    node.slop,
-                    self.tokenizer,
-                    self.reader.index_dir,
-                    self.quantize_norms,
-                    fld,
-                    self.scoring,
-                    text_col,
-                ),
-            ),
-            "split_id string, docid long, pf long, dl double",
-        )
-        if not self.scoring:
-            return pf_df.select(
-                "split_id", "docid", F.lit(0.0).alias("score")
-            )
-        # per-split idf_sum over the token SEQUENCE (duplicates counted per
-        # occurrence, tantivy Bm25Weight::for_terms): postings metadata only
-        # (blocks stay pruned from the scan) + the broadcast split stats —
-        # all lazy column arithmetic, no driver collect.
-        from collections import Counter
-
-        mult = Counter(ns_toks)
-        meta = self.reader.postings().filter(
-            F.col("term").isin(sorted(mult)) & F.col("split_id").isin(split_ids)
-        ).select("split_id", "term", "doc_freq")
-        stats = F.broadcast(
-            self.reader.split_stats().select("split_id", "n_docs")
-        )
-        idf = F.log(
-            F.lit(1.0)
-            + (F.col("n_docs") - F.col("doc_freq") + F.lit(0.5))
-            / (F.col("doc_freq") + F.lit(0.5))
-        )
-        mult_expr = F.lit(0.0)
-        for t, m in mult.items():
-            mult_expr = F.when(F.col("term") == t, F.lit(float(m))).otherwise(
-                mult_expr
-            )
-        idf_df = F.broadcast(
-            meta.join(stats, "split_id")
-            .groupBy("split_id")
-            .agg(F.sum(idf * mult_expr).alias("idf_sum"))
-        )
-        amap = self._avgdl_map(split_ids)
-        avg_rows = [
-            (sid, amap[(sid, fld)]) for sid in split_ids if (sid, fld) in amap
-        ]
-        avg_df = F.broadcast(
-            local_rows_df(
-                self.reader.spark, avg_rows, "split_id string, avgdl double"
-            )
-        )
-        pf = F.col("pf").cast("double")
-        tf_norm = pf * F.lit(BM25_K1 + 1.0) / (
-            pf
-            + F.lit(BM25_K1)
-            * (F.lit(1.0 - BM25_B) + F.lit(BM25_B) * F.col("dl") / F.col("avgdl"))
-        )
-        return (
-            pf_df.join(idf_df, "split_id")
-            .join(avg_df, "split_id")
-            .select(
-                "split_id",
-                "docid",
-                (F.col("idf_sum") * tf_norm).alias("score"),
-            )
-        )
-
     def _eval_range(self, node: Range, docs: DataFrame) -> DataFrame:
         col_name = self.fast_fields.get(node.field, node.field)
         if col_name == self.default_field:
@@ -3313,7 +3105,6 @@ class Searcher:
         self,
         node: Bool,
         split_ids: list[str],
-        allow_phrase: bool,
         docs: DataFrame,
     ) -> DataFrame:
         """A Bool that does not compile as a whole. Its compilable children
@@ -3326,9 +3117,9 @@ class Searcher:
         def clause(children: list, group: str, scored: bool = True) -> list:
             specs, rels = [], []
             for c in children:
-                spec = self.leaf_plan(c, allow_phrase=allow_phrase)
+                spec = self.leaf_plan(c)
                 if spec is None:
-                    rels.append(self._eval(c, split_ids, allow_phrase, docs))
+                    rels.append(self._eval(c, split_ids, docs))
                 else:
                     specs.append(spec)
             if specs:
@@ -3352,7 +3143,7 @@ class Searcher:
                 .groupBy("split_id", "docid")
                 .agg(
                     F.sum("score").alias("score"),
-                    F.count_distinct("cl").alias("n_cl"),
+                    F.count("cl").alias("n_cl"),
                 )
                 .filter(F.col("n_cl") == len(must))
                 .drop("n_cl")
@@ -3503,8 +3294,9 @@ def search(
     prunes scored disjunctions with in-kernel MaxScore (rank-identical:
     the pruning is sound); match-all (``*``) compiles too, as the split's
     docid universe at score 0 (tantivy's AllQuery under the same top-k
-    collector). Everything else — a mixed-generation index, non-text term
-    fields, phrases without positions — uses the general plan
+    collector), and so do phrases, on splits with or without positions.
+    Everything else — a mixed-generation index, non-text term fields,
+    ranges the kernel cannot replicate — uses the general plan
     (``Searcher.matching``: untrimmed leaf-kernel relations glued to the
     docstore atoms). ``leaf_topk=False`` forces the general plan (tests
     use it as the reference).
@@ -3993,13 +3785,12 @@ def _leaf_gate(
     request needs the general plan. Every pruned split must be on the
     latest config generation (the kernel analyzes tokens under ONE config;
     schema-evolved splits route through matching()'s per-generation
-    planner), and the query must compile (``leaf_plan``; phrases only when
-    every split stores positions). ``ts_bounds`` is the request's time
-    window in epoch micros. ``sort_spec`` is (docstore col, order) when the
-    request sorts by a fast field the kernel can sort on (Spark
-    cast-to-double semantics), else None — the top-k callers (search,
-    search_many) send any other field sort to the general plan; the
-    matching callers (count, aggs, export) ignore the sort."""
+    planner), and the query must compile (``leaf_plan``). ``ts_bounds`` is
+    the request's time window in epoch micros. ``sort_spec`` is (docstore
+    col, order) when the request sorts by a fast field the kernel can sort
+    on (Spark cast-to-double semantics), else None — the top-k callers
+    (search, search_many) send any other field sort to the general plan;
+    the matching callers (count, aggs, export) ignore the sort."""
     smap = reader.stats_map()
     latest_gen = max(reader.manifest.config_generations() or [0])
     if {
@@ -4007,8 +3798,7 @@ def _leaf_gate(
         for sid in split_ids
     } - {latest_gen}:
         return None, None, None
-    allow_phrase = len(searcher._position_splits(split_ids)) == len(split_ids)
-    spec = searcher.leaf_plan(ast, allow_phrase=allow_phrase)
+    spec = searcher.leaf_plan(ast)
     if spec is None:
         return None, None, None
     ts = _ts_bounds(reader.spark, request.start_timestamp, request.end_timestamp)
@@ -4375,29 +4165,28 @@ def search_with_failures(
 
 def _with_failures(fn, reader: IndexReader, request: SearchRequest, **kwargs):
     """Shared failure-tolerance harness: probe both stores with
-    ignoreCorruptFiles, then run ``fn`` against the tolerant scans with the
-    unreadable splits excluded."""
+    ignoreCorruptFiles, then run ``fn`` with the unreadable splits excluded
+    and the reader's docstore swapped for the tolerant scan (the leaf
+    kernel reads postings per split, so it never opens an excluded
+    split's postings file)."""
     published = [m.split_id for m in reader.manifest.list_published()]
-    stores: dict[str, DataFrame | None] = {}
-    ok: set[str] | None = None
-    for store in ("postings", "docstore"):
-        df, present = _tolerant_store_read(reader, store, published)
-        stores[store] = df
-        ok = present if ok is None else (ok & present)
-    failed = sorted(s for s in published if s not in (ok or set()))
+    _, with_postings = _tolerant_store_read(reader, "postings", published)
+    docs, with_docs = _tolerant_store_read(reader, "docstore", published)
+    ok = with_postings & with_docs
+    failed = sorted(s for s in published if s not in ok)
     if not failed:
         return fn(reader, request, **kwargs), []
     # corrupt footers also break the reader's own plan-time schema
-    # inference, so build the plan against the tolerant scans; the returned
-    # (lazy) plan captures these DataFrames, so restoring the reader
+    # inference, so build the plan against the tolerant docstore scan; the
+    # returned (lazy) plan captures that DataFrame, so restoring the reader
     # afterwards is safe and later normal queries keep all-or-nothing
     # semantics
-    saved = (reader._postings, reader._docstore)
-    reader._postings, reader._docstore = stores["postings"], stores["docstore"]
+    saved = reader._docstore
+    reader._docstore = docs
     try:
         res = fn(reader, request, exclude_split_ids=tuple(failed), **kwargs)
     finally:
-        reader._postings, reader._docstore = saved
+        reader._docstore = saved
     return res, failed
 
 

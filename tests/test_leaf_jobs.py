@@ -2,8 +2,9 @@
 leaf kernel runs exactly ONE Spark job with ONE stage — the kernel reads its
 splits' postings itself (no postings scan, no split repartition shuffle),
 and search's root merge runs driver-side over the collected per-split
-partials (no sort job). Counted through a job group, read back from the
-status tracker."""
+partials (no sort job). Phrases stay one job on splits without positions:
+the kernel verifies them from the stored text. Counted through a job
+group, read back from the status tracker."""
 
 from __future__ import annotations
 
@@ -12,7 +13,9 @@ import itertools
 import pyarrow as pa
 import pytest
 
+from quickwit_spark.operators.build import IndexConfig, build_index
 from quickwit_spark.operators.search import (
+    IndexReader,
     SearchRequest,
     Searcher,
     _make_split_postings_reader,
@@ -25,6 +28,29 @@ from quickwit_spark.operators.search import (
 from quickwit_spark.plans.query import parse_query
 
 _seq = itertools.count()
+
+
+@pytest.fixture(scope="module")
+def freq_index(spark, pages_small, tmp_path_factory):
+    """record=freq: no split stores positions."""
+    d = str(tmp_path_factory.mktemp("jobs_freq") / "idx")
+    cfg = IndexConfig(index_id="pages", num_splits=3, record="freq")
+    build_index(spark, pages_small, d, cfg)
+    return IndexReader(spark, d)
+
+
+@pytest.fixture(scope="module")
+def mixed_record_index(spark, pages_small, tmp_path_factory):
+    """A positions index whose first split is marked positions-less, as a
+    merge of mixed-record sources publishes it."""
+    d = str(tmp_path_factory.mktemp("jobs_mixed") / "idx")
+    build_index(spark, pages_small, d, IndexConfig(index_id="pages", num_splits=3))
+    reader = IndexReader(spark, d)
+    metas = reader.manifest.list_published()
+    metas[0].record = "freq"
+    reader.manifest._write(metas[0])
+    reader.refresh()
+    return reader
 
 
 def _work(spark, fn):
@@ -97,6 +123,33 @@ def test_leaf_query_is_one_job_one_stage(spark, small_index, shape):
     assert (jobs, stages, tasks) == (1, 1, 1), (shape, jobs, stages, tasks)
 
 
+PHRASE_SHAPES = {
+    "search_phrase_fetched": lambda r: search(
+        r, SearchRequest(query='"w0 w1"', max_hits=10), fetch_fields=("url",)
+    ).collect(),
+    "count_hits_phrase": lambda r: count_hits(
+        r, SearchRequest(query='"w0 w1"')
+    ).collect(),
+    "export_fast_field_phrase": lambda r: export_fast_field(
+        r, SearchRequest(query='"w0 w1"'), "url"
+    ).collect(),
+}
+
+
+@pytest.mark.parametrize("index", ["freq_index", "mixed_record_index"])
+@pytest.mark.parametrize("shape", sorted(PHRASE_SHAPES))
+def test_phrase_without_positions_is_one_job_one_stage(
+    spark, request, index, shape
+):
+    reader = request.getfixturevalue(index)
+    fn = PHRASE_SHAPES[shape]
+    rows = fn(reader)
+    assert rows
+    again, jobs, stages, tasks = _work(spark, lambda: fn(reader))
+    assert again == rows
+    assert (jobs, stages, tasks) == (1, 1, 1), (index, shape, jobs, stages, tasks)
+
+
 @pytest.mark.parametrize("shape", sorted(SHAPES))
 def test_split_per_task_when_splits_exceed_the_target(
     spark, small_index, shape, monkeypatch
@@ -156,19 +209,31 @@ def test_search_many_all_leaf_batch_is_one_job(spark, small_index):
     [('"w0 w1"', True), ("w0 w1", False), ("w0 -w1", False)],
 )
 def test_split_reader_reads_positions_only_for_phrases(
-    small_index, query, positions
+    small_index, freq_index, mixed_record_index, query, positions
 ):
-    searcher = Searcher(small_index)
-    spec = searcher.leaf_plan(parse_query(query), allow_phrase=True)
-    sids = [m.split_id for m in small_index.manifest.list_published()]
-    read = _make_split_postings_reader(small_index.index_dir, [sids], spec)
-    batches = list(read([pa.record_batch([pa.array([0])], names=["id"])]))
-    data = [b for b in batches if b.column(1).null_count == 0]
-    assert data, "query tokens exist in the index"
-    for b in data:
-        assert ("pos_blocks" in b.schema.names) is positions
-        assert set(b.column(1).to_pylist()) <= {"w0", "w1"}
-    assert {b.column(0)[0].as_py() for b in data} <= set(sids)
+    """pos_blocks are read for phrase specs only, and only on the splits
+    that store positions: never on a record=freq index, and not on the
+    positions-less split of a mixed-record index."""
+    for reader, n_pos in (
+        (small_index, 3),
+        (freq_index, 0),
+        (mixed_record_index, 2),  # all but the first split
+    ):
+        searcher = Searcher(reader)
+        spec = searcher.leaf_plan(parse_query(query))
+        sids = [m.split_id for m in reader.manifest.list_published()]
+        pos = frozenset(searcher._position_splits(sids))
+        assert len(pos) == n_pos
+        read = _make_split_postings_reader(reader.index_dir, [sids], spec, pos)
+        batches = list(read([pa.record_batch([pa.array([0])], names=["id"])]))
+        data = [b for b in batches if b.column(1).null_count == 0]
+        assert data, "query tokens exist in the index"
+        for b in data:
+            sid = b.column(0)[0].as_py()
+            want = positions and sid in pos
+            assert ("pos_blocks" in b.schema.names) is want, (reader, sid)
+            assert set(b.column(1).to_pylist()) <= {"w0", "w1"}
+        assert {b.column(0)[0].as_py() for b in data} <= set(sids)
 
 
 def test_split_reader_range_only_reads_no_postings(small_index):
@@ -176,7 +241,9 @@ def test_split_reader_range_only_reads_no_postings(small_index):
     spec = searcher.leaf_plan(parse_query("doc_len:[50 TO 100]"))
     assert spec is not None and spec["op"] == "range"
     sids = [m.split_id for m in small_index.manifest.list_published()]
-    read = _make_split_postings_reader(small_index.index_dir, [sids], spec)
+    read = _make_split_postings_reader(
+        small_index.index_dir, [sids], spec, frozenset()
+    )
     batches = list(read([pa.record_batch([pa.array([0])], names=["id"])]))
     # one anchor row per split, nothing else
     assert [b.column(0)[0].as_py() for b in batches] == sids

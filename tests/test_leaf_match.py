@@ -1,7 +1,7 @@
 """Leaf-local matching kernel for the scoring-opt-out consumers.
 
 count_hits / search_aggs / export_fast_field route through the leaf kernel
-(emit="count" / emit="docids") whenever the query compiles; every shape the
+(emit="count" / emit="fields") whenever the query compiles; every shape the
 gate accepts must agree exactly with the general matching() plan — and the
 gate must bail (not mis-answer) on shapes the kernel can't evaluate.
 """
@@ -203,7 +203,7 @@ def test_count_plan_rows_are_per_split(small_index):
     # itself must have at most one row per published split
     s = Searcher(small_index, scoring=False)
     sids = [m.split_id for m in small_index.manifest.list_published()]
-    spec = s.leaf_plan(parse_query("w1 OR w2"), allow_phrase=True)
+    spec = s.leaf_plan(parse_query("w1 OR w2"))
     per_split = s.leaf_count(spec, sids).collect()
     assert 0 < len(per_split) <= len(sids)
     assert sum(r["n"] for r in per_split) == _count(small_index, "w1 OR w2")[1]
@@ -308,7 +308,7 @@ def test_leaf_fields_ts_roundtrip_exact(small_index):
     docstore's timestamp values bit-for-bit (nulls included)."""
     s = Searcher(small_index, scoring=False)
     sids = [m.split_id for m in small_index.manifest.list_published()]
-    spec = s.leaf_plan(parse_query("w1 OR w2"), allow_phrase=True)
+    spec = s.leaf_plan(parse_query("w1 OR w2"))
     got = s.leaf_matching_fields(spec, sids, None, ["ts", "tag"])
     via_join = (
         s.leaf_matching(spec, sids)
@@ -399,7 +399,7 @@ def test_bucket_partials_row_volume(small_index):
     """The partial DF itself carries at most |splits|*|buckets| rows."""
     s = Searcher(small_index, scoring=False)
     sids = [m.split_id for m in small_index.manifest.list_published()]
-    spec = s.leaf_plan(parse_query("w1 OR w2"), allow_phrase=True)
+    spec = s.leaf_plan(parse_query("w1 OR w2"))
     pdf = s.leaf_bucket_partials(spec, sids, None, "terms", "tag", {})
     rows = pdf.collect()
     n_buckets = len({r["tag"] for r in rows})

@@ -2,8 +2,9 @@
 
 Covers: positions codec round-trip (property), the phrase_freq kernel
 contract, engine-vs-pure-python rank+score identity for phrases with and
-without slop, the positions-less fallback, and phrase survival through a
-merge (docid re-base leaves doc-local positions intact)."""
+without slop, phrases on positions-less splits (verified from stored
+text), and phrase survival through a merge (docid re-base leaves
+doc-local positions intact)."""
 
 from __future__ import annotations
 
@@ -113,8 +114,9 @@ def test_phrase_rank_identity(small_index, query, toks, slop):
 
 
 def test_phrase_fallback_without_positions(spark, pages_small, tmp_path):
-    """record=freq index: phrase degrades to AND + candidate-restricted regex
-    verify with sum-of-term-BM25 scores (the documented approximation)."""
+    """record=freq index: the leaf kernel takes the tokens' docid
+    intersection as candidates and verifies each by re-analysing its
+    stored text, scoring true phrase-BM25 (tf = phrase frequency)."""
     index_dir = str(tmp_path / "freq_idx")
     cfg = IndexConfig(index_id="pages", num_splits=3, record="freq")
     build_index(spark, pages_small, index_dir, cfg)
@@ -180,8 +182,8 @@ def test_phrase_through_export_and_count(small_index):
 
 def test_mixed_positions_index_degrades_not_crashes(spark, pages_small, tmp_path):
     """A split without positions in scope (e.g. from a mixed-source merge)
-    must route phrase queries to the fallback instead of decoding null
-    payloads (r2 review finding)."""
+    must verify phrases from its stored text instead of decoding null
+    payloads; the positions splits keep the positions matcher."""
     d = str(tmp_path / "mixed_idx")
     build_index(spark, pages_small, d, IndexConfig(index_id="pages", num_splits=3))
     reader = IndexReader(spark, d)

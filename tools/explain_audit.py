@@ -6,10 +6,12 @@ Checks (each printed with PASS/FAIL):
    no postings scan, no split repartition exchange, no join; the kernel
    reads its splits' query-term postings itself (positions only for
    phrases), and the eager default merges the per-split partials
-   driver-side (a local relation, no sort job);
+   driver-side (a local relation, no sort job); a phrase on splits
+   without positions is the same single kernel over Range;
 2. general plan (a query with a docstore-only atom): no postings scan,
    one leaf-kernel relation per clause group, the atom a pushed docstore
-   filter;
+   filter, the must clauses combined by one partial + final aggregate
+   over a single exchange;
 3. fetch phase: winners broadcast into the docstore scan, text column read
    ONLY in the fetch subtree;
 4. count / aggregation / export: scoring-free, join-free, shuffle-free
@@ -60,6 +62,17 @@ def main() -> None:
             spark, synth_pages(spark, 2000, partitions=4), idx, IndexConfig(num_splits=2)
         )
     reader = IndexReader(spark, idx)
+    # a small record=freq index: no split stores positions
+    idx_freq = "/tmp/qs_explain_idx_freq"
+    if not os.path.exists(os.path.join(idx_freq, "manifest")):
+        shutil.rmtree(idx_freq, ignore_errors=True)
+        build_index(
+            spark,
+            synth_pages(spark, 500, partitions=2),
+            idx_freq,
+            IndexConfig(num_splits=2, record="freq"),
+        )
+    reader_freq = IndexReader(spark, idx_freq)
 
     sections: list[tuple[str, str, list[tuple[str, bool]]]] = []
 
@@ -95,9 +108,12 @@ def main() -> None:
     # general plan: the tag atom only the docstore answers keeps the query
     # off the leaf top-k path; its compilable clauses run as leaf-kernel
     # relations, one per clause group (must `w3`, must_not `w7`), glued to
-    # the docstore atom by relational joins
+    # the docstore atom by relational joins. Each clause relation emits a
+    # (split_id, docid) at most once, so the must combine counts clauses
+    # with a plain count: one partial + one final aggregate, one exchange
     gq = "lang:en AND w3 -w7"
     pg = plan_of(search(reader, SearchRequest(query=gq, max_hits=10), fetch_fields=()))
+    pg_tree = pg.split("\n\n", 1)[0]
     checks_g = [
         ("general plan has no postings FileScan", "postings" not in pg),
         ("one MapInArrow per clause group (must, must_not)",
@@ -106,6 +122,11 @@ def main() -> None:
          "docstore" in pg
          and re.search(r"PushedFilters: \[[^\]]*EqualTo\(tag,en\)", pg) is not None),
         ("must_not clause is an anti-join", "LeftAnti" in pg),
+        ("must clauses combine in one partial and one final HashAggregate",
+         len(re.findall(r"HashAggregate \(\d+\)", pg_tree)) == 2
+         and "partial_count" in pg),
+        ("a single Exchange under the must union",
+         len(re.findall(r"(?<!Broadcast)Exchange \(\d+\)", pg_tree)) == 1),
     ]
     sections.append((f"general plan: {gq} (kernel relations per clause group)", pg, checks_g))
 
@@ -171,22 +192,41 @@ def main() -> None:
     from quickwit_spark.operators.search import Searcher, _make_split_postings_reader
     from quickwit_spark.plans.query import parse_query
 
-    sids = [m.split_id for m in reader.manifest.list_published()]
     task = [pa.record_batch([pa.array([0])], names=["id"])]
 
-    def read_cols(q: str) -> set:
-        spec = Searcher(reader).leaf_plan(parse_query(q), allow_phrase=True)
-        read = _make_split_postings_reader(reader.index_dir, [sids], spec)
+    def read_cols(r, q: str) -> set:
+        searcher = Searcher(r)
+        sids = [m.split_id for m in r.manifest.list_published()]
+        pos = frozenset(searcher._position_splits(sids))
+        spec = searcher.leaf_plan(parse_query(q))
+        read = _make_split_postings_reader(r.index_dir, [sids], spec, pos)
         return {n for b in read(task) for n in b.schema.names}
 
     checks2 = [
         ("phrase runs in the leaf kernel, no exchange",
          "MapInArrow" in p2 and "Exchange" not in p2),
         ("phrase never scans docstore text", "text" not in p2),
-        ("kernel reads pos_blocks for the phrase", "pos_blocks" in read_cols('"w0 w1"')),
-        ("kernel reads no pos_blocks for a term query", "pos_blocks" not in read_cols("w0 w1")),
+        ("kernel reads pos_blocks for the phrase", "pos_blocks" in read_cols(reader, '"w0 w1"')),
+        ("kernel reads no pos_blocks for a term query",
+         "pos_blocks" not in read_cols(reader, "w0 w1")),
     ]
     sections.append(("phrase query (positions path)", p2, checks2))
+
+    # no positions stored: the kernel verifies the phrase candidates from
+    # their stored text, read split-locally — still one kernel over Range
+    phrase_f = search(
+        reader_freq, SearchRequest(query='"w0 w1"', max_hits=10), fetch_fields=(), lazy=True
+    )
+    p2f = plan_of(phrase_f)
+    checks2f = [
+        ("phrase is one MapInArrow over Range",
+         len(re.findall(r"MapInArrow \(\d+\)", p2f)) == 1 and "Range" in p2f),
+        ("no exchange and no MapInPandas", "Exchange" not in p2f and "MapInPandas" not in p2f),
+        ("no docstore or postings FileScan",
+         "Scan parquet" not in p2f and "docstore" not in p2f and "postings" not in p2f),
+        ("kernel reads no pos_blocks", "pos_blocks" not in read_cols(reader_freq, '"w0 w1"')),
+    ]
+    sections.append(("phrase query (positions-less split)", p2f, checks2f))
 
     cnt = count_hits(reader, SearchRequest(query="w0 w3"))
     p3 = plan_of(cnt)
