@@ -73,12 +73,15 @@ from quickwit_spark.plans.query import (
 # filters as an In(...) when at most this many (a 10k-element In is slow to
 # translate; beyond it a [min,max] range still prunes row groups)
 FETCH_ISIN_MAX = 4_096
-# target bytes per query task. Every task pays a fixed executor↔python-
-# worker hand-off, which dominates when a task holds <1 MB. The leaf kernel
-# packs consecutive splits into one task up to this many manifest bytes
-# (_leaf_split_tasks), and warm() coalesces the cached docstore to
-# ceil(bytes/target) partitions with a floor of 4; at per-split sizes beyond
-# the target both are one task/partition per split.
+# target bytes per query task. Every Python task pays a fixed start-up
+# (task launch, worker hand-off, Arrow stream open), which dominates when a
+# task holds <1 MB: a 1-task no-op mapInArrow job takes ~0.14 s on a
+# 4-vCPU host (~0.27 s before worker_daemon.py stopped each task re-reading
+# Spark's zip archives). The leaf kernel packs consecutive splits into one
+# task up to this many manifest bytes (_leaf_split_tasks), and warm()
+# coalesces the cached docstore to ceil(bytes/target) partitions with a
+# floor of 4; at per-split sizes beyond the target both are one
+# task/partition per split.
 QUERY_PARTITION_TARGET_BYTES = 32 << 20
 
 # ---------------------------------------------------------------------------
@@ -501,13 +504,13 @@ class IndexReader:
 
         Spark's file scan shrinks its split size to fill defaultParallelism,
         so a small index (sf0.1: ~25 MB of postings) is sliced into ~32
-        micro-partitions — and every query-side python-kernel job then pays
-        ~15 ms of executor↔worker hand-off PER TASK for partitions holding a
-        few hundred KB (measured: a no-op mapInArrow over 30 such partitions
-        costs ~0.5 s wall; the same data in ≤8 partitions, ~0.15 s; this is
-        the dominant term in small-corpus query latency). Coalesce the cached
-        relation to ceil(bytes / 32 MB), floored at 4 for parallelism and
-        capped at the scan's own partition count — so at 10^12-doc scale,
+        micro-partitions — and every Python job over it then pays a fixed
+        start-up PER TASK for partitions holding a few hundred KB (4-vCPU
+        host, local[4]: a no-op mapInArrow over 30 partitions costs ~0.57 s
+        wall, over 4 ~0.15 s; ~1.9 and ~0.36 s before worker_daemon.py
+        stopped each task re-reading Spark's zip archives). Coalesce the
+        cached relation to ceil(bytes / 32 MB), floored at 4 for parallelism
+        and capped at the scan's own partition count — so at 10^12-doc scale,
         where per-split files exceed the target, this is exactly a no-op and
         the per-split placement is preserved."""
         try:
@@ -532,11 +535,11 @@ class IndexReader:
         never re-read the manifest): the 10^12-doc setting, where postings
         and docstore stay on storage behind the parquet reader and the OS
         page cache. ``mode="full"`` also caches the docstore relation, read
-        by match-all counts, aggregations and exports, the general plan's
-        docstore atoms and its point-lookup fetch
-        — right for an index that fits cluster memory. Postings are never
-        cached: every query reads its splits' term rows with pyarrow inside
-        the leaf kernel task, so no query plan scans the postings relation.
+        by match-all exports, the general plan's docstore atoms and its
+        point-lookup fetch — right for an index that fits cluster memory.
+        Postings are never cached: every query reads its splits' term rows
+        with pyarrow inside the leaf kernel task, so no query plan scans the
+        postings relation.
 
         The cached docstore is right-sized by bytes (see
         ``_query_coalesce``) — a no-op at cluster scale, a ~1.1-1.6x
@@ -2113,7 +2116,8 @@ def _leaf_split_tasks(split_ids: list[str], stats: dict) -> list[list[str]]:
     """Group the pruned splits into leaf-kernel tasks by the manifest's
     ``uncompressed_docs_size_in_bytes``: consecutive splits share a task
     until it would exceed ``QUERY_PARTITION_TARGET_BYTES``. A small index
-    is one task (every task costs a fixed executor↔python-worker hand-off);
+    is one task (every Python task pays a fixed start-up, see
+    ``QUERY_PARTITION_TARGET_BYTES``);
     at production split sizes every split is its own task. Driver metadata
     only — no storage call."""
     tasks: list[list[str]] = []
@@ -4214,11 +4218,11 @@ def search_aggs(
       2. other aggs on a leaf-compiling query → leaf-fields collector (the
          kernel attaches the request's columns split-locally; no docstore
          scan or join; Catalyst's map-side partial agg is the leaf fold);
-      3. non-compiling queries → docids matching plan + ONE docstore
-         semi-join, each named aggregation one groupBy (Catalyst's
-         partial+final aggregation = the reference's leaf/root merge);
-      4. match-all (bounded or not) → one pruned docstore scan with the
-         window pushed to parquet, no query evaluation at all.
+      3. the rest → docids matching plan + ONE docstore semi-join (for
+         match-all, one pruned docstore scan with the window pushed to
+         parquet), each named aggregation one groupBy (Catalyst's
+         partial+final aggregation = the reference's leaf/root merge).
+    Match-all ``*`` compiles onto the kernel like any other query.
     A mixed request routes each named aggregation independently.
 
     Request field names are rewritten onto docstore columns via the
@@ -4253,14 +4257,6 @@ def search_aggs(
         fmap[cfg["tag_field"]] = "tag"
     if cfg.get("timestamp_field"):
         fmap[cfg["timestamp_field"]] = "ts"
-    if isinstance(ast, MatchAll) and leaf_match is not False:
-        # match-all (bounded or not) short-circuits query evaluation: one
-        # pruned docstore scan with the window pushed to parquet, no
-        # matching join at all
-        docs = _matchall_docs(reader, split_ids, request)
-        return run_agg_request(
-            docs, aggs, field_map=fmap, universe=_agg_universe(reader, split_ids)
-        )
     results: dict = {}
     rest = aggs
     spec = None
@@ -4307,15 +4303,13 @@ def search_aggs(
                 )
             )
             return results
-    docs = reader.docstore().filter(F.col("split_id").isin(split_ids))
-    bounded = (
-        request.start_timestamp is not None
-        or request.end_timestamp is not None
-    )
-    if not (isinstance(ast, MatchAll) and not bounded):
+    if isinstance(ast, MatchAll):
+        docs = _matchall_docs(reader, split_ids, request)
+    else:
         m = searcher.matching(
             ast, split_ids, request.start_timestamp, request.end_timestamp
         )
+        docs = reader.docstore().filter(F.col("split_id").isin(split_ids))
         docs = docs.join(m, ["split_id", "docid"], "left_semi")
     results.update(
         run_agg_request(
@@ -4350,36 +4344,25 @@ def count_hits(
         bad = set(exclude_split_ids)
         split_ids = [s for s in split_ids if s not in bad]
     if leaf_match is not False:
-        no_ts = (
-            request.start_timestamp is None
+        if (
+            isinstance(ast, MatchAll)
+            and request.start_timestamp is None
             and request.end_timestamp is None
-        )
-        if isinstance(ast, MatchAll):
-            if no_ts:
-                # metastore-only count: num_docs is maintained exactly by
-                # build / merge / delete-rewrite (stats recomputed from the
-                # rewritten rows each time), so an unbounded match-all count
-                # is a manifest sum — zero split files touched at any corpus
-                # size (the metastore list_splits analog,
-                # metastore/mod.rs:304-390). Time-bounded windows keep the
-                # pruned scan: per-doc semantics (null-ts docs match
-                # nothing, unparseable bounds cast to NULL = empty) must
-                # stay with the engine's cast expressions.
-                keep = set(split_ids)
-                total = sum(
-                    s.num_docs for s in splits if s.split_id in keep
-                )
-                return local_rows_df(
-                    reader.spark,
-                    [(total,)],
-                    T.StructType(
-                        [T.StructField("num_hits", T.LongType(), False)]
-                    ),
-                )
-            # match-all count: one pruned docstore scan (docid-only after
-            # column pruning), no query evaluation or matching join
-            return _matchall_docs(reader, split_ids, request).agg(
-                F.count(F.lit(1)).alias("num_hits")
+        ):
+            # metastore-only count: num_docs is maintained exactly by
+            # build / merge / delete-rewrite (stats recomputed from the
+            # rewritten rows each time), so an unbounded match-all count
+            # is a manifest sum — zero split files touched at any corpus
+            # size (the metastore list_splits analog,
+            # metastore/mod.rs:304-390). A time-bounded `*` goes to the
+            # kernel, whose window test matches no null-ts doc and no doc
+            # for an unparseable bound (_ts_micros).
+            keep = set(split_ids)
+            total = sum(s.num_docs for s in splits if s.split_id in keep)
+            return local_rows_df(
+                reader.spark,
+                [(total,)],
+                T.StructType([T.StructField("num_hits", T.LongType(), False)]),
             )
         spec, ts, _ = _leaf_gate(reader, searcher, ast, split_ids, request)
         if spec is not None:

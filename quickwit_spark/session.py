@@ -12,6 +12,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+# the directory holding the ``quickwit_spark`` package, put on the local
+# Python workers' path so the daemon imports whatever the driver's cwd
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def local_rows_df(spark: SparkSession, rows, schema) -> DataFrame:
     """Driver-local rows -> DataFrame via the pandas/Arrow path.
@@ -19,13 +23,16 @@ def local_rows_df(spark: SparkSession, rows, schema) -> DataFrame:
     ``createDataFrame(list)`` parallelizes into ``defaultParallelism``
     pickled partitions, and every scan of the result — e.g. each
     broadcast-build job on the query hot path, or the routing-map join of
-    a build — spawns that many Python workers: measured ~0.35 s per scan
+    a build — runs that many Python tasks: measured ~0.35 s per scan
     for a 30-row stats table on local[32] (32 tasks, 6.9 s summed wait,
-    70 ms CPU). The pandas/Arrow path converts JVM-side at creation, so
-    scans are pure JVM with as many partitions as Arrow batches (one, for
-    driver-sized data). Empty input keeps the plain path — it preserves
-    exact nullability, the Arrow path is pathological for zero rows
-    (~4.8 s measured), and no empty site is hot.
+    70 ms CPU). Most of that wait was each task's worker re-reading
+    Spark's zip archives (~0.2 s), which ``worker_daemon`` now skips, but
+    every Python task still pays a fixed start-up. The pandas/Arrow path
+    converts JVM-side at creation, so scans are pure JVM with as many
+    partitions as Arrow batches (one, for driver-sized data). Empty input
+    keeps the plain path — it preserves exact nullability, the Arrow path
+    is pathological for zero rows (~4.8 s measured), and no empty site is
+    hot.
     """
     if not rows:
         return spark.createDataFrame([], schema)
@@ -66,4 +73,12 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
+    if master == "local" or master.startswith("local["):
+        # Python workers fork from a daemon that skips re-reading unchanged
+        # zip archives at each task (worker_daemon.py). Local masters only:
+        # elsewhere the daemon starts before --py-files are unpacked, so an
+        # executor without the package installed would fail every task.
+        builder = builder.config(
+            "spark.python.daemon.module", "quickwit_spark.worker_daemon"
+        ).config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     return builder.getOrCreate()

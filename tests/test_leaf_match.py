@@ -98,9 +98,10 @@ def test_count_matchall_unbounded_is_metadata_only(small_index):
     assert df.collect()[0]["num_hits"] == 600
 
 
-def test_count_matchall_ts_bounded_still_scans(small_index):
-    # a bounded window must keep per-doc semantics (null-ts docs match
-    # nothing; boundary docs filtered) — plan reads the docstore
+def test_count_matchall_ts_bounded_is_a_kernel_count(small_index):
+    # a bounded '*' count is a leaf-kernel count like any other query: the
+    # kernel applies the window per doc (boundary docs filtered), so the
+    # plan holds no docstore scan and the count equals the general plan's
     df = count_hits(
         small_index,
         SearchRequest(
@@ -110,7 +111,7 @@ def test_count_matchall_ts_bounded_still_scans(small_index):
         ),
     )
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "parquet" in plan.lower()
+    assert "MapInArrow" in plan and "parquet" not in plan.lower()
     gen = count_hits(
         small_index,
         SearchRequest(
@@ -331,7 +332,7 @@ def test_leaf_fields_plan_gates(small_index):
 
 
 def test_matchall_bounded_aggs_and_count(small_index):
-    """'*' with a time window: direct pruned-scan plan == general plan."""
+    """'*' with a time window: leaf-kernel count and aggs == general plan."""
     req_kw = dict(
         start_timestamp="2023-01-01T00:30:00",
         end_timestamp="2023-01-01T03:00:00",

@@ -19,6 +19,7 @@ from quickwit_spark.operators.search import (
     _leaf_gate,
     count_hits,
     search,
+    search_aggs,
     search_many,
 )
 from quickwit_spark.plans.query import parse_query
@@ -116,6 +117,28 @@ def test_time_window_matches_general_plan(null_ts_index, order):
     assert rows and all(r[2] is not None for r in rows)
     _, n = search(null_ts_index, req, fetch_fields=(), with_count=True)
     assert n == count_hits(null_ts_index, req).collect()[0][0] > len(rows)
+
+
+def test_time_window_count_and_aggs_match_general_plan(null_ts_index):
+    # a bounded '*' count or aggregation runs on the kernel; null-ts docs
+    # fall outside every window, as on the general plan
+    req = SearchRequest(
+        query="*",
+        max_hits=0,
+        start_timestamp="2023-01-01T01:00:00",
+        end_timestamp="2023-01-01T04:00:00",
+    )
+    n = count_hits(null_ts_index, req).collect()[0][0]
+    assert n == count_hits(null_ts_index, req, leaf_match=False).collect()[0][0]
+    aggs = {"t": {"date_histogram": {"field": "warc_ts", "fixed_interval": "30m"}}}
+
+    def buckets(**kw):
+        rows = search_aggs(null_ts_index, req, aggs, **kw)["t"].collect()
+        return sorted(map(tuple, rows))
+
+    leaf = buckets()
+    assert leaf == buckets(leaf_match=False)
+    assert 0 < n < 600 and sum(r[-1] for r in leaf) == n
 
 
 @pytest.mark.parametrize("sort_by", [None, "warc_ts"])

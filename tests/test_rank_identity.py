@@ -112,9 +112,10 @@ def test_cjk_term(small_index, oracle):
 def test_warm_coalesces_to_byte_sized_partitions(spark, small_index):
     # warm() right-sizes the cached partitioning by bytes: a tiny index must
     # not keep the scan layer's defaultParallelism-filling micro-partitions
-    # (each query-side python-kernel task pays a fixed worker hand-off, so
-    # over-partitioning dominates small-corpus latency), and the results
-    # must be identical to an unwarmed reader on the same index.
+    # (each Python task pays a fixed start-up, ~0.1 s on a 4-vCPU host
+    # with the session's worker daemon, see QUERY_PARTITION_TARGET_BYTES),
+    # and the results must be identical to an unwarmed reader on the same
+    # index.
     cold = IndexReader(spark, small_index.index_dir)
     orig_parts = cold.docstore().rdd.getNumPartitions()
     warmed = IndexReader(spark, small_index.index_dir)

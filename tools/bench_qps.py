@@ -9,10 +9,10 @@ serving-throughput half of the "sub-second" story (the latency half is the
 warmed per-query table in bench.py / BASELINE.md).
 
 Method: one index (bench.py's exact sf0.1 shape: 60k docs, 30 splits,
-tmpfs), one SparkSession in FAIR scheduling mode (each client thread in its
-own fair pool, as a multi-tenant search head would run), N closed-loop
-threads each running bench.py's 10-query set round-robin from staggered
-offsets for a fixed number of passes. Reported per level: aggregate QPS,
+tmpfs), the engine's session (``session.get_spark``) in FAIR scheduling
+mode (each client thread in its own fair pool, as a multi-tenant search
+head would run), N closed-loop threads each running bench.py's 10-query
+set round-robin from staggered offsets for a fixed number of passes. Reported per level: aggregate QPS,
 mean and p95 latency. The concurrent queries share only read-mostly
 reader state (fieldnorm cache, stats map).
 
@@ -44,27 +44,17 @@ def main() -> None:
     args = ap.parse_args()
     levels = [int(x) for x in args.threads.split(",")]
 
-    from pyspark.sql import SparkSession
-
     from quickwit_spark.operators.build import IndexConfig, build_index
     from quickwit_spark.operators.search import IndexReader, SearchRequest, search
+    from quickwit_spark.session import get_spark
     from quickwit_spark.sources.pages import synth_pages
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.appName("qs_qps")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.scheduler.mode", "FAIR")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.sql.files.ignoreMissingFiles", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
+    # the engine's own session plus FAIR pools for the client threads, so
+    # the numbers measure what a caller of get_spark gets
+    os.environ["PYSPARK_SUBMIT_ARGS"] = (
+        "--conf spark.scheduler.mode=FAIR pyspark-shell"
     )
+    spark = get_spark(app_name="qs_qps")
     spark.sparkContext.setLogLevel("ERROR")
 
     from bench import QUERY_SET  # the exact latency-bench query set
