@@ -30,6 +30,7 @@ documented PartialHit contract (search_api.proto:207-218).
 from __future__ import annotations
 
 import bisect
+import copy
 import functools
 from collections.abc import Iterator
 from dataclasses import dataclass, replace
@@ -117,7 +118,6 @@ def _versioned(reader: "IndexReader", split_ids: list[str], kernel):
     versions = {
         sid: float(stats[sid].get("create_timestamp") or 0.0)
         for sid in split_ids
-        if sid in stats
     }
     # a partial over a module-level function: it unpickles by reference,
     # so the install below writes the worker's real module registry (a
@@ -130,9 +130,27 @@ def _run_versioned(index_dir: str, versions: dict, kernel, batches):
     return kernel(batches)
 
 
+def _cache_put(cache: dict, max_bytes: int, key, entry, nbytes: int):
+    """Insert ``entry`` into one of the executor caches below and return
+    it. Values are ``(nbytes, entry)`` pairs, evicted oldest-first until
+    the new entry fits in ``max_bytes`` (per python worker). The bound is
+    on bytes, not entries: a fieldnorm entry costs ~16 bytes/doc, so a
+    10M-doc split costs ~160 MB, and an entry-count bound would OOM the
+    python workers at exactly the split sizes the design targets."""
+    held = sum(n for n, _ in cache.values())
+    while cache and held + nbytes > max_bytes:
+        held -= cache.pop(next(iter(cache)))[0]
+    cache[key] = (nbytes, entry)
+    return entry
+
+
+def _cache_get(cache: dict, key):
+    hit = cache.get(key)
+    return None if hit is None else hit[1]
+
+
 _NORMS_CACHE: dict = {}
 _NORMS_CACHE_MAX_BYTES = 512 * 1024 * 1024  # per python worker (tantivy: 1 GB)
-_NORMS_CACHE_BYTES = 0
 
 
 def _load_norms(index_dir: str, split_id: str, quantize: bool, field: str = ""):
@@ -143,7 +161,7 @@ def _load_norms(index_dir: str, split_id: str, quantize: bool, field: str = ""):
     key = (
         index_dir, split_id, _split_version(index_dir, split_id), quantize, field
     )
-    hit = _NORMS_CACHE.get(key)
+    hit = _cache_get(_NORMS_CACHE, key)
     if hit is not None:
         return hit
     import pyarrow.parquet as pq
@@ -160,21 +178,11 @@ def _load_norms(index_dir: str, split_id: str, quantize: bool, field: str = ""):
     docids = docids[order]
     dls = dls[order]
     dense = len(docids) > 0 and docids[0] == 0 and docids[-1] == len(docids) - 1
-    entry = (None if dense else docids, dls)
-    # byte-bounded FIFO eviction: entry size is ~16 bytes/doc, and a
-    # 10M-doc split costs ~160 MB — an entry-count bound would OOM the
-    # python workers at exactly the split sizes the design targets
-    global _NORMS_CACHE_BYTES
     nbytes = dls.nbytes + (docids.nbytes if not dense else 0)
-    while _NORMS_CACHE and _NORMS_CACHE_BYTES + nbytes > _NORMS_CACHE_MAX_BYTES:
-        oldest = next(iter(_NORMS_CACHE))
-        old_idx, old_dls = _NORMS_CACHE.pop(oldest)
-        _NORMS_CACHE_BYTES -= old_dls.nbytes + (
-            old_idx.nbytes if old_idx is not None else 0
-        )
-    _NORMS_CACHE[key] = entry
-    _NORMS_CACHE_BYTES += nbytes
-    return entry
+    return _cache_put(
+        _NORMS_CACHE, _NORMS_CACHE_MAX_BYTES, key,
+        (None if dense else docids, dls), nbytes,
+    )
 
 
 def _norms_for(
@@ -197,7 +205,6 @@ def _norms_for(
 # pruning.
 _FAST_CACHE: dict = {}
 _FAST_CACHE_MAX_BYTES = 512 * 1024 * 1024
-_FAST_CACHE_BYTES = 0
 
 
 def _load_fast(index_dir: str, split_id: str, col: str):
@@ -208,7 +215,7 @@ def _load_fast(index_dir: str, split_id: str, col: str):
     numeric/bool columns; ``valid`` marks non-null rows. ``None`` docids
     mean docid-dense (docid == row index), as in the fieldnorm cache."""
     key = (index_dir, split_id, _split_version(index_dir, split_id), col)
-    hit = _FAST_CACHE.get(key)
+    hit = _cache_get(_FAST_CACHE, key)
     if hit is not None:
         return hit
     import pyarrow.compute as pc
@@ -235,18 +242,11 @@ def _load_fast(index_dir: str, split_id: str, col: str):
     vals = vals[order]
     valid = valid[order]
     dense = len(docids) > 0 and docids[0] == 0 and docids[-1] == len(docids) - 1
-    entry = (None if dense else docids, vals, valid, is_ts)
-    global _FAST_CACHE_BYTES
     nbytes = vals.nbytes + valid.nbytes + (docids.nbytes if not dense else 0)
-    while _FAST_CACHE and _FAST_CACHE_BYTES + nbytes > _FAST_CACHE_MAX_BYTES:
-        oldest = next(iter(_FAST_CACHE))
-        oi, ov, ovd, _ = _FAST_CACHE.pop(oldest)
-        _FAST_CACHE_BYTES -= ov.nbytes + ovd.nbytes + (
-            oi.nbytes if oi is not None else 0
-        )
-    _FAST_CACHE[key] = entry
-    _FAST_CACHE_BYTES += nbytes
-    return entry
+    return _cache_put(
+        _FAST_CACHE, _FAST_CACHE_MAX_BYTES, key,
+        (None if dense else docids, vals, valid, is_ts), nbytes,
+    )
 
 
 def _fast_for(index_dir: str, split_id: str, col: str, docids: np.ndarray):
@@ -263,19 +263,15 @@ def _fast_for(index_dir: str, split_id: str, col: str, docids: np.ndarray):
 # REAL values (strings for terms buckets, exact integers for sums), so the
 # cached entry keeps the Arrow array as read; timestamps are lowered to
 # epoch-micros int64 only at emit time and restored JVM-side. Entries share
-# the fast-field cache dict and byte budget (tuple shape matches the
-# eviction arithmetic: (idx|None, .nbytes-carrier, .nbytes-carrier, flag)).
-_EMPTY_U8 = np.empty(0, dtype=np.uint8)
-
-
+# the fast-field cache dict and byte budget.
 def _load_col(index_dir: str, split_id: str, col: str):
     """-> (sorted docid array | None, pyarrow Array in docid order)."""
     key = (
         index_dir, split_id, _split_version(index_dir, split_id), "\x00typed", col
     )
-    hit = _FAST_CACHE.get(key)
+    hit = _cache_get(_FAST_CACHE, key)
     if hit is not None:
-        return hit[0], hit[1]
+        return hit
     import pyarrow.parquet as pq
 
     tbl = pq.read_table(
@@ -287,18 +283,11 @@ def _load_col(index_dir: str, split_id: str, col: str):
     docids = docids[order]
     arr = arr.take(pa.array(order))
     dense = len(docids) > 0 and docids[0] == 0 and docids[-1] == len(docids) - 1
-    entry = (None if dense else docids, arr, _EMPTY_U8, False)
-    global _FAST_CACHE_BYTES
     nbytes = arr.nbytes + (docids.nbytes if not dense else 0)
-    while _FAST_CACHE and _FAST_CACHE_BYTES + nbytes > _FAST_CACHE_MAX_BYTES:
-        oldest = next(iter(_FAST_CACHE))
-        oi, ov, ovd, _ = _FAST_CACHE.pop(oldest)
-        _FAST_CACHE_BYTES -= ov.nbytes + ovd.nbytes + (
-            oi.nbytes if oi is not None else 0
-        )
-    _FAST_CACHE[key] = entry
-    _FAST_CACHE_BYTES += nbytes
-    return entry[0], entry[1]
+    return _cache_put(
+        _FAST_CACHE, _FAST_CACHE_MAX_BYTES, key,
+        (None if dense else docids, arr), nbytes,
+    )
 
 
 def _col_for(index_dir: str, split_id: str, col: str, docids: np.ndarray):
@@ -318,26 +307,16 @@ def _universe_for(index_dir: str, split_id: str) -> np.ndarray:
     key = (
         index_dir, split_id, _split_version(index_dir, split_id), "\x00univ", ""
     )
-    hit = _FAST_CACHE.get(key)
+    hit = _cache_get(_FAST_CACHE, key)
     if hit is not None:
-        return hit[1]
+        return hit
     import pyarrow.parquet as pq
 
     tbl = pq.read_table(
         f"{index_dir}/docstore/split_id={split_id}", columns=["docid"]
     )
     d = np.sort(tbl.column("docid").to_numpy().astype(np.int64))
-    entry = (None, d, _EMPTY_U8, False)
-    global _FAST_CACHE_BYTES
-    while _FAST_CACHE and _FAST_CACHE_BYTES + d.nbytes > _FAST_CACHE_MAX_BYTES:
-        oldest = next(iter(_FAST_CACHE))
-        oi, ov, ovd, _ = _FAST_CACHE.pop(oldest)
-        _FAST_CACHE_BYTES -= ov.nbytes + ovd.nbytes + (
-            oi.nbytes if oi is not None else 0
-        )
-    _FAST_CACHE[key] = entry
-    _FAST_CACHE_BYTES += d.nbytes
-    return d
+    return _cache_put(_FAST_CACHE, _FAST_CACHE_MAX_BYTES, key, d, d.nbytes)
 
 
 # docstore dtypes the leaf kernel can sort by under Spark's cast-to-double
@@ -461,27 +440,27 @@ class SearchRequest:
 
 
 class IndexReader:
-    """Lazy handles over one index's postings/docstore/manifest.
+    """Lazy handles over one index's postings/docstore/manifest, planned
+    against ONE manifest version.
+
+    The reader pins the manifest at its transaction-log tip when it opens
+    (``Manifest.pin``), so every request through it — split pruning, the
+    per-split BM25 stats, the leaf kernel's task sizing — sees one
+    consistent split set even while merges, deletes and GC commit behind
+    it; the retired splits' files stay readable for the GC deletion-grace
+    window. The reference root plans a whole scatter-gather against one
+    metastore snapshot the same way. ``refresh()`` re-pins at the new tip.
 
     The postings/docstore DataFrames are memoized: re-creating them per query
     would re-list the parquet directories every time (the reference avoids
     re-opens with its hotcache/footer cache — reusing the relation is the
     Spark analog). Call ``refresh()`` after builds/merges/deletes."""
 
-    def __init__(
-        self, spark: SparkSession, index_dir: str, pin: bool = False
-    ):
-        """``pin=True`` freezes the manifest at its current transaction-log
-        version (``Manifest.pin``): every search through this reader then
-        plans against one consistent split set even while merges / deletes /
-        GC commit concurrently — the retired splits' files stay on disk for
-        the GC deletion-grace window. ``refresh()`` re-pins at the new tip."""
+    def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.index_dir = index_dir
         self.manifest = Manifest(index_dir)
-        self._pinned = pin
-        if pin:
-            self.manifest.pin()
+        self.manifest.pin()
         self._postings: DataFrame | None = None
         self._docstore: DataFrame | None = None
         self._warmed: list[DataFrame] = []
@@ -496,8 +475,7 @@ class IndexReader:
         self._postings = None
         self._docstore = None
         self._stats_map = None
-        if self._pinned:
-            self.manifest.pin()  # advance the snapshot to the current tip
+        self.manifest.pin()  # advance the snapshot to the current tip
 
     def _query_coalesce(self, df: DataFrame, subdir: str) -> DataFrame:
         """Right-size the warmed relation's partition count by BYTES.
@@ -2846,10 +2824,6 @@ class Searcher:
         the splits that store them; the kernel verifies the rest from
         their stored text."""
         stats = self.reader.stats_map()
-        # the reader's manifest snapshot bounds the split set, as the
-        # general plan's stats join does: a split published after it is
-        # searched once the reader is refreshed
-        split_ids = [sid for sid in split_ids if sid in stats]
         n_docs_by_split = {sid: stats[sid]["num_docs"] for sid in split_ids}
         tasks = _leaf_split_tasks(split_ids, stats)
         pos_splits = frozenset(self._position_splits(split_ids))
@@ -3256,6 +3230,242 @@ def _with_search_fields(
     return expand_default_fields(ast, tuple(request.search_fields))
 
 
+# root-merge bound: a leaf lane whose |splits|·k per-split partials exceed
+# it is trimmed by Spark before the collect, like a general-plan lane
+_ROOT_MERGE_MAX_ROWS = 1_000_000
+# in-kernel fetch bound: past this many per-split rows in a batch the
+# winners are point-looked-up instead of fetched with every partial
+_INLINE_FETCH_MAX_ROWS = 200_000
+
+
+@dataclass
+class _Plan:
+    """One request planned against the reader's manifest snapshot
+    (``_plan_request``): the parsed query, the searcher that compiles it,
+    the pruned splits, and — when the request compiles onto the leaf
+    kernel — its ``(spec, ts, sort)`` from ``_leaf_gate``."""
+
+    request: SearchRequest
+    ast: Node
+    searcher: "Searcher"
+    splits: list
+    split_ids: list
+    spec: dict | None = None
+    ts: tuple | None = None
+    sort: tuple | None = None
+
+    @property
+    def k(self) -> int:
+        return self.request.max_hits + self.request.start_offset
+
+    @property
+    def root_merged(self) -> bool:
+        """A leaf lane whose per-split partials the root merges as they
+        come out of the kernel."""
+        return (
+            self.spec is not None
+            and len(self.split_ids) * self.k <= _ROOT_MERGE_MAX_ROWS
+        )
+
+
+def _plan_request(
+    reader: IndexReader,
+    request: SearchRequest,
+    *,
+    topk: bool = False,
+    quantize_norms: bool = True,
+    exclude_split_ids: tuple[str, ...] = (),
+    leaf: bool = True,
+    field_ranges: bool = True,
+) -> _Plan:
+    """The one request planner of ``search``, ``search_many``,
+    ``count_hits``, ``search_aggs`` and ``export_fast_field`` — the
+    reference root validating a request and listing its splits against
+    one metastore snapshot before the fan-out (root.rs). It parses the
+    query and applies the request's search fields, prunes the reader's
+    published splits by time window and tags, then by required field
+    ranges (``field_ranges=False``: aggregations, whose min_doc_count:0
+    key universe is the metadata-pruned split set), drops
+    ``exclude_split_ids``, and compiles the request onto the leaf kernel
+    (``_leaf_gate``) when any split survives. ``leaf=False`` is the test
+    hooks' forced general plan: no kernel compile and no field-range
+    pruning, so it stays the unpruned reference.
+
+    ``topk`` plans a ranked result: BM25 is computed only when the request
+    ranks by ``_score`` (a fast-field sort takes the scoring opt-out, like
+    the reference collector skipping scoring unless sorted by _score), a
+    text-field sort is rejected, and a field sort the kernel cannot
+    replicate goes to the general plan. The other callers never score."""
+    needs_scores = topk and request.sort_by_field in (None, "_score")
+    ast = parse_query(request.query)
+    searcher = Searcher(
+        reader, quantize_norms=quantize_norms, scoring=needs_scores
+    )
+    ast = _with_search_fields(searcher, ast, request)
+    if topk and request.sort_by_field == searcher.default_field:
+        # sort fields must be fast, non-text (query_builder.rs:255-300)
+        raise ValueError("sort by a text field is not supported")
+    splits = reader.manifest.list_published(
+        request.start_timestamp,
+        request.end_timestamp,
+        tags=searcher.extract_tags(ast),
+    )
+    if leaf and field_ranges:
+        splits = _prune_splits_by_field_ranges(searcher, ast, splits)
+    if exclude_split_ids:
+        bad = set(exclude_split_ids)
+        splits = [m for m in splits if m.split_id not in bad]
+    plan = _Plan(request, ast, searcher, splits, [m.split_id for m in splits])
+    if leaf and plan.split_ids:
+        plan.spec, plan.ts, plan.sort = _leaf_gate(
+            reader, searcher, ast, plan.split_ids, request
+        )
+        if topk and plan.sort is None and not needs_scores:
+            plan.spec = None  # a field sort the kernel can't replicate
+    return plan
+
+
+def _rank_order(sort_order: str) -> list:
+    """Spark's ``ORDER BY score <dir>, split_id, docid`` (the PartialHit
+    tie-break, search_api.proto:207-218)."""
+    key = F.asc("score") if sort_order == "asc" else F.desc("score")
+    return [key, F.asc("split_id"), F.asc("docid")]
+
+
+def _lane_relation(
+    reader: IndexReader,
+    plan: _Plan,
+    with_hits: bool = False,
+    fetch_cols: "list[str] | None" = None,
+) -> DataFrame:
+    """(split_id, docid, score, ...) of one planned lane: the leaf kernel's
+    per-split top-k partials, or every match of the general plan (scored
+    by the sort field when the request sorts by one)."""
+    req = plan.request
+    if plan.spec is not None:
+        return plan.searcher.scored_topk_leaf(
+            plan.spec,
+            plan.split_ids,
+            plan.k,
+            ts_bounds=plan.ts,
+            sort_spec=plan.sort,
+            order=req.sort_order,
+            with_hits=with_hits,
+            fetch_cols=fetch_cols,
+        )
+    m = plan.searcher.matching(
+        plan.ast, plan.split_ids, req.start_timestamp, req.end_timestamp
+    )
+    if req.sort_by_field and req.sort_by_field != "_score":
+        m = _join_sort_field(reader, plan.searcher, m, req.sort_by_field)
+    return m
+
+
+def _topk(
+    reader: IndexReader,
+    lanes: "dict[str, _Plan]",
+    fetch: tuple,
+    with_hits: bool = False,
+) -> tuple:
+    """The one top-k core of ``search()`` and ``search_many()``: N planned
+    lanes, ONE union, ONE collect, then the per-lane root merge — the
+    reference root's fan-out and re-top-k (root.rs, collector.rs:423-538).
+
+    A root-merged leaf lane contributes its splits' top-k partials as the
+    kernel emits them. A general-plan lane, or a leaf lane whose
+    |splits|·k exceeds the root-merge bound, is trimmed first by
+    ``orderBy(score, split_id, docid).limit(k)``, so Spark's own null/NaN
+    placement applies for each sort direction. ``_root_merge`` then ranks
+    every lane driver-side. When every lane is a leaf lane and the batch's
+    per-split rows stay under the inline bound, the kernels attach
+    ``fetch`` to their rows and the whole batch is one Spark job;
+    otherwise ``_ranked_df`` fetches the winners in one point lookup.
+    ``with_hits`` (one root-merged lane only) counts the lane's matches
+    from the same pass: each split's pre-trim count rides its top-k rows,
+    the reference LeafSearchResponse's num_hits (collector.rs:226).
+
+    Returns ``(ranked, schema, fetched, num_hits)``: ``ranked`` maps each
+    lane to its rows ``[start_offset:k]`` in rank order, ``schema`` is
+    (split_id, docid, score, *fetch when ``fetched``), and ``num_hits`` is
+    None unless counted."""
+    lanes = {q: p for q, p in lanes.items() if p.split_ids}
+    if not lanes:
+        return {}, LEAF_TOPK_SCHEMA, False, None
+    plans = list(lanes.values())
+    fetched = bool(
+        fetch
+        and all(p.spec is not None for p in plans)
+        and sum(len(p.split_ids) * p.k for p in plans) <= _INLINE_FETCH_MAX_ROWS
+        and plans[0].searcher.leaf_fields_plan(list(fetch)) is not None
+    )
+    rels = {}
+    for qid, p in lanes.items():
+        m = _lane_relation(
+            reader,
+            p,
+            with_hits=with_hits,
+            fetch_cols=list(fetch) if fetched else None,
+        )
+        if not p.root_merged:
+            m = m.orderBy(*_rank_order(p.request.sort_order)).limit(p.k)
+        rels[qid] = m
+    if len(rels) == 1:
+        # one lane needs no lane column: that select alone costs ~6 ms of
+        # driver-side plan analysis per query
+        ((qid, batch),) = rels.items()
+        rows = batch.collect()
+        by_lane = {qid: rows}
+    else:
+        batch = functools.reduce(
+            lambda a, b: a.unionByName(b),
+            [m.select(F.lit(q).alias("query_id"), "*") for q, m in rels.items()],
+        )
+        rows = batch.collect()
+        by_lane = {q: [] for q in lanes}
+        for r in rows:
+            by_lane[r["query_id"]].append(r)
+    names = batch.schema.names
+    keep = [i for i, n in enumerate(names) if n not in ("query_id", "split_hits")]
+    ranked = {}
+    for qid, p in lanes.items():
+        req = p.request
+        merged = _root_merge(
+            by_lane[qid], req.sort_order == "asc", req.start_offset, p.k
+        )
+        ranked[qid] = [tuple(r[i] for i in keep) for r in merged]
+    num_hits = None
+    if with_hits:
+        # every split with matches emits >=1 row carrying its count
+        num_hits = int(sum({r["split_id"]: r["split_hits"] for r in rows}.values()))
+    schema = T.StructType([batch.schema.fields[i] for i in keep])
+    return ranked, schema, fetched, num_hits
+
+
+def _ranked_df(
+    reader: IndexReader,
+    rows: list,
+    schema: T.StructType,
+    fetch: tuple,
+    fetched: bool,
+) -> DataFrame:
+    """The top-k core's ranked ``rows`` as a DataFrame in the same order:
+    a local relation when the fetch columns rode the kernel (or none were
+    asked for), else one point-lookup fetch of every winner
+    (``_fetch_winners``) re-sorted by rank."""
+    if fetched or not fetch:
+        return local_rows_df(reader.spark, rows, schema)
+    ranked = [(*r, rn) for rn, r in enumerate(rows)]
+    with_rn = T.StructType(
+        list(schema.fields) + [T.StructField("_rn", T.IntegerType())]
+    )
+    return (
+        _fetch_winners(reader, ranked, with_rn, fetch)
+        .select(*schema.names, *fetch, "_rn")
+        .orderBy("_rn")
+        .drop("_rn")
+    )
+
+
 def search(
     reader: IndexReader,
     request: SearchRequest,
@@ -3269,18 +3479,20 @@ def search(
 ) -> DataFrame:
     """Full search: prune -> match/score -> global top-k -> fetch.
 
-    **Eager by default**: the winner rows are materialized with a driver
-    collect while CONSTRUCTING the result (the reference root's
-    collect-then-fetch, measured faster at every scale) — so the returned
-    DataFrame is a snapshot, and the scoring job runs even if the caller
-    never consumes it. When the query compiles onto the leaf kernel, the
-    whole query is ONE Spark job: the kernel's per-split partials are
-    collected and merged driver-side (``_root_merge``), the kernel attaches
-    the fetch columns itself, and the result is a local relation already in
-    rank order; otherwise the collected winners are point-looked-up in the
-    docstore (``_fetch_winners``), a cost independent of the query's match
-    count. Pass ``lazy=True`` to get
-    a fully-deferred plan instead: nothing executes until an action, and
+    **Eager by default**: the request is one lane through the top-k core
+    (``_topk``, shared with ``search_many``), so the winner rows are
+    materialized with a driver collect while CONSTRUCTING the result (the
+    reference root's collect-then-fetch, measured faster at every scale)
+    — the returned DataFrame is a snapshot, and the scoring job runs even
+    if the caller never consumes it. When the query compiles onto the leaf
+    kernel, the whole query is ONE Spark job: the kernel's per-split
+    partials are collected and merged driver-side (``_root_merge``), the
+    kernel attaches the fetch columns itself, and the result is a local
+    relation already in rank order; otherwise the collected winners are
+    point-looked-up in the docstore (``_fetch_winners``), a cost
+    independent of the query's match count. Snippets are highlighted on
+    the driver over the ≤k merged rows. Pass ``lazy=True`` to get a
+    fully-deferred plan instead: nothing executes until an action, and
     the fetch is a broadcast join with dynamic partition pruning — at the
     cost of planning the scored+top-k subtree twice when it does run.
 
@@ -3308,37 +3520,30 @@ def search(
     ``exclude_split_ids`` restricts the search away from known-bad splits —
     the plumbing behind search_with_failures (root.rs:203-217 analog).
     """
-    ast = parse_query(request.query)
-    # fast-field sort discards BM25 entirely — take the scoring opt-out
-    # (no tf decode, no fieldnorms, no stats join), like the reference
-    # collector skipping scoring unless sorted by _score
-    needs_scores = request.sort_by_field in (None, "_score")
-    searcher = Searcher(
-        reader, quantize_norms=quantize_norms, scoring=needs_scores
+    plan = _plan_request(
+        reader,
+        request,
+        topk=True,
+        quantize_norms=quantize_norms,
+        exclude_split_ids=exclude_split_ids,
+        leaf=leaf_topk is not False,
     )
-    ast = _with_search_fields(searcher, ast, request)
-    splits = reader.manifest.list_published(
-        request.start_timestamp,
-        request.end_timestamp,
-        tags=searcher.extract_tags(ast),
+    searcher = plan.searcher
+    # snippet terms (validated non-empty BEFORE the empty-prune early
+    # return: an invalid request must fail identically whether or not any
+    # split survives pruning, query_builder.rs:212-253); namespaced
+    # storage terms highlight by their bare token
+    snip_terms = sorted(
+        {t.split(FIELD_SEP)[-1] for t in searcher._collect_text_terms(plan.ast)}
+        if snippet_fields
+        else ()
     )
-    if exclude_split_ids:
-        bad = set(exclude_split_ids)
-        splits = [m for m in splits if m.split_id not in bad]
-    if leaf_topk is not False:
-        splits = _prune_splits_by_field_ranges(searcher, ast, splits)
-    split_ids = [m.split_id for m in splits]
-    # validate BEFORE the empty-prune early return: an invalid request must
-    # fail identically whether or not any split survives pruning
-    if snippet_fields and not searcher._collect_text_terms(ast):
+    if snippet_fields and not snip_terms:
         raise ValueError("snippet fields require text terms in the query")
-    if request.sort_by_field == searcher.default_field:
-        # sort fields must be fast, non-text (query_builder.rs:255-300)
-        raise ValueError("sort by a text field is not supported")
     fetch_all = tuple(fetch_fields) + tuple(
         f for f in snippet_fields if f not in fetch_fields
     )
-    if not split_ids:
+    if not plan.split_ids:
         # schema must match the non-empty-prune path exactly — including
         # the requested fetch/snippet columns — or callers selecting a
         # fetch field over an all-pruned time range get an AnalysisException
@@ -3349,166 +3554,99 @@ def search(
             base = base.add(T.StructField(f"snippet_{f_}", T.StringType()))
         empty = reader.spark.createDataFrame([], base)
         return (empty, 0) if with_count else empty
-    k_total = request.max_hits + request.start_offset
-    leaf_spec = leaf_ts = leaf_sort = None
-    if leaf_topk is not False:
-        leaf_spec, leaf_ts, leaf_sort = _leaf_gate(
-            reader, searcher, ast, split_ids, request
-        )
-        if leaf_sort is None and not needs_scores:
-            leaf_spec = None  # a field sort the kernel can't replicate
-    # root merge: a non-lazy leaf search collects the |splits|·k per-split
-    # partials (ONE kernel job, no shuffle) and merges them in Python — the
-    # reference root's re-top-k over its leaves' partial hits
-    # (collector.rs:423-538). Gated off for lazy plans and oversized
-    # |splits|·k products, which keep Spark's TakeOrderedAndProject.
-    root_merge = (
-        leaf_spec is not None
-        and not lazy
-        and len(split_ids) * k_total <= 1_000_000
-    )
-    # one-pass num_hits: the reference LeafSearchResponse carries the
-    # split's total match count alongside its partial top-k hits
-    # (collector.rs:226), so the root merge recovers num_hits for free.
-    # k_total == 0 would trim away every per-split row WITH its split_hits
-    # payload — the caller must count explicitly instead.
-    count_inline = with_count and root_merge and k_total > 0
-    # in-kernel fetch: the kernel attaches the fetch/snippet columns to its
-    # per-split top-k rows (the split's docstore is already open there), so
-    # a fetched search costs ONE job
-    inline_fetch = bool(
-        root_merge
-        and fetch_all
-        and len(split_ids) * k_total <= 200_000
-        and searcher.leaf_fields_plan(list(fetch_all))
-    )
-    fetch_join = bool(fetch_all) and not inline_fetch
+    if lazy:
+        out = _search_lazy(reader, plan, fetch_all, snippet_fields, snip_terms)
+        return (out, None) if with_count else out
+    # one-pass num_hits needs the one leaf lane's per-split rows untrimmed
+    # by Spark; k == 0 would trim away every per-split row WITH its
+    # split_hits payload — the caller must count explicitly instead
+    count_inline = with_count and plan.root_merged and plan.k > 0
     # "latest N" early-stop: a ts-DESC-sorted request executes over only
     # the newest splits that can still reach the provisional k-th sort
     # value (_ts_desc_prune_splits). count_inline keeps the full set —
     # exact num_hits needs every split's match count.
     if (
-        leaf_spec is not None
-        and leaf_sort is not None
-        and leaf_sort[0] == "ts"
+        plan.sort is not None
+        and plan.sort[0] == "ts"
         and request.sort_order == "desc"
-        and k_total > 0
-        and len(split_ids) >= 8
+        and plan.k > 0
+        and len(plan.split_ids) >= 8
         and not count_inline
     ):
-        split_ids = _ts_desc_prune_splits(
+        plan.split_ids = _ts_desc_prune_splits(
             reader.spark,
-            splits,
-            split_ids,
-            k_total,
+            plan.splits,
+            plan.split_ids,
+            plan.k,
             lambda ids: searcher.scored_topk_leaf(
-                leaf_spec,
+                plan.spec,
                 ids,
-                k_total,
-                ts_bounds=leaf_ts,
-                sort_spec=leaf_sort,
+                plan.k,
+                ts_bounds=plan.ts,
+                sort_spec=plan.sort,
                 order="desc",
             ).collect(),
         )
-
-    num_hits: "int | None" = None
-    if leaf_spec:
-        m = searcher.scored_topk_leaf(
-            leaf_spec,
-            split_ids,
-            k_total,
-            ts_bounds=leaf_ts,
-            sort_spec=leaf_sort,
-            order=request.sort_order,
-            with_hits=count_inline,
-            fetch_cols=list(fetch_all) if inline_fetch else None,
-        )
-    else:
-        m = searcher.matching(
-            ast, split_ids, request.start_timestamp, request.end_timestamp
-        )
-        if request.sort_by_field and request.sort_by_field != "_score":
-            m = _join_sort_field(reader, searcher, m, request.sort_by_field)
-
-    key = F.asc("score") if request.sort_order == "asc" else F.desc("score")
-    order = [key, F.asc("split_id"), F.asc("docid")]
-    # snippet terms (validated non-empty above, query_builder.rs:212-253);
-    # namespaced storage terms highlight by their bare token
-    snip_terms = sorted(
-        {t.split(FIELD_SEP)[-1] for t in searcher._collect_text_terms(ast)}
-        if snippet_fields
-        else ()
+    ranked, schema, fetched, num_hits = _topk(
+        reader, {"": plan}, fetch_all, with_hits=count_inline
     )
-    if root_merge:
-        rows = m.collect()
-        names = m.schema.names
-        if count_inline:
-            # every split with matches emits ≥1 row carrying its count
-            hits_at = names.index("split_hits")
-            num_hits = int(
-                sum({r["split_id"]: r[hits_at] for r in rows}.values())
-            )
-        keep = [i for i, n in enumerate(names) if n != "split_hits"]
-        schema = T.StructType([m.schema.fields[i] for i in keep])
-        rows = [
-            tuple(r[i] for i in keep)
-            for r in _root_merge(
-                rows,
-                request.sort_order == "asc",
-                request.start_offset,
-                k_total,
-            )
-        ]
-        if fetch_join:
-            top = _fetch_winners(reader, rows, schema, fetch_all)
-        else:
-            if snip_terms:
-                # highlight the ≤k merged rows on the driver: no UDF job
-                snip = make_snippet_fn(snip_terms, tokenizer=searcher.tokenizer)
-                at = [schema.names.index(f_) for f_ in snippet_fields]
-                rows = [(*r, *(snip(r[i]) for i in at)) for r in rows]
-                schema = T.StructType(
-                    list(schema.fields)
-                    + [
-                        T.StructField(f"snippet_{f_}", T.StringType())
-                        for f_ in snippet_fields
-                    ]
-                )
-            top = local_rows_df(reader.spark, rows, schema)
-    else:
-        top = m.orderBy(*order).limit(k_total)
-        if request.start_offset:
-            w = Window.orderBy(*order)
-            top = (
-                top.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") > request.start_offset)
-                .drop("_rn")
-            )
-        if fetch_join and lazy:
-            # lazy fetch: broadcast the k winners into the docstore scan.
-            # Inner join on purpose: every hit exists in the docstore by
-            # construction, and a left-outer would force a SortMergeJoin
-            # (the broadcast-left hint is unsupported for left joins).
-            # Dynamic partition pruning restricts the scan to the winner
-            # splits at runtime, but their fetch columns are read in full —
-            # fine while splits are small, the wrong plan at 10M-doc
-            # splits. The scored+top-k subtree is planned twice (join build
-            # side AND the partition-pruning subquery), so a common-term
-            # query pays the scoring plan twice over (14.0 s vs 2.4 s
-            # point-lookup on a 1M-doc/64-split index).
-            store = reader.docstore().select("split_id", "docid", *fetch_all)
-            top = F.broadcast(top).join(store, ["split_id", "docid"], "inner")
-        elif fetch_join:
-            top = _fetch_winners(reader, top.collect(), top.schema, fetch_all)
-    # the merged local rows are already in rank order (snippets included);
-    # a fetch join loses it
-    local = root_merge and not fetch_join
-    if snip_terms and not local:
-        snip = make_snippet_udf(snip_terms, tokenizer=searcher.tokenizer)
+    rows = ranked[""]
+    if snip_terms:
+        if not fetched:
+            # snippets need the stored text here: run the point lookup now
+            top = _ranked_df(reader, rows, schema, fetch_all, fetched)
+            rows, schema, fetched = [tuple(r) for r in top.collect()], top.schema, True
+        # highlight the ≤k ranked rows on the driver: no UDF job
+        snip = make_snippet_fn(snip_terms, tokenizer=searcher.tokenizer)
+        at = [schema.names.index(f_) for f_ in snippet_fields]
+        rows = [(*r, *(snip(r[i]) for i in at)) for r in rows]
+        schema = T.StructType(
+            list(schema.fields)
+            + [T.StructField(f"snippet_{f_}", T.StringType()) for f_ in snippet_fields]
+        )
+    top = _ranked_df(reader, rows, schema, fetch_all, fetched)
+    return (top, num_hits) if with_count else top
+
+
+def _search_lazy(
+    reader: IndexReader,
+    plan: _Plan,
+    fetch_all: tuple,
+    snippet_fields: tuple,
+    snip_terms: list,
+) -> DataFrame:
+    """``search(lazy=True)``: the fully-deferred plan. Catalyst's
+    TakeOrderedAndProject ranks the lane, a window drops the offset, the
+    fetch is a broadcast join with dynamic partition pruning and the
+    snippets a pandas UDF."""
+    req = plan.request
+    order = _rank_order(req.sort_order)
+    top = _lane_relation(reader, plan).orderBy(*order).limit(plan.k)
+    if req.start_offset:
+        w = Window.orderBy(*order)
+        top = (
+            top.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") > req.start_offset)
+            .drop("_rn")
+        )
+    if fetch_all:
+        # broadcast the k winners into the docstore scan. Inner join on
+        # purpose: every hit exists in the docstore by construction, and a
+        # left-outer would force a SortMergeJoin (the broadcast-left hint
+        # is unsupported for left joins). Dynamic partition pruning
+        # restricts the scan to the winner splits at runtime, but their
+        # fetch columns are read in full — fine while splits are small,
+        # the wrong plan at 10M-doc splits. The scored+top-k subtree is
+        # planned twice (join build side AND the partition-pruning
+        # subquery), so a common-term query pays the scoring plan twice
+        # over (14.0 s vs 2.4 s point-lookup on a 1M-doc/64-split index).
+        store = reader.docstore().select("split_id", "docid", *fetch_all)
+        top = F.broadcast(top).join(store, ["split_id", "docid"], "inner")
+    if snip_terms:
+        snip = make_snippet_udf(snip_terms, tokenizer=plan.searcher.tokenizer)
         for f_ in snippet_fields:
             top = top.withColumn(f"snippet_{f_}", snip(F.col(f_)))
-    out = top if local else top.orderBy(*order)
-    return (out, num_hits) if with_count else out
+    return top.orderBy(*order)
 
 
 def _store_fields(reader: IndexReader, fields: tuple) -> list:
@@ -3596,185 +3734,46 @@ def search_many(
 ) -> DataFrame:
     """Batch search: N requests → ONE Spark job (leaf lanes fetch their
     fields in-kernel; a batch with any general-plan lane adds one shared
-    point-lookup fetch job).
+    point-lookup fetch).
 
     A single search pays at least one job (scoring, plus a point-lookup
     fetch on the general plan), and a search head serving concurrent
     clients pays it per request while serializing on driver-side plan
-    construction. Batching amortizes both: every request's plan is unioned
-    under a ``query_id`` lane and the batch is collected ONCE. Leaf lanes
-    contribute their per-split partials (no shuffle when every lane is a
-    leaf lane); general-plan lanes are trimmed per query by one window
-    pass first. The per-query root merge then runs driver-side
-    (``_root_merge``), and all winners share one point-lookup fetch when
-    the fetch is not in-kernel. This is the Spark-idiomatic analog of the
-    reference root's concurrent fan-out (root.rs drives a search's leaf
-    requests concurrently; across REQUESTS the vectorized answer is one
-    plan, not one plan per request).
+    construction. Batching amortizes both: every request is planned by
+    ``_plan_request`` and becomes one ``query_id`` lane of the top-k core
+    (``_topk``, the same core ``search()`` runs one lane through), and the
+    batch is collected ONCE. Leaf lanes contribute their per-split
+    partials (no shuffle when every lane is a leaf lane); general-plan
+    lanes are trimmed to their top max_hits+offset by Spark first. The
+    per-query root merge then runs driver-side (``_root_merge``), and all
+    winners share one point-lookup fetch when the fetch is not in-kernel.
+    This is the Spark-idiomatic analog of the reference root's concurrent
+    fan-out (root.rs drives a search's leaf requests concurrently; across
+    REQUESTS the vectorized answer is one plan, not one plan per request).
 
     Per-request semantics match ``search()`` exactly — same AST, pruning,
     leaf gate, per-query sort field/order, offset, and (score, split_id,
-    docid) tie-break — with two restrictions: snippets are unsupported (use
-    ``search()``), and a general-plan lane's window rank sorts ALL of that
-    query's matches, where ``search()`` uses a TakeOrderedAndProject heap —
-    batch interactive top-k lookups, not corpus-sized scans.
+    docid) tie-break — except that snippets are unsupported (use
+    ``search()``).
 
     Returns (query_id, split_id, docid, score, *fetch_fields), ordered by
-    (query_id, rank). Requests whose time/tag pruning leaves no splits
-    contribute zero rows."""
+    (query_id, rank). Requests whose pruning leaves no splits contribute
+    zero rows."""
     if not requests:
         raise ValueError("search_many needs at least one request")
-    lanes = []
-    for qid, req in requests.items():
-        ast = parse_query(req.query)
-        needs_scores = req.sort_by_field in (None, "_score")
-        searcher = Searcher(
-            reader, quantize_norms=quantize_norms, scoring=needs_scores
+    lanes = {
+        qid: _plan_request(
+            reader, req, topk=True, quantize_norms=quantize_norms
         )
-        ast = _with_search_fields(searcher, ast, req)
-        if req.sort_by_field == searcher.default_field:
-            raise ValueError("sort by a text field is not supported")
-        splits = reader.manifest.list_published(
-            req.start_timestamp,
-            req.end_timestamp,
-            tags=searcher.extract_tags(ast),
-        )
-        split_ids = [m.split_id for m in splits]
-        if not split_ids:
-            continue
-        spec, lts, lsort = _leaf_gate(reader, searcher, ast, split_ids, req)
-        if lsort is None and not needs_scores:
-            spec = None  # a field sort the kernel can't replicate
-        lanes.append((qid, req, ast, searcher, split_ids, spec, lts, lsort))
-    # in-kernel batch fetch: when EVERY lane leaf-compiles (and the fetch
-    # columns are kernel-attachable within the row bound), the kernels
-    # attach the fetch fields to their per-split top-k rows and the whole
-    # batch is ONE job — no winners fetch join at all
-    inline = bool(fetch_fields) and bool(lanes)
-    if inline:
-        total_rows = sum(
-            len(sids) * (rq.max_hits + rq.start_offset)
-            for _, rq, _, _, sids, _, _, _ in lanes
-        )
-        inline = (
-            total_rows <= 200_000
-            and all(la[5] is not None for la in lanes)
-            and lanes[0][3].leaf_fields_plan(list(fetch_fields)) is not None
-        )
-    parts = []
-    gen_parts = []
-    for qid, req, ast, searcher, split_ids, spec, lts, lsort in lanes:
-        cols = [
-            F.lit(qid).alias("query_id"),
-            "split_id",
-            "docid",
-            "score",
-            *(fetch_fields if inline else ()),
-        ]
-        k = req.max_hits + req.start_offset
-        if spec is not None:
-            # this lane rides the leaf-local top-k kernel: per-split trim
-            # at max_hits+offset means the lane contributes |splits|·k
-            # rows, merged driver-side like search()'s root merge
-            m = searcher.scored_topk_leaf(
-                spec,
-                split_ids,
-                k,
-                ts_bounds=lts,
-                sort_spec=lsort,
-                order=req.sort_order,
-                fetch_cols=list(fetch_fields) if inline else None,
-            )
-            if len(split_ids) * k <= 1_000_000:
-                parts.append(m.select(*cols))
-                continue
-        else:
-            m = searcher.matching(
-                ast, split_ids, req.start_timestamp, req.end_timestamp
-            )
-            if req.sort_by_field and req.sort_by_field != "_score":
-                m = _join_sort_field(reader, searcher, m, req.sort_by_field)
-        # a general-plan lane (or an oversized leaf lane) is trimmed to its
-        # top max_hits+offset by a window before the collect. One ascending
-        # window order serves both sort orders: rank by the sign-flipped
-        # score for desc, the raw score for asc. Null/NaN placement must replicate Spark's
-        # orderBy per DIRECTION (asc = nulls first then values then NaN;
-        # desc = NaN first then values then nulls — the reference's u64
-        # sort encoding does the same), which a bare sign flip inverts:
-        # encode the group explicitly.
-        asc = req.sort_order == "asc"
-        sign = 1.0 if asc else -1.0
-        is_null = F.col("score").isNull()
-        is_nan = ~is_null & F.isnan(F.col("score"))
-        grp = (
-            F.when(is_null, F.lit(0 if asc else 2))
-            .when(is_nan, F.lit(2 if asc else 0))
-            .otherwise(F.lit(1))
-        )
-        ordv = F.when(is_null | is_nan, F.lit(0.0)).otherwise(
-            F.col("score") * F.lit(sign)
-        )
-        gen_parts.append(
-            m.select(
-                *cols,
-                grp.alias("_grp"),
-                ordv.alias("_ord"),
-                F.lit(k).alias("_k"),
-            )
-        )
-    if gen_parts:
-        allg = gen_parts[0]
-        for p in gen_parts[1:]:
-            allg = allg.unionByName(p)
-        w = Window.partitionBy("query_id").orderBy(
-            F.asc("_grp"), F.asc("_ord"), F.asc("split_id"), F.asc("docid")
-        )
-        parts.append(
-            allg.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= F.col("_k"))
-            .drop("_grp", "_ord", "_k", "_rn")
-        )
-    rows = []
-    if parts:
-        allm = parts[0]
-        for p in parts[1:]:
-            allm = allm.unionByName(p)
-        # the batch's ONE scoring job (no shuffle when every lane is a
-        # leaf lane); ≤ Σ |splits|·k rows
-        by_qid: dict = {}
-        for r in allm.collect():
-            by_qid.setdefault(r["query_id"], []).append(r)
-        for qid in sorted(by_qid):
-            req = requests[qid]
-            merged = _root_merge(
-                by_qid[qid],
-                req.sort_order == "asc",
-                req.start_offset,
-                req.max_hits + req.start_offset,
-            )
-            rows.extend((*r, rn) for rn, r in enumerate(merged, start=1))
-    win_schema = T.StructType(
-        [
-            T.StructField("query_id", T.StringType()),
-            T.StructField("split_id", T.StringType()),
-            T.StructField("docid", T.LongType()),
-            T.StructField("score", T.DoubleType()),
-        ]
+        for qid, req in requests.items()
+    }
+    fetch = tuple(fetch_fields)
+    ranked, schema, fetched, _ = _topk(reader, lanes, fetch)
+    rows = [(qid, *r) for qid in sorted(ranked) for r in ranked[qid]]
+    schema = T.StructType(
+        [T.StructField("query_id", T.StringType())] + list(schema.fields)
     )
-    if inline or not fetch_fields:
-        if inline:
-            win_schema = T.StructType(
-                list(win_schema.fields) + _store_fields(reader, fetch_fields)
-            )
-        return local_rows_df(reader.spark, [r[:-1] for r in rows], win_schema)
-    # one point-lookup fetch for every request's winners
-    win_schema = win_schema.add(T.StructField("_rn", T.IntegerType()))
-    out = _fetch_winners(reader, rows, win_schema, fetch_fields)
-    # column order must not depend on plan routing: match the inline-fetch
-    # and empty-result paths (query_id leads, join keys follow)
-    return out.select(
-        "query_id", "split_id", "docid", "score", *fetch_fields, "_rn"
-    ).orderBy("query_id", "_rn").drop("_rn")
+    return _ranked_df(reader, rows, schema, fetch, fetched)
 
 
 def _leaf_gate(
@@ -4050,32 +4049,20 @@ def export_fast_field(
     column for ALL matching docs, optionally alongside partition-by columns.
     No global sort — the reference root concatenates leaf streams in arrival
     order; downstream OLAP joins don't need one either."""
-    ast = parse_query(request.query)
-    searcher = Searcher(reader, scoring=False)
-    ast = _with_search_fields(searcher, ast, request)
-    splits = reader.manifest.list_published(
-        request.start_timestamp,
-        request.end_timestamp,
-        tags=searcher.extract_tags(ast),
-    )
-    if leaf_match is not False:
-        splits = _prune_splits_by_field_ranges(searcher, ast, splits)
-    split_ids = [s.split_id for s in splits]
+    plan = _plan_request(reader, request, leaf=leaf_match is not False)
     cols = (column,) + tuple(c for c in partition_by if c != column)
-    if isinstance(ast, MatchAll) and leaf_match is not False:
-        return _matchall_docs(reader, split_ids, request).select(*cols)
-    if leaf_match is not False:
+    if isinstance(plan.ast, MatchAll) and leaf_match is not False:
+        return _matchall_docs(reader, plan.split_ids, request).select(*cols)
+    if plan.spec is not None and plan.searcher.leaf_fields_plan(cols):
         # leaf-fields fast path: the exported fast-field columns ride out
         # of the matching kernel itself (the reference's search_stream leaf
         # reads fast-field readers in the leaf, leaf.rs:106-311) — no
         # docstore join, no per-matching-doc exchange before the sink
-        spec, ts, _ = _leaf_gate(reader, searcher, ast, split_ids, request)
-        if spec is not None and searcher.leaf_fields_plan(cols):
-            return searcher.leaf_matching_fields(
-                spec, split_ids, ts, list(cols)
-            ).select(*cols)
-    m = searcher.matching(
-        ast, split_ids, request.start_timestamp, request.end_timestamp
+        return plan.searcher.leaf_matching_fields(
+            plan.spec, plan.split_ids, plan.ts, list(cols)
+        ).select(*cols)
+    m = plan.searcher.matching(
+        plan.ast, plan.split_ids, request.start_timestamp, request.end_timestamp
     )
     docs = reader.docstore().select("split_id", "docid", *cols)
     return m.join(docs, ["split_id", "docid"]).select(*cols)
@@ -4164,34 +4151,30 @@ def search_with_failures(
     (root.rs:203-217). Callers decide whether partial results are
     acceptable; the default `search` keeps all-or-nothing semantics
     (Spark task retry already covers transient failures)."""
-    return _with_failures(search, reader, request, **kwargs)
+    tolerant, failed = tolerant_reader(reader)
+    hits = search(tolerant, request, exclude_split_ids=tuple(failed), **kwargs)
+    return hits, failed
 
 
-def _with_failures(fn, reader: IndexReader, request: SearchRequest, **kwargs):
-    """Shared failure-tolerance harness: probe both stores with
-    ignoreCorruptFiles, then run ``fn`` with the unreadable splits excluded
-    and the reader's docstore swapped for the tolerant scan (the leaf
-    kernel reads postings per split, so it never opens an excluded
-    split's postings file)."""
+def tolerant_reader(reader: IndexReader) -> "tuple[IndexReader, list[str]]":
+    """(reader to query, unreadable split ids): probe both stores with
+    ignoreCorruptFiles. When a split is unreadable, the returned reader is
+    a copy of ``reader`` whose docstore is the tolerant scan — corrupt
+    footers also break the reader's own plan-time schema inference — and
+    the caller excludes the failed splits from every request it plans
+    (the leaf kernel reads postings per split, so it never opens an
+    excluded split's postings file). ``reader`` itself is never modified,
+    so concurrent queries through it keep all-or-nothing semantics."""
     published = [m.split_id for m in reader.manifest.list_published()]
     _, with_postings = _tolerant_store_read(reader, "postings", published)
     docs, with_docs = _tolerant_store_read(reader, "docstore", published)
     ok = with_postings & with_docs
     failed = sorted(s for s in published if s not in ok)
     if not failed:
-        return fn(reader, request, **kwargs), []
-    # corrupt footers also break the reader's own plan-time schema
-    # inference, so build the plan against the tolerant docstore scan; the
-    # returned (lazy) plan captures that DataFrame, so restoring the reader
-    # afterwards is safe and later normal queries keep all-or-nothing
-    # semantics
-    saved = reader._docstore
-    reader._docstore = docs
-    try:
-        res = fn(reader, request, exclude_split_ids=tuple(failed), **kwargs)
-    finally:
-        reader._docstore = saved
-    return res, failed
+        return reader, []
+    tolerant = copy.copy(reader)
+    tolerant._docstore = docs
+    return tolerant, failed
 
 
 def search_aggs(
@@ -4236,18 +4219,13 @@ def search_aggs(
         run_agg_request,
     )
 
-    ast = parse_query(request.query)
-    searcher = Searcher(reader, scoring=False)
-    ast = _with_search_fields(searcher, ast, request)
-    splits = reader.manifest.list_published(
-        request.start_timestamp,
-        request.end_timestamp,
-        tags=searcher.extract_tags(ast),
-    )
     # NOTE: no field-range split pruning here — the min_doc_count:0 key
     # universe (_agg_universe) is defined over the metadata-pruned split
     # set, and shrinking it per-query would drop zero-count buckets
-    split_ids = [s.split_id for s in splits]
+    plan = _plan_request(
+        reader, request, leaf=leaf_match is not False, field_ranges=False
+    )
+    ast, searcher, split_ids = plan.ast, plan.searcher, plan.split_ids
     try:
         cfg = reader.manifest.load_index_config()
     except KeyError:
@@ -4259,10 +4237,8 @@ def search_aggs(
         fmap[cfg["timestamp_field"]] = "ts"
     results: dict = {}
     rest = aggs
-    spec = None
-    if leaf_match is not False and isinstance(aggs, dict) and aggs:
-        spec, ts, _ = _leaf_gate(reader, searcher, ast, split_ids, request)
-    if spec is not None:
+    spec, ts = plan.spec, plan.ts
+    if spec is not None and isinstance(aggs, dict) and aggs:
         rest = {}
         for name, aspec in aggs.items():
             # deepest fast path first: a flat count-only bucket agg is
@@ -4329,61 +4305,39 @@ def count_hits(
     query compiles onto the kernel (each split counts its own matches, the
     root sums |splits| scalars — the reference's count collector shape),
     else a single aggregate over the docids-only general matching plan."""
-    ast = parse_query(request.query)
-    searcher = Searcher(reader, scoring=False)
-    ast = _with_search_fields(searcher, ast, request)
-    splits = reader.manifest.list_published(
-        request.start_timestamp,
-        request.end_timestamp,
-        tags=searcher.extract_tags(ast),
+    plan = _plan_request(
+        reader,
+        request,
+        exclude_split_ids=exclude_split_ids,
+        leaf=leaf_match is not False,
     )
-    if leaf_match is not False:
-        splits = _prune_splits_by_field_ranges(searcher, ast, splits)
-    split_ids = [s.split_id for s in splits]
-    if exclude_split_ids:
-        bad = set(exclude_split_ids)
-        split_ids = [s for s in split_ids if s not in bad]
-    if leaf_match is not False:
-        if (
-            isinstance(ast, MatchAll)
-            and request.start_timestamp is None
-            and request.end_timestamp is None
-        ):
-            # metastore-only count: num_docs is maintained exactly by
-            # build / merge / delete-rewrite (stats recomputed from the
-            # rewritten rows each time), so an unbounded match-all count
-            # is a manifest sum — zero split files touched at any corpus
-            # size (the metastore list_splits analog,
-            # metastore/mod.rs:304-390). A time-bounded `*` goes to the
-            # kernel, whose window test matches no null-ts doc and no doc
-            # for an unparseable bound (_ts_micros).
-            keep = set(split_ids)
-            total = sum(s.num_docs for s in splits if s.split_id in keep)
-            return local_rows_df(
-                reader.spark,
-                [(total,)],
-                T.StructType([T.StructField("num_hits", T.LongType(), False)]),
-            )
-        spec, ts, _ = _leaf_gate(reader, searcher, ast, split_ids, request)
-        if spec is not None:
-            return searcher.leaf_count(spec, split_ids, ts).agg(
-                F.coalesce(F.sum("n"), F.lit(0).cast("long")).alias(
-                    "num_hits"
-                )
-            )
-    m = searcher.matching(
-        ast,
-        split_ids,
+    if (
+        leaf_match is not False
+        and isinstance(plan.ast, MatchAll)
+        and request.start_timestamp is None
+        and request.end_timestamp is None
+    ):
+        # metastore-only count: num_docs is maintained exactly by
+        # build / merge / delete-rewrite (stats recomputed from the
+        # rewritten rows each time), so an unbounded match-all count
+        # is a manifest sum — zero split files touched at any corpus
+        # size (the metastore list_splits analog,
+        # metastore/mod.rs:304-390). A time-bounded `*` goes to the
+        # kernel, whose window test matches no null-ts doc and no doc
+        # for an unparseable bound (_ts_micros).
+        return local_rows_df(
+            reader.spark,
+            [(sum(m.num_docs for m in plan.splits),)],
+            T.StructType([T.StructField("num_hits", T.LongType(), False)]),
+        )
+    if plan.spec is not None:
+        return plan.searcher.leaf_count(plan.spec, plan.split_ids, plan.ts).agg(
+            F.coalesce(F.sum("n"), F.lit(0).cast("long")).alias("num_hits")
+        )
+    m = plan.searcher.matching(
+        plan.ast,
+        plan.split_ids,
         request.start_timestamp,
         request.end_timestamp,
     )
     return m.agg(F.count(F.lit(1)).alias("num_hits"))
-
-
-def count_hits_with_failures(
-    reader: IndexReader, request: SearchRequest
-) -> "tuple[DataFrame, list[str]]":
-    """Failure-tolerant num_hits: (count over the readable splits, failed
-    split ids) — the count-side twin of search_with_failures, so a partial
-    response's num_hits is consistent with its hit set."""
-    return _with_failures(count_hits, reader, request)

@@ -34,10 +34,9 @@ from quickwit_spark.operators.search import (
     IndexReader,
     SearchRequest,
     count_hits,
-    count_hits_with_failures,
     search,
     search_aggs,
-    search_with_failures,
+    tolerant_reader,
 )
 
 # docstore columns that are index internals, never part of the user's doc
@@ -199,9 +198,12 @@ def search_endpoint(
         # the failure probe runs ONCE here; num_hits / hits / aggs must all
         # exclude the same unreadable splits or the response is internally
         # inconsistent (num_hits over all splits vs hits over readable ones)
-        cnt_df, failed = count_hits_with_failures(reader, req)
+        reader, failed = tolerant_reader(reader)
         body["errors"] = failed
-        n = int(cnt_df.collect()[0]["num_hits"])
+        n = int(
+            count_hits(reader, req, exclude_split_ids=tuple(failed))
+            .collect()[0]["num_hits"]
+        )
     elif req.max_hits > 0:
         # one-pass hits + count: the leaf kernel's per-split match counts
         # ride the top-k rows (collector.rs:226 — the reference leaf
@@ -244,15 +246,13 @@ def search_endpoint(
             # under its alias
             rev = {v: k for k, v in name_map.items()}
             snip = tuple(rev.get(f, f) for f in snip)
-            if tolerate_failures:
-                hits_df, failed = search_with_failures(
-                    reader, req, fetch_fields=fetch, snippet_fields=snip
-                )
-                body["errors"] = failed
-            else:
-                hits_df = search(
-                    reader, req, fetch_fields=fetch, snippet_fields=snip
-                )
+            hits_df = search(
+                reader,
+                req,
+                fetch_fields=fetch,
+                snippet_fields=snip,
+                exclude_split_ids=tuple(failed),
+            )
         body["hits"] = [
             _render_hit(r.asDict(recursive=True), name_map)
             for r in hits_df.collect()

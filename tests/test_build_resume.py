@@ -183,6 +183,7 @@ def test_rebuild_retires_delete_rewritten_split(spark, pages_small, tmp_path):
 
     dm = delete_by_query(spark, index_dir, "needleone")
     assert dm.matched_docs > 0 and dm.rewritten_splits
+    reader.refresh()  # the reader stays on its pinned manifest until then
     n_after_delete = search(
         reader, SearchRequest(query="*", max_hits=10000), fetch_fields=()
     ).count()

@@ -83,3 +83,20 @@ def test_rebuild_at_same_dir_does_not_serve_stale_norms(tmp_path):
         assert [u for u, _ in got] == ["u1", "u2", "u3", "u0"], (key, got)
         assert got[-1][1] < got[0][1], (key, got)
     assert out["v2_leaf"] == out["v2_general"]
+
+
+def test_cache_put_evicts_oldest_entries_by_bytes():
+    """Every executor cache inserts through ``_cache_put``: entries carry
+    their byte size, and the oldest go first until the new one fits."""
+    from quickwit_spark.operators.search import _cache_get, _cache_put
+
+    cache: dict = {}
+    for i in range(4):
+        assert _cache_put(cache, 100, i, f"e{i}", 30) == f"e{i}"
+    assert list(cache) == [1, 2, 3] and _cache_get(cache, 0) is None
+    _cache_put(cache, 100, 4, "big", 70)
+    assert list(cache) == [3, 4]
+    assert _cache_get(cache, 3) == "e3" and _cache_get(cache, 4) == "big"
+    # an entry larger than the whole budget still goes in, alone
+    _cache_put(cache, 100, 5, "huge", 150)
+    assert list(cache) == [5]

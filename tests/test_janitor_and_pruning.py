@@ -13,6 +13,7 @@ from quickwit_spark.operators.search import (
     IndexReader,
     Searcher,
     SearchRequest,
+    count_hits,
     search,
 )
 from quickwit_spark.plans.query import parse_query
@@ -99,6 +100,23 @@ def test_snippets_driver_side_equal_udf(small_index):
     assert any("<b>" in r["snippet_text"] for r in eager.collect())
 
 
+def test_snippets_after_point_lookup_equal_udf(small_index):
+    """A general-plan search fetches its winners by point lookup, then
+    highlights them on the driver like a root-merged one: same rows as
+    the lazy plan's snippet UDF, as a local relation in rank order."""
+    req = SearchRequest(
+        query="lang:en AND (needleone OR w3)", max_hits=8, start_offset=2
+    )
+    kw = dict(fetch_fields=("url",), snippet_fields=("text",))
+    eager = search(small_index, req, **kw)
+    lazy = search(small_index, req, lazy=True, **kw)
+    assert eager.columns == lazy.columns
+    rows = [tuple(r) for r in eager.collect()]
+    assert len(rows) == 8
+    assert rows == [tuple(r) for r in lazy.collect()]
+    assert all("<b>" in r[-1] for r in rows)
+
+
 def test_retention(spark, pages_small, tmp_path):
     d = str(tmp_path / "ret")
     build_index(spark, pages_small, d, IndexConfig(index_id="pages", num_splits=3))
@@ -108,6 +126,7 @@ def test_retention(spark, pages_small, tmp_path):
     cutoff = ends[0] + "z"
     dropped = apply_retention(d, cutoff)
     assert len(dropped) >= 1
+    reader.refresh()  # the reader stays on its pinned manifest until then
     left = reader.manifest.list_published()
     assert all(m.time_range_end >= cutoff or m.time_range_end > ends[0] for m in left)
     removed = garbage_collect(d, deletion_grace_secs=0.0)
@@ -298,7 +317,10 @@ def test_search_with_failures_skips_corrupt_split(spark, pages_small, tmp_path):
     id and serves hits from the readable splits instead of failing."""
     import glob
 
-    from quickwit_spark.operators.search import search_with_failures
+    from quickwit_spark.operators.search import (
+        search_with_failures,
+        tolerant_reader,
+    )
 
     d = str(tmp_path / "tol_idx")
     build_index(spark, pages_small, d, IndexConfig(index_id="pages", num_splits=3))
@@ -318,6 +340,11 @@ def test_search_with_failures_skips_corrupt_split(spark, pages_small, tmp_path):
     rows = res.collect()
     assert rows, "readable splits still serve hits"
     assert all(r["split_id"] != victim for r in rows)
+    # the tolerant scan lives on a copy: the caller's reader, which other
+    # threads may be querying, is never modified
+    tolerant, failed = tolerant_reader(reader)
+    assert failed == [victim] and tolerant is not reader
+    assert reader._docstore is None and tolerant._docstore is not None
 
 
 def test_delete_task_queue_metadata_only(tmp_path):
@@ -507,9 +534,12 @@ def test_gc_deletion_grace_protects_inflight_readers(
     )
     mm = run_merge_pipeline(spark, d, policy)
     assert mm.num_ops >= 1
+    # the reader stays pinned to the pre-merge manifest; read the tip
+    from quickwit_spark.index.manifest import Manifest
+
     marked = [
         m.split_id
-        for m in reader.manifest.list_all()
+        for m in Manifest(d).list_all()
         if m.state == "MarkedForDeletion"
     ]
     assert set(marked) == set(old_ids)
@@ -576,9 +606,9 @@ def test_gc_marks_stale_staged_then_reclaims(tmp_path):
 def test_pinned_reader_searches_through_concurrent_merge(
     spark, pages_small, tmp_path
 ):
-    """IndexReader(pin=True) + deletion-grace GC = full read isolation: the
-    pinned reader's searches return identical results before and after a
-    concurrent merge retires every split it planned against."""
+    """A reader pins the manifest at open, so with deletion-grace GC it is
+    fully isolated: its searches return identical results before and after
+    a concurrent merge retires every split it planned against."""
     from quickwit_spark.index.merge_policy import (
         StableLogConfig,
         StableLogMergePolicy,
@@ -587,7 +617,7 @@ def test_pinned_reader_searches_through_concurrent_merge(
 
     d = str(tmp_path / "pinned")
     build_index(spark, pages_small, d, IndexConfig(index_id="p", num_splits=3))
-    pinned = IndexReader(spark, d, pin=True)
+    pinned = IndexReader(spark, d)
 
     def hits(reader):
         rows = search(
@@ -609,10 +639,48 @@ def test_pinned_reader_searches_through_concurrent_merge(
     # scores too must be identical: per-split BM25 stats come from the
     # pinned manifest rows, not the merged replacements
     assert hits(pinned) == before
-    # a fresh (unpinned) reader sees the merged index with the same docs
+    # a fresh reader sees the merged index with the same docs
     assert {u for u, _ in hits(IndexReader(spark, d))} == {
         u for u, _ in before
     }
     # refresh() re-pins at the tip
     pinned.refresh()
     assert {u for u, _ in hits(pinned)} == {u for u, _ in before}
+
+
+def test_reader_plans_against_one_manifest_version(spark, pages_small, tmp_path):
+    """A merge that commits behind an open reader must not change what the
+    reader's leaf queries see: split pruning, per-split stats and the
+    kernel's split set all come from the manifest version the reader
+    opened at (the merged sources stay on disk for the GC grace window),
+    until ``refresh()`` moves the reader to the merged split."""
+    from quickwit_spark.index.manifest import Manifest
+    from quickwit_spark.index.merge_policy import MergeOperation
+    from quickwit_spark.operators.merge import execute_merge
+
+    d = str(tmp_path / "stale")
+    build_index(spark, pages_small, d, IndexConfig(index_id="p", num_splits=3))
+    reader = IndexReader(spark, d)
+    req = SearchRequest(query="w0", max_hits=1000)
+
+    def answers():
+        hits = search(reader, req, fetch_fields=()).collect()
+        return (
+            len(hits),
+            count_hits(reader, req).collect()[0][0],
+            count_hits(reader, SearchRequest(query="*")).collect()[0][0],
+        )
+
+    before = answers()
+    assert before[0] == before[1] > 0 and before[2] == 600
+    old_ids = {m.split_id for m in reader.manifest.list_published()}
+    assert len(old_ids) == 3
+    execute_merge(spark, d, MergeOperation(splits=Manifest(d).list_published()))
+    assert {m.split_id for m in Manifest(d).list_published()}.isdisjoint(old_ids)
+
+    assert answers() == before
+    reader.refresh()
+    assert {m.split_id for m in reader.manifest.list_published()}.isdisjoint(
+        old_ids
+    )
+    assert answers() == before

@@ -215,6 +215,25 @@ def test_search_many_all_leaf_batch_is_one_job(spark, small_index):
         assert got == want, qid
 
 
+def test_search_many_batch_with_a_general_lane_job_count(spark, small_index):
+    """One general-plan lane (a tag atom only the docstore answers) among
+    leaf lanes: the lane is trimmed by Spark inside the batch's one
+    collect, which runs 2 Spark jobs, and the winners share one
+    point-lookup fetch, deferred to consumption."""
+    reqs = {
+        "a": SearchRequest(query="w0", max_hits=5),
+        "b": SearchRequest(query="lang:en AND w3", max_hits=5, start_offset=2),
+        "c": SearchRequest(query="w1", max_hits=5, sort_by_field="warc_ts"),
+    }
+    search_many(small_index, reqs).collect()
+    df, jobs, _, _ = _work(spark, lambda: search_many(small_index, reqs))
+    assert jobs == 2
+    rows = df.collect()
+    for qid, req in reqs.items():
+        want = [tuple(r) for r in search(small_index, req).collect()]
+        assert [tuple(r)[1:] for r in rows if r["query_id"] == qid] == want
+
+
 @pytest.mark.parametrize(
     "query,positions",
     [('"w0 w1"', True), ("w0 w1", False), ("w0 -w1", False)],

@@ -218,7 +218,7 @@ def test_aggregations_alias_key(small_index):
     assert b0["avg_len"]["value"] > 0
 
 
-def test_envelope_tolerates_corrupt_split(spark, tmp_path):
+def test_envelope_tolerates_corrupt_split(spark, tmp_path, monkeypatch):
     """tolerate_failures must protect num_hits too: a corrupt split lands in
     `errors`, num_hits counts only readable splits, and the endpoint does
     not raise."""
@@ -241,9 +241,21 @@ def test_envelope_tolerates_corrupt_split(spark, tmp_path):
     with open(files[0], "wb") as f:
         f.write(b"\x00corrupt\x00" * 64)
 
+    import quickwit_spark.operators.search as S
+
+    probed = []
+    store_read = S._tolerant_store_read
+
+    def counted(reader, store, published):
+        probed.append(store)
+        return store_read(reader, store, published)
+
+    monkeypatch.setattr(S, "_tolerant_store_read", counted)
     body = search_endpoint(
         reader, {"query": "w30", "max_hits": 100}, tolerate_failures=True
     )
+    # one failure probe serves num_hits and hits alike
+    assert sorted(probed) == ["docstore", "postings"]
     assert body["errors"] == [victim]
     # num_hits counts ALL readable matches; hits is the (possibly smaller)
     # fetched page — both must exclude the corrupt split and not raise

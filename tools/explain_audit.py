@@ -8,10 +8,10 @@ Checks (each printed with PASS/FAIL):
    phrases), and the eager default merges the per-split partials
    driver-side (a local relation, no sort job); a phrase on splits
    without positions is the same single kernel over Range;
-2. general plan (a query with a docstore-only atom): no postings scan,
-   one leaf-kernel relation per clause group, the atom a pushed docstore
-   filter, the must clauses combined by one partial + final aggregate
-   over a single exchange;
+2. general plan (a query with a docstore-only atom, lazy plan): no
+   postings scan, one leaf-kernel relation per clause group, the atom a
+   pushed docstore filter, the must clauses combined by one partial +
+   final aggregate over a single exchange;
 3. fetch phase: winners broadcast into the docstore scan, text column read
    ONLY in the fetch subtree;
 4. count / aggregation / export: scoring-free, join-free, shuffle-free
@@ -110,9 +110,13 @@ def main() -> None:
     # relations, one per clause group (must `w3`, must_not `w7`), glued to
     # the docstore atom by relational joins. Each clause relation emits a
     # (split_id, docid) at most once, so the must combine counts clauses
-    # with a plain count: one partial + one final aggregate, one exchange
+    # with a plain count: one partial + one final aggregate, one exchange.
+    # The lazy plan shows it: the eager default collects the lane's top-k
+    # and returns a local relation
     gq = "lang:en AND w3 -w7"
-    pg = plan_of(search(reader, SearchRequest(query=gq, max_hits=10), fetch_fields=()))
+    pg = plan_of(
+        search(reader, SearchRequest(query=gq, max_hits=10), fetch_fields=(), lazy=True)
+    )
     pg_tree = pg.split("\n\n", 1)[0]
     checks_g = [
         ("general plan has no postings FileScan", "postings" not in pg),
