@@ -86,16 +86,20 @@ FETCH_ISIN_MAX = 4_096
 QUERY_PARTITION_TARGET_BYTES = 32 << 20
 
 # ---------------------------------------------------------------------------
-# executor-side fieldnorm cache: the analog of tantivy's per-segment
-# fieldnorm file + the searcher's fast-field cache (leaf.rs:330-346 warmup,
-# 1 GB cache default). A split's files are immutable once published, but a
-# rebuild at the same index_dir can publish NEW files under the SAME split
-# id, so every key carries the split's manifest ``create_timestamp``
-# (``_split_version``) next to (index_dir, split_id); entries are the
-# docid->doc-length arrays read from the split's docstore parquet with
-# column pruning (2 int columns — never the text). Scoring then needs NO
-# per-query norms join: the leaf kernel attaches |d| map-side, and no
-# docstore shuffle happens at all.
+# executor-side caches: the analog of tantivy's per-segment fieldnorm file,
+# the searcher's fast-field cache (leaf.rs:330-346 warmup, 1 GB cache
+# default) and the split footer/hotcache. They live in the long-lived python
+# workers, one set per worker. A split's files are immutable once published,
+# but a rebuild at the same index_dir can publish NEW files under the SAME
+# split id, so every key carries the split's manifest ``create_timestamp``
+# (``_split_version``) next to (index_dir, split_id). Two dicts:
+#   * ``_NORMS_CACHE``: docid->doc-length arrays read from the split's
+#     docstore with column pruning (2 int columns, never the text), so
+#     scoring needs NO per-query norms join;
+#   * ``_FAST_CACHE``: fast-field and typed docstore columns, docid
+#     universes and, under tagged keys, each split's postings footer and
+#     decoded postings row groups (``_load_postings``), so a query decodes
+#     a split's postings once per worker, not once per query.
 # ---------------------------------------------------------------------------
 
 # index_dir -> {split_id: create_timestamp} of the splits the running task
@@ -136,7 +140,11 @@ def _cache_put(cache: dict, max_bytes: int, key, entry, nbytes: int):
     the new entry fits in ``max_bytes`` (per python worker). The bound is
     on bytes, not entries: a fieldnorm entry costs ~16 bytes/doc, so a
     10M-doc split costs ~160 MB, and an entry-count bound would OOM the
-    python workers at exactly the split sizes the design targets."""
+    python workers at exactly the split sizes the design targets. An
+    entry larger than the whole budget is returned uncached: evicting
+    every other entry would not make room for it."""
+    if nbytes > max_bytes:
+        return entry
     held = sum(n for n, _ in cache.values())
     while cache and held + nbytes > max_bytes:
         held -= cache.pop(next(iter(cache)))[0]
@@ -202,7 +210,8 @@ def _norms_for(
 # (tantivy's fast-field files live in the same 1 GB searcher cache). One
 # entry per (index_dir, split_id, split version, column) — the docid->value
 # array of a sortable/filterable docstore column, read once with column
-# pruning.
+# pruning. The typed columns, docid universes and postings row groups below
+# share the dict and its byte budget under tagged keys.
 _FAST_CACHE: dict = {}
 _FAST_CACHE_MAX_BYTES = 512 * 1024 * 1024
 
@@ -261,9 +270,9 @@ def _fast_for(index_dir: str, split_id: str, col: str, docids: np.ndarray):
 # typed-column loader for the leaf "fields" collector. Unlike _load_fast's
 # cast-to-double lowering, aggregations and exports consume the column's
 # REAL values (strings for terms buckets, exact integers for sums), so the
-# cached entry keeps the Arrow array as read; timestamps are lowered to
-# epoch-micros int64 only at emit time and restored JVM-side. Entries share
-# the fast-field cache dict and byte budget.
+# cached entry keeps the Arrow array as read; timestamps are cast to
+# timestamp[us, UTC] only at emit time. Entries share the fast-field cache
+# dict and byte budget.
 def _load_col(index_dir: str, split_id: str, col: str):
     """-> (sorted docid array | None, pyarrow Array in docid order)."""
     key = (
@@ -319,6 +328,76 @@ def _universe_for(index_dir: str, split_id: str) -> np.ndarray:
     return _cache_put(_FAST_CACHE, _FAST_CACHE_MAX_BYTES, key, d, d.nbytes)
 
 
+def _load_postings(index_dir: str, split_id: str, cols: tuple, uniq: list):
+    """-> the rows of one split's postings whose term is in ``uniq`` (the
+    sorted query terms), columns ``cols``: exactly what ``pq.read_table``
+    with ``filters=[("term", "in", uniq)]`` returns. Served from the
+    fast-field cache in units of what a read decodes anyway, the parquet
+    row group (the reference leaf's hotcache: one footer read per split,
+    then only the byte ranges a query touches):
+
+    * one footer entry per split: each postings file's path, its
+      ``FileMetaData`` and its row groups' ``term`` min/max statistics;
+    * one entry per (file, row group, column set): the decoded table.
+
+    A query decodes only the row groups whose [min, max] can hold one of
+    its terms (all of them when a file has no statistics) and keeps the
+    matching rows with ``is_in``, so a miss costs no more than the read it
+    replaces: no per-term index is built."""
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    base = (
+        index_dir, split_id, _split_version(index_dir, split_id), "\x00postings"
+    )
+    footer = _cache_get(_FAST_CACHE, base)
+    if footer is None:
+        dset = ds.dataset(
+            f"{index_dir}/postings/split_id={split_id}", format="parquet"
+        )
+        footer = []
+        for path in dset.files:
+            md = pq.ParquetFile(path, filesystem=dset.filesystem).metadata
+            j = next(
+                c for c in range(md.num_columns)
+                if md.schema.column(c).path == "term"
+            )
+            ranges = []
+            for i in range(md.num_row_groups):
+                st = md.row_group(i).column(j).statistics
+                ranges.append(
+                    (st.min, st.max)
+                    if st is not None and st.has_min_max
+                    else None
+                )
+            footer.append((path, dset.filesystem, md, ranges))
+        _cache_put(
+            _FAST_CACHE, _FAST_CACHE_MAX_BYTES, base, footer,
+            sum(md.serialized_size for _, _, md, _ in footer),
+        )
+    terms = pa.array(uniq, type=pa.string())
+    parts = []
+    for path, fs, md, ranges in footer:
+        for i, rng in enumerate(ranges):
+            if rng is not None:
+                j = bisect.bisect_left(uniq, rng[0])
+                if j == len(uniq) or uniq[j] > rng[1]:
+                    continue
+            key = base + (path, i, cols)
+            tbl = _cache_get(_FAST_CACHE, key)
+            if tbl is None:
+                tbl = pq.ParquetFile(
+                    path, metadata=md, filesystem=fs
+                ).read_row_group(i, columns=list(cols))
+                _cache_put(
+                    _FAST_CACHE, _FAST_CACHE_MAX_BYTES, key, tbl, tbl.nbytes
+                )
+            parts.append(tbl.filter(pc.is_in(tbl.column("term"), terms)))
+    if not parts:
+        return None
+    return pa.concat_tables(parts) if len(parts) > 1 else parts[0]
+
+
 # docstore dtypes the leaf kernel can sort by under Spark's cast-to-double
 # semantics (text sorts are rejected upstream; anything else routes to the
 # general plan's docstore join)
@@ -328,9 +407,11 @@ _LEAF_SORTABLE_DTYPES = frozenset(
 )
 
 # dtypes the leaf "fields" collector can attach split-locally (simpleString
-# -> (Spark wire type, Arrow wire type)); timestamps travel as epoch-micros
-# int64 and are restored with F.timestamp_micros. Arrays/structs/binary and
-# struct paths stay on the general docstore-join plan.
+# -> (Spark type, Arrow wire type)); timestamps travel as Arrow
+# timestamp[us, UTC], which Spark reads as a TimestampType column under any
+# session time zone, so the kernel's output needs no restore projection.
+# Arrays/structs/binary and struct paths stay on the general docstore-join
+# plan.
 _LEAF_FIELD_WIRE: dict = {
     "string": (T.StringType(), pa.string()),
     "bigint": (T.LongType(), pa.int64()),
@@ -340,7 +421,7 @@ _LEAF_FIELD_WIRE: dict = {
     "double": (T.DoubleType(), pa.float64()),
     "float": (T.FloatType(), pa.float32()),
     "boolean": (T.BooleanType(), pa.bool_()),
-    "timestamp": (T.LongType(), pa.int64()),
+    "timestamp": (T.TimestampType(), pa.timestamp("us", tz="UTC")),
 }
 
 # Spark's string->timestamp cast is the engine's window-bound semantics
@@ -350,23 +431,23 @@ _LEAF_FIELD_WIRE: dict = {
 _TS_PARSE_CACHE: dict = {}
 
 
-def _ts_micros(spark, s: str | None, *, is_start: bool) -> int | None:
-    """Epoch-micros of ``cast(s AS timestamp)`` as the general plan's
-    filter would see it. An unparseable string casts to NULL, whose
-    comparison matches nothing — encoded as an impossible bound."""
-    if s is None:
-        return None
+def _ts_micros(spark, s: str) -> int:
+    """Epoch-micros of ``cast(s AS timestamp)`` in the session time zone,
+    the value the general plan's filter compares with. A string Spark
+    cannot parse raises ``ValueError`` (memoized like a parse, via
+    ``try_cast``); ``_plan_request`` checks a request's window bounds
+    with it before any split is pruned."""
     tz = spark.conf.get("spark.sql.session.timeZone")
     key = (s, tz)
     if key not in _TS_PARSE_CACHE:
         _TS_PARSE_CACHE[key] = (
             spark.range(1)
-            .select(F.unix_micros(F.lit(s).cast("timestamp")).alias("v"))
+            .select(F.unix_micros(F.lit(s).try_cast("timestamp")).alias("v"))
             .first()["v"]
         )
     v = _TS_PARSE_CACHE[key]
     if v is None:
-        return (1 << 62) if is_start else -(1 << 62)
+        raise ValueError(f"unparseable timestamp {s!r}")
     return int(v)
 
 
@@ -375,9 +456,8 @@ def _ts_bounds(spark, start: str | None, end: str | None) -> tuple | None:
     ``ts_bounds`` (epoch micros), or None when unbounded."""
     if start is None and end is None:
         return None
-    return (
-        _ts_micros(spark, start, is_start=True),
-        _ts_micros(spark, end, is_start=False),
+    return tuple(
+        None if b is None else _ts_micros(spark, b) for b in (start, end)
     )
 
 
@@ -515,9 +595,11 @@ class IndexReader:
         page cache. ``mode="full"`` also caches the docstore relation, read
         by match-all exports, the general plan's docstore atoms and its
         point-lookup fetch — right for an index that fits cluster memory.
-        Postings are never cached: every query reads its splits' term rows
-        with pyarrow inside the leaf kernel task, so no query plan scans the
-        postings relation.
+        Neither mode touches the postings: the leaf kernel task reads its
+        splits' term rows itself, so no query plan scans the postings
+        relation, and each python worker caches a split's postings footer
+        and decoded row groups on first use (``_load_postings``), the
+        reference's footer cache filled lazily instead of by ``warm()``.
 
         The cached docstore is right-sized by bytes (see
         ``_query_coalesce``) — a no-op at cluster scale, a ~1.1-1.6x
@@ -592,6 +674,16 @@ LEAF_COUNT_SCHEMA = T.StructType(
         T.StructField("n", T.LongType()),
     ]
 )
+
+
+def _with_fields(base_fields, cols, plan) -> T.StructType:
+    """A leaf-kernel output schema: ``base_fields``, then each attached
+    docstore column under its own name and Spark type
+    (``Searcher.leaf_fields_plan``)."""
+    return T.StructType(
+        list(base_fields)
+        + [T.StructField(c, p[0]) for c, p in zip(cols, plan)]
+    )
 
 
 class _LeafBail(Exception):
@@ -1021,8 +1113,8 @@ def _make_leaf_topk_kernel(
         |splits| rows across the python→JVM boundary, not |matches|;
       * ``"fields"`` — every matching (split_id, docid, *fields) with the
         requested docstore columns gathered SPLIT-LOCALLY (typed, nulls
-        preserved; timestamps lowered to epoch-micros int64 per
-        ``field_types``), unscored: aggregations and search-stream exports
+        preserved; cast to ``field_types``, timestamps to
+        timestamp[us, UTC]), unscored: aggregations and search-stream exports
         read their fast fields in the same pass that matched the docs, so
         no docstore join — the reference leaf's fast-field collector
         (search_stream/leaf.rs reads fast-field readers inside the leaf).
@@ -1567,11 +1659,9 @@ def _make_leaf_topk_kernel(
                 out_sid.extend([sid] * len(base_d))
                 out_doc.append(base_d.astype(np.int64, copy=False))
                 for j, fcol in enumerate(fields):
+                    # timestamps of any unit/tz cast to timestamp[us, UTC]
+                    # (same instants; nulls survive)
                     arr = _col_for(index_dir, sid, fcol, base_d)
-                    if pa.types.is_timestamp(arr.type):
-                        # epoch micros regardless of source unit/tz; nulls
-                        # survive both casts
-                        arr = arr.cast(pa.timestamp("us", arr.type.tz))
                     out_fields[j].append(arr.cast(field_types[j]))
                 continue
             if emit == "buckets":
@@ -1582,13 +1672,9 @@ def _make_leaf_topk_kernel(
                 # representative values in emit order
                 uk = None
                 if kind == "terms":
-                    arr = _col_for(index_dir, sid, bcol, base_d)
-                    if pa.types.is_timestamp(arr.type):
-                        arr = arr.cast(
-                            pa.timestamp("us", arr.type.tz)
-                        ).cast(field_types[0])
-                    else:
-                        arr = arr.cast(field_types[0])
+                    arr = _col_for(index_dir, sid, bcol, base_d).cast(
+                        field_types[0]
+                    )
                     de = arr.dictionary_encode()
                     idx = de.indices
                     ivalid = pc.is_valid(idx).to_numpy(zero_copy_only=False)
@@ -1770,8 +1856,6 @@ def _make_leaf_topk_kernel(
             # search needs no second job
             for j, fcol in enumerate(fields):
                 farr = _col_for(index_dir, sid, fcol, base_d)
-                if pa.types.is_timestamp(farr.type):
-                    farr = farr.cast(pa.timestamp("us", farr.type.tz))
                 out_fields[j].append(farr.cast(field_types[j]))
         if out_sid:
             if emit == "count":
@@ -1793,6 +1877,10 @@ def _make_leaf_topk_kernel(
                         if len(chunks) > 1
                         else chunks[0]
                     )
+                # wire names only: Spark binds mapInArrow columns by
+                # position and the caller's schema names them (Arrow's
+                # JVM reader rejects the duplicate child a fetch named
+                # "docid" or "score" would make)
                 yield pa.RecordBatch.from_arrays(
                     cols,
                     names=["split_id", "docid"]
@@ -2121,30 +2209,32 @@ def _make_split_postings_reader(
     """Leaf-kernel input stage: ``spark.range`` batches of task ids -> the
     postings rows (split_id, term, doc_freq, blocks[, pos_blocks]) of the
     spec's tokens for every split of each task, read from
-    ``{index_dir}/postings/split_id=<id>`` with pyarrow. Columns are pruned
-    (``pos_blocks`` is read only when the spec has a phrase, and only for
-    ``pos_splits``, the splits that store positions) and the term filter
-    prunes row groups of the term-sorted file. Every split also gets one
-    (split_id, null term) anchor row, so the kernel visits splits that hold
-    none of the tokens (pure-negative subtrees and ranges match there); a
-    spec without tokens (range-only) reads no postings at all."""
+    ``{index_dir}/postings/split_id=<id>`` through the executor cache
+    (``_load_postings``): a worker decodes each row group of a split's
+    term-sorted file once per column set and later queries filter the
+    decoded rows, decoding only the row groups whose term statistics can
+    hold a query token. Columns are pruned (``pos_blocks`` is read only
+    when the spec has a phrase, and only for ``pos_splits``, the splits
+    that store positions). Every split also gets one (split_id, null term)
+    anchor row, so the kernel visits splits that hold none of the tokens
+    (pure-negative subtrees and ranges match there); a spec without tokens
+    (range-only) reads no postings at all."""
     uniq = sorted(set(_leaf_spec_tokens(spec)))
-    cols = ["term", "doc_freq", "blocks"]
-    pos_cols = cols + ["pos_blocks"] if _leaf_spec_phrase_tokens(spec) else cols
+    cols = ("term", "doc_freq", "blocks")
+    pos_cols = cols + ("pos_blocks",) if _leaf_spec_phrase_tokens(spec) else cols
 
     def read(batches):
-        import pyarrow.parquet as pq
-
         for rb in batches:
             for task in rb.column(0).to_pylist():
                 for sid in tasks[task]:
                     if uniq:
-                        tbl = pq.read_table(
-                            f"{index_dir}/postings/split_id={sid}",
-                            columns=pos_cols if sid in pos_splits else cols,
-                            filters=[("term", "in", uniq)],
+                        tbl = _load_postings(
+                            index_dir,
+                            sid,
+                            pos_cols if sid in pos_splits else cols,
+                            uniq,
                         )
-                        if tbl.num_rows:
+                        if tbl is not None and tbl.num_rows:
                             tbl = tbl.add_column(
                                 0,
                                 "split_id",
@@ -2252,8 +2342,11 @@ class Searcher:
         elif col == "ts":
             kind = "ts"
             spark = self.reader.spark
-            lo = _ts_micros(spark, lo, is_start=True) if lo is not None else None
-            hi = _ts_micros(spark, hi, is_start=False) if hi is not None else None
+            try:
+                lo = _ts_micros(spark, lo) if lo is not None else None
+                hi = _ts_micros(spark, hi) if hi is not None else None
+            except ValueError:
+                raise _LeafBail from None  # the general plan's cast raises
         else:
             try:
                 dt = dict(self.reader.docstore().dtypes).get(col)
@@ -2500,28 +2593,15 @@ class Searcher:
         and the total count.
         ``fetch_cols`` attaches docstore columns to the per-split top-k
         rows INSIDE the kernel (the split's docstore is already open
-        there), so a fetched search needs no second job at all; caller
-        must have checked ``leaf_fields_plan(fetch_cols)``."""
+        there), under their own names and types, so a fetched search needs
+        no second job and no projection at all; caller must have checked
+        ``leaf_fields_plan(fetch_cols)``."""
         base = LEAF_TOPK_HITS_SCHEMA if with_hits else LEAF_TOPK_SCHEMA
-        if not fetch_cols:
-            return self._leaf_kernel_df(
-                spec,
-                split_ids,
-                k,
-                ts_bounds=ts_bounds,
-                sort_spec=sort_spec,
-                order=order,
-                emit="topk_hits" if with_hits else "topk",
-                schema=base,
-            )
+        fetch_cols = list(fetch_cols or ())
         plan = self.leaf_fields_plan(fetch_cols)
         if plan is None:
             raise ValueError(f"columns {fetch_cols!r} not kernel-attachable")
-        schema = T.StructType(
-            list(base.fields)
-            + [T.StructField(f"f{i}", p[0]) for i, p in enumerate(plan)]
-        )
-        df = self._leaf_kernel_df(
+        return self._leaf_kernel_df(
             spec,
             split_ids,
             k,
@@ -2529,17 +2609,10 @@ class Searcher:
             sort_spec=sort_spec,
             order=order,
             emit="topk_hits" if with_hits else "topk",
-            schema=schema,
+            schema=_with_fields(base.fields, fetch_cols, plan),
             fields=tuple(fetch_cols),
             field_types=tuple(p[1] for p in plan),
         )
-        sel = [F.col(f.name) for f in base.fields]
-        for i, (c, p) in enumerate(zip(fetch_cols, plan)):
-            e = F.col(f"f{i}")
-            if p[2]:
-                e = F.timestamp_micros(e)
-            sel.append(e.alias(c))
-        return df.select(*sel)
 
     def leaf_matching(
         self,
@@ -2554,23 +2627,24 @@ class Searcher:
         return self.leaf_matching_fields(spec, split_ids, ts_bounds, [])
 
     def leaf_fields_plan(self, cols: "list[str] | tuple") -> "list | None":
-        """(Spark wire type, Arrow wire type, is_timestamp) per requested
-        docstore column, or None when any column is absent or not
-        kernel-attachable (arrays/structs/binary and ``a.b`` struct paths
-        route to the general docstore-join plan)."""
+        """(Spark type, Arrow wire type) per requested docstore column
+        (``_LEAF_FIELD_WIRE``), or None when any column is absent or not
+        kernel-attachable (arrays/structs/binary, ``a.b`` struct paths and
+        the kernel's own ``split_id``/``docid`` keys route to the general
+        docstore-join plan)."""
         if not cols:
             return []  # no docstore schema read for the bare match relation
         schema = {f.name: f for f in self.reader.docstore().schema.fields}
         out = []
         for c in cols:
             f = schema.get(c)
-            if f is None:
+            if f is None or c in ("split_id", "docid"):
                 return None
             s = f.dataType.simpleString()
             wire = _LEAF_FIELD_WIRE.get(s)
             if wire is None:
                 return None
-            out.append((wire[0], wire[1], s == "timestamp"))
+            out.append(wire)
         return out
 
     def leaf_matching_fields(
@@ -2592,33 +2666,16 @@ class Searcher:
         plan = self.leaf_fields_plan(cols)
         if plan is None:
             raise ValueError(f"columns {cols!r} not kernel-attachable")
-        schema = T.StructType(
-            [
-                T.StructField("split_id", T.StringType()),
-                T.StructField("docid", T.LongType()),
-            ]
-            + [
-                T.StructField(f"f{i}", p[0])
-                for i, p in enumerate(plan)
-            ]
-        )
-        df = self._leaf_kernel_df(
+        return self._leaf_kernel_df(
             spec,
             split_ids,
             0,
             ts_bounds=ts_bounds,
             emit="fields",
-            schema=schema,
+            schema=_with_fields(LEAF_TOPK_SCHEMA.fields[:2], cols, plan),
             fields=tuple(cols),
             field_types=tuple(p[1] for p in plan),
         )
-        sel = [F.col("split_id"), F.col("docid")]
-        for i, (c, p) in enumerate(zip(cols, plan)):
-            e = F.col(f"f{i}")
-            if p[2]:
-                e = F.timestamp_micros(e)
-            sel.append(e.alias(c))
-        return df.select(*sel)
 
     # docstore dtypes the bucket-partial kernel accepts per bucket kind:
     # histogram/range arithmetic needs a numeric column (Spark's own plan
@@ -2633,7 +2690,7 @@ class Searcher:
         partial's representative-value column, or None when the docstore
         column is absent or the wrong type for ``kind`` (the request then
         keeps the doc-level path and surfaces Spark's own errors).
-        ``restore`` is "ts_seconds" | "ts_micros" | None."""
+        ``restore`` is "ts_seconds" | None."""
         f = {f.name: f for f in self.reader.docstore().schema.fields}.get(col)
         if f is None:
             return None
@@ -2657,7 +2714,7 @@ class Searcher:
         wire = _LEAF_FIELD_WIRE.get(s)  # terms
         if wire is None:
             return None
-        return (wire[0], wire[1], "ts_micros" if s == "timestamp" else None)
+        return (*wire, None)
 
     _INT_DTYPES = frozenset({"bigint", "int", "smallint", "tinyint"})
 
@@ -2775,8 +2832,6 @@ class Searcher:
         e = F.col("f0")
         if restore == "ts_seconds":
             e = F.timestamp_seconds(e)
-        elif restore == "ts_micros":
-            e = F.timestamp_micros(e)
         return df.select("split_id", e.alias(col), "_w", *part_names)
 
     def leaf_count(
@@ -2817,8 +2872,9 @@ class Searcher:
         splits grouped into tasks by their manifest size
         (``_leaf_split_tasks``) — and each task reads its own splits'
         query-term postings rows with pyarrow (``_make_split_postings_reader``:
-        term-filtered, row-group pruned, ``pos_blocks`` only for phrase
-        specs) straight into the whole-tree kernel. This is the reference
+        term-filtered rows of the row groups the worker's cache holds
+        decoded, ``pos_blocks`` only for phrase specs) straight into the
+        whole-tree kernel. This is the reference
         leaf opening its splits' term-dictionary and posting byte ranges
         itself (leaf.rs:141-227, :500-517). Phrases read positions only on
         the splits that store them; the kernel verifies the rest from
@@ -3305,6 +3361,15 @@ def _plan_request(
     if topk and request.sort_by_field == searcher.default_field:
         # sort fields must be fast, non-text (query_builder.rs:255-300)
         raise ValueError("sort by a text field is not supported")
+    for name in ("start_timestamp", "end_timestamp"):
+        # the manifest prunes by string compare: an unparseable bound
+        # must fail here, on every path, not prune every split away
+        bound = getattr(request, name)
+        if bound is not None:
+            try:
+                _ts_micros(reader.spark, bound)
+            except ValueError:
+                raise ValueError(f"{name} is not a timestamp: {bound!r}") from None
     splits = reader.manifest.list_published(
         request.start_timestamp,
         request.end_timestamp,
@@ -3944,7 +4009,7 @@ def _ts_desc_prune_splits(
     for sid in split_ids:
         m = metas.get(sid)
         e = (
-            _ts_micros(spark, m.time_range_end, is_start=False)
+            _ts_micros(spark, m.time_range_end)
             if m is not None and m.time_range_end is not None
             else None
         )
@@ -3962,7 +4027,7 @@ def _ts_desc_prune_splits(
     for sid in split_ids:
         m = metas.get(sid)
         s0 = (
-            _ts_micros(spark, m.time_range_start, is_start=True)
+            _ts_micros(spark, m.time_range_start)
             if m is not None and m.time_range_start is not None
             else None
         )
@@ -4323,8 +4388,7 @@ def count_hits(
         # is a manifest sum — zero split files touched at any corpus
         # size (the metastore list_splits analog,
         # metastore/mod.rs:304-390). A time-bounded `*` goes to the
-        # kernel, whose window test matches no null-ts doc and no doc
-        # for an unparseable bound (_ts_micros).
+        # kernel, whose window test matches no null-ts doc.
         return local_rows_df(
             reader.spark,
             [(sum(m.num_docs for m in plan.splits),)],

@@ -17,6 +17,7 @@ from quickwit_spark.operators.search import (
     _leaf_gate,
     count_hits,
     export_fast_field,
+    search,
     search_aggs,
 )
 from quickwit_spark.plans.query import parse_query
@@ -305,8 +306,8 @@ def test_export_fields_path_taken(small_index, fields_spy):
 
 
 def test_leaf_fields_ts_roundtrip_exact(small_index):
-    """Kernel-lowered epoch-micros -> timestamp_micros must reproduce the
-    docstore's timestamp values bit-for-bit (nulls included)."""
+    """Timestamps the kernel emits as Arrow timestamp[us, UTC] must
+    reproduce the docstore's values bit-for-bit (nulls included)."""
     s = Searcher(small_index, scoring=False)
     sids = [m.split_id for m in small_index.manifest.list_published()]
     spec = s.leaf_plan(parse_query("w1 OR w2"))
@@ -329,6 +330,20 @@ def test_leaf_fields_plan_gates(small_index):
     assert s.leaf_fields_plan(["tag", "url", "ts", "doc_len"]) is not None
     assert s.leaf_fields_plan(["no_such_column"]) is None
     assert s.leaf_fields_plan(["meta.len"]) is None  # struct paths bail
+    # the kernel's own keys: the partition column is not in the split file
+    assert s.leaf_fields_plan(["url", "docid"]) is None
+    assert s.leaf_fields_plan(["split_id"]) is None
+
+
+@pytest.mark.parametrize("fetch", [("url", "docid"), ("split_id",), ("ts",)])
+def test_fetch_of_key_columns_matches_general(small_index, fetch):
+    """A fetch named like a kernel column (``docid``, ``split_id``) takes
+    the point-lookup fetch and returns what the general plan returns."""
+    req = SearchRequest(query="w1 w3", max_hits=7)
+    leaf = search(small_index, req, fetch_fields=fetch)
+    gen = search(small_index, req, fetch_fields=fetch, leaf_topk=False)
+    assert leaf.columns == gen.columns == ["split_id", "docid", "score", *fetch]
+    assert leaf.collect() == gen.collect()
 
 
 def test_matchall_bounded_aggs_and_count(small_index):

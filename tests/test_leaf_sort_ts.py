@@ -16,6 +16,7 @@ from quickwit_spark.operators.search import (
     SearchRequest,
     count_hits,
     search,
+    search_aggs,
 )
 from quickwit_spark.sources.pages import synth_pages
 
@@ -84,11 +85,27 @@ def test_score_asc_matches_general_plan(nullable_sort_index):
 
 
 def test_unparseable_timestamp_matches_general_plan(nullable_sort_index):
-    req = SearchRequest(
-        query="w1", max_hits=10, start_timestamp="not-a-timestamp"
-    )
-    assert _rows(nullable_sort_index, req) == []
-    assert _rows(nullable_sort_index, req, leaf_topk=False) == []
+    """An unparseable window bound is a request error on every path: the
+    manifest prunes by string compare, so without the check a bad start
+    bound pruned every split away (0 rows) while a bad end bound raised
+    Spark's cast error from the kernel's window."""
+    aggs = {"t": {"date_histogram": {"field": "warc_ts", "fixed_interval": "1d"}}}
+    calls = {
+        "leaf": lambda r, q: _rows(r, q),
+        "general": lambda r, q: _rows(r, q, leaf_topk=False),
+        "count_hits": lambda r, q: count_hits(r, q).collect(),
+        "count_hits_general": lambda r, q: count_hits(r, q, leaf_match=False).collect(),
+        "search_aggs": lambda r, q: search_aggs(r, q, aggs)["t"].collect(),
+    }
+    for bound in ("start_timestamp", "end_timestamp"):
+        for query in ("w1", "*"):
+            req = SearchRequest(
+                query=query, max_hits=10, **{bound: "not-a-timestamp"}
+            )
+            for name, call in calls.items():
+                with pytest.raises(ValueError, match=bound) as e:
+                    call(nullable_sort_index, req)
+                assert "not-a-timestamp" in str(e.value), (bound, query, name)
 
 
 def test_sorted_leaf_plan_has_no_join(nullable_sort_index):
